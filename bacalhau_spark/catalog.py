@@ -9,10 +9,10 @@ reference's lazy FUSE mount (`pkg/storage/ipfs_fusedocker/storage.go:114`).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bacalhau_spark.session import SessionCache
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -22,13 +22,10 @@ TABLES = (
 # DataFrame handles are immutable lazy plans over read-only fixture paths, so
 # they are safe to reuse across queries — this skips repeated file listing +
 # parquet footer reads (the catalog/metastore role; statistics stay cached).
-# Keyed by applicationId, not id(spark): CPython reuses object ids after GC,
-# which could hand a new session a DataFrame bound to a stopped one.
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-# Engine workers call table() from parallel threads (capacity-managed async
-# submit); eviction iterates while other threads insert, so all cache
-# access goes through this lock.
-_CACHE_LOCK = threading.Lock()
+# The same session-scoped cache holds the events.ts dtype probe and
+# spread_compute's partition-count probes. Engine workers call table() from
+# parallel threads; SessionCache holds its own lock.
+HANDLES = SessionCache()
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -44,33 +41,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    with _CACHE_LOCK:
-        # Evict entries from other (stopped) sessions: only one
-        # SparkSession is live per process, so any foreign applicationId is
-        # dead weight accumulating across many short-lived sessions.
-        for k in [k for k in _CACHE if k[0] != app_id]:
-            _CACHE.pop(k, None)
-        cached = _CACHE.get(key)
-    if cached is not None:
-        return cached
+    return HANDLES.get_or_make(spark, ("table", sf_dir, name),
+                               lambda: _read_table(spark, sf_dir, name))
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # Probe FIRST: events_raw_ts_type sets the legacy nanosAsLong
         # conf as a side effect, and on Spark <4.1 the read below would
-        # reject TIMESTAMP(NANOS) at schema inference without it
-        # (round-12 ADVICE: the read must not precede the conf).
+        # reject TIMESTAMP(NANOS) at schema inference without it.
         raw_type = events_raw_ts_type(spark, sf_dir)
         raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df = normalize_events_ts(raw, raw_type)
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    with _CACHE_LOCK:
-        _CACHE[key] = df
-    return df
-
-
-_EVENTS_TS_RAW: dict[tuple[str, str], str] = {}
+        return normalize_events_ts(raw, raw_type)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def events_raw_ts_type(spark: SparkSession, sf_dir: str) -> str:
@@ -81,19 +64,12 @@ def events_raw_ts_type(spark: SparkSession, sf_dir: str) -> str:
     and the stream source's declared schema branch on it, so the two
     planes cannot drift (the batch≡stream contract) and the footer
     probe isn't re-paid per streaming-query construction."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    with _CACHE_LOCK:
-        for k in [k for k in _EVENTS_TS_RAW if k[0] != app_id]:
-            _EVENTS_TS_RAW.pop(k, None)
-        hit = _EVENTS_TS_RAW.get(key)
-    if hit is not None:
-        return hit
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    t = dict(spark.read.parquet(
-        f"{sf_dir}/events.parquet").dtypes)["ts"]
-    with _CACHE_LOCK:
-        return _EVENTS_TS_RAW.setdefault(key, t)
+    def probe() -> str:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return dict(spark.read.parquet(
+            f"{sf_dir}/events.parquet").dtypes)["ts"]
+
+    return HANDLES.get_or_make(spark, ("events_ts", sf_dir), probe)
 
 
 def normalize_events_ts(df: DataFrame, raw_type: str) -> DataFrame:
@@ -107,21 +83,12 @@ def normalize_events_ts(df: DataFrame, raw_type: str) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for spark.sql users)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-# Parallelism-probe cache for spread_compute: df.rdd.getNumPartitions
-# triggers full physical planning + RDD conversion per call — a needless
-# constant cost on every text/dedup query. Keyed by the ANALYZED plan's
-# semantic hash (not input files: an upstream repartition changes the
-# count without changing the files), so re-running the same query shape
-# pays the probe once per session.
-_NPART_CACHE: dict[tuple[str, int], int] = {}
-
-
+# spread_compute's parallelism probe: df.rdd.getNumPartitions triggers full
+# physical planning + RDD conversion per call — a needless constant cost on
+# every text/dedup query. Keyed by the ANALYZED plan's semantic hash (not
+# input files: an upstream repartition changes the count without changing
+# the files), so re-running the same query shape pays the probe once per
+# session.
 def spread_compute(spark: SparkSession, df: DataFrame,
                    *keys: str) -> DataFrame:
     """Spread CPU-heavy per-row work across all cores when the SCAN's
@@ -135,25 +102,16 @@ def spread_compute(spark: SparkSession, df: DataFrame,
     Conditional on purpose: at corpus scale the scan already has ≥cores
     input splits and this is a no-op — an unconditional repartition would
     shuffle the whole corpus for nothing."""
-    sc = spark.sparkContext
-    target = sc.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     try:
         plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-        key = (sc.applicationId, plan_hash)
     except Exception:  # noqa: BLE001 — internal API; probe directly
-        key = None
-    nparts = None
-    if key is not None:
-        with _CACHE_LOCK:
-            nparts = _NPART_CACHE.get(key)
-    if nparts is None:
+        plan_hash = None
+    if plan_hash is None:
         nparts = df.rdd.getNumPartitions()
-        if key is not None:
-            with _CACHE_LOCK:
-                for k in [k for k in _NPART_CACHE
-                          if k[0] != sc.applicationId]:
-                    _NPART_CACHE.pop(k, None)
-                _NPART_CACHE[key] = nparts
+    else:
+        nparts = HANDLES.get_or_make(spark, ("npart", plan_hash),
+                                     df.rdd.getNumPartitions)
     if nparts < target:
         return df.repartition(target, *keys) if keys \
             else df.repartition(target)

@@ -290,9 +290,10 @@ def cmd_index(args) -> int:
     import shutil as _shutil
 
     from bacalhau_spark.operators import dedup
+    from bacalhau_spark.sources import indexstore
     from bacalhau_spark.sources import versioned as _v
 
-    root = dedup.index_store_root()
+    root = indexstore.index_store_root()
 
     # CLI kind -> store kind prefixes. The builder verbs pq/ivfpq/ivfvec
     # publish under compound store kinds (pq_assign + pq_cent, ...), so
@@ -404,8 +405,7 @@ def cmd_index(args) -> int:
         # no session-tier frame may outlive its dropped files: a cached
         # DataFrame still points at the deleted parquet and would fail
         # every later consumer in-process
-        with dedup._MH_IDX_LOCK:
-            dedup._MH_IDX_CACHE.clear()
+        indexstore.FRAMES.clear()
         print(_json.dumps({"dropped": dropped}))
         return 0
     if args.action == "verify":
@@ -467,8 +467,8 @@ def cmd_index(args) -> int:
                             issues.append(
                                 f"{p}: payload key mismatch (bytes "
                                 "changed since publish)")
-                if dedup._manifest_n_file_keys(m) and \
-                        dedup._manifest_file_keys(troot, m) is None:
+                if indexstore.manifest_n_file_keys(m) and \
+                        indexstore.manifest_file_keys(troot, m) is None:
                     issues.append(
                         "file_keys map fails digest verification")
             any_bad |= bool(issues)

@@ -53,17 +53,6 @@ def shingles(word_arr: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def seeded_hash(seed: Column, value: Column) -> Column:
-    """Deterministic seeded hash as a lowercase md5 hex string.
-
-    md5 is used (not murmur3 `hash()`) because it is identically defined in
-    every SQL engine — the duckdb oracle computes the same bytes, so minhash
-    signatures are cross-engine checkable. Uniform order over hex strings is
-    a valid uniform order over hashes.
-    """
-    return F.md5(F.concat(seed.cast("string"), F.lit(":"), value))
-
-
 def row_fingerprint(cols: list[Column]) -> Column:
     """Canonical per-row hash: sha2 over a null-tagged concat of columns.
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bacalhau_spark.catalog import spread_compute, table
+from bacalhau_spark.sources.indexstore import cached_index, rowwise_index
 
 FEATURE_SCHEMA = ("doc_id bigint, n_bytes int, width int, height int, "
                   "phash string")
@@ -689,8 +690,7 @@ def _phash_pairs_verify(spark: SparkSession, sf_dir: str,
     die on the broadcast ceiling), exact xor+bit_count Hamming,
     threshold filter."""
     from bacalhau_spark.operators.dedup import (EDIT_BROADCAST_MAX_PAIRS,
-                                                _cand_pair_count,
-                                                _mh_session_cached)
+                                                _cand_pair_count)
 
     # Candidate pairs are the SECOND persisted tier (r14), mirroring the
     # minhash family's sig->cand layout: the band explode + window cap +
@@ -704,7 +704,7 @@ def _phash_pairs_verify(spark: SparkSession, sf_dir: str,
     # OPTIMIZATION_r14.md. Content-addressed on the documents fixture,
     # so a changed corpus rebuilds; no delta form (the minhash cand
     # delta's guards do not carry over to Hamming bands — rebuild).
-    cand = _mh_session_cached(
+    cand = cached_index(
         spark, sf_dir, cand_kind,
         lambda: phash_candidate_pairs(hashes, bucket_cap=bucket_cap,
                                       n_bands=n_bands))
@@ -734,23 +734,16 @@ def phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate explode and the verify gather both consume `hashes`,
     and Spark never shares subplans across DataFrame branches, so the
     un-indexed form re-decoded every thumbnail per branch."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
-    # spread_compute (r15): the per-doc hash build is 72 md5 cells/doc
-    # of pure projection CPU over a ONE-row-group scan at fixture scale
-    # — without the exchange the whole build (and therefore the cold
-    # ingest cost) runs in a single task at ANY core count (the x10
-    # scaling probe measured the video twin ~flat 8c vs 32c,
-    # experiments/scaling_axis_r15.txt). Per-row map, so values are
-    # partitioning-invariant; no-op at corpus scale (>= cores splits).
-    return _mh_session_cached(
+    # spread_compute: the per-doc hash build is 72 md5 cells/doc of
+    # pure projection CPU over a ONE-row-group scan at fixture scale —
+    # without the exchange the whole build (and therefore the cold
+    # ingest cost) runs in a single task at ANY core count. Per-row map,
+    # so values are partitioning-invariant; no-op at corpus scale
+    # (>= cores splits).
+    return rowwise_index(
         spark, sf_dir, "phash",
-        lambda: phash_frame(spread_compute(
-            spark, table(spark, sf_dir, "documents").select("doc_id"),
-            "doc_id")),
-        build_delta=lambda paths: phash_frame(spread_compute(
-            spark, spark.read.parquet(*paths).select("doc_id"),
-            "doc_id")))
+        lambda docs: phash_frame(spread_compute(
+            spark, docs.select("doc_id"), "doc_id")))
 
 
 # Pixel convention for the REAL-decoder round-trip row: md5-derived
@@ -1232,19 +1225,13 @@ def audio_phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The envelope-hash table as a shared PERSISTED index (the
     phash_index lifecycle): synthesize+hash once per source content,
     publish, every consumer scans the artifact."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
-    # spread_compute (r15): see phash_index — 144 md5 envelope cells/doc
-    # of projection CPU over a one-row-group scan; single-task without
-    # the exchange.
-    return _mh_session_cached(
+    # spread_compute: see phash_index — 144 md5 envelope cells/doc of
+    # projection CPU over a one-row-group scan; single-task without the
+    # exchange.
+    return rowwise_index(
         spark, sf_dir, "aphash",
-        lambda: audio_phash_frame(spread_compute(
-            spark, table(spark, sf_dir, "documents").select("doc_id"),
-            "doc_id")),
-        build_delta=lambda paths: audio_phash_frame(spread_compute(
-            spark, spark.read.parquet(*paths).select("doc_id"),
-            "doc_id")))
+        lambda docs: audio_phash_frame(spread_compute(
+            spark, docs.select("doc_id"), "doc_id")))
 
 
 def nd_audio_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1387,20 +1374,13 @@ def video_phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The video signature table as a shared PERSISTED index (the
     phash_index lifecycle): decode+hash once per source content,
     publish, every consumer scans the artifact."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
-    # spread_compute (r15): see phash_index — 288 md5 cells/doc, the
-    # heaviest hash build in the store; the x10 scaling probe measured
-    # the cold path ~flat across 8c/32c because the one-row-group scan
-    # pinned it to a single task (experiments/scaling_axis_r15.txt).
-    return _mh_session_cached(
+    # spread_compute: see phash_index — 288 md5 cells/doc, the heaviest
+    # hash build in the store; without the exchange the one-row-group
+    # scan pins the cold path to a single task at any core count.
+    return rowwise_index(
         spark, sf_dir, "vphash",
-        lambda: video_phash_frame(spread_compute(
-            spark, table(spark, sf_dir, "documents").select("doc_id"),
-            "doc_id")),
-        build_delta=lambda paths: video_phash_frame(spread_compute(
-            spark, spark.read.parquet(*paths).select("doc_id"),
-            "doc_id")))
+        lambda docs: video_phash_frame(spread_compute(
+            spark, docs.select("doc_id"), "doc_id")))
 
 
 def nd_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:

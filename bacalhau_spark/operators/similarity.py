@@ -20,13 +20,19 @@ from __future__ import annotations
 
 import hashlib
 import os
-import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bacalhau_spark.catalog import spread_compute, table
 from bacalhau_spark.functions import cosine
+from bacalhau_spark.session import SessionCache
+from bacalhau_spark.sources.indexstore import (cached_index,
+                                               docs_fingerprint,
+                                               index_table_root,
+                                               rowwise_index,
+                                               scan_table_windows,
+                                               table_part_paths)
 
 _DOT_SQL = ("list_sum(list_transform(list_zip(a.embedding, b.embedding), "
             "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))")
@@ -144,23 +150,15 @@ def band_signatures(emb_col: Column) -> Column:
 # Py4J (~2k JVM round trips, profiled ~1.7s PER QUERY CALL at the driver —
 # more than the whole execution). The tree is immutable and references only
 # F.col("embedding") + literals, so one instance is reusable across every
-# query in a session. Keyed by applicationId (same invalidation rule as
-# catalog._CACHE: a Column holds JVM refs that die with its session).
-_SIG_EXPR_CACHE: dict[str, Column] = {}
-_SIG_EXPR_LOCK = threading.Lock()
+# query in a session. Session-scoped (a Column holds JVM refs that die with
+# its session), in the module's one model cache beside the trained
+# quantizer, the semantic-dedup histogram and the PCA basis.
+_MODELS = SessionCache()
 
 
 def embedding_band_signatures(spark: SparkSession) -> Column:
-    app_id = spark.sparkContext.applicationId
-    with _SIG_EXPR_LOCK:
-        for k in [k for k in _SIG_EXPR_CACHE if k != app_id]:
-            _SIG_EXPR_CACHE.pop(k, None)
-        col = _SIG_EXPR_CACHE.get(app_id)
-    if col is None:
-        col = band_signatures(F.col("embedding"))
-        with _SIG_EXPR_LOCK:
-            _SIG_EXPR_CACHE[app_id] = col
-    return col
+    return _MODELS.get_or_make(spark, "sig_expr",
+                               lambda: band_signatures(F.col("embedding")))
 
 
 def lsh_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,26 +167,15 @@ def lsh_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per embeddings content fingerprint, published to the persisted
     store, every consumer (the ANN probe, the bucket audit, the next
     session) scans the artifact."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
-    def build():
-        emb = table(spark, sf_dir, "embeddings")
+    def transform(emb):
         return (spread_compute(spark, emb.select("vec_id", "embedding"),
                                "vec_id")
                 .select("vec_id",
                         F.posexplode(embedding_band_signatures(spark))
                         .alias("band", "sig")))
 
-    def build_delta(paths):
-        emb = spark.read.parquet(*paths)
-        return (spread_compute(spark, emb.select("vec_id", "embedding"),
-                               "vec_id")
-                .select("vec_id",
-                        F.posexplode(embedding_band_signatures(spark))
-                        .alias("band", "sig")))
-
-    return _mh_session_cached(spark, sf_dir, "lshsig", build,
-                              tbl="embeddings", build_delta=build_delta)
+    return rowwise_index(spark, sf_dir, "lshsig", transform,
+                         tbl="embeddings")
 
 
 def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,8 +327,6 @@ def ivf_coarse_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN oracles replay it): deterministic seeds (first K vectors'
     quantized coords) + one Lloyd refinement — integer squared-distance
     argmin with a (d, cluster) tie-break, sum-DIV-count means."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     def build():
         e = _ivf_q_exploded(table(spark, sf_dir, "embeddings")
                             .select("vec_id", "embedding"))
@@ -359,8 +344,8 @@ def ivf_coarse_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("cluster", "dim")
                 .agg(F.expr("sum(q) DIV count(*)").alias("cq")))
 
-    return _mh_session_cached(spark, sf_dir, "ivf_coarse", build,
-                              tbl="embeddings", rev=IVF_REV)
+    return cached_index(spark, sf_dir, "ivf_coarse", build,
+                        tbl="embeddings", rev=IVF_REV)
 
 
 def _ivf_coarse_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,29 +381,17 @@ def _ivf_assign_ranked(emb: DataFrame, coarse_arr: DataFrame) -> DataFrame:
             .select("vec_id", "cluster", "arank"))
 
 
-_COARSE_CACHE: dict = {}
-_COARSE_LOCK = threading.Lock()
-
-
 def _coarse_rows(spark: SparkSession,
                  sf_dir: str) -> list[tuple[int, list[int]]]:
     """The published quantizer as driver-side model state (K x DIM
     integers — the trained-quantizer collect pattern), session-cached
     per (app, table fingerprint) so the per-query probe expression
     never re-reads the store."""
-    app_id = spark.sparkContext.applicationId
-    key = _emb_cache_key(spark, sf_dir)
-    with _COARSE_LOCK:
-        for k in [k for k in _COARSE_CACHE if k[0] != app_id]:
-            _COARSE_CACHE.pop(k, None)
-        hit = _COARSE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    rows = sorted((int(r["cluster"]), [int(v) for v in r["cq_arr"]])
-                  for r in _ivf_coarse_arrays(spark, sf_dir).collect())
-    with _COARSE_LOCK:
-        _COARSE_CACHE[key] = rows
-    return rows
+    return _MODELS.get_or_make(
+        spark, ("coarse", *_emb_cache_key(sf_dir)),
+        lambda: sorted((int(r["cluster"]), [int(v) for v in r["cq_arr"]])
+                       for r in _ivf_coarse_arrays(spark, sf_dir)
+                       .collect()))
 
 
 def _probe_cells_expr(rows: list[tuple[int, list[int]]],
@@ -452,8 +425,6 @@ def ivf_cells_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a query's candidate fetch touches NPROBE/K of the data. One
     4-byte cell id per vector; build once per content, every probe
     scans the artifact."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     def build():
         emb = table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding")
@@ -462,8 +433,8 @@ def ivf_cells_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("arank") == 1)
             .select("vec_id", "cluster"))
 
-    return _mh_session_cached(spark, sf_dir, "ivf_cells", build,
-                              tbl="embeddings", rev=IVF_REV)
+    return cached_index(spark, sf_dir, "ivf_cells", build,
+                        tbl="embeddings", rev=IVF_REV)
 
 
 # Layout rule for the published inverted file. File count scales with
@@ -484,9 +455,8 @@ IVF_VEC_TARGET_BYTES = 32 * 1024 * 1024
 
 
 def _ivf_vec_layout(sf_dir: str) -> dict:
-    from bacalhau_spark.operators.dedup import _table_part_paths
     n = sum(os.path.getsize(p)
-            for p in _table_part_paths(sf_dir, "embeddings"))
+            for p in table_part_paths(sf_dir, "embeddings"))
     files = max(N_CLUSTERS, min(256, -(-n // IVF_VEC_TARGET_BYTES)))
     keys = (["cluster"] if files <= N_CLUSTERS
             else ["cluster", "vec_id"])
@@ -508,15 +478,13 @@ def ivf_vectors_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     kinds: cell assignment is a global function of the trained
     quantizer, so a delta union would not equal a rebuild after the
     quantizer moves."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     def build():
         emb = table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding")
         return (emb.join(ivf_cells_index(spark, sf_dir), "vec_id")
                 .select("cluster", "vec_id", "embedding"))
 
-    return _mh_session_cached(
+    return cached_index(
         spark, sf_dir, "ivf_vectors", build, tbl="embeddings",
         rev=IVF_REV, write_kwargs=_ivf_vec_layout(sf_dir))
 
@@ -530,7 +498,6 @@ def ivf_vectors_pruned(spark: SparkSession, sf_dir: str,
     Falls back to a row filter over the session frame when the store
     was unusable (read-only tmp, empty head) — correctness never
     depends on pruning."""
-    from bacalhau_spark.operators.dedup import _index_table_root
     from bacalhau_spark.sources import versioned
 
     frame = ivf_vectors_index(spark, sf_dir)  # ensures built/published
@@ -538,8 +505,8 @@ def ivf_vectors_pruned(spark: SparkSession, sf_dir: str,
         # no probed cells (no query rows): empty result, and the
         # fallback's isin(*[]) below would raise
         return frame.where(F.lit(False))
-    root = _index_table_root(sf_dir, "ivf_vectors", "embeddings",
-                             rev=IVF_REV)
+    root = index_table_root(sf_dir, "ivf_vectors", "embeddings",
+                            rev=IVF_REV)
     try:
         man = versioned.latest_manifest(root)
     except Exception:  # noqa: BLE001 — fallback path decides
@@ -563,8 +530,8 @@ def nd_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     second corpus scan exists. The probed-cell collect is bounded by K
     (N_CLUSTERS) regardless of corpus size; a single query's fetch
     opens ~NPROBE/K of the files (the graded 20-query row unions most
-    cells at fixture scale — tests and the round-14 artifact
-    experiments/ivf_prune_r14 measure the single-probe pruning
+    cells at fixture scale — tests and
+    experiments/ivf_prune_r14.txt measure the single-probe pruning
     directly)."""
     emb = table(spark, sf_dir, "embeddings")
     probes = (emb.where(F.col("vec_id") < 20)
@@ -898,22 +865,15 @@ def _sign_bucket(nbits: int):
         start=F.lit(0)).cast("int")
 
 
-_SEMDEDUP_MODEL_CACHE: dict[tuple, dict[int, int]] = {}
-_SEMDEDUP_MODEL_LOCK = threading.Lock()
-
-
-def _emb_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
-    """Session-model cache key for embeddings-derived state: app id +
-    realpath + a size/mtime fingerprint of the embeddings table, the
-    same convention _MH_IDX_CACHE uses (round-13 ADVICE: keying on the
-    path alone let a fixture rewritten in place mid-session serve a
-    stale sign histogram / PCA basis, so escalation and projection
-    decisions could diverge from the oracle run over the new bytes)."""
-    from bacalhau_spark.operators.dedup import _docs_fingerprint
-
-    return (spark.sparkContext.applicationId,
-            os.path.realpath(sf_dir),
-            _docs_fingerprint(sf_dir, "embeddings"))
+def _emb_cache_key(sf_dir: str) -> tuple:
+    """Session-model cache key for embeddings-derived state: realpath +
+    a size/mtime fingerprint of the embeddings table, the index store's
+    tier-1 convention (keying on the path alone would let a fixture
+    rewritten in place mid-session serve a stale sign histogram / PCA
+    basis, so escalation and projection decisions could diverge from
+    the oracle run over the new bytes)."""
+    return (os.path.realpath(sf_dir),
+            docs_fingerprint(sf_dir, "embeddings"))
 
 
 def _semantic_bucket_model(spark: SparkSession,
@@ -925,20 +885,14 @@ def _semantic_bucket_model(spark: SparkSession,
     bits of the 16-bit key ARE the 8-bit key, so this one histogram
     answers both the escalation decision (per-b8 rollup) and the final
     per-bucket cap gate without any second pass."""
-    app_id = spark.sparkContext.applicationId
-    key = _emb_cache_key(spark, sf_dir)
-    with _SEMDEDUP_MODEL_LOCK:
-        for k in [k for k in _SEMDEDUP_MODEL_CACHE if k[0] != app_id]:
-            _SEMDEDUP_MODEL_CACHE.pop(k, None)
-        hit = _SEMDEDUP_MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = table(spark, sf_dir, "embeddings")
-    rows = (emb.select(_sign_bucket(SEMDEDUP_SUB_BITS).alias("b16"))
-            .groupBy("b16").agg(F.count("*").alias("n16")).collect())
-    model = {int(r["b16"]): int(r["n16"]) for r in rows}
-    with _SEMDEDUP_MODEL_LOCK:
-        return _SEMDEDUP_MODEL_CACHE.setdefault(key, model)
+    def fit() -> dict[int, int]:
+        emb = table(spark, sf_dir, "embeddings")
+        rows = (emb.select(_sign_bucket(SEMDEDUP_SUB_BITS).alias("b16"))
+                .groupBy("b16").agg(F.count("*").alias("n16")).collect())
+        return {int(r["b16"]): int(r["n16"]) for r in rows}
+
+    return _MODELS.get_or_make(
+        spark, ("semdedup", *_emb_cache_key(sf_dir)), fit)
 
 
 def _semantic_bucket_rules(model: dict[int, int]) \
@@ -1372,8 +1326,6 @@ ORDER BY i, j
 
 
 PCA_K = 8
-_PCA_CACHE: dict[tuple, tuple] = {}
-_PCA_LOCK = threading.Lock()
 
 
 def _pca_model(spark: SparkSession, sf_dir: str):
@@ -1382,19 +1334,16 @@ def _pca_model(spark: SparkSession, sf_dir: str):
     IVF-centroid model-state pattern), assemble the 64x64 matrix, eigh,
     keep the top PCA_K eigenpairs. Eigenvector signs are canonicalized
     (largest-|component| positive) so the model is stable across BLAS
-    builds. Cached per (applicationId, realpath, table fingerprint)
-    like the IVF coarse quantizer — repeated calls must not re-collect,
-    and a fixture rewritten in place mid-session must MISS (r13
-    ADVICE, same fix as _SEMDEDUP_MODEL_CACHE)."""
+    builds. Session-cached per (realpath, table fingerprint) like the
+    IVF coarse quantizer — repeated calls must not re-collect, and a
+    fixture rewritten in place mid-session must MISS."""
+    return _MODELS.get_or_make(spark, ("pca", *_emb_cache_key(sf_dir)),
+                               lambda: _fit_pca(spark, sf_dir))
+
+
+def _fit_pca(spark: SparkSession, sf_dir: str) -> tuple:
     import numpy as np
 
-    app_id = spark.sparkContext.applicationId
-    key = _emb_cache_key(spark, sf_dir)
-    with _PCA_LOCK:
-        for k in [k for k in _PCA_CACHE if k[0] != app_id]:
-            _PCA_CACHE.pop(k, None)  # stopped sessions' models
-        if key in _PCA_CACHE:
-            return _PCA_CACHE[key]
     rows = covariance_frame(table(spark, sf_dir, "embeddings")).collect()
     d = KM_DIMS
     cov = np.zeros((d, d))
@@ -1411,10 +1360,7 @@ def _pca_model(spark: SparkSession, sf_dir: str):
         j = int(np.argmax(np.abs(w[:, k])))
         if w[j, k] < 0:
             w[:, k] = -w[:, k]
-    model = (mu.tolist(), w.tolist(), evals[order].tolist(), int(n))
-    with _PCA_LOCK:
-        _PCA_CACHE[key] = model
-    return model
+    return (mu.tolist(), w.tolist(), evals[order].tolist(), int(n))
 
 
 def _pca_project_udf(mu: list, w: list):
@@ -1832,8 +1778,6 @@ def pq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale this is the persisted code table an IVF-PQ index
     stores; the exploded training matrix lives only inside the build.
     Keyed on the EMBEDDINGS fingerprint (not documents)."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     staged: dict = {}
 
     def build():
@@ -1850,8 +1794,8 @@ def pq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         if e is not None:
             e.unpersist()
 
-    return _mh_session_cached(spark, sf_dir, "pq_assign", build,
-                              tbl="embeddings", cleanup=cleanup)
+    return cached_index(spark, sf_dir, "pq_assign", build,
+                        tbl="embeddings", cleanup=cleanup)
 
 
 def pq_centroid_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1863,8 +1807,6 @@ def pq_centroid_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC built on them reconstructs at least as well as on the pre-step
     centroids — this is standard Lloyd output (final M-step centroids
     with the final assignment), not a code/codebook mismatch."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     def build():
         e = _pq_exploded(table(spark, sf_dir, "embeddings"),
                          persist=False)
@@ -1874,8 +1816,8 @@ def pq_centroid_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("sub", "cid", "dim")
                 .agg(F.expr("sum(q) DIV count(*)").alias("cq")))
 
-    return _mh_session_cached(spark, sf_dir, "pq_cent", build,
-                              tbl="embeddings")
+    return cached_index(spark, sf_dir, "pq_cent", build,
+                        tbl="embeddings")
 
 
 def nd_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1992,8 +1934,6 @@ def pq_baseline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus under a specific codebook; an appended epoch re-records at
     its own content address (pq_refresh's pinned path carries codes, so
     the re-record is one index-sized join, never a retrain)."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     def build():
         emb = table(spark, sf_dir, "embeddings")
         cent = pq_centroid_index(spark, sf_dir)  # (sub, cid, dim, cq)
@@ -2008,8 +1948,8 @@ def pq_baseline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").cast("long").alias("n_corpus"),
                      F.sum("d").cast("long").alias("corpus_distortion")))
 
-    return _mh_session_cached(spark, sf_dir, "pq_base", build,
-                              tbl="embeddings")
+    return cached_index(spark, sf_dir, "pq_base", build,
+                        tbl="embeddings")
 
 
 def pq_staleness(spark: SparkSession, sf_dir: str,
@@ -2068,11 +2008,8 @@ def _refresh_append_guard(spark: SparkSession, merged_dir: str,
     missing from merged, no duplicate ids in merged, and every common
     id carries an identical embedding (null-safe — a rewrite to or
     from NULL must not slip through plain `!=`)."""
-    from bacalhau_spark.operators.dedup import (_scan_table_windows,
-                                                _table_part_paths)
-
-    _, pk = _scan_table_windows(parent_dir, "embeddings")
-    _, mk = _scan_table_windows(merged_dir, "embeddings")
+    _, pk = scan_table_windows(parent_dir, "embeddings")
+    _, mk = scan_table_windows(merged_dir, "embeddings")
     p = table(spark, parent_dir, "embeddings").select(
         "vec_id", "embedding")
     m = table(spark, merged_dir, "embeddings").select(
@@ -2081,7 +2018,7 @@ def _refresh_append_guard(spark: SparkSession, merged_dir: str,
         # parent shards carried verbatim; the appended shards must not
         # re-carry parent ids (the recurring re-crawl shape)
         new_paths = [pth for pth in
-                     _table_part_paths(merged_dir, "embeddings")
+                     table_part_paths(merged_dir, "embeddings")
                      if os.path.basename(pth) not in pk]
         if not new_paths:
             return  # merged == parent: nothing appended, nothing new
@@ -2190,8 +2127,6 @@ def pq_refresh(spark: SparkSession, merged_dir: str,
         pq_code_index(spark, merged_dir)
         pq_centroid_index(spark, merged_dir)
     else:
-        from bacalhau_spark.operators.dedup import _mh_session_cached
-
         cent = pq_centroid_index(spark, parent_dir)
         sq = (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
 
@@ -2213,12 +2148,12 @@ def pq_refresh(spark: SparkSession, merged_dir: str,
         # rules for one slot — whichever lands first owns it
         # (mode=error; the loser adopts), and the prop makes the head's
         # provenance inspectable (`index list`) instead of silent
-        _mh_session_cached(spark, merged_dir, "pq_assign", build_codes,
-                           tbl="embeddings",
-                           extra_props={"encoding": "pinned"})
-        _mh_session_cached(spark, merged_dir, "pq_cent", lambda: cent,
-                           tbl="embeddings",
-                           extra_props={"encoding": "pinned"})
+        cached_index(spark, merged_dir, "pq_assign", build_codes,
+                     tbl="embeddings",
+                     extra_props={"encoding": "pinned"})
+        cached_index(spark, merged_dir, "pq_cent", lambda: cent,
+                     tbl="embeddings",
+                     extra_props={"encoding": "pinned"})
     structs = [F.struct(F.lit(int(r["sub"])).alias("sub"),
                         F.lit(int(r["n_new"])).cast("long").alias("n_new"),
                         F.lit(bool(r["stale"])).alias("stale"),
@@ -2561,8 +2496,6 @@ def ivfpq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload (one int + PQ_M nibbles per vector). Trains the residual
     codebooks through the SAME pq_train_assign loop as plain PQ, over
     the pure-integer residuals."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     staged: dict = {}
 
     def build():
@@ -2584,15 +2517,13 @@ def ivfpq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         if e is not None:
             e.unpersist()
 
-    return _mh_session_cached(spark, sf_dir, "ivfpq_codes", build,
-                              tbl="embeddings", cleanup=cleanup,
-                              rev=IVF_REV)
+    return cached_index(spark, sf_dir, "ivfpq_codes", build,
+                        tbl="embeddings", cleanup=cleanup,
+                        rev=IVF_REV)
 
 
 def ivfpq_centroid_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared persisted residual-PQ codebook (sub, cid, dim, cq)."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     def build():
         emb = table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding")
@@ -2605,8 +2536,8 @@ def ivfpq_centroid_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("sub", "cid", "dim")
                 .agg(F.expr("sum(q) DIV count(*)").alias("cq")))
 
-    return _mh_session_cached(spark, sf_dir, "ivfpq_cent", build,
-                              tbl="embeddings", rev=IVF_REV)
+    return cached_index(spark, sf_dir, "ivfpq_cent", build,
+                        tbl="embeddings", rev=IVF_REV)
 
 
 def ivfpq_baseline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2617,8 +2548,6 @@ def ivfpq_baseline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfpq_staleness call (the refresh verb re-collected the corpus
     term per epoch check). Exact integers; rev follows the IVF family
     (the baseline is a function of the rev-2 coarse artifacts)."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     def build():
         coarse = ivf_coarse_index(spark, sf_dir)
         rcent = ivfpq_centroid_index(spark, sf_dir)   # residual c2
@@ -2636,8 +2565,8 @@ def ivfpq_baseline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").cast("long").alias("n_corpus"),
                      F.sum("d").cast("long").alias("corpus_distortion")))
 
-    return _mh_session_cached(spark, sf_dir, "ivfpq_base", build,
-                              tbl="embeddings", rev=IVF_REV)
+    return cached_index(spark, sf_dir, "ivfpq_base", build,
+                        tbl="embeddings", rev=IVF_REV)
 
 
 def ivfpq_staleness(spark: SparkSession, sf_dir: str,
@@ -2701,8 +2630,6 @@ def ivfpq_refresh(spark: SparkSession, merged_dir: str,
         ivfpq_code_index(spark, merged_dir)
         ivfpq_centroid_index(spark, merged_dir)
     else:
-        from bacalhau_spark.operators.dedup import _mh_session_cached
-
         coarse = ivf_coarse_index(spark, parent_dir)
         rcent = ivfpq_centroid_index(spark, parent_dir)
         sq = (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
@@ -2738,18 +2665,18 @@ def ivfpq_refresh(spark: SparkSession, merged_dir: str,
 
         pinned = {"encoding": "pinned"}  # provenance, see pq_refresh
         try:
-            _mh_session_cached(spark, merged_dir, "ivf_coarse",
-                               lambda: coarse, tbl="embeddings",
-                               rev=IVF_REV, extra_props=pinned)
-            _mh_session_cached(spark, merged_dir, "ivf_cells",
-                               build_cells, tbl="embeddings",
-                               rev=IVF_REV, extra_props=pinned)
-            _mh_session_cached(spark, merged_dir, "ivfpq_codes",
-                               build_codes, tbl="embeddings",
-                               rev=IVF_REV, extra_props=pinned)
-            _mh_session_cached(spark, merged_dir, "ivfpq_cent",
-                               lambda: rcent, tbl="embeddings",
-                               rev=IVF_REV, extra_props=pinned)
+            cached_index(spark, merged_dir, "ivf_coarse",
+                         lambda: coarse, tbl="embeddings",
+                         rev=IVF_REV, extra_props=pinned)
+            cached_index(spark, merged_dir, "ivf_cells",
+                         build_cells, tbl="embeddings",
+                         rev=IVF_REV, extra_props=pinned)
+            cached_index(spark, merged_dir, "ivfpq_codes",
+                         build_codes, tbl="embeddings",
+                         rev=IVF_REV, extra_props=pinned)
+            cached_index(spark, merged_dir, "ivfpq_cent",
+                         lambda: rcent, tbl="embeddings",
+                         rev=IVF_REV, extra_props=pinned)
         finally:
             # the published tables (or fallback checkpoints) no longer
             # depend on the staging frame — release it even when a

@@ -42,7 +42,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bacalhau_spark.catalog import table
+from bacalhau_spark.catalog import spread_compute
+from bacalhau_spark.sources.indexstore import rowwise_index
 
 DOMAIN_CAP = 3
 # Blocked domains: two full sources' shard-domains plus one single shard
@@ -171,13 +172,12 @@ def url_canonicalize_frame(urls: DataFrame,
                        domain.alias("domain"))
 
 
-def _canon_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _canon_frame(docs: DataFrame) -> DataFrame:
     """The one-pass front-door derivation (doc_id, source, url, canon,
-    domain) — the BUILDER behind canon_index; batch consumers never call
-    this per query (round-11 verdict #1: every consumer re-derived the
-    chain, the single most expensive scan of a crawl pipeline at
-    100 TB)."""
-    docs = table(spark, sf_dir, "documents").select("doc_id", "source")
+    domain) over a documents frame — the per-row transform behind
+    canon_index; batch consumers never call this per query (re-deriving
+    the chain per consumer would repeat the single most expensive scan
+    of a crawl pipeline at 100 TB)."""
     return url_canonicalize_frame(
         docs.select("doc_id", "source", _url_expr().alias("url")))
 
@@ -194,15 +194,8 @@ def canon_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl epoch; the streaming twins keep the inline chain because a
     readStream IS that ingest. Reference analog: CID-keyed input
     caching, pkg/storage/ipfs_apicopy/storage.go:116-134."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
-    return _mh_session_cached(
-        spark, sf_dir, "canon",
-        lambda: _canon_frame(spark, sf_dir),
-        build_delta=lambda paths: url_canonicalize_frame(
-            spark.read.parquet(*paths)
-            .select("doc_id", "source", _url_expr().alias("url"))),
-        rev=FRONT_DOOR_REV)
+    return rowwise_index(spark, sf_dir, "canon", _canon_frame,
+                         rev=FRONT_DOOR_REV)
 
 
 def html_extract_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,29 +204,20 @@ def html_extract_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer scans clean text. At 100 TB the canonicalize+extract pass
     over raw HTML is the pipeline's most expensive scan — production
     materializes it exactly once (round-11 verdict #1)."""
-    from bacalhau_spark.operators.dedup import _mh_session_cached
-
     def _extract(docs: DataFrame) -> DataFrame:
         pages = docs.select("doc_id", _html_expr().alias("html"))
         return (html_extract_frame(pages)
                 .select("doc_id", "title", "content"))
 
-    # spread_compute (r15): the HTML synthesis + regex extraction chain
-    # is per-row CPU over a one-row-group scan (single task without the
+    # spread_compute: the HTML synthesis + regex extraction chain is
+    # per-row CPU over a one-row-group scan (single task without the
     # exchange) — A/B 0.33 -> 0.25 s at sf0.1. The canon build keeps
     # the raw scan: its URL string chain is cheap and the same A/B read
-    # 0.27 -> 0.30 s (the exchange does not pay; negative recorded in
-    # OPTIMIZATION_r15.md).
-    from bacalhau_spark.catalog import spread_compute
-
-    return _mh_session_cached(
+    # 0.27 -> 0.30 s (the exchange does not pay).
+    return rowwise_index(
         spark, sf_dir, "extract",
-        lambda: _extract(spread_compute(
-            spark, table(spark, sf_dir, "documents")
-            .select("doc_id", "source", "text"), "doc_id")),
-        build_delta=lambda paths: _extract(spread_compute(
-            spark, spark.read.parquet(*paths)
-            .select("doc_id", "source", "text"), "doc_id")),
+        lambda docs: _extract(spread_compute(
+            spark, docs.select("doc_id", "source", "text"), "doc_id")),
         rev=FRONT_DOOR_REV)
 
 

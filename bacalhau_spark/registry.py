@@ -55,7 +55,7 @@ _MODULES = (scans, scalar, filters, joins, aggregates, windows, sort, setops,
 #      their keys (semantic screen, PCA basis/seeds, IVF centroids —
 #      every consumer re-grades); the index publish path gained
 #      killed-builder healing and the key-map reuse, and the cand
-#      delta gained the width gate (every _mh_session_cached-backed
+#      delta gained the width gate (every store-backed (cached_index)
 #      row re-grades: minhash family, phash x3 + real, winnow, pq /
 #      ivfpq planes, lshsig rows, front door); write_version's
 #      parquet-write scope moved inside the cleanup try (the two

@@ -17,6 +17,7 @@ local mode:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -66,3 +67,58 @@ def get_session(app_name: str = "bacalhau-spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_MISS = object()
+
+
+class SessionCache:
+    """A lock-guarded map whose entries live as long as ONE Spark
+    application: the first access under a different applicationId drops
+    every entry. Cached DataFrames, Columns and plan decisions hold JVM
+    state of the session that made them, and only one session is live
+    per process, so a foreign applicationId's entries are dead weight
+    (and unsafe to hand out). Keys never carry the application id."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._app: str | None = None
+        self._entries: dict = {}
+
+    def _scoped(self, spark: SparkSession) -> dict:
+        # caller holds self._lock
+        app = spark.sparkContext.applicationId
+        if app != self._app:
+            self._app, self._entries = app, {}
+        return self._entries
+
+    def get(self, spark: SparkSession, key, default=None):
+        with self._lock:
+            return self._scoped(spark).get(key, default)
+
+    def setdefault(self, spark: SparkSession, key, value):
+        with self._lock:
+            return self._scoped(spark).setdefault(key, value)
+
+    def get_or_make(self, spark: SparkSession, key, make):
+        """The cached value, else `make()` run OUTSIDE the lock (a
+        concurrent maker may win; the first stored value is returned)."""
+        hit = self.get(spark, key, _MISS)
+        return self.setdefault(spark, key, make()) if hit is _MISS else hit
+
+    def keys(self, spark: SparkSession) -> list:
+        with self._lock:
+            return list(self._scoped(spark))
+
+    def evict(self, spark: SparkSession, match=None) -> list:
+        """Remove this session's entries whose key satisfies `match`
+        (all of them by default); returns the removed values."""
+        with self._lock:
+            entries = self._scoped(spark)
+            return [entries.pop(k) for k in list(entries)
+                    if match is None or match(k)]
+
+    def clear(self) -> None:
+        """Drop every entry, whatever session made it."""
+        with self._lock:
+            self._entries = {}

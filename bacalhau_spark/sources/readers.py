@@ -4,17 +4,12 @@ Reference interface: ``StorageProvider{PrepareStorage, HasStorageLocally,
 GetVolumeSize, ...}`` (`pkg/storage/types.go:7-18`) with IPFS api-copy,
 FUSE, URL-download and noop drivers. Spark-first restatement: a format
 registry over ``spark.read`` — lazy columnar scans replace eager CID copies
-(column pruning + predicate pushdown are the lazy-mount analog), and the
-URL driver stages to a local dir before reading, exactly like
-`pkg/storage/url/urldownload/storage.go:65-94`.
+(column pruning + predicate pushdown are the lazy-mount analog).
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
 import urllib.parse
-import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,21 +38,3 @@ def is_url_supported(raw_url: str) -> bool:
     parsed = urllib.parse.urlparse(raw_url)
     return parsed.scheme in ("http", "https") and bool(parsed.netloc)
 
-
-def read_url(spark: SparkSession, fmt: str, url: str, schema: str | None = None,
-             staging_dir: str | None = None, timeout: int = 300,
-             **options) -> DataFrame:
-    """URL-download source: HTTP(S) GET to a staging file, then a normal
-    lazy scan — `pkg/storage/url/urldownload/storage.go:65-94` (300 s timeout
-    from `pkg/config/config.go:73-82`). Driver-side staging is only for
-    ad-hoc inputs; bulk data should already live on distributed storage."""
-    if not is_url_supported(url):
-        raise ValueError(f"unsupported URL {url!r} (http/https only)")
-    staging_dir = staging_dir or tempfile.mkdtemp(prefix="bacalhau_spark_url_")
-    name = os.path.basename(urllib.parse.urlparse(url).path) or "download"
-    target = os.path.join(staging_dir, name)
-    if not os.path.exists(target):  # content-addressed-style reuse
-        with urllib.request.urlopen(url, timeout=timeout) as resp, \
-                open(target, "wb") as out:
-            out.write(resp.read())
-    return read(spark, fmt, target, schema=schema, **options)

@@ -72,12 +72,11 @@ def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ingest job per crawl epoch publishes the artifacts and every
     later consumer — batch query, streaming screen, next session —
     adopts. On an appended corpus the build delta-adopts (only new
-    shards hashed; dedup._mh_session_cached). Emits the store's
+    shards hashed; sources.indexstore.cached_index). Emits the store's
     commit-log view for the built kinds: (kind, n_rows, version,
     delta_parent) — a deterministic function of the corpus content, so
     the stage output is graded like any other stage's."""
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                band_candidate_index,
+    from bacalhau_spark.operators.dedup import (band_candidate_index,
                                                 minhash_signature_index,
                                                 winnow_posting_index)
     from bacalhau_spark.operators.multimodal import (audio_phash_index,
@@ -95,6 +94,7 @@ def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bacalhau_spark.operators.web import (FRONT_DOOR_REV, canon_index,
                                               html_extract_index)
     from bacalhau_spark.sources import versioned
+    from bacalhau_spark.sources.indexstore import index_table_root
 
     # (kind, builder, builder rev, source table): the table root folds
     # the rev, so a commit-log lookup at the wrong rev reads a
@@ -127,7 +127,7 @@ def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     for kind, fn, rev, tbl in builders:
         n = fn(spark, sf_dir).count()
         man = versioned.latest_manifest(
-            _index_table_root(sf_dir, kind, tbl, rev=rev)) or {}
+            index_table_root(sf_dir, kind, tbl, rev=rev)) or {}
         rows.append((kind, n, int(man.get("version", 0)),
                      man.get("props", {}).get("delta_parent") or ""))
     return spark.range(1).select(F.inline(F.array(*[

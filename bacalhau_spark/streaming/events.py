@@ -104,7 +104,13 @@ def _start_scoped(spark: SparkSession, writer):
             d = os.path.join(
                 _STREAM_CKPT_BASE,
                 f"bacalhau-stream-ckpt-{uuid.uuid4().hex}")
-            q = writer.option("checkpointLocation", d).start()
+            try:
+                q = writer.option("checkpointLocation", d).start()
+            except BaseException:
+                # a failed start never reaches _await_or_raise, the
+                # dir's only other remover
+                shutil.rmtree(d, ignore_errors=True)
+                raise
             _CKPT_BY_QUERY[str(q.id)] = d
             return q
         return writer.start()

@@ -166,7 +166,7 @@ def main() -> None:
     # The r8-and-earlier series measured build+probe without a publish;
     # the step is the write cost (decomposed in
     # experiments/index_persist_r11.txt).
-    from bacalhau_spark.operators.dedup import clear_session_index
+    from bacalhau_spark.sources.indexstore import clear_session_index
     mh_fn, _ = ALL_QUERIES["nd_minhash_lsh"]
     cold_runs = []
     for _ in range(3):

@@ -77,9 +77,9 @@ def test_index_verify_is_the_store_fsck(spark, sf_dir, capsys):
     import os
     import shutil
 
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                clear_session_index,
-                                                index_store_root)
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_store_root,
+                                                   index_table_root)
 
     assert cli.main(["index", "build", "--sf-dir", sf_dir,
                      "--kind", "winnow"]) == 0
@@ -92,7 +92,7 @@ def test_index_verify_is_the_store_fsck(spark, sf_dir, capsys):
         assert mine and all(r["ok"] and r["n_rows"] > 0 for r in mine)
 
         # corrupt one data file: verify must name it and exit 1
-        troot = _index_table_root(sf_dir, "winnow", "documents", rev=2)
+        troot = index_table_root(sf_dir, "winnow", "documents", rev=2)
         vdir = os.path.join(troot, "v=000001")
         victim = next(f for f in os.listdir(vdir)
                       if f.endswith(".parquet"))
@@ -162,7 +162,7 @@ def test_index_drop_stale_days_spares_fresh_tables(spark, sf_dir,
     import json as _json
     import os
 
-    from bacalhau_spark.operators.dedup import index_store_root
+    from bacalhau_spark.sources.indexstore import index_store_root
 
     assert cli.main(["index", "build", "--sf-dir", sf_dir,
                      "--kind", "winnow"]) == 0

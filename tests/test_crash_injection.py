@@ -77,14 +77,14 @@ def test_killed_builder_premanifest_heals_and_republishes(
     """SIGKILL between the parquet write and the manifest: the slot is a
     manifestless non-commit. The next session's publish path must
     age-guard-clear it, publish cleanly, and serve the exact index."""
-    from bacalhau_spark.operators import dedup
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                minhash_signature_index)
+    from bacalhau_spark.operators.dedup import minhash_signature_index
+    from bacalhau_spark.sources import indexstore
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.sources.versioned import latest_manifest
 
     corpus = str(tmp_path / "corpus")
     _shifted(spark, sf_dir, corpus, 41_000_000)
-    root = _index_table_root(corpus, "sig", "documents")
+    root = index_table_root(corpus, "sig", "documents")
     try:
         _run_killed_builder(tmp_path, "premanifest", corpus)
         # the killed builder's debris: data files, no manifest, v1 slot
@@ -97,7 +97,7 @@ def test_killed_builder_premanifest_heals_and_republishes(
         # slot by default, so the next session degrades gracefully but
         # does NOT publish; the test then lowers the age (the sweep /
         # next-epoch shape) and the publish must converge
-        monkeypatch.setattr(dedup, "PENDING_DEBRIS_AGE_S", 0.0)
+        monkeypatch.setattr(indexstore, "PENDING_DEBRIS_AGE_S", 0.0)
         got = sorted(map(tuple,
                          minhash_signature_index(spark, corpus).collect()))
         man = latest_manifest(root)
@@ -115,14 +115,14 @@ def test_killed_builder_prepointer_finishes_the_commit(
     commit is DURABLE — the next session must FINISH it (flip the
     pointer, never rmtree a manifest-bearing slot) and adopt the dead
     builder's byte-equivalent artifact instead of rebuilding."""
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                minhash_signature_index)
+    from bacalhau_spark.operators.dedup import minhash_signature_index
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.sources.versioned import (latest_manifest,
                                                   latest_version)
 
     corpus = str(tmp_path / "corpus")
     _shifted(spark, sf_dir, corpus, 42_000_000)
-    root = _index_table_root(corpus, "sig", "documents")
+    root = index_table_root(corpus, "sig", "documents")
     try:
         _run_killed_builder(tmp_path, "prepointer", corpus)
         slot = os.path.join(root, "v=000001")
@@ -148,6 +148,6 @@ def _shifted(spark, sf_dir, dest, shift):
 
 
 def _clear(spark):
-    from bacalhau_spark.operators.dedup import clear_session_index
+    from bacalhau_spark.sources.indexstore import clear_session_index
 
     clear_session_index(spark)

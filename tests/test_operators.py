@@ -60,7 +60,7 @@ def test_ivf_pruned_probe_matches_and_prunes(spark, sf_dir):
     artifact must actually skip files: one probed cell's membership
     predicate opens a strict subset of the files (the NPROBE/K
     scan-fraction claim made measurable, not argued)."""
-    from bacalhau_spark.operators.dedup import _index_table_root
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.operators.similarity import (IVF_REV,
                                                      ivf_vectors_index,
                                                      nd_ann_ivf_pruned)
@@ -72,8 +72,8 @@ def test_ivf_pruned_probe_matches_and_prunes(spark, sf_dir):
     got = [tuple(r) for r in nd_ann_ivf_pruned(spark, sf_dir).collect()]
     assert got == base and got
     ivf_vectors_index(spark, sf_dir)
-    root = _index_table_root(sf_dir, "ivf_vectors", "embeddings",
-                             rev=IVF_REV)
+    root = index_table_root(sf_dir, "ivf_vectors", "embeddings",
+                            rev=IVF_REV)
     if latest_manifest(root) is None:
         pytest.skip("index store unusable here; equality covered above")
     kept, total = pruned_file_count(root, [("cluster", "in", (0,))])
@@ -98,7 +98,7 @@ def test_ivf_pruned_composite_layout_equality(spark, sf_dir, tmp_path,
     import shutil
 
     from bacalhau_spark.operators import similarity as S
-    from bacalhau_spark.operators.dedup import _index_table_root
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.sources.versioned import latest_manifest
 
     corpus = str(tmp_path / "corpus")
@@ -110,15 +110,15 @@ def test_ivf_pruned_composite_layout_equality(spark, sf_dir, tmp_path,
         got = [tuple(r)
                for r in S.nd_ann_ivf_pruned(spark, corpus).collect()]
         assert got == base and got
-        man = latest_manifest(_index_table_root(
+        man = latest_manifest(index_table_root(
             corpus, "ivf_vectors", "embeddings", rev=S.IVF_REV))
         if man is not None:
             assert man["n_files"] > S.N_CLUSTERS, \
                 "tiny target must force the composite >K layout"
     finally:
         for kind in ("ivf_coarse", "ivf_cells", "ivf_vectors"):
-            shutil.rmtree(_index_table_root(corpus, kind, "embeddings",
-                                            rev=S.IVF_REV),
+            shutil.rmtree(index_table_root(corpus, kind, "embeddings",
+                                           rev=S.IVF_REV),
                           ignore_errors=True)
 
 
@@ -396,7 +396,7 @@ def test_phash_candidate_tier_is_persisted(spark, sf_dir):
     guard, same clause as the winnow index test)."""
     import os
 
-    from bacalhau_spark.operators.dedup import index_store_root
+    from bacalhau_spark.sources.indexstore import index_store_root
     from bacalhau_spark.operators.multimodal import (PHASH_BUCKET_CAP,
                                                      nd_image_phash,
                                                      phash_candidate_pairs,
@@ -418,11 +418,11 @@ def test_phash_candidate_tier_is_persisted(spark, sf_dir):
 
 
 def _phash_cand_frame(spark, sf_dir):
-    from bacalhau_spark.operators.dedup import _mh_session_cached
+    from bacalhau_spark.sources.indexstore import cached_index
     from bacalhau_spark.operators.multimodal import (PHASH_BUCKET_CAP,
                                                      phash_candidate_pairs,
                                                      phash_index)
-    return _mh_session_cached(
+    return cached_index(
         spark, sf_dir, "phash_cand",
         lambda: phash_candidate_pairs(phash_index(spark, sf_dir),
                                       bucket_cap=PHASH_BUCKET_CAP))
@@ -503,20 +503,18 @@ def test_image_phash_broadcast_gate_degrades(spark, sf_dir, monkeypatch):
     join strategy, which is the degrade-not-die contract) and the
     result rows are IDENTICAL to the hinted plan's."""
     from bacalhau_spark.operators import dedup
-    from bacalhau_spark.operators.dedup import clear_session_index
+    from bacalhau_spark.sources.indexstore import clear_session_index
     from bacalhau_spark.operators.multimodal import nd_image_phash
 
     rows_bcast = sorted(map(tuple,
                             nd_image_phash(spark, sf_dir).collect()))
     # drop the cached count so the gate decision is re-made
-    with dedup._MH_IDX_LOCK:
-        dedup._CAND_COUNT_CACHE.clear()
+    dedup.CAND_COUNTS.clear()
     monkeypatch.setattr(dedup, "EDIT_BROADCAST_MAX_PAIRS", 0)
     df = nd_image_phash(spark, sf_dir)
     rows_shuffle = sorted(map(tuple, df.collect()))
     assert rows_shuffle == rows_bcast
-    with dedup._MH_IDX_LOCK:
-        dedup._CAND_COUNT_CACHE.clear()
+    dedup.CAND_COUNTS.clear()
 
 
 def test_leakage_safe_split_invariants(spark, sf_dir):
@@ -1365,6 +1363,7 @@ def test_shingle_posting_index_shared_and_equivalent(spark, sf_dir):
     """
     from bacalhau_spark.catalog import spread_compute, table
     from bacalhau_spark.operators import dedup as D
+    from bacalhau_spark.sources.indexstore import clear_session_index
 
     idx1 = D.shingle_posting_index(spark, sf_dir)
     idx2 = D.shingle_posting_index(spark, sf_dir)
@@ -1383,7 +1382,7 @@ def test_shingle_posting_index_shared_and_equivalent(spark, sf_dir):
                             .collect()))
         assert fresh == shared, f"{row_name} diverges from fresh build"
 
-    D.clear_session_index(spark)
+    clear_session_index(spark)
     idx3 = D.shingle_posting_index(spark, sf_dir)
     assert idx3 is not idx1, "eviction must force a rebuild"
 
@@ -1404,6 +1403,7 @@ def test_shingle_pair_index_shared_and_equivalent(spark, sf_dir):
       the evicted ones (rebuild, not drift).
     """
     from bacalhau_spark.operators import dedup as D
+    from bacalhau_spark.sources.indexstore import clear_session_index
 
     p1 = D.shingle_pair_index(spark, sf_dir)
     p2 = D.shingle_pair_index(spark, sf_dir)
@@ -1414,8 +1414,30 @@ def test_shingle_pair_index_shared_and_equivalent(spark, sf_dir):
     assert "shared_w" in w1[0].columns and "tw" in w1[1].columns
     before = sorted(map(tuple, p1[0].collect()))
 
-    D.clear_session_index(spark)
+    clear_session_index(spark)
     p3 = D.shingle_pair_index(spark, sf_dir)
     assert p3[0] is not p1[0], "eviction must force a rebuild"
     assert sorted(map(tuple, p3[0].collect())) == before, \
         "rebuilt pair stats must match the evicted frames"
+
+
+def test_warm_jaccard_read_refreshes_posting_liveness(spark, sf_dir):
+    """A warm read through the shingle posting/pair views must keep the
+    persisted shpost artifact's _LAST_ADOPTED marker fresh — otherwise
+    `index drop --stale-days 7` could reap a table a live session is
+    reading."""
+    import os
+    import time
+
+    from bacalhau_spark.operators.dedup import nd_ngram_jaccard
+    from bacalhau_spark.sources.indexstore import index_table_root
+
+    nd_ngram_jaccard(spark, sf_dir).collect()  # adopt + fill the views
+    marker = os.path.join(index_table_root(sf_dir, "shpost3", "documents"),
+                          "_LAST_ADOPTED")
+    if not os.path.exists(marker):
+        pytest.skip("index store unusable here (session-local fallback)")
+    aged = time.time() - 8 * 86400
+    os.utime(marker, (aged, aged))
+    nd_ngram_jaccard(spark, sf_dir).collect()  # warm: a tier-1 view hit
+    assert os.path.getmtime(marker) > aged + 7 * 86400

@@ -123,7 +123,7 @@ def test_pq_refresh_stage_runs_in_the_dag(spark, tmp_path):
     import os
     import shutil
 
-    from bacalhau_spark.operators.dedup import _index_table_root
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.operators.similarity import (_pq_drift_batch,
                                                      pq_code_index)
     from bacalhau_spark.registry import engine_registry
@@ -165,14 +165,14 @@ def test_pq_refresh_stage_runs_in_the_dag(spark, tmp_path):
         # the PQ_M subspace rows records the retrain decision
         assert [(r["action"], r["n"]) for r in out] == [("retrain", 16)]
         man = latest_manifest(
-            _index_table_root(merged, "pq_assign", "embeddings"))
+            index_table_root(merged, "pq_assign", "embeddings"))
         assert man is not None and man["files"], \
             "the DAG's retrain must publish under the merged content key"
     finally:
         for d in (parent, merged):
             for kind in ("pq_assign", "pq_cent"):
                 shutil.rmtree(
-                    _index_table_root(d, kind, "embeddings"),
+                    index_table_root(d, kind, "embeddings"),
                     ignore_errors=True)
 
 

@@ -22,14 +22,14 @@ def _emb_corpus(spark, src_df, dest_dir):
 
 
 def _drop_store(dirs):
-    from bacalhau_spark.operators.dedup import _index_table_root
+    from bacalhau_spark.sources.indexstore import index_table_root
 
     for d in dirs:
         for kind in ("pq_assign", "pq_cent", "ivf_coarse", "ivf_cells",
                      "ivfpq_codes", "ivfpq_cent"):
             for rev in (1, 2):
                 shutil.rmtree(
-                    _index_table_root(d, kind, "embeddings", rev=rev),
+                    index_table_root(d, kind, "embeddings", rev=rev),
                     ignore_errors=True)
 
 
@@ -40,7 +40,7 @@ def test_pq_refresh_retrains_on_drift_and_closes_the_loop(
     retrieval is IDENTICAL to an independently fresh-trained one (recall
     recovers to the fresh-train level by identity, not tolerance); and
     re-reading the monitor against the retrained epoch reads clean."""
-    from bacalhau_spark.operators.dedup import _index_table_root
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.operators.similarity import (
         _pq_drift_batch, _pq_exploded, adc_topk, pq_centroid_index,
         pq_code_index, pq_refresh, pq_staleness, pq_train_assign)
@@ -65,7 +65,7 @@ def test_pq_refresh_retrains_on_drift_and_closes_the_loop(
         out = pq_refresh(spark, merged, parent).collect()
         assert out and all(r["action"] == "retrain" for r in out)
         man = latest_manifest(
-            _index_table_root(merged, "pq_assign", "embeddings"))
+            index_table_root(merged, "pq_assign", "embeddings"))
         assert man is not None and man["files"], \
             "retrain must publish codes under the merged content key"
 
@@ -167,8 +167,8 @@ def test_ivf_coarse_quantizer_is_published_and_adopted(
     subtly different quantizer than the codes were assigned under. A
     session-cache clear must re-ADOPT the published rows verbatim, not
     retrain."""
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                clear_session_index)
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_table_root)
     from bacalhau_spark.operators.similarity import (IVF_REV,
                                                      ivf_coarse_index)
     from bacalhau_spark.sources.versioned import latest_manifest
@@ -180,8 +180,8 @@ def test_ivf_coarse_quantizer_is_published_and_adopted(
     try:
         first = sorted(map(tuple,
                            ivf_coarse_index(spark, corpus).collect()))
-        root = _index_table_root(corpus, "ivf_coarse", "embeddings",
-                                 rev=IVF_REV)
+        root = index_table_root(corpus, "ivf_coarse", "embeddings",
+                                rev=IVF_REV)
         man = latest_manifest(root)
         assert man is not None and man["files"] and man["version"] == 1
         clear_session_index(spark)
@@ -202,7 +202,7 @@ def test_ivfpq_refresh_retrains_on_drift_and_closes_the_loop(
     coarse quantizer + residual codebooks + codes under the merged
     content key, and the signal clears on re-read; an exact-copies
     batch takes the pinned path with both codebooks carried."""
-    from bacalhau_spark.operators.dedup import _index_table_root
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.operators.similarity import (
         _pq_drift_batch, ivfpq_code_index, ivfpq_refresh,
         ivfpq_staleness)
@@ -228,8 +228,8 @@ def test_ivfpq_refresh_retrains_on_drift_and_closes_the_loop(
 
         for kind in ("ivf_coarse", "ivfpq_codes", "ivfpq_cent"):
             man = latest_manifest(
-                _index_table_root(merged, kind, "embeddings",
-                                  rev=IVF_REV))
+                index_table_root(merged, kind, "embeddings",
+                                 rev=IVF_REV))
             assert man is not None and man["files"], \
                 f"retrain must publish {kind} under the merged key"
         mon2 = ivfpq_staleness(spark, merged, drift).collect()
@@ -288,7 +288,7 @@ def test_refresh_append_guard_rejects_non_append_epochs(
     nothing under the merged content key."""
     import pytest
 
-    from bacalhau_spark.operators.dedup import _index_table_root
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.operators.similarity import (pq_code_index,
                                                      pq_refresh)
     from bacalhau_spark.sources.versioned import latest_manifest
@@ -354,7 +354,7 @@ def test_refresh_append_guard_rejects_non_append_epochs(
         with pytest.raises(ValueError, match="duplicate vec_ids among"):
             pq_refresh(spark, dupnew, parent)
         for d in (rewritten, shrunk, recarry):
-            assert latest_manifest(_index_table_root(
+            assert latest_manifest(index_table_root(
                 d, "pq_assign", "embeddings")) is None, \
                 "a refused refresh must publish nothing"
     finally:
@@ -367,7 +367,7 @@ def test_adopt_pinned_publishes_encoding_provenance(
     """A pinned publish and a fresh build are two declared rules for
     one content address; the manifest's encoding prop records which
     rule produced the head (r14 review) so the state is inspectable."""
-    from bacalhau_spark.operators.dedup import _index_table_root
+    from bacalhau_spark.sources.indexstore import index_table_root
     from bacalhau_spark.operators.similarity import (pq_code_index,
                                                      pq_refresh)
     from bacalhau_spark.sources.versioned import latest_manifest
@@ -387,11 +387,11 @@ def test_adopt_pinned_publishes_encoding_provenance(
         _emb_corpus(spark, p_emb.unionByName(batch), merged)
         out = pq_refresh(spark, merged, parent).collect()
         assert out and all(r["action"] == "adopt_pinned" for r in out)
-        man = latest_manifest(_index_table_root(
+        man = latest_manifest(index_table_root(
             merged, "pq_assign", "embeddings"))
         assert man and man["props"].get("encoding") == "pinned"
         # the parent's own (fresh-trained) manifest carries no mark
-        pman = latest_manifest(_index_table_root(
+        pman = latest_manifest(index_table_root(
             parent, "pq_assign", "embeddings"))
         assert pman and pman["props"].get("encoding") is None
     finally:

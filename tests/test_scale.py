@@ -954,10 +954,10 @@ def test_minhash_index_is_built_once_per_session(spark, sf_dir):
     import os
 
     from bacalhau_spark.operators.dedup import (band_candidate_index,
-                                                index_store_root,
                                                 minhash_signature_index,
                                                 nd_editdist_dedup,
                                                 nd_minhash_estimate)
+    from bacalhau_spark.sources.indexstore import index_store_root
 
     sig1 = minhash_signature_index(spark, sf_dir)
     sig2 = minhash_signature_index(spark, sf_dir)
@@ -1021,10 +1021,10 @@ def test_winnow_index_is_built_once_per_session(spark, sf_dir):
     import os
 
     from bacalhau_spark.catalog import table
-    from bacalhau_spark.operators.dedup import (index_store_root,
-                                                nd_winnowing,
+    from bacalhau_spark.operators.dedup import (nd_winnowing,
                                                 winnow_posting_index,
                                                 winnowing_pairs)
+    from bacalhau_spark.sources.indexstore import index_store_root
 
     idx1 = winnow_posting_index(spark, sf_dir)
     assert idx1 is winnow_posting_index(spark, sf_dir)
@@ -1044,11 +1044,11 @@ def test_winnow_capped_frame_is_session_cached(spark, sf_dir):
     content, not once per read), clear_session_index evicts it with
     the index tier (bench cold-path comparability), and the cached
     read equals the direct guard-per-read path exactly."""
-    from bacalhau_spark.operators.dedup import (clear_session_index,
-                                                winnow_capped_postings,
+    from bacalhau_spark.operators.dedup import (winnow_capped_postings,
                                                 winnow_pairs_from_postings,
                                                 winnow_posting_index,
                                                 nd_winnowing)
+    from bacalhau_spark.sources.indexstore import clear_session_index
 
     capped1 = winnow_capped_postings(spark, sf_dir)
     assert capped1 is winnow_capped_postings(spark, sf_dir)
@@ -1069,7 +1069,7 @@ def test_pq_index_is_built_once_per_session(spark, sf_dir):
     audit's plan."""
     import os
 
-    from bacalhau_spark.operators.dedup import index_store_root
+    from bacalhau_spark.sources.indexstore import index_store_root
     from bacalhau_spark.operators.similarity import (nd_pq_quantize,
                                                      pq_centroid_index,
                                                      pq_code_index)
@@ -1100,19 +1100,19 @@ def test_index_store_persists_across_sessions(spark, sf_dir, tmp_path):
     import shutil
 
     from bacalhau_spark.catalog import table
-    from bacalhau_spark.operators.dedup import (_content_key,
-                                                _index_table_root,
-                                                clear_session_index,
-                                                minhash_signature_index,
+    from bacalhau_spark.operators.dedup import (minhash_signature_index,
                                                 nd_minhash_lsh)
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   content_key,
+                                                   index_table_root)
     from bacalhau_spark.sources.versioned import (latest_manifest,
                                                   latest_version)
 
     minhash_signature_index(spark, sf_dir)
-    root = _index_table_root(sf_dir, "sig", "documents")
+    root = index_table_root(sf_dir, "sig", "documents")
     m = latest_manifest(root)
     assert m is not None and m["files"]
-    assert m["props"]["content_key"] == _content_key(sf_dir, "documents")
+    assert m["props"]["content_key"] == content_key(sf_dir, "documents")
     v_before = latest_version(root)
     rows_before = sorted(map(tuple, nd_minhash_lsh(spark, sf_dir).collect()))
 
@@ -1128,7 +1128,7 @@ def test_index_store_persists_across_sessions(spark, sf_dir, tmp_path):
     docs = table(spark, sf_dir, "documents").limit(40)
     docs.coalesce(1).write.parquet(os.path.join(alt, "documents.parquet"))
     minhash_signature_index(spark, alt)
-    alt_root = _index_table_root(alt, "sig", "documents")
+    alt_root = index_table_root(alt, "sig", "documents")
     assert latest_version(alt_root) == 1
     # rewrite the fixture in place -> new content key -> fresh table
     clear_session_index(spark)
@@ -1140,11 +1140,10 @@ def test_index_store_persists_across_sessions(spark, sf_dir, tmp_path):
     # semantics, orthogonal to the index store)
     spark.catalog.refreshByPath(os.path.join(alt, "documents.parquet"))
     from bacalhau_spark import catalog as _catalog
-    with _catalog._CACHE_LOCK:
-        _catalog._CACHE.clear()
+    _catalog.HANDLES.clear()
     n20 = minhash_signature_index(spark, alt).count()
     assert n20 == 20
-    new_root = _index_table_root(alt, "sig", "documents")
+    new_root = index_table_root(alt, "sig", "documents")
     assert new_root != alt_root, "changed bytes must change the address"
     assert latest_version(new_root) == 1
     assert latest_version(alt_root) == 1, "old content table is immutable"
@@ -1161,13 +1160,13 @@ def test_index_store_is_content_addressed_across_paths(spark, sf_dir,
     import shutil
 
     from bacalhau_spark.operators import dedup
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                _mh_session_cached,
-                                                minhash_signature_index)
+    from bacalhau_spark.operators.dedup import minhash_signature_index
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   index_table_root)
     from bacalhau_spark.sources.versioned import latest_version
 
     minhash_signature_index(spark, sf_dir)
-    root = _index_table_root(sf_dir, "sig", "documents")
+    root = index_table_root(sf_dir, "sig", "documents")
     v = latest_version(root)
     assert v >= 1
 
@@ -1182,15 +1181,16 @@ def test_index_store_is_content_addressed_across_paths(spark, sf_dir,
             shutil.copyfile(os.path.join(src, f), os.path.join(dst, f))
     else:
         shutil.copyfile(src, dst)
-    assert _index_table_root(copy, "sig", "documents") == root
+    assert index_table_root(copy, "sig", "documents") == root
 
     calls = []
 
     def build():
         calls.append(1)
-        return dedup._minhash_signatures(spark, copy)
+        return dedup._minhash_signatures(
+            spark, table(spark, copy, "documents"))
 
-    adopted = _mh_session_cached(spark, copy, "sig", build)
+    adopted = cached_index(spark, copy, "sig", build)
     assert calls == [], "copy of same bytes must adopt, never rebuild"
     assert latest_version(root) == v
     assert adopted.count() == minhash_signature_index(
@@ -1254,8 +1254,8 @@ def test_index_delta_adoption_hashes_only_appended_files(spark, sf_dir,
     import os
     import shutil
 
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                _mh_session_cached)
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   index_table_root)
     from bacalhau_spark.operators.multimodal import (phash_frame,
                                                      phash_index)
     from bacalhau_spark.sources.versioned import (latest_manifest,
@@ -1264,7 +1264,7 @@ def test_index_delta_adoption_hashes_only_appended_files(spark, sf_dir,
     epoch1 = str(tmp_path / "epoch1")
     _shifted_docs_corpus(spark, sf_dir, epoch1, 7_000_000)
     phash_index(spark, epoch1)  # full build + publish for epoch 1
-    parent_root = _index_table_root(epoch1, "phash", "documents")
+    parent_root = index_table_root(epoch1, "phash", "documents")
     assert latest_manifest(parent_root)["props"].get("file_keys")
 
     # epoch 2 = epoch 1's files + one appended shard of NEW doc_ids
@@ -1294,11 +1294,11 @@ def test_index_delta_adoption_hashes_only_appended_files(spark, sf_dir,
         return phash_frame(
             spark.read.parquet(*paths).select("doc_id"))
 
-    adopted = _mh_session_cached(spark, epoch2, "phash", build,
-                                 build_delta=build_delta)
+    adopted = cached_index(spark, epoch2, "phash", build,
+                           delta=build_delta)
     assert full_calls == [], "append must never trigger a full rebuild"
     assert delta_paths == [appended]
-    child_root = _index_table_root(epoch2, "phash", "documents")
+    child_root = index_table_root(epoch2, "phash", "documents")
     man = latest_manifest(child_root)
     assert man["props"]["delta_parent"] == os.path.basename(parent_root)
 
@@ -1322,11 +1322,11 @@ def test_sig_delta_rejects_recarried_doc_ids(spark, sf_dir, tmp_path):
     disjoint append on the same corpus still delta-adopts."""
     import os
 
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                _mh_sig_frame,
-                                                _mh_session_cached,
-                                                clear_session_index,
+    from bacalhau_spark.operators.dedup import (_mh_sig_frame,
                                                 minhash_signature_index)
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   clear_session_index,
+                                                   index_table_root)
     from bacalhau_spark.catalog import spread_compute
     from bacalhau_spark.sources.versioned import latest_manifest
 
@@ -1358,9 +1358,9 @@ def test_sig_delta_rejects_recarried_doc_ids(spark, sf_dir, tmp_path):
                 spark, spark.read.parquet(*paths)
                 .select("doc_id", "text"), "doc_id"))
 
-        out = _mh_session_cached(spark, d, "sig", build,
-                                 build_delta=build_delta,
-                                 delta_key="doc_id")
+        out = cached_index(spark, d, "sig", build,
+                           delta=build_delta,
+                           delta_key="doc_id")
         return out, full_calls, delta_calls
 
     # re-carried ids: the appended shard repeats epoch-1 doc_ids
@@ -1378,7 +1378,7 @@ def test_sig_delta_rejects_recarried_doc_ids(spark, sf_dir, tmp_path):
     out, full_calls, delta_calls = harness(recarry)
     assert full_calls == [1], "re-carried doc_ids must force a rebuild"
     assert delta_calls == []
-    man = latest_manifest(_index_table_root(recarry, "sig", "documents"))
+    man = latest_manifest(index_table_root(recarry, "sig", "documents"))
     assert "delta_parent" not in man["props"]
     n_docs = (spark.read
               .parquet(os.path.join(recarry, "documents.parquet"))
@@ -1401,9 +1401,9 @@ def test_builder_rev_misses_old_rule_artifacts(spark, sf_dir, tmp_path):
     (round-12 review #4)."""
     import os
 
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                _mh_session_cached,
-                                                clear_session_index)
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   clear_session_index,
+                                                   index_table_root)
     from bacalhau_spark.operators.multimodal import phash_frame
     from bacalhau_spark.sources.versioned import latest_manifest
 
@@ -1423,13 +1423,13 @@ def test_builder_rev_misses_old_rule_artifacts(spark, sf_dir, tmp_path):
         r2_calls.append(1)
         return phash_frame(docs)  # stand-in for a changed rule
 
-    _mh_session_cached(spark, corpus, "phash", build_r1)
-    root1 = _index_table_root(corpus, "phash", "documents")
+    cached_index(spark, corpus, "phash", build_r1)
+    root1 = index_table_root(corpus, "phash", "documents")
     assert r1_calls == [1]
     assert latest_manifest(root1)["props"]["builder_rev"] == 1
 
-    out2 = _mh_session_cached(spark, corpus, "phash", build_r2, rev=2)
-    root2 = _index_table_root(corpus, "phash", "documents", rev=2)
+    out2 = cached_index(spark, corpus, "phash", build_r2, rev=2)
+    root2 = index_table_root(corpus, "phash", "documents", rev=2)
     assert r2_calls == [1], "rev 2 must MISS the rev-1 artifact"
     assert root2 != root1
     assert latest_manifest(root2)["props"]["builder_rev"] == 2
@@ -1438,7 +1438,7 @@ def test_builder_rev_misses_old_rule_artifacts(spark, sf_dir, tmp_path):
     # a third session of rev 2 adopts rev 2's artifact, not rev 1's
     clear_session_index(spark)
     r2_calls.clear()
-    _mh_session_cached(spark, corpus, "phash", build_r2, rev=2)
+    cached_index(spark, corpus, "phash", build_r2, rev=2)
     assert r2_calls == []
     clear_session_index(spark)
 
@@ -1448,12 +1448,12 @@ def test_file_key_boundary_inline_vs_tree(tmp_path, monkeypatch):
     the pre-r13 silent degradation to full rebuild is gone): at or
     below the cap the map inlines into the manifest props; above it
     the chunked sidecar tree carries it, chunk size == the cap, and
-    the round trip through _manifest_file_keys is exact."""
-    from bacalhau_spark.operators import dedup
-    from bacalhau_spark.operators.dedup import (_file_keys_props,
-                                                _manifest_file_keys)
+    the round trip through manifest_file_keys is exact."""
+    from bacalhau_spark.sources import indexstore
+    from bacalhau_spark.sources.indexstore import (_file_keys_props,
+                                                   manifest_file_keys)
 
-    monkeypatch.setattr(dedup, "DELTA_FILE_KEYS_MAX", 3)
+    monkeypatch.setattr(indexstore, "DELTA_FILE_KEYS_MAX", 3)
     root = str(tmp_path / "t")
     small = {f"part-{i}.parquet": f"k{i}" for i in range(3)}
     assert _file_keys_props(root, "c" * 32, small) == {"file_keys": small}
@@ -1464,7 +1464,7 @@ def test_file_key_boundary_inline_vs_tree(tmp_path, monkeypatch):
     assert "file_keys" not in props
     assert tree["n_files"] == 8 and len(tree["chunks"]) == 3
     assert tree["chunk_size"] == 3
-    got = _manifest_file_keys(root, {"props": props})
+    got = manifest_file_keys(root, {"props": props})
     assert got == big
 
 
@@ -1476,9 +1476,9 @@ def test_delta_adopted_table_compacts(spark, sf_dir, tmp_path):
     readable (immutability)."""
     import os
 
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                _mh_session_cached,
-                                                clear_session_index)
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   clear_session_index,
+                                                   index_table_root)
     from bacalhau_spark.operators.multimodal import (phash_frame,
                                                      phash_index)
     from bacalhau_spark.sources.versioned import (compact,
@@ -1494,15 +1494,15 @@ def test_delta_adopted_table_compacts(spark, sf_dir, tmp_path):
     _shifted_docs_corpus(spark, sf_dir, epoch2, 9_500_000, limit=30,
                          part_name="part-appended.parquet")
 
-    adopted = _mh_session_cached(
+    adopted = cached_index(
         spark, epoch2, "phash",
         lambda: phash_frame(
             spark.read.parquet(os.path.join(epoch2, "documents.parquet"))
             .select("doc_id")),
-        build_delta=lambda paths: phash_frame(
+        delta=lambda paths: phash_frame(
             spark.read.parquet(*paths).select("doc_id")))
     expect = sorted(map(tuple, adopted.collect()))
-    root = _index_table_root(epoch2, "phash", "documents")
+    root = index_table_root(epoch2, "phash", "documents")
     v1 = latest_manifest(root)
     assert v1["props"].get("delta_parent") and v1["n_files"] >= 2
 
@@ -1526,8 +1526,8 @@ def test_delta_adopted_table_compacts(spark, sf_dir, tmp_path):
         calls.append(1)
         raise AssertionError("compacted table must re-adopt")
 
-    readopted = _mh_session_cached(spark, epoch2, "phash", never,
-                                   build_delta=never)
+    readopted = cached_index(spark, epoch2, "phash", never,
+                             delta=never)
     assert calls == []
     assert sorted(map(tuple, readopted.collect())) == expect
     clear_session_index(spark)
@@ -1543,9 +1543,9 @@ def test_lost_publish_race_adopts_winners_artifact(spark, sf_dir,
     process' publish, then raises."""
     import os
 
-    from bacalhau_spark.operators import dedup
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                _mh_session_cached)
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   clear_session_index,
+                                                   index_table_root)
     from bacalhau_spark.operators.multimodal import phash_frame
     from bacalhau_spark.sources import versioned
 
@@ -1563,9 +1563,9 @@ def test_lost_publish_race_adopts_winners_artifact(spark, sf_dir,
     docs = (spark.read
             .parquet(os.path.join(corpus, "documents.parquet"))
             .select("doc_id"))
-    out = _mh_session_cached(spark, corpus, "phash",
-                             lambda: phash_frame(docs))
-    root = _index_table_root(corpus, "phash", "documents")
+    out = cached_index(spark, corpus, "phash",
+                       lambda: phash_frame(docs))
+    root = index_table_root(corpus, "phash", "documents")
     store_files = {os.path.realpath(os.path.join(root, f))
                    for f in versioned.latest_manifest(root)["files"]}
     got = {os.path.realpath(p.removeprefix("file:"))
@@ -1573,7 +1573,7 @@ def test_lost_publish_race_adopts_winners_artifact(spark, sf_dir,
     assert got and got <= store_files, (
         "the loser must read the winner's published artifact, not a "
         "session-local checkpoint")
-    dedup.clear_session_index(spark)
+    clear_session_index(spark)
 
 
 def test_index_delta_adoption_rejects_modified_files(spark, sf_dir,
@@ -1582,8 +1582,8 @@ def test_index_delta_adoption_rejects_modified_files(spark, sf_dir,
     full-rebuild: delta adoption is append-only by construction."""
     import os
 
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                _mh_session_cached)
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   index_table_root)
     from bacalhau_spark.operators.multimodal import (phash_frame,
                                                      phash_index)
     from bacalhau_spark.sources.versioned import latest_manifest
@@ -1616,11 +1616,11 @@ def test_index_delta_adoption_rejects_modified_files(spark, sf_dir,
         return phash_frame(
             spark.read.parquet(*paths).select("doc_id"))
 
-    _mh_session_cached(spark, mutated, "phash", build,
-                       build_delta=build_delta)
+    cached_index(spark, mutated, "phash", build,
+                 delta=build_delta)
     assert full_calls == [1], "a mutated part must force the full build"
     assert delta_calls == []
-    man = latest_manifest(_index_table_root(mutated, "phash", "documents"))
+    man = latest_manifest(index_table_root(mutated, "phash", "documents"))
     assert "delta_parent" not in man["props"]
 
 
@@ -1632,13 +1632,13 @@ def test_clear_session_index_is_scoped(spark, sf_dir):
     import json
     import os
 
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                clear_session_index,
-                                                index_store_root,
-                                                minhash_signature_index)
+    from bacalhau_spark.operators.dedup import minhash_signature_index
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_store_root,
+                                                   index_table_root)
 
     minhash_signature_index(spark, sf_dir)
-    own_root = _index_table_root(sf_dir, "sig", "documents")
+    own_root = index_table_root(sf_dir, "sig", "documents")
     assert os.path.isdir(own_root)
 
     foreign = os.path.join(index_store_root(),
@@ -1665,19 +1665,19 @@ def test_empty_index_never_crash_loops(spark, sf_dir):
     so every session (including a cold one facing a pre-published empty
     manifest) falls back to a session-local frame and returns correct
     (zero) rows instead of raising from read_version."""
-    from bacalhau_spark.operators.dedup import (_mh_session_cached,
-                                                clear_session_index,
-                                                minhash_signature_index)
+    from bacalhau_spark.operators.dedup import minhash_signature_index
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   clear_session_index)
 
     def build_empty():
         return minhash_signature_index(spark, sf_dir).where("doc_id < 0")
 
-    first = _mh_session_cached(spark, sf_dir, "empty_test", build_empty)
+    first = cached_index(spark, sf_dir, "empty_test", build_empty)
     assert first.count() == 0
     # cold session: tier-1 dropped, store kept — whatever the store now
     # holds for this kind, the consumer must still return zero rows
     clear_session_index(spark)
-    again = _mh_session_cached(spark, sf_dir, "empty_test", build_empty)
+    again = cached_index(spark, sf_dir, "empty_test", build_empty)
     assert again.count() == 0
 
 
@@ -1697,10 +1697,10 @@ def test_cand_delta_adopts_appended_corpus(spark, sf_dir, tmp_path,
     from bacalhau_spark.operators import dedup
     from bacalhau_spark.catalog import spread_compute
     from bacalhau_spark.operators.dedup import (_band_candidates,
-                                                _index_table_root,
                                                 _mh_sig_frame,
-                                                band_candidate_index,
-                                                clear_session_index)
+                                                band_candidate_index)
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_table_root)
 
     monkeypatch.setattr(dedup, "CAND_DELTA_MIN_PARENT_SHARDS", 0)
     from bacalhau_spark.sources.versioned import latest_manifest
@@ -1708,7 +1708,7 @@ def test_cand_delta_adopts_appended_corpus(spark, sf_dir, tmp_path,
     epoch1 = str(tmp_path / "epoch1")
     _shifted_docs_corpus(spark, sf_dir, epoch1, 21_000_000)
     band_candidate_index(spark, epoch1)  # full build + publish
-    parent_root = _index_table_root(epoch1, "cand", "documents")
+    parent_root = index_table_root(epoch1, "cand", "documents")
     parent_pairs = latest_manifest(parent_root)
     assert parent_pairs and parent_pairs["files"]
 
@@ -1722,7 +1722,7 @@ def test_cand_delta_adopts_appended_corpus(spark, sf_dir, tmp_path,
                          part_name="part-appended.parquet")
 
     got = band_candidate_index(spark, epoch2)
-    man = latest_manifest(_index_table_root(epoch2, "cand", "documents"))
+    man = latest_manifest(index_table_root(epoch2, "cand", "documents"))
     assert man["props"]["delta_parent"] == os.path.basename(parent_root)
     full = _band_candidates(_mh_sig_frame(spread_compute(
         spark,
@@ -1748,9 +1748,9 @@ def test_cand_delta_declines_crossed_bucket(spark, tmp_path, monkeypatch):
     import os
 
     from bacalhau_spark.operators import dedup
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                band_candidate_index,
-                                                clear_session_index)
+    from bacalhau_spark.operators.dedup import band_candidate_index
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_table_root)
 
     monkeypatch.setattr(dedup, "CAND_DELTA_MIN_PARENT_SHARDS", 0)
     from bacalhau_spark.sources.versioned import latest_manifest
@@ -1788,8 +1788,8 @@ def test_cand_delta_declines_crossed_bucket(spark, tmp_path, monkeypatch):
               os.path.join(cpath, "part-appended.parquet"))
 
     got = band_candidate_index(spark, child_dir)
-    man = latest_manifest(_index_table_root(child_dir, "cand",
-                                            "documents"))
+    man = latest_manifest(index_table_root(child_dir, "cand",
+                                           "documents"))
     assert "delta_parent" not in man.get("props", {}), \
         "crossed-cap append must decline delta adoption"
     assert got.count() == 0, \
@@ -1810,9 +1810,9 @@ def test_cand_delta_width_gate_takes_the_cheaper_path(spark, sf_dir,
     import os
 
     from bacalhau_spark.operators import dedup
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                band_candidate_index,
-                                                clear_session_index)
+    from bacalhau_spark.operators.dedup import band_candidate_index
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_table_root)
     from bacalhau_spark.sources.versioned import latest_manifest
 
     def epoch_pair(tag, shift):
@@ -1829,9 +1829,9 @@ def test_cand_delta_width_gate_takes_the_cheaper_path(spark, sf_dir,
     e1, e2 = epoch_pair("narrow", 31_000_000)
     band_candidate_index(spark, e1)
     assert latest_manifest(
-        _index_table_root(e1, "cand", "documents"))["files"]
+        index_table_root(e1, "cand", "documents"))["files"]
     band_candidate_index(spark, e2)
-    man = latest_manifest(_index_table_root(e2, "cand", "documents"))
+    man = latest_manifest(index_table_root(e2, "cand", "documents"))
     assert "delta_parent" not in man.get("props", {}), \
         "below the width gate the rebuild is the cheaper path"
 
@@ -1839,9 +1839,9 @@ def test_cand_delta_width_gate_takes_the_cheaper_path(spark, sf_dir,
     monkeypatch.setattr(dedup, "CAND_DELTA_MIN_PARENT_SHARDS", 1)
     e1b, e2b = epoch_pair("wide", 32_000_000)
     band_candidate_index(spark, e1b)
-    parent_root = _index_table_root(e1b, "cand", "documents")
+    parent_root = index_table_root(e1b, "cand", "documents")
     band_candidate_index(spark, e2b)
-    man_b = latest_manifest(_index_table_root(e2b, "cand", "documents"))
+    man_b = latest_manifest(index_table_root(e2b, "cand", "documents"))
     assert man_b["props"].get("delta_parent") \
         == os.path.basename(parent_root), \
         "at/above the width gate the delta path engages"
@@ -1862,11 +1862,11 @@ def test_keychunk_tree_enables_delta_above_4096_parts(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from bacalhau_spark.operators.dedup import (DELTA_FILE_KEYS_MAX,
-                                                _index_table_root,
-                                                _manifest_file_keys,
-                                                _mh_session_cached,
-                                                clear_session_index)
+    from bacalhau_spark.sources.indexstore import (cached_index,
+                                                   clear_session_index,
+                                                   DELTA_FILE_KEYS_MAX,
+                                                   index_table_root,
+                                                   manifest_file_keys)
     from bacalhau_spark.operators.multimodal import phash_frame
     from bacalhau_spark.sources.versioned import latest_manifest
 
@@ -1904,15 +1904,15 @@ def test_keychunk_tree_enables_delta_above_4096_parts(spark, tmp_path):
         return build, build_delta, full_calls, delta_paths
 
     b, bd, fc, dp = builders(e1)
-    _mh_session_cached(spark, e1, "phash", b, build_delta=bd)
+    cached_index(spark, e1, "phash", b, delta=bd)
     assert fc == [1]
-    man1 = latest_manifest(_index_table_root(e1, "phash", "documents"))
+    man1 = latest_manifest(index_table_root(e1, "phash", "documents"))
     assert "file_keys" not in man1["props"], \
         "wide manifests must not inline the key map"
     tree = man1["props"]["file_keys_tree"]
     assert tree["n_files"] == n_parts and len(tree["chunks"]) == 2
-    proot = _index_table_root(e1, "phash", "documents")
-    keys = _manifest_file_keys(proot, man1)
+    proot = index_table_root(e1, "phash", "documents")
+    keys = manifest_file_keys(proot, man1)
     assert keys is not None and len(keys) == n_parts
 
     # epoch 2 = the same 4104 parts (hardlinked) + one appended shard
@@ -1927,10 +1927,10 @@ def test_keychunk_tree_enables_delta_above_4096_parts(spark, tmp_path):
                                      type=pa.int64())}),
         os.path.join(p2, "part-appended.parquet"))
     b2, bd2, fc2, dp2 = builders(e2)
-    got = _mh_session_cached(spark, e2, "phash", b2, build_delta=bd2)
+    got = cached_index(spark, e2, "phash", b2, delta=bd2)
     assert fc2 == [], ">4096-part append must adopt a delta now"
     assert dp2 == [os.path.join(p2, "part-appended.parquet")]
-    man2 = latest_manifest(_index_table_root(e2, "phash", "documents"))
+    man2 = latest_manifest(index_table_root(e2, "phash", "documents"))
     assert man2["props"]["delta_parent"] == os.path.basename(proot)
     expect = sorted(map(tuple, phash_frame(
         spark.read.parquet(p2).select("doc_id")).collect()))
@@ -1941,11 +1941,11 @@ def test_keychunk_tree_enables_delta_above_4096_parts(spark, tmp_path):
     raw = bytearray(open(cpath, "rb").read())
     raw[10] ^= 0xFF
     open(cpath, "wb").write(bytes(raw))
-    assert _manifest_file_keys(proot, man1) is None
+    assert manifest_file_keys(proot, man1) is None
     # remove the salted one-off tables from the shared store
     import shutil
     shutil.rmtree(proot, ignore_errors=True)
-    shutil.rmtree(_index_table_root(e2, "phash", "documents"),
+    shutil.rmtree(index_table_root(e2, "phash", "documents"),
                   ignore_errors=True)
     clear_session_index(spark)
 
@@ -1959,17 +1959,17 @@ def test_winnow_delta_adopts_and_caps_at_read(spark, sf_dir, tmp_path):
     import os
 
     from bacalhau_spark.catalog import spread_compute
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                clear_session_index,
-                                                nd_winnowing,
+    from bacalhau_spark.operators.dedup import (nd_winnowing,
                                                 winnow_posting_index,
                                                 winnowing_pairs)
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_table_root)
     from bacalhau_spark.sources.versioned import latest_manifest
 
     epoch1 = str(tmp_path / "epoch1")
     _shifted_docs_corpus(spark, sf_dir, epoch1, 23_000_000)
     winnow_posting_index(spark, epoch1)
-    parent_root = _index_table_root(epoch1, "winnow", "documents", rev=2)
+    parent_root = index_table_root(epoch1, "winnow", "documents", rev=2)
     assert latest_manifest(parent_root)
 
     epoch2 = str(tmp_path / "epoch2")
@@ -1981,8 +1981,8 @@ def test_winnow_delta_adopts_and_caps_at_read(spark, sf_dir, tmp_path):
                          part_name="part-appended.parquet")
 
     got = nd_winnowing(spark, epoch2)
-    man = latest_manifest(_index_table_root(epoch2, "winnow",
-                                            "documents", rev=2))
+    man = latest_manifest(index_table_root(epoch2, "winnow",
+                                           "documents", rev=2))
     assert man["props"]["delta_parent"] == os.path.basename(parent_root)
     full = winnowing_pairs(spread_compute(
         spark,
@@ -2009,17 +2009,17 @@ def test_shingle_posting_delta_adopts_and_caps_at_read(spark, sf_dir,
     import os
 
     from bacalhau_spark.catalog import spread_compute
-    from bacalhau_spark.operators.dedup import (_index_table_root,
-                                                clear_session_index,
-                                                ngram_jaccard_pairs,
+    from bacalhau_spark.operators.dedup import (ngram_jaccard_pairs,
                                                 shingle_posting_index)
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_table_root)
     from bacalhau_spark.registry import ALL_QUERIES
     from bacalhau_spark.sources.versioned import latest_manifest
 
     epoch1 = str(tmp_path / "epoch1")
     _shifted_docs_corpus(spark, sf_dir, epoch1, 31_000_000)
     shingle_posting_index(spark, epoch1)
-    parent_root = _index_table_root(epoch1, "shpost3", "documents")
+    parent_root = index_table_root(epoch1, "shpost3", "documents")
     assert latest_manifest(parent_root)
 
     epoch2 = str(tmp_path / "epoch2")
@@ -2031,8 +2031,8 @@ def test_shingle_posting_delta_adopts_and_caps_at_read(spark, sf_dir,
                          part_name="part-appended.parquet")
 
     got = ALL_QUERIES["nd_ngram_jaccard"][0](spark, epoch2)
-    man = latest_manifest(_index_table_root(epoch2, "shpost3",
-                                            "documents"))
+    man = latest_manifest(index_table_root(epoch2, "shpost3",
+                                           "documents"))
     assert man["props"]["delta_parent"] == os.path.basename(parent_root)
     full = ngram_jaccard_pairs(spread_compute(
         spark,

@@ -502,3 +502,28 @@ def test_multibatch_html_extract_equals_batch(spark, sf_dir, tmp_path,
             .orderBy("doc_id"))
     assert [tuple(r) for r in got.collect()] == \
         [tuple(r) for r in want.collect()]
+
+
+def test_failed_stream_start_removes_its_checkpoint_dir(spark, tmp_path,
+                                                        monkeypatch):
+    """A start() that raises after creating its checkpoint dir must not
+    leak the dir: the query never reaches the await path that removes
+    it on success."""
+    import os
+
+    from bacalhau_spark.streaming import events
+
+    monkeypatch.setattr(events, "_STREAM_CKPT_BASE", str(tmp_path))
+
+    class FailingWriter:
+        def option(self, key, value):
+            self.ckpt = value
+            return self
+
+        def start(self):
+            os.makedirs(os.path.join(self.ckpt, "offsets"))
+            raise RuntimeError("start failed")
+
+    with pytest.raises(RuntimeError, match="start failed"):
+        events._start_scoped(spark, FailingWriter())
+    assert not glob.glob(str(tmp_path / "bacalhau-stream-ckpt-*"))

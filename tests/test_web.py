@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from bacalhau_spark.catalog import table
 from bacalhau_spark.operators import web
 
 
@@ -42,7 +43,7 @@ def test_canonicalize_is_idempotent(spark, sf_dir):
     """canon(canon(url)) == canon(url): a second pass over an already-
     canonical URL changes nothing — the property that lets the stage be
     re-run safely anywhere in a pipeline."""
-    once = web._canon_frame(spark, sf_dir).select(
+    once = web._canon_frame(table(spark, sf_dir, "documents")).select(
         "doc_id", F.col("canon").alias("url"))
     twice = web.url_canonicalize_frame(once)
     diff = twice.where(F.col("canon") != F.col("url")).count()
@@ -242,7 +243,7 @@ def test_front_door_consumers_share_the_artifact(spark, sf_dir):
     and repeated index calls return the same session frame."""
     import os
 
-    from bacalhau_spark.operators.dedup import index_store_root
+    from bacalhau_spark.sources.indexstore import index_store_root
 
     assert web.canon_index(spark, sf_dir) is web.canon_index(spark,
                                                              sf_dir)
