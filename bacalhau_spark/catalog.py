@@ -110,8 +110,9 @@ def spread_compute(spark: SparkSession, df: DataFrame,
     if plan_hash is None:
         nparts = df.rdd.getNumPartitions()
     else:
+        # the lambda matters: `df.rdd` itself is the costly conversion
         nparts = HANDLES.get_or_make(spark, ("npart", plan_hash),
-                                     df.rdd.getNumPartitions)
+                                     lambda: df.rdd.getNumPartitions())
     if nparts < target:
         return df.repartition(target, *keys) if keys \
             else df.repartition(target)

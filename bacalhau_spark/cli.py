@@ -404,8 +404,8 @@ def cmd_index(args) -> int:
             dropped.append(name)
         # no session-tier frame may outlive its dropped files: a cached
         # DataFrame still points at the deleted parquet and would fail
-        # every later consumer in-process
-        indexstore.FRAMES.clear()
+        # every later consumer in-process (persisted views are released)
+        indexstore.release(indexstore.FRAMES.clear())
         print(_json.dumps({"dropped": dropped}))
         return 0
     if args.action == "verify":

@@ -652,9 +652,9 @@ def winnow_capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus), but every read would re-pay the ~0.25 s window guard.
     The capped view is DERIVED, so it caches at the session tier only —
     persist(), recompute-on-loss."""
-    postings = winnow_posting_index(spark, sf_dir)
     return session_view(spark, sf_dir, "winnow_capped",
-                        lambda: _winnow_df_cap(postings).persist())
+                        lambda: winnow_posting_index(spark, sf_dir),
+                        lambda postings: _winnow_df_cap(postings).persist())
 
 
 def winnowing_pairs(docs: DataFrame) -> DataFrame:
@@ -1080,15 +1080,16 @@ def shingle_posting_index(spark: SparkSession, sf_dir: str, n: int = 3,
     never be the persisted payload), rebuilt once per session from the
     artifact scan and cached at this session tier exactly as before:
     warm calls skip the scan, a cold session pays artifact-read + group
-    instead of tokenize + hash + group. Every call passes through the
-    artifact's tier-1 hit, which keeps its liveness marker fresh."""
-    per_doc = rowwise_index(
-        spark, sf_dir, f"shpost{n}",
-        lambda docs: shingle_doc_postings(spread_compute(
-            spark, docs.select("doc_id", "text"), "doc_id"), n),
-        delta_key="doc_id")
-    return session_view(spark, sf_dir, f"shpost:{n}:{df_cap}",
-                        lambda: _group_cap_postings(per_doc, df_cap))
+    instead of tokenize + hash + group. A warm view hit refreshes the
+    artifact's liveness marker."""
+    return session_view(
+        spark, sf_dir, f"shpost:{n}:{df_cap}",
+        lambda: rowwise_index(
+            spark, sf_dir, f"shpost{n}",
+            lambda docs: shingle_doc_postings(spread_compute(
+                spark, docs.select("doc_id", "text"), "doc_id"), n),
+            delta_key="doc_id"),
+        lambda per_doc: _group_cap_postings(per_doc, df_cap))
 
 
 def shingle_pair_index(spark: SparkSession, sf_dir: str, n: int = 3,
@@ -1114,9 +1115,7 @@ def shingle_pair_index(spark: SparkSession, sf_dir: str, n: int = 3,
     documents table itself (docs absent from the postings — fewer
     than n words — still count toward nd, exactly as the fresh
     build's countDistinct does)."""
-    postings = shingle_posting_index(spark, sf_dir, n, df_cap)
-
-    def make() -> tuple[DataFrame, DataFrame]:
+    def make(postings: DataFrame) -> tuple[DataFrame, DataFrame]:
         if weighted:
             shared, sizes = _weighted_pair_stats(
                 table(spark, sf_dir, "documents").select("doc_id"),
@@ -1129,7 +1128,9 @@ def shingle_pair_index(spark: SparkSession, sf_dir: str, n: int = 3,
                 sizes.localCheckpoint(eager=True))
 
     kind = "shpairw" if weighted else "shpair"
-    return session_view(spark, sf_dir, f"{kind}:{n}:{df_cap}", make)
+    return session_view(
+        spark, sf_dir, f"{kind}:{n}:{df_cap}",
+        lambda: shingle_posting_index(spark, sf_dir, n, df_cap), make)
 
 
 def _shingle_pair_stats(docs: DataFrame, n: int, df_cap: int,

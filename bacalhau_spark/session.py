@@ -110,6 +110,10 @@ class SessionCache:
         with self._lock:
             return list(self._scoped(spark))
 
+    def values(self, spark: SparkSession) -> list:
+        with self._lock:
+            return list(self._scoped(spark).values())
+
     def evict(self, spark: SparkSession, match=None) -> list:
         """Remove this session's entries whose key satisfies `match`
         (all of them by default); returns the removed values."""
@@ -118,7 +122,9 @@ class SessionCache:
             return [entries.pop(k) for k in list(entries)
                     if match is None or match(k)]
 
-    def clear(self) -> None:
-        """Drop every entry, whatever session made it."""
+    def clear(self) -> list:
+        """Drop every entry, whatever session made it; returns the
+        removed values."""
         with self._lock:
-            self._entries = {}
+            removed, self._entries = list(self._entries.values()), {}
+            return removed

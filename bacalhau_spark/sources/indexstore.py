@@ -468,42 +468,49 @@ def rowwise_index(spark: SparkSession, sf_dir: str, kind: str, transform,
         delta_key=delta_key, rev=rev)
 
 
-def session_view(spark: SparkSession, sf_dir: str, name: str, make,
-                 tbl: str = "documents"):
-    """A session-tier view DERIVED from persisted artifacts — a grouping
-    or a read-time cap, i.e. a global function of the corpus, so never
-    itself published. Built once per (session, source content) and
-    evicted by clear_session_index with the frames it derives from.
-    Callers fetch the base artifact through cached_index first, so a
-    view hit still passes through the base's tier-1 hit and refreshes
-    its liveness marker. Persisted (`.persist()`) views are released
-    when evicted, superseded by a rewrite of the source, or beaten by a
-    concurrent builder."""
-    key = _tier1_key(sf_dir, name, tbl, 1)
+def session_view(spark: SparkSession, sf_dir: str, name: str, base, make):
+    """A session-tier view DERIVED from a persisted artifact — a
+    grouping or a read-time cap, i.e. a global function of the corpus,
+    so never itself published. `base()` fetches the frame the view
+    derives from (a cached_index call or another view) and `make(frame)`
+    derives the view; both run once per (session, source content), and
+    clear_session_index evicts the view with the frames it derives
+    from. The entry carries its base's persisted root, so a view hit
+    refreshes that root's liveness marker without a second lookup.
+    Persisted (`.persist()`) views are released when evicted,
+    superseded by a rewrite of the source, or beaten by a concurrent
+    builder."""
+    key = _tier1_key(sf_dir, name, "documents", 1)
     hit = FRAMES.get(spark, key)
     if hit is not None:
+        if hit[1] is not None:
+            _touch_adopted(hit[1])
         return hit[0]
-    made = make()
+    frame = base()
+    # the base's own entry names the root it was adopted from (a view's
+    # entry carries its base's), so the view can refresh it on a hit
+    root = next((r for f, r in FRAMES.values(spark) if f is frame), None)
+    made = make(frame)
     # same-path entries under an older fingerprint are superseded (the
     # source was rewritten in place): release them, or N rewrites pin N
     # persisted views in executor storage for the session
-    _release(FRAMES.evict(spark, lambda k: k[0] == key[0]
-                          and k[2:] == key[2:] and k != key))
-    won = FRAMES.setdefault(spark, key, (made, None))
+    release(FRAMES.evict(spark, lambda k: k[0] == key[0]
+                         and k[2:] == key[2:] and k != key))
+    won = FRAMES.setdefault(spark, key, (made, root))
     if won[0] is not made:
-        _release([(made, None)])
+        release([(made, None)])
     return won[0]
 
 
-def _release(entries) -> None:
-    """Unpersist the persisted frames among evicted tier-1 entries."""
-    for value, _root in entries:
-        for frame in (value if isinstance(value, tuple) else (value,)):
-            if getattr(frame, "is_cached", False):
-                try:
-                    frame.unpersist()
-                except Exception:  # noqa: BLE001 — a dead session's frame
-                    pass
+def release(entries) -> None:
+    """Unpersist the persisted frames among evicted tier-1 entries (the
+    winnow-capped view is the one persisted kind)."""
+    for frame, _root in entries:
+        if getattr(frame, "is_cached", False):
+            try:
+                frame.unpersist()
+            except Exception:  # noqa: BLE001 — a dead session's frame
+                pass
 
 
 def _ids_disjoint(spark: SparkSession, parent_root: str, parent_man: dict,
@@ -556,7 +563,7 @@ def clear_session_index(spark: SparkSession,
     shared $SPARK_GRAFT_INDEX_STORE keeps every other table's indexes.
     Returns the number of session entries evicted."""
     victims = FRAMES.evict(spark)
-    _release(victims)
+    release(victims)
     sources = _SOURCES.keys(spark)
     if persisted and sources:
         keys, fkey_sets = set(), []

@@ -68,6 +68,20 @@ def test_index_verb_build_list_drop(spark, sf_dir, capsys):
     assert cli.main(["index", "build", "--kind", "bogus"]) == 2
 
 
+def test_index_drop_releases_persisted_views(spark, sf_dir, capsys):
+    """`index drop` clears the session tier so no frame outlives its
+    files; the persisted winnow-capped view must be unpersisted on the
+    way out, or it stays pinned in executor storage with no handle left
+    to release it."""
+    from bacalhau_spark.operators.dedup import winnow_capped_postings
+
+    capped = winnow_capped_postings(spark, sf_dir)
+    assert capped.is_cached
+    assert cli.main(["index", "drop", "--kind", "winnow"]) == 0
+    capsys.readouterr()
+    assert not capped.is_cached
+
+
 def test_index_verify_is_the_store_fsck(spark, sf_dir, capsys):
     """`index verify` (round 14): a freshly built table verifies ok
     (exit 0, footer row totals reported); truncating a data file flips

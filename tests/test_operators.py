@@ -1441,3 +1441,22 @@ def test_warm_jaccard_read_refreshes_posting_liveness(spark, sf_dir):
     os.utime(marker, (aged, aged))
     nd_ngram_jaccard(spark, sf_dir).collect()  # warm: a tier-1 view hit
     assert os.path.getmtime(marker) > aged + 7 * 86400
+
+
+def test_warm_view_hit_fingerprints_the_source_once(spark, sf_dir,
+                                                    monkeypatch):
+    """A warm derived-view read costs one listing + stat pass over the
+    source's part files, not one per tier it derives from."""
+    from bacalhau_spark.operators.dedup import (shingle_pair_index,
+                                                winnow_capped_postings)
+    from bacalhau_spark.sources import indexstore
+
+    shingle_pair_index(spark, sf_dir)
+    winnow_capped_postings(spark, sf_dir)
+    calls = []
+    real = indexstore.docs_fingerprint
+    monkeypatch.setattr(indexstore, "docs_fingerprint",
+                        lambda *a: calls.append(a) or real(*a))
+    shingle_pair_index(spark, sf_dir)
+    winnow_capped_postings(spark, sf_dir)
+    assert len(calls) == 2

@@ -389,6 +389,28 @@ def test_spread_compute_is_noop_when_scan_is_parallel(spark, sf_dir):
     assert out is docs  # unchanged plan object: no exchange appended
 
 
+def test_spread_compute_probes_a_query_shape_once(spark, sf_dir,
+                                                  monkeypatch):
+    """The partition probe (`df.rdd`, a full plan + RDD conversion) runs
+    once per query shape and session; a repeat of the shape reads the
+    cached count and never touches `.rdd`."""
+    from pyspark.sql import DataFrame
+
+    from bacalhau_spark.catalog import spread_compute
+
+    def shape():
+        return table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    spread_compute(spark, shape(), "doc_id")
+    again = shape()
+    probes = []
+    real = type(again).rdd
+    monkeypatch.setattr(type(again), "rdd", property(
+        lambda df: probes.append(df) or real.func(df)))
+    assert isinstance(spread_compute(spark, again, "doc_id"), DataFrame)
+    assert probes == []
+
+
 def test_round6_operators_scale_shapes(spark, sf_dir):
     """The four round-6 operators' 100 TB plan claims, asserted:
 

@@ -35,7 +35,8 @@ def test_evict_removes_only_matching_keys():
     assert sorted(cache.evict(app, lambda k: k.startswith("a"))) == \
         ["A1", "A2"]
     assert cache.keys(app) == ["b1"]
-    cache.clear()
+    assert cache.values(app) == ["B1"]
+    assert cache.clear() == ["B1"]
     assert cache.keys(app) == []
 
 
