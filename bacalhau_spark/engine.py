@@ -129,6 +129,21 @@ def context_module(name: str):
     return importlib.import_module(f"{ns}.{name}")
 
 
+def bind_active_session(spark: SparkSession) -> None:
+    """Bind `spark` as the JVM thread-local active session of the calling
+    thread. Run workers and the threads a query starts are fresh Python
+    threads whose pinned JVM twins have none, and Python DataSource
+    lookup (among other resolution paths) goes through it — a registered
+    source like "contentstore" would otherwise fail with
+    DATA_SOURCE_NOT_FOUND only when run through the engine."""
+    try:
+        spark._jvm.org.apache.spark.sql.classic.SparkSession \
+            .setActiveSession(spark._jsparkSession)
+    except Exception:  # noqa: BLE001 — non-classic builds
+        spark._jvm.org.apache.spark.sql.SparkSession \
+            .setActiveSession(spark._jsparkSession)
+
+
 class JobRejectedError(RuntimeError):
     """A submit-time policy hook declined the job (the SelectJob=false
     path, `pkg/computenode/computenode.go:348-405`)."""
@@ -724,17 +739,7 @@ class Engine:
         # per-thread (pinned-thread mode) and restored on exit, so
         # concurrent/subsequent runs don't leak each other's pool.
         sc = self.spark.sparkContext
-        # Bind the JVM thread-local active session: run workers are fresh
-        # Python threads whose pinned JVM twins have none, and Python
-        # DataSource lookup (among other resolution paths) goes through it
-        # — a registered source like "contentstore" would otherwise fail
-        # with DATA_SOURCE_NOT_FOUND only when run through the engine.
-        try:
-            self.spark._jvm.org.apache.spark.sql.classic.SparkSession \
-                .setActiveSession(self.spark._jsparkSession)
-        except Exception:  # noqa: BLE001 — non-classic builds
-            self.spark._jvm.org.apache.spark.sql.SparkSession \
-                .setActiveSession(self.spark._jsparkSession)
+        bind_active_session(self.spark)
         props = {"spark.jobGroup.id": run_id,
                  "spark.job.description": f"bacalhau-spark:{spec.query}",
                  **spec.local_properties}

@@ -2507,6 +2507,11 @@ def ivfpq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ivf_coarse_index(spark, sf_dir))
             .persist(StorageLevel.DISK_ONLY))
         staged["e"] = e
+        # materialize before any plan reads it: AQE then plans every
+        # join over `e` with the cached relation's real size, instead of
+        # sometimes launching a shuffle over it before it broadcasts the
+        # join's other side (one racing job per build)
+        e.count()
         assign = pq_train_assign(e)
         return assign.join(
             e.select("vec_id", "cluster").distinct(), "vec_id").select(

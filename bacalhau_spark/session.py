@@ -84,12 +84,14 @@ class SessionCache:
         self._lock = threading.Lock()
         self._app: str | None = None
         self._entries: dict = {}
+        # key -> the RLock its get_or_make maker holds while it runs
+        self._flights: dict = {}
 
     def _scoped(self, spark: SparkSession) -> dict:
         # caller holds self._lock
         app = spark.sparkContext.applicationId
         if app != self._app:
-            self._app, self._entries = app, {}
+            self._app, self._entries, self._flights = app, {}, {}
         return self._entries
 
     def get(self, spark: SparkSession, key, default=None):
@@ -101,10 +103,21 @@ class SessionCache:
             return self._scoped(spark).setdefault(key, value)
 
     def get_or_make(self, spark: SparkSession, key, make):
-        """The cached value, else `make()` run OUTSIDE the lock (a
-        concurrent maker may win; the first stored value is returned)."""
+        """The cached value, else the value of `make()`, run once per
+        key: concurrent callers of the same key wait for the running
+        maker and get what it stored. The per-key lock is re-entrant, so
+        a maker that asks for its own key cannot deadlock, and a maker
+        that raises stores nothing (the next caller makes again)."""
         hit = self.get(spark, key, _MISS)
-        return self.setdefault(spark, key, make()) if hit is _MISS else hit
+        if hit is not _MISS:
+            return hit
+        with self._lock:
+            self._scoped(spark)
+            flight = self._flights.setdefault(key, threading.RLock())
+        with flight:
+            hit = self.get(spark, key, _MISS)
+            return self.setdefault(spark, key, make()) \
+                if hit is _MISS else hit
 
     def keys(self, spark: SparkSession) -> list:
         with self._lock:
@@ -127,4 +140,5 @@ class SessionCache:
         removed values."""
         with self._lock:
             removed, self._entries = list(self._entries.values()), {}
+            self._flights = {}
             return removed

@@ -24,6 +24,8 @@ across an entire DAG.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -64,6 +66,72 @@ def stage_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.col("content").alias("text")))
 
 
+# stage_index_build's kinds as dependency chains: each kind's builder
+# calls the builders of the kinds before it in its chain (cand bands the
+# signatures; the IVF cells, vectors and IVF-PQ kinds read the coarse
+# quantizer; the PQ codebook reads the codes), and no builder calls into
+# another chain. One chain is built in order on one lane, so no kind is
+# built twice.
+INGEST_CHAINS = (("sig", "cand"), ("winnow",), ("phash",), ("aphash",),
+                 ("vphash",), ("canon",), ("extract",), ("lshsig",),
+                 ("ivf_coarse", "ivf_cells", "ivf_vectors", "ivfpq_codes",
+                  "ivfpq_cent"),
+                 ("pq_assign", "pq_cent"))
+
+
+def lane_count(spark: SparkSession) -> int:
+    """Lanes for independent index builds: half the default parallelism.
+    The ingest shares the cores with whatever else the epoch runs (the
+    crawl-curation chain beside an appended epoch's ingest), and a lane
+    per chain starves it without finishing the ingest any sooner."""
+    return max(1, spark.sparkContext.defaultParallelism // 2)
+
+
+def run_in_lanes(spark: SparkSession, chains, build) -> None:
+    """Call `build(item)` for every item of every chain, on
+    lane_count(spark) parallel lanes: each lane takes the next chain,
+    longest first, and builds its items in order. Lanes are
+    InheritableThreads: they carry the calling thread's Spark local
+    properties (job group, description, scheduler pool), so the
+    engine's timeout cancel and per-run job counts see every job a lane
+    launches. After a failure no lane starts another chain; the first
+    failure is re-raised only once every lane has joined, so no build is
+    still writing when the caller sees the error."""
+    from pyspark import InheritableThread
+
+    from bacalhau_spark.engine import bind_active_session
+
+    pending = sorted(chains, key=len, reverse=True)
+    errors: list[BaseException] = []
+    lock = threading.Lock()
+
+    def lane() -> None:
+        bind_active_session(spark)
+        while True:
+            with lock:
+                if errors or not pending:
+                    return
+                chain = pending.pop(0)
+            try:
+                for item in chain:
+                    build(item)
+            except BaseException as exc:  # noqa: BLE001 — re-raised below
+                with lock:
+                    errors.append(exc)
+
+    # a lane carries its caller's thread name, so thread dumps and
+    # per-thread traces attribute its work to the caller's run
+    name = threading.current_thread().name
+    lanes = [InheritableThread(target=lane, name=name)
+             for _ in range(min(lane_count(spark), len(pending)))]
+    for t in lanes:
+        t.start()
+    for t in lanes:
+        t.join()
+    if errors:
+        raise errors[0]
+
+
 def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entry stage: the INDEX-INGEST job as a pipeline verb — pre-build
     and publish the corpus's persisted per-doc indexes (minhash
@@ -75,7 +143,9 @@ def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards hashed; sources.indexstore.cached_index). Emits the store's
     commit-log view for the built kinds: (kind, n_rows, version,
     delta_parent) — a deterministic function of the corpus content, so
-    the stage output is graded like any other stage's."""
+    the stage output is graded like any other stage's. The kinds build
+    chain by chain on parallel lanes (INGEST_CHAINS, run_in_lanes); the
+    rows keep the declared kind order."""
     from bacalhau_spark.operators.dedup import (band_candidate_index,
                                                 minhash_signature_index,
                                                 winnow_posting_index)
@@ -96,7 +166,7 @@ def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bacalhau_spark.sources import versioned
     from bacalhau_spark.sources.indexstore import index_table_root
 
-    # (kind, builder, builder rev, source table): the table root folds
+    # kind -> (builder, builder rev, source table): the table root folds
     # the rev, so a commit-log lookup at the wrong rev reads a
     # nonexistent table (the r13 rev bump surfaced exactly that).
     # Since r14 the stage publishes EVERY persisted artifact family —
@@ -104,38 +174,41 @@ def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over embeddings (lshsig bands, PQ codes+codebook, the coarse
     # quantizer, IVF-PQ codes+residual codebook) — so one ingest job
     # per epoch leaves nothing for the query path to train.
-    builders = (("sig", minhash_signature_index, 1, "documents"),
-                ("cand", band_candidate_index, 1, "documents"),
-                ("winnow", winnow_posting_index, 2, "documents"),
-                ("phash", phash_index, 1, "documents"),
-                ("aphash", audio_phash_index, 1, "documents"),
-                ("vphash", video_phash_index, 1, "documents"),
-                ("canon", canon_index, FRONT_DOOR_REV, "documents"),
-                ("extract", html_extract_index, FRONT_DOOR_REV,
-                 "documents"),
-                ("lshsig", lsh_signature_index, 1, "embeddings"),
-                ("ivf_coarse", ivf_coarse_index, IVF_REV, "embeddings"),
-                ("ivf_cells", ivf_cells_index, IVF_REV, "embeddings"),
-                ("ivf_vectors", ivf_vectors_index, IVF_REV,
-                 "embeddings"),
-                ("pq_assign", pq_code_index, 1, "embeddings"),
-                ("pq_cent", pq_centroid_index, 1, "embeddings"),
-                ("ivfpq_codes", ivfpq_code_index, IVF_REV, "embeddings"),
-                ("ivfpq_cent", ivfpq_centroid_index, IVF_REV,
-                 "embeddings"))
-    rows = []
-    for kind, fn, rev, tbl in builders:
+    builders = {"sig": (minhash_signature_index, 1, "documents"),
+                "cand": (band_candidate_index, 1, "documents"),
+                "winnow": (winnow_posting_index, 2, "documents"),
+                "phash": (phash_index, 1, "documents"),
+                "aphash": (audio_phash_index, 1, "documents"),
+                "vphash": (video_phash_index, 1, "documents"),
+                "canon": (canon_index, FRONT_DOOR_REV, "documents"),
+                "extract": (html_extract_index, FRONT_DOOR_REV,
+                            "documents"),
+                "lshsig": (lsh_signature_index, 1, "embeddings"),
+                "ivf_coarse": (ivf_coarse_index, IVF_REV, "embeddings"),
+                "ivf_cells": (ivf_cells_index, IVF_REV, "embeddings"),
+                "ivf_vectors": (ivf_vectors_index, IVF_REV, "embeddings"),
+                "pq_assign": (pq_code_index, 1, "embeddings"),
+                "pq_cent": (pq_centroid_index, 1, "embeddings"),
+                "ivfpq_codes": (ivfpq_code_index, IVF_REV, "embeddings"),
+                "ivfpq_cent": (ivfpq_centroid_index, IVF_REV,
+                               "embeddings")}
+    rows = {}
+
+    def build(kind: str) -> None:
+        fn, rev, tbl = builders[kind]
         n = fn(spark, sf_dir).count()
         man = versioned.latest_manifest(
             index_table_root(sf_dir, kind, tbl, rev=rev)) or {}
-        rows.append((kind, n, int(man.get("version", 0)),
-                     man.get("props", {}).get("delta_parent") or ""))
+        rows[kind] = (kind, n, int(man.get("version", 0)),
+                      man.get("props", {}).get("delta_parent") or "")
+
+    run_in_lanes(spark, INGEST_CHAINS, build)
     return spark.range(1).select(F.inline(F.array(*[
         F.struct(F.lit(k).alias("kind"),
                  F.lit(n).cast("long").alias("n_rows"),
                  F.lit(v).alias("version"),
                  F.lit(dp).alias("delta_parent"))
-        for k, n, v, dp in rows])))
+        for k, n, v, dp in (rows[kind] for kind in builders)])))
 
 
 def stage_pq_refresh(spark: SparkSession, sf_dir: str,

@@ -1,11 +1,14 @@
 """SessionCache: entries live as long as one Spark application, and
-concurrent makers all get the one stored value."""
+concurrent callers of one key share one maker run and its value."""
 
 from __future__ import annotations
 
 import sys
 import threading
+import time
 import types
+
+import pytest
 
 from bacalhau_spark.session import SessionCache
 
@@ -66,3 +69,63 @@ def test_concurrent_get_or_make_hands_out_one_value():
     assert len(got) == 16 * 200
     for key in range(7):
         assert len({id(v) for k, v in got if k == key}) == 1
+
+
+def test_get_or_make_runs_each_maker_once():
+    cache = SessionCache()
+    app = _app("app-1")
+    calls: dict[int, int] = {}
+    lock = threading.Lock()
+    start = threading.Barrier(16)
+
+    def make(key):
+        def run():
+            with lock:
+                calls[key] = calls.get(key, 0) + 1
+            # hold the flight open so every other thread arrives mid-make
+            time.sleep(0.05)
+            return object()
+        return run
+
+    def worker():
+        start.wait(timeout=30)
+        for key in range(4):
+            cache.get_or_make(app, key, make(key))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert calls == {0: 1, 1: 1, 2: 1, 3: 1}
+
+
+def test_get_or_make_retries_after_a_raising_maker():
+    cache = SessionCache()
+    app = _app("app-1")
+
+    def boom():
+        raise RuntimeError("make failed")
+
+    with pytest.raises(RuntimeError, match="make failed"):
+        cache.get_or_make(app, "k", boom)
+    assert cache.get(app, "k") is None
+    assert cache.get_or_make(app, "k", lambda: 42) == 42
+    assert cache.get_or_make(app, "k", boom) == 42
+
+
+def test_get_or_make_reentry_on_the_same_key_does_not_deadlock():
+    cache = SessionCache()
+    app = _app("app-1")
+
+    def outer():
+        inner = cache.get_or_make(app, "k", lambda: "inner")
+        return f"outer({inner})"
+
+    assert cache.get_or_make(app, "k", outer) == "inner"
