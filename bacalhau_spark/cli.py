@@ -15,6 +15,7 @@ Mapping (SURVEY.md §2.5):
 from __future__ import annotations
 
 import argparse
+from functools import partial
 import sys
 
 from pyspark.sql import SparkSession
@@ -242,37 +243,35 @@ def cmd_viz(args) -> int:
 
 
 def cmd_index(args) -> int:
-    """Persisted-index-store operations — the operator's lever for the
-    round-11 index lifecycle (build once, every session reads):
+    """Persisted-index-store operations — build once, every session
+    reads:
 
     - `index list` prints one JSON line per published index table
       (kind, source table, version, file count, rows of the latest
       manifest, fingerprint age) — the store's commit-log view.
     - `index build --sf-dir D [--kind K]` PRE-BUILDS indexes off the
-      query path (the production shape: an ingest job publishes the
-      index; every later session adopts instead of rebuilding).
-      Kinds: sig, cand, winnow, phash, aphash, vphash, pq, ivfpq,
-      ivfvec, lshsig, canon, extract, or all (canon/extract are the
-      materialized crawl front door; aphash/vphash the audio and
-      video near-dup signatures — round 12; ivfvec the cell-clustered
-      inverted file whose probe reads file-prune — round 14).
+      query path (an ingest job publishes the index; every later
+      session adopts instead of rebuilding). Kinds: sig, cand, winnow,
+      phash, aphash, vphash, pq, ivfpq, ivf, ivfvec, lshsig, canon,
+      extract, or all (canon/extract are the materialized crawl front
+      door; aphash/vphash the audio and video near-dup signatures;
+      ivfvec the cell-clustered inverted file whose probes file-prune).
     - `index refresh --kind pq|ivfpq --sf-dir MERGED --parent PARENT`
-      CONSUMES the staleness signal (round-13 verdict #1) for the
-      codebook-bearing kinds: encodes MERGED's new vectors against
-      PARENT's published codebooks, and on a stale flag retrains +
-      re-encodes over the merged corpus (publishing under the merged
-      content key — for ivfpq that includes a fresh coarse quantizer);
-      otherwise adopts the pinned codebooks and encodes only the new
-      rows. Prints one JSON line per subspace with the chosen action.
-    - `index verify [--kind K]` is the store's FSCK (round 14):
-      structural integrity of every published table without a
-      SparkSession — pointer/manifest/addressing props, every data
-      file's parquet footer, the per-file key map's digests (inline
-      or chunked tree), and each payload file's publish-time content-
-      window key (flags an in-place body flip the footer read passes;
-      manifests that predate the key record skip the check). One JSON
-      line per table; exit 1 when anything fails — scriptable as a
-      cron check or pre-adoption gate.
+      runs a product-quantizer family's staleness loop: encodes
+      MERGED's new vectors against PARENT's published codebooks, and on
+      a stale flag retrains over the merged corpus (for ivfpq with a
+      fresh coarse quantizer), otherwise publishes the pinned codebooks
+      plus codes for only the new rows. Prints one JSON line per
+      subspace with the chosen action.
+    - `index verify [--kind K]` is the store's FSCK: structural
+      integrity of every published table without a SparkSession —
+      pointer/manifest/addressing props, every data file's parquet
+      footer, the per-file key map's digests (inline or chunked tree),
+      and each payload file's publish-time content-window key (flags an
+      in-place body flip the footer read passes; manifests that predate
+      the key record skip the check). One JSON line per table; exit 1
+      when anything fails — scriptable as a cron check or pre-adoption
+      gate.
     - `index drop [--kind K] [--stale-days N]` removes published index
       tables (all, or one kind's) — the cache-invalidation big hammer;
       the next consumer rebuilds and republishes. `--stale-days N`
@@ -284,31 +283,40 @@ def cmd_index(args) -> int:
       table of a stable corpus stays safe at any age because its
       readers keep its marker fresh. In-flight first publishes
       (manifestless) are never age-swept.
+
+    The product-quantizer kinds pq and ivfpq name families
+    (similarity.PQ_FAMILIES): build publishes codes and codebook, which
+    verify and drop select together with, for ivfpq, the coarse-
+    quantizer tables the codes are assigned under. A family's corpus
+    baseline is recorded lazily by its first staleness read, and drop
+    removes it whenever it removes the codes or codebook it was
+    measured under.
     """
     import json as _json
     import os
     import shutil as _shutil
 
     from bacalhau_spark.operators import dedup
+    from bacalhau_spark.operators.similarity import PQ_FAMILIES
     from bacalhau_spark.sources import indexstore
     from bacalhau_spark.sources import versioned as _v
 
     root = indexstore.index_store_root()
 
-    # CLI kind -> store kind prefixes. The builder verbs pq/ivfpq/ivfvec
-    # publish under compound store kinds (pq_assign + pq_cent, ...), so
-    # a prefix match on the CLI name would silently select NOTHING —
-    # `index verify --kind pq` exiting 0 having checked zero tables is
-    # a false-clean fsck (r14 review). Raw store kinds pass through, so
-    # `--kind pq_cent` still narrows to one table.
-    # ivfpq/ivfvec include the coarse-quantizer tables their read and
-    # rebuild paths depend on: `drop --kind ivfpq` is the documented
-    # escape hatch from a pinned refresh publish, and leaving
-    # ivf_coarse/ivf_cells behind would make the next "fresh" build
-    # silently adopt the pinned quantizer it was escaping (r14 review)
-    _KIND_ALIASES = {"pq": {"pq_assign", "pq_cent"},
-                     "ivfpq": {"ivfpq_codes", "ivfpq_cent",
-                               "ivf_coarse", "ivf_cells"},
+    # CLI kind -> store kinds. The compound verbs publish under several
+    # store kinds (pq_assign + pq_cent, ...), so a prefix match on the
+    # CLI name would silently select NOTHING — `index verify --kind pq`
+    # exiting 0 having checked zero tables is a false-clean fsck. Raw
+    # store kinds pass through, so `--kind pq_cent` still narrows to one
+    # table. A product-quantizer family selects its codes, its codebook
+    # and the coarse-quantizer tables its codes are assigned under:
+    # `drop --kind ivfpq` is the documented escape hatch from a pinned
+    # refresh publish, and leaving ivf_coarse/ivf_cells behind would
+    # make the next "fresh" build silently adopt the pinned quantizer
+    # it was escaping.
+    families = {fam.name: fam for fam in PQ_FAMILIES}
+    _KIND_ALIASES = {**{name: set(fam.kinds)
+                        for name, fam in families.items()},
                      "ivfvec": {"ivf_vectors", "ivf_coarse",
                                 "ivf_cells"},
                      "ivf": {"ivf_coarse", "ivf_cells"}}
@@ -320,20 +328,25 @@ def cmd_index(args) -> int:
         return store_kind in _KIND_ALIASES.get(args.kind, {args.kind})
 
     def _drop_selected(name: str) -> bool:
-        # DROP cascades across the shared coarse quantizer (r14 review,
-        # third pass): removing ivf_coarse/ivf_cells while a sibling
-        # family's artifacts survive would pair a freshly-retrained
-        # quantizer with cells/codes/an inverted file assigned under
-        # the dropped one — silently wrong neighbors. So any selection
-        # touching the shared tables widens to every kind assigned
-        # under them. verify stays un-cascaded (read-only; checking a
-        # subset corrupts nothing).
+        # DROP cascades across the shared coarse quantizer: removing
+        # ivf_coarse/ivf_cells while a sibling family's artifacts
+        # survive would pair a freshly-retrained quantizer with
+        # cells/codes/an inverted file assigned under the dropped one —
+        # silently wrong neighbors. So any selection touching the
+        # shared tables widens to every kind assigned under them. And a
+        # family's corpus baseline is measured under its codebook, so
+        # it goes whenever the codes or the codebook go; the next
+        # staleness read records a fresh one. verify stays un-cascaded
+        # (read-only; checking a subset corrupts nothing).
         if args.kind == "all":
             return True
         sel = _KIND_ALIASES.get(args.kind, {args.kind})
         if sel & {"ivf_coarse", "ivf_cells"}:
-            sel = sel | {"ivf_coarse", "ivf_cells", "ivf_vectors",
-                         "ivfpq_codes", "ivfpq_cent"}
+            sel = sel.union({"ivf_vectors"}, *(
+                fam.kinds for fam in PQ_FAMILIES
+                if "ivf_coarse" in fam.carry))
+        sel = sel | {fam.base for fam in PQ_FAMILIES
+                     if sel & {fam.codes, fam.cent}}
         return name.split("__", 1)[0] in sel
 
     def _manifest(name):
@@ -481,12 +494,9 @@ def cmd_index(args) -> int:
                 "ok": not issues, "issues": issues}))
         return 1 if any_bad else 0
     if args.action == "refresh":
-        from bacalhau_spark.operators.similarity import (ivfpq_refresh,
-                                                         pq_refresh)
-        refreshers = {"pq": pq_refresh, "ivfpq": ivfpq_refresh}
-        if args.kind not in refreshers:
+        if args.kind not in families:
             print(f"index refresh: only the codebook-bearing kinds "
-                  f"{sorted(refreshers)} have a staleness-bounded "
+                  f"{sorted(families)} have a staleness-bounded "
                   f"refresh path (got {args.kind!r}); per-row and "
                   "banding kinds delta-adopt exactly via `index build`",
                   flush=True)
@@ -496,8 +506,8 @@ def cmd_index(args) -> int:
                   "(the epoch whose codebook is published)", flush=True)
             return 2
         spark = _get_spark(args.cpus)
-        fn = refreshers[args.kind]
-        for r in fn(spark, args.sf_dir, args.parent).collect():
+        fam = families[args.kind]
+        for r in fam.refresh(spark, args.sf_dir, args.parent).collect():
             print(_json.dumps({"sub": r["sub"], "n_new": r["n_new"],
                                "stale": r["stale"],
                                "action": r["action"]}))
@@ -522,18 +532,6 @@ def cmd_index(args) -> int:
         from bacalhau_spark.operators.multimodal import video_phash_index
         return video_phash_index(spark, args.sf_dir)
 
-    def _pq():
-        from bacalhau_spark.operators.similarity import (pq_centroid_index,
-                                                         pq_code_index)
-        pq_code_index(spark, args.sf_dir)
-        return pq_centroid_index(spark, args.sf_dir)
-
-    def _ivfpq():
-        from bacalhau_spark.operators.similarity import (
-            ivfpq_centroid_index, ivfpq_code_index)
-        ivfpq_code_index(spark, args.sf_dir)
-        return ivfpq_centroid_index(spark, args.sf_dir)
-
     def _ivf():
         from bacalhau_spark.operators.similarity import (ivf_cells_index,
                                                          ivf_coarse_index)
@@ -556,9 +554,17 @@ def cmd_index(args) -> int:
         from bacalhau_spark.operators.web import html_extract_index
         return html_extract_index(spark, args.sf_dir)
 
+    def _pq_family(fam):
+        # codes and codebook; the baseline is recorded by the first
+        # staleness read, not here
+        fam.code_index(spark, args.sf_dir)
+        return fam.centroid_index(spark, args.sf_dir)
+
     builders.update(phash=_phash, aphash=_aphash, vphash=_vphash,
-                    pq=_pq, ivfpq=_ivfpq, ivf=_ivf, ivfvec=_ivfvec,
-                    lshsig=_lshsig, canon=_canon, extract=_extract)
+                    **{name: partial(_pq_family, fam)
+                       for name, fam in families.items()},
+                    ivf=_ivf, ivfvec=_ivfvec, lshsig=_lshsig,
+                    canon=_canon, extract=_extract)
     kinds = list(builders) if args.kind == "all" else [args.kind]
     built = {}
     for k in kinds:
@@ -694,11 +700,12 @@ def build_parser() -> argparse.ArgumentParser:
     ix.add_argument("--kind", default="all",
                     help="sig|cand|winnow|phash|aphash|vphash|lshsig|"
                          "pq|ivfpq|ivf|ivfvec|canon|extract|all "
-                         "(compound kinds select their full store "
-                         "family for drop/verify: pq = assign+cent, "
-                         "ivfpq/ivfvec also cover the coarse-quantizer "
-                         "tables; raw store kinds like pq_cent narrow "
-                         "to one table)")
+                         "(compound kinds select their store family for "
+                         "drop/verify: pq = assign+cent, ivfpq = "
+                         "codes+cent plus the coarse-quantizer tables, "
+                         "ivfvec = vectors plus those tables; drop also "
+                         "takes a dropped codebook's baseline; raw store "
+                         "kinds like pq_cent narrow to one table)")
     ix.add_argument("--stale-days", type=float, default=None,
                     help="drop only tables whose latest manifest is "
                          "older than N days (dead-content reclamation)")

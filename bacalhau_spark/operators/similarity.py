@@ -20,6 +20,9 @@ from __future__ import annotations
 
 import hashlib
 import os
+from dataclasses import dataclass
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1409,20 +1412,6 @@ def _double_lit_sql(v: float) -> str:
     return f"CAST('{v!r}' AS DOUBLE)"
 
 
-def _pca_model_sql(mu: list, w: list) -> tuple[str, str]:
-    """(MU, W) as SQL array-literal TEXT — MU a 64-double array, W the
-    transposed [component][dim] array-of-arrays — emitted once for both
-    engines (Spark array(...) and DuckDB [...] share the CAST-literal
-    elements, only the constructor differs), so the projection fold
-    below runs the identical op chain over identical constants."""
-    wt = [[w[d][k] for d in range(len(mu))] for k in range(PCA_K)]
-    mu_elems = ", ".join(_double_lit_sql(v) for v in mu)
-    wk = [", ".join(_double_lit_sql(v) for v in row) for row in wt]
-    spark_sql = (f"array({mu_elems})",
-                 "array(" + ", ".join(f"array({r})" for r in wk) + ")")
-    return spark_sql
-
-
 def nd_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA projection to PCA_K components — the dimensionality-reduction
     pass embedding pipelines run before clustering/ANN indexing, closing
@@ -1739,85 +1728,55 @@ def _pq_exploded(emb: DataFrame, persist: bool = True):
     return out
 
 
+def _pq_sq() -> Column:
+    """Exact integer squared difference of a coordinate q and a centroid
+    coordinate cq."""
+    return (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
+
+
+def _pq_dist(e: DataFrame, cent: DataFrame, keys) -> DataFrame:
+    """(*keys, cid, d): the exact integer squared distance of every
+    `keys` subvector of e (..., dim, q) to every centroid of cent
+    (cid, dim, cq). The join key is `dim` alone because subspaces
+    PARTITION the dims, so a centroid row only ever meets its own
+    subspace's coordinates; the codebook is a (PQ_M*k*dims)-row
+    broadcast — bounded model state at any corpus size."""
+    return (e.join(F.broadcast(cent.select("cid", "dim", "cq")), "dim")
+            .groupBy(*keys, "cid").agg(F.sum(_pq_sq()).alias("d")))
+
+
+def _pq_argmin(e: DataFrame, cent: DataFrame,
+               keys=("vec_id", "sub")) -> DataFrame:
+    """(*keys, cid, d): the argmin-encode step — each subvector's nearest
+    centroid and its distance, (d, cid) tie-break."""
+    return (_pq_dist(e, cent, keys).groupBy(*keys)
+            .agg(F.min(F.struct("d", "cid")).alias("m"))
+            .select(*keys, F.col("m.cid").alias("cid"),
+                    F.col("m.d").alias("d")))
+
+
+def _pq_means(e: DataFrame, codes: DataFrame, by) -> DataFrame:
+    """The codebook M-step: sum-DIV-count means of e's coordinates under
+    the assignment `codes` (vec_id, sub, cid), grouped by `by`."""
+    return (e.join(codes.select("vec_id", "sub", "cid"), ["vec_id", "sub"])
+            .groupBy(*by).agg(F.expr("sum(q) DIV count(*)").alias("cq")))
+
+
 def pq_train_assign(e: DataFrame, k: int = PQ_K,
                     iters: int = PQ_ITERS) -> DataFrame:
     """Train PQ_M codebooks and assign codes in the same unrolled loop:
     returns (vec_id, sub, cid, d) — the per-subspace code + its exact
     integer quantization error. Seeds per subspace are the k smallest
-    vec_ids' subvectors (the kmeans_frame convention). Centroids are a
-    (PQ_M*k*dims)-row broadcast at every step — bounded model state; the
-    join key is `dim` alone because subspaces PARTITION the dims, so a
-    centroid row only ever meets its own subspace's coordinates."""
+    vec_ids' subvectors (the kmeans_frame convention)."""
     cent = (e.where(F.col("vec_id") < k)
             .select(F.col("vec_id").cast("int").alias("cid"),
                     "dim", F.col("q").alias("cq")))
     assign = None
     for it in range(iters):
-        dist = (e.join(F.broadcast(cent), "dim")
-                .groupBy("vec_id", "sub", "cid")
-                .agg(F.sum((F.col("q") - F.col("cq"))
-                           * (F.col("q") - F.col("cq"))).alias("d")))
-        assign = (dist.groupBy("vec_id", "sub")
-                  .agg(F.min(F.struct("d", "cid")).alias("m"))
-                  .select("vec_id", "sub", F.col("m.cid").alias("cid"),
-                          F.col("m.d").alias("d")))
+        assign = _pq_argmin(e, cent)
         if it < iters - 1:
-            cent = (e.join(assign.select("vec_id", "sub", "cid"),
-                           ["vec_id", "sub"])
-                    .groupBy("cid", "dim")
-                    .agg(F.expr("sum(q) DIV count(*)").alias("cq")))
+            cent = _pq_means(e, assign, ("cid", "dim"))
     return assign
-
-
-def pq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared persisted TRAINED PQ codes (vec_id, sub, cid, d) — the
-    minhash_signature_index lifecycle applied to the PQ plane: codebooks
-    train once per embeddings-content fingerprint (persisted store-
-    backed since round 11), every consumer
-    (quantize audit, ADC retrieval) probes the materialized codes. At
-    corpus scale this is the persisted code table an IVF-PQ index
-    stores; the exploded training matrix lives only inside the build.
-    Keyed on the EMBEDDINGS fingerprint (not documents)."""
-    staged: dict = {}
-
-    def build():
-        e = _pq_exploded(table(spark, sf_dir, "embeddings"))
-        staged["e"] = e
-        return pq_train_assign(e)
-
-    def cleanup():
-        # the exploded training matrix (n_docs x 64 rows, DISK_ONLY) is
-        # only needed while the codes materialize — unpersist once the
-        # index artifact exists (round-10 ADVICE: it stayed pinned for
-        # the session)
-        e = staged.pop("e", None)
-        if e is not None:
-            e.unpersist()
-
-    return cached_index(spark, sf_dir, "pq_assign", build,
-                        tbl="embeddings", cleanup=cleanup)
-
-
-def pq_centroid_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared persisted final PQ centroids (sub, cid, dim, cq): PQ_M x
-    PQ_K x PQ_SUB rows, bounded model state. DELIBERATELY one M-step
-    past the codebook the codes were argmin'd against: given the final
-    assignment, the per-code GROUP MEANS are the distortion-minimizing
-    reconstruction values (the conditional-expectation property), so
-    ADC built on them reconstructs at least as well as on the pre-step
-    centroids — this is standard Lloyd output (final M-step centroids
-    with the final assignment), not a code/codebook mismatch."""
-    def build():
-        e = _pq_exploded(table(spark, sf_dir, "embeddings"),
-                         persist=False)
-        return (e.join(pq_code_index(spark, sf_dir)
-                       .select("vec_id", "sub", "cid"),
-                       ["vec_id", "sub"])
-                .groupBy("sub", "cid", "dim")
-                .agg(F.expr("sum(q) DIV count(*)").alias("cq")))
-
-    return cached_index(spark, sf_dir, "pq_cent", build,
-                        tbl="embeddings")
 
 
 def nd_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1843,9 +1802,8 @@ PQ_STALENESS_FACTOR = 1.5
 
 
 def nd_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental PQ ingest with a STALENESS BOUND — the pattern the
-    round-12 verdict named for codebook-bearing indexes ("PQ codebooks
-    need a staleness bound instead" of exact delta adoption): a trained
+    """Incremental PQ ingest with a STALENESS BOUND — codebook-bearing
+    indexes get a staleness bound instead of exact delta adoption: a trained
     codebook is NEVER retrained per increment (FAISS's operating model
     — retraining would re-encode the world), so each new batch encodes
     against the PUBLISHED reconstruction codebook and the pipeline
@@ -1878,10 +1836,9 @@ def nd_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the codebook is a broadcast (PQ_M x PQ_K x PQ_SUB rows
     at any corpus size); the increment explodes only the BATCH; the
-    corpus baseline re-reads the published code table and the exploded
-    corpus once (at production scale the baseline is recorded at train
-    time — documented, the fixture row recomputes it so the oracle can
-    state it)."""
+    corpus side is the baseline artifact (PQFamily.baseline_index),
+    recorded by the first monitor read of an epoch and read by every
+    later one — the oracle recomputes it from the corpus."""
     return pq_staleness(spark, sf_dir, _pq_drift_batch(spark, sf_dir))
 
 
@@ -1896,95 +1853,6 @@ def _pq_drift_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.expr("transform(embedding, v -> CAST(v AS DOUBLE) "
                            "* CAST(0.5 AS DOUBLE) + CAST(0.45 AS DOUBLE))")
                     .alias("embedding")))
-
-
-def pq_retrain_drift_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BROAD drift batch for the retrain-loop artifact: 0.9x + 0.35
-    of every vec_id % 7 == 0 vector, new ids +1M. Deliberately distinct
-    from _pq_drift_batch: 0.9x keeps the batch's spread comparable to
-    the corpus's own, so ONE retrain at PQ_K=16 cannot fully absorb it —
-    the post-retrain monitor still reads stale
-    (experiments/pq_retrain_r14.txt), which is the monitor reporting
-    CODEBOOK CAPACITY rather than staleness: the honest operating note
-    for a drift as broad as the corpus itself. The tight monitor shape
-    (0.5x + 0.45) is the one whose signal CLEARS after retrain — the
-    clean closed-loop fixture the tests pin."""
-    emb = table(spark, sf_dir, "embeddings")
-    return (emb.where(F.col("vec_id") % 7 == 0)
-            .select((F.col("vec_id") + 1_000_000).alias("vec_id"),
-                    F.expr("transform(embedding, v -> CAST(v AS DOUBLE) "
-                           "* CAST(0.9 AS DOUBLE) + CAST(0.35 AS DOUBLE))")
-                    .alias("embedding")))
-
-
-def pq_baseline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TRAIN-TIME corpus baseline as a persisted artifact (round 15,
-    r14 verdict #6): per subspace, (n_corpus, corpus_distortion) under
-    the PUBLISHED reconstruction codebook (c2) with the PUBLISHED code
-    assignment — exactly what an ADC consumer pays, and exactly the
-    `corp` term every staleness-monitor call previously recomputed with
-    a full corpus explode + two joins. The stat is a pure function of
-    the embeddings CONTENT (codes and centroids are deterministic
-    functions of it), so it shares their content-addressed lifecycle:
-    recorded once when the index family is built, then every monitor
-    call — this session, the next, the refresh verb — READS the 16-row
-    artifact. Exact integer math end to end, so the recorded rows are
-    bit-identical to the recomputation the DuckDB oracle performs. No
-    delta form on purpose: the baseline aggregates over the whole
-    corpus under a specific codebook; an appended epoch re-records at
-    its own content address (pq_refresh's pinned path carries codes, so
-    the re-record is one index-sized join, never a retrain)."""
-    def build():
-        emb = table(spark, sf_dir, "embeddings")
-        cent = pq_centroid_index(spark, sf_dir)  # (sub, cid, dim, cq)
-        codes = pq_code_index(spark, sf_dir)     # (vec_id, sub, cid, d)
-        e_c = _pq_exploded(emb, persist=False)
-        sq = (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
-        return (e_c.join(codes.select("vec_id", "sub", "cid"),
-                         ["vec_id", "sub"])
-                .join(F.broadcast(cent), ["sub", "cid", "dim"])
-                .groupBy("vec_id", "sub").agg(F.sum(sq).alias("d"))
-                .groupBy("sub")
-                .agg(F.count("*").cast("long").alias("n_corpus"),
-                     F.sum("d").cast("long").alias("corpus_distortion")))
-
-    return cached_index(spark, sf_dir, "pq_base", build,
-                        tbl="embeddings")
-
-
-def pq_staleness(spark: SparkSession, sf_dir: str,
-                 batch: DataFrame) -> DataFrame:
-    """Per-subspace staleness monitor over an arbitrary increment
-    `batch` (vec_id, embedding) — the reusable core of
-    nd_pq_incremental: fresh-argmin encode the batch against the
-    PUBLISHED reconstruction codebook of sf_dir's corpus, compare its
-    mean distortion to the corpus's own under the same codebook, and
-    flag `stale` when the ratio exceeds PQ_STALENESS_FACTOR. Consumed
-    by pq_refresh (the retrain loop — round-13 verdict #1) and by the
-    graded nd_pq_incremental row. The corpus side is the train-time
-    recorded baseline (pq_baseline_index) — the monitor reads 16 rows
-    instead of re-scanning the corpus per call (r14 verdict #6)."""
-    cent = pq_centroid_index(spark, sf_dir)      # (sub, cid, dim, cq) = c2
-    sq = (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
-    corp = pq_baseline_index(spark, sf_dir)
-    e_b = _pq_exploded(batch, persist=False)
-    bagg = (e_b.join(F.broadcast(cent), ["sub", "dim"])
-            .groupBy("vec_id", "sub", "cid").agg(F.sum(sq).alias("d"))
-            .groupBy("vec_id", "sub")
-            .agg(F.min(F.struct("d", "cid")).alias("m"))
-            .select("vec_id", "sub", F.col("m.d").alias("d"))
-            .groupBy("sub")
-            .agg(F.count("*").cast("long").alias("n_new"),
-                 F.sum("d").cast("long").alias("new_distortion")))
-    stale = ((F.col("new_distortion").cast("double") / F.col("n_new"))
-             > (F.lit(PQ_STALENESS_FACTOR)
-                * F.col("corpus_distortion").cast("double")
-                / F.col("n_corpus")))
-    return (corp.join(bagg, "sub")
-            .select(F.col("sub").cast("int").alias("sub"),
-                    "n_corpus", "corpus_distortion",
-                    "n_new", "new_distortion", stale.alias("stale"))
-            .orderBy("sub"))
 
 
 def _refresh_append_guard(spark: SparkSession, merged_dir: str,
@@ -2067,109 +1935,277 @@ def _refresh_append_guard(spark: SparkSession, merged_dir: str,
             "`index build` instead")
 
 
+@dataclass(frozen=True)
+class PQFamily:
+    """One product-quantizer family's record. The methods are the one
+    lifecycle both families run — code build, codebook, corpus
+    baseline, staleness monitor, refresh — and the fields are all that
+    differs between them. IVF-PQ is plain PQ applied to each vector's
+    residual against its coarse cell (IVFADC, Jégou et al., TPAMI'11),
+    so a family contributes only:
+
+    - its store kinds (codes, codebook, baseline) and builder rev;
+    - `explode(spark, sf_dir, emb, nprobe=0, persist=False)`: the frame
+      as (vec_id, *cell, sub, dim, q) — with nprobe 0, `emb` is sf_dir's
+      own corpus (IVF-PQ reads its published cells); otherwise each row
+      goes to its nprobe nearest cells under sf_dir's published coarse
+      quantizer;
+    - `carry`: {store kind: fn(spark, parent_dir, new)} — the artifacts
+      besides codes and codebook a pinned refresh publishes under the
+      merged content key.
+
+    `name` is the family's CLI kind (`index build/refresh/drop/verify
+    --kind NAME`), `code_cols` the published code table's schema and
+    `cell` the coarse key its codes carry (() for plain PQ)."""
+    name: str
+    codes: str
+    cent: str
+    base: str
+    rev: int
+    code_cols: tuple
+    cell: tuple
+    explode: Callable
+    carry: dict
+
+    @property
+    def kinds(self) -> tuple:
+        """The store kinds `index build` leaves the codes depending on:
+        codes, codebook and the carried artifacts the codes are
+        assigned under — what `index drop/verify --kind NAME` select
+        (drop adds the baseline of any codebook it removes)."""
+        return (self.codes, self.cent, *self.carry)
+
+    def corpus(self, spark: SparkSession, sf_dir: str,
+               persist: bool = False) -> DataFrame:
+        return self.explode(spark, sf_dir, table(spark, sf_dir, "embeddings")
+                            .select("vec_id", "embedding"), persist=persist)
+
+    def code_index(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Persisted TRAINED codes (`code_cols`): the codebooks train
+        once per embeddings content through pq_train_assign over the
+        exploded corpus, and every consumer (quantize audit, ADC
+        retrieval, monitor) reads the materialized code table. The
+        exploded training matrix lives only inside the build. Keyed on
+        the EMBEDDINGS fingerprint."""
+        staged: dict = {}
+
+        def build():
+            e = staged["e"] = self.corpus(spark, sf_dir, persist=True)
+            codes = pq_train_assign(e)
+            if self.cell:
+                codes = codes.join(e.select("vec_id", *self.cell)
+                                   .distinct(), "vec_id")
+            return codes.select(*self.code_cols)
+
+        def cleanup():
+            # the exploded training matrix (n_docs x 64 rows, DISK_ONLY)
+            # is only needed while the codes materialize
+            e = staged.pop("e", None)
+            if e is not None:
+                e.unpersist()
+
+        return cached_index(spark, sf_dir, self.codes, build,
+                            tbl="embeddings", cleanup=cleanup, rev=self.rev)
+
+    def centroid_index(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Persisted final codebook (sub, cid, dim, cq): PQ_M x PQ_K x
+        PQ_SUB rows, bounded model state. DELIBERATELY one M-step past
+        the codebook the codes were argmin'd against: given the final
+        assignment, the per-code GROUP MEANS are the distortion-
+        minimizing reconstruction values (the conditional-expectation
+        property), so ADC on them reconstructs at least as well as on
+        the pre-step centroids — standard Lloyd output, not a
+        code/codebook mismatch."""
+        return cached_index(
+            spark, sf_dir, self.cent,
+            lambda: _pq_means(self.corpus(spark, sf_dir),
+                              self.code_index(spark, sf_dir),
+                              ("sub", "cid", "dim")),
+            tbl="embeddings", rev=self.rev)
+
+    def baseline_index(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The corpus baseline (sub, n_corpus, corpus_distortion): per
+        subspace, the corpus's distortion under the PUBLISHED codebook
+        with the PUBLISHED code assignment — exactly what an ADC
+        consumer pays, and the corpus side of every staleness check. A
+        pure function of the embeddings content, so it shares the
+        codes' content-addressed lifecycle, but it is recorded LAZILY:
+        the first staleness read of an epoch publishes it (`index
+        build` does not), and every later read — this session, the
+        next, the refresh verb — reads the 16-row artifact. `index
+        drop` removes it together with its codebook, so a rebuilt
+        codebook never meets a baseline recorded under the old one.
+        Exact integer math, bit-identical to the DuckDB oracle's
+        recomputation. No delta form: it aggregates the whole corpus
+        under one codebook, so an appended epoch records its own."""
+        def build():
+            codes = self.code_index(spark, sf_dir)
+            return (self.corpus(spark, sf_dir)
+                    .join(codes.select("vec_id", "sub", "cid"),
+                          ["vec_id", "sub"])
+                    .join(F.broadcast(self.centroid_index(spark, sf_dir)),
+                          ["sub", "cid", "dim"])
+                    .groupBy("vec_id", "sub").agg(F.sum(_pq_sq()).alias("d"))
+                    .groupBy("sub")
+                    .agg(F.count("*").cast("long").alias("n_corpus"),
+                         F.sum("d").cast("long").alias("corpus_distortion")))
+
+        return cached_index(spark, sf_dir, self.base, build,
+                            tbl="embeddings", rev=self.rev)
+
+    def encode(self, spark: SparkSession, sf_dir: str,
+               batch: DataFrame) -> DataFrame:
+        """(vec_id, *cell, sub, cid, d): an increment `batch` (vec_id,
+        embedding) encoded against sf_dir's PUBLISHED state — its cell
+        under the published coarse quantizer, then the argmin against
+        the published reconstruction codebook."""
+        return _pq_argmin(self.explode(spark, sf_dir, batch, nprobe=1),
+                          self.centroid_index(spark, sf_dir),
+                          ("vec_id", *self.cell, "sub"))
+
+    def staleness(self, spark: SparkSession, sf_dir: str,
+                  batch: DataFrame) -> DataFrame:
+        """Per-subspace staleness monitor over an increment `batch`:
+        encode it against sf_dir's published codebook, compare its mean
+        distortion to the corpus's own under the same codebook (the
+        baseline artifact, 16 rows), and flag `stale` when the ratio
+        exceeds PQ_STALENESS_FACTOR."""
+        bagg = (self.encode(spark, sf_dir, batch).groupBy("sub")
+                .agg(F.count("*").cast("long").alias("n_new"),
+                     F.sum("d").cast("long").alias("new_distortion")))
+        stale = ((F.col("new_distortion").cast("double") / F.col("n_new"))
+                 > (F.lit(PQ_STALENESS_FACTOR)
+                    * F.col("corpus_distortion").cast("double")
+                    / F.col("n_corpus")))
+        return (self.baseline_index(spark, sf_dir).join(bagg, "sub")
+                .select(F.col("sub").cast("int").alias("sub"),
+                        "n_corpus", "corpus_distortion",
+                        "n_new", "new_distortion", stale.alias("stale"))
+                .orderBy("sub"))
+
+    def refresh(self, spark: SparkSession, merged_dir: str,
+                parent_dir: str) -> DataFrame:
+        """The epoch-ingest verb for an index family with no exact
+        incremental form — the consumer of the staleness signal.
+        `parent_dir` holds epoch N (its codebook is published),
+        `merged_dir` epoch N+1 = epoch N plus appended vectors. The
+        verb:
+
+        1. identifies the NEW vectors (vec_id anti-join against the
+           parent),
+        2. runs the staleness monitor on them against the PINNED
+           published codebook and the parent's baseline,
+        3. acts on the flag — the event-fold-drives-action loop
+           (reference: pkg/controller/controller.go:328-385):
+           - ANY subspace stale -> RETRAIN: fresh codes and codebook
+             (for IVF-PQ a fresh coarse quantizer too) over the merged
+             corpus, published under the merged content key, so ANN
+             recall recovers to the fresh-train level for every later
+             consumer;
+           - no subspace stale  -> ADOPT PINNED: encode ONLY the new
+             vectors against the pinned state and publish parent codes
+             UNION new codes, the carried codebook and the family's
+             `carry` artifacts under the merged content key — never
+             re-encoding the world. (Declared caveat: a pinned epoch's
+             plain-PQ `d` is distortion vs the RECONSTRUCTION codebook,
+             the ADC-relevant quantity, while a trained epoch's `d` is
+             vs the final training argmin — consumers of `d` beyond
+             monitoring should retrain.)
+
+        Two declared invariants: (1) the verb REQUIRES the epoch to be
+        append-only and verifies it (_refresh_append_guard); (2) a
+        pinned publish and a fresh `index build` of the same merged
+        content are two LEGITIMATE rules for one content address —
+        whichever lands first owns the slot (write_version mode=error;
+        the loser adopts), and the manifest's `encoding: pinned` prop
+        records which rule produced the head (`index list` prints it).
+        Operators needing fresh-train bytes at a pinned address run
+        `index drop` first.
+
+        Returns the per-subspace monitor rows plus the chosen `action`
+        ('retrain' | 'adopt_pinned') as literal structs (the
+        stage_index_build convention — the decision already happened;
+        the frame is the commit-log view of it)."""
+        _refresh_append_guard(spark, merged_dir, parent_dir)
+        new = (table(spark, merged_dir, "embeddings")
+               .join(table(spark, parent_dir, "embeddings").select("vec_id"),
+                     "vec_id", "left_anti")
+               .select("vec_id", "embedding"))
+        rows = self.staleness(spark, parent_dir, new).collect()
+        action = ("retrain" if any(r["stale"] for r in rows)
+                  else "adopt_pinned")
+        if action == "retrain":
+            self.code_index(spark, merged_dir)
+            self.centroid_index(spark, merged_dir)
+        else:
+            cent = self.centroid_index(spark, parent_dir)
+            builds = {kind: partial(fn, spark, parent_dir, new)
+                      for kind, fn in self.carry.items()}
+            builds[self.codes] = lambda: (
+                self.code_index(spark, parent_dir).unionByName(
+                    self.encode(spark, parent_dir, new)
+                    .select(*self.code_cols)))
+            builds[self.cent] = lambda: cent
+            for kind, build in builds.items():
+                cached_index(spark, merged_dir, kind, build,
+                             tbl="embeddings", rev=self.rev,
+                             extra_props={"encoding": "pinned"})
+        structs = [F.struct(F.lit(int(r["sub"])).alias("sub"),
+                            F.lit(int(r["n_new"])).cast("long")
+                            .alias("n_new"),
+                            F.lit(bool(r["stale"])).alias("stale"),
+                            F.lit(action).alias("action"))
+                   for r in rows]
+        if not structs:  # no new vectors: nothing to monitor, codes carried
+            return spark.range(0).select(
+                F.lit(0).alias("sub"), F.lit(0).cast("long").alias("n_new"),
+                F.lit(False).alias("stale"), F.lit(action).alias("action"))
+        return spark.range(1).select(F.inline(F.array(*structs)))
+
+
+def _pq_explode(spark: SparkSession, sf_dir: str, emb: DataFrame,
+                nprobe: int = 0, persist: bool = False) -> DataFrame:
+    """Plain PQ's explode: no coarse cells, so only the frame counts."""
+    return _pq_exploded(emb, persist=persist)
+
+
+PQ = PQFamily(name="pq", codes="pq_assign", cent="pq_cent", base="pq_base",
+              rev=1, code_cols=("vec_id", "sub", "cid", "d"), cell=(),
+              explode=_pq_explode, carry={})
+
+
+def pq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted trained PQ codes (vec_id, sub, cid, d)."""
+    return PQ.code_index(spark, sf_dir)
+
+
+def pq_centroid_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted final PQ codebook (sub, cid, dim, cq)."""
+    return PQ.centroid_index(spark, sf_dir)
+
+
+def pq_baseline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lazily recorded PQ corpus baseline (PQFamily.baseline_index)."""
+    return PQ.baseline_index(spark, sf_dir)
+
+
+def pq_staleness(spark: SparkSession, sf_dir: str,
+                 batch: DataFrame) -> DataFrame:
+    """PQ staleness monitor over `batch` (PQFamily.staleness)."""
+    return PQ.staleness(spark, sf_dir, batch)
+
+
 def pq_refresh(spark: SparkSession, merged_dir: str,
                parent_dir: str) -> DataFrame:
-    """THE RETRAIN-LOOP CONSUMER of the staleness signal (round-13
-    verdict #1: "the staleness monitor has no consumer") — the epoch-
-    ingest verb for the one index family with no exact incremental form.
-    `parent_dir` holds epoch N (its codebook is published in the index
-    store), `merged_dir` holds epoch N+1 = epoch N plus appended
-    vectors. The verb:
-
-    1. identifies the NEW vectors (vec_id anti-join against the parent),
-    2. runs pq_staleness: fresh-argmin encodes them against the PINNED
-       published codebook and compares per-subspace mean distortion to
-       the parent corpus baseline (one parent scan per refresh; a
-       production deployment records the baseline at train time),
-    3. acts on the flag — the event-fold-drives-action loop (reference:
-       pkg/controller/controller.go:328-385):
-       - ANY subspace stale  -> RETRAIN: train fresh codebooks + codes
-         over the merged corpus and publish them under the merged
-         content key (pq_code_index/pq_centroid_index — content
-         addressing makes the new epoch the natural fresh address), so
-         ANN recall recovers to the fresh-train level for every later
-         consumer;
-       - no subspace stale   -> ADOPT PINNED: encode ONLY the new
-         vectors against the pinned codebook and publish parent codes
-         UNION new codes (+ the carried codebook) under the merged
-         content key — the cheap path, never re-encoding the world.
-         (Caveat, declared: the pinned epoch's `d` column is distortion
-         vs the RECONSTRUCTION codebook c2, the ADC-relevant quantity,
-         while a trained epoch's `d` is vs the final training argmin —
-         consumers of `d` beyond monitoring should retrain.)
-
-    Two declared invariants (r14 review): (1) the verb REQUIRES the
-    epoch to be append-only and verifies it (_refresh_append_guard) —
-    an in-place rewrite is invisible to the anti-join and a removal
-    leaves phantom codes, so both fail loudly with a rebuild
-    instruction; (2) a pinned publish and a fresh `index build` of the
-    same merged content are two LEGITIMATE rules for one content
-    address — whichever lands first owns the slot (write_version
-    mode=error; the loser adopts), and the manifest's
-    `encoding: pinned` prop records which rule produced the head
-    (`index list` prints it), so the state is inspectable rather than
-    silent. Operators needing fresh-train bytes at a pinned address
-    run `index drop` first.
-
-    Returns the per-subspace monitor rows plus the chosen `action`
-    ('retrain' | 'adopt_pinned') as literal structs (the
-    stage_index_build convention — the decision already happened; the
-    frame is the commit-log view of it)."""
-    _refresh_append_guard(spark, merged_dir, parent_dir)
-    m_emb = table(spark, merged_dir, "embeddings")
-    p_emb = table(spark, parent_dir, "embeddings")
-    new = (m_emb.join(p_emb.select("vec_id"), "vec_id", "left_anti")
-           .select("vec_id", "embedding"))
-    rows = pq_staleness(spark, parent_dir, new).collect()  # 16 rows
-    action = ("retrain" if any(r["stale"] for r in rows)
-              else "adopt_pinned")
-    if action == "retrain":
-        pq_code_index(spark, merged_dir)
-        pq_centroid_index(spark, merged_dir)
-    else:
-        cent = pq_centroid_index(spark, parent_dir)
-        sq = (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
-
-        def build_codes():
-            e_b = _pq_exploded(new, persist=False)
-            new_codes = (e_b.join(F.broadcast(cent), ["sub", "dim"])
-                         .groupBy("vec_id", "sub", "cid")
-                         .agg(F.sum(sq).alias("d"))
-                         .groupBy("vec_id", "sub")
-                         .agg(F.min(F.struct("d", "cid")).alias("m"))
-                         .select("vec_id", "sub",
-                                 F.col("m.cid").alias("cid"),
-                                 F.col("m.d").alias("d")))
-            return pq_code_index(spark, parent_dir).unionByName(new_codes)
-
-        # encoding=pinned records WHICH declared rule produced the
-        # bytes at this content address: a pinned publish and a fresh
-        # `index build` of the same merged content are two legitimate
-        # rules for one slot — whichever lands first owns it
-        # (mode=error; the loser adopts), and the prop makes the head's
-        # provenance inspectable (`index list`) instead of silent
-        cached_index(spark, merged_dir, "pq_assign", build_codes,
-                     tbl="embeddings",
-                     extra_props={"encoding": "pinned"})
-        cached_index(spark, merged_dir, "pq_cent", lambda: cent,
-                     tbl="embeddings",
-                     extra_props={"encoding": "pinned"})
-    structs = [F.struct(F.lit(int(r["sub"])).alias("sub"),
-                        F.lit(int(r["n_new"])).cast("long").alias("n_new"),
-                        F.lit(bool(r["stale"])).alias("stale"),
-                        F.lit(action).alias("action"))
-               for r in rows]
-    if not structs:  # no new vectors: nothing to monitor, codes carried
-        return spark.range(0).select(
-            F.lit(0).alias("sub"), F.lit(0).cast("long").alias("n_new"),
-            F.lit(False).alias("stale"), F.lit(action).alias("action"))
-    return spark.range(1).select(F.inline(F.array(*structs)))
+    """PQ epoch refresh (PQFamily.refresh); CLI `index refresh --kind
+    pq`."""
+    return PQ.refresh(spark, merged_dir, parent_dir)
 
 
 def nd_pq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RETRAIN arm of the staleness loop as a driver-graded row
-    (round 14 — pq_refresh's lifecycle half is pinned by
-    tests/test_pq_refresh.py; this row hash-gates the retrain MATH):
+    (pq_refresh's lifecycle half is pinned by tests/test_pq_refresh.py;
+    this row hash-gates the retrain MATH):
     the registered drift batch (the nd_pq_incremental shape, which IS
     stale under the published codebook — the monitor row proves it)
     merges with the corpus and the standard trainer runs fresh over the
@@ -2183,8 +2219,7 @@ def nd_pq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to nd_pq_quantize over the merged corpus —
     the exploded matrix is (n+batch) x 64 integer rows, centroids stay
-    a broadcast; the monitor half adds one corpus scan (documented in
-    pq_staleness)."""
+    a broadcast; the monitor half reads the recorded baseline."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     drift = _pq_drift_batch(spark, sf_dir)
     stale_t = (pq_staleness(spark, sf_dir, drift)
@@ -2399,7 +2434,7 @@ def nd_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     per corpus vector — the only thing that scales with n), and the
     full floats are touched only for the shortlist. Top-3 per query.
 
-    HASH-GATED END TO END since round 14 (_ANN_PQ_ORACLE): training,
+    HASH-GATED END TO END (_ANN_PQ_ORACLE): training,
     LUT, and shortlist are exact integer math with deterministic
     (adist, nn) tie-breaks, and the re-rank cosine is the shared
     left-fold double both engines compute bit-identically — so the one
@@ -2415,24 +2450,27 @@ def nd_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def adc_topk(emb: DataFrame, assign: DataFrame, cent: DataFrame,
              qpred: Column, shortlist: int = PQ_SHORTLIST,
-             k: int = 3) -> DataFrame:
+             k: int = 3, *, cell: tuple = (),
+             queries: DataFrame | None = None) -> DataFrame:
     """The ADC retrieval plan over an arbitrary (corpus, codes,
-    codebook) triple — factored from nd_ann_pq (pure code motion, the
-    graded plan is unchanged) so the staleness retrain loop can measure
-    recall under a PINNED vs a RETRAINED codebook on the same corpus
-    (pq_refresh tests / experiments). `qpred` selects the query rows
-    out of `emb`."""
-    # query subvectors: explode ONLY the query batch, never the corpus
-    q = (_pq_exploded(emb.where(qpred), persist=False)
-         .select(F.col("vec_id").alias("qid"), "sub", "dim", "q"))
+    codebook) triple — LUT, then shortlist, then exact re-rank — shared
+    by nd_ann_pq, nd_ann_ivfpq and the refresh tests (recall under a
+    PINNED vs a RETRAINED codebook on the same corpus). `qpred` selects
+    the query rows out of `emb`; `queries` is their exploded form
+    (vec_id, *cell, sub, dim, q), by default the plain PQ explode. With
+    cell=("cluster",) the queries are IVF-PQ residuals, one set per
+    probed cell: residuals are coded against the cell centroid, so the
+    LUT is per (query, cell) and a code meets only its own cell's
+    rows."""
+    if queries is None:
+        # explode ONLY the query batch, never the corpus
+        queries = _pq_exploded(emb.where(qpred), persist=False)
     # LUT: exact integer distance query-subvector -> every centroid
-    lut = (q.join(cent, ["sub", "dim"])
-           .groupBy("qid", "sub", "cid")
-           .agg(F.sum((F.col("q") - F.col("cq"))
-                      * (F.col("q") - F.col("cq"))).alias("d")))
-    codes = assign.select(F.col("vec_id").alias("nn"), "sub", "cid")
+    lut = _pq_dist(queries.withColumnRenamed("vec_id", "qid"), cent,
+                   ("qid", *cell, "sub"))
+    codes = assign.select(F.col("vec_id").alias("nn"), *cell, "sub", "cid")
     ws = Window.partitionBy("qid").orderBy("adist", "nn")
-    short = (codes.join(F.broadcast(lut), ["sub", "cid"])
+    short = (codes.join(F.broadcast(lut), [*cell, "sub", "cid"])
              .where(F.col("qid") != F.col("nn"))
              .groupBy("qid", "nn")
              .agg(F.sum("d").alias("adist"))
@@ -2467,7 +2505,7 @@ IVFPQ_SHORTLIST = 50
 def _ivfpq_residual_exploded(emb: DataFrame, cells: DataFrame,
                              coarse: DataFrame) -> DataFrame:
     """(vec_id, cluster, sub, dim, q): the residual analog of
-    _pq_exploded — PURE INTEGER since round 14: the residual coordinate
+    _pq_exploded, PURE INTEGER: the residual coordinate
     is q_v - cq + IVFPQ_OFF where q_v is the vector's quantized coord
     and cq its cell centroid's (itself an integer mean), so there is no
     float roundtrip anywhere in the IVF-PQ plane and the oracles replay
@@ -2490,217 +2528,84 @@ def _ivfpq_residual_exploded(emb: DataFrame, cells: DataFrame,
                     "dim", qsafe.alias("q")))
 
 
-def ivfpq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared persisted IVF-PQ codes (vec_id, cluster, sub, cid): coarse
-    cell + shared residual-PQ code per subspace — the full IVF-PQ index
-    payload (one int + PQ_M nibbles per vector). Trains the residual
-    codebooks through the SAME pq_train_assign loop as plain PQ, over
-    the pure-integer residuals."""
-    staged: dict = {}
+def _probe_cells(spark: SparkSession, sf_dir: str, emb: DataFrame,
+                 nprobe: int) -> DataFrame:
+    """(vec_id, cluster): each row's `nprobe` nearest cells under
+    sf_dir's published coarse quantizer, ranked inside the scan
+    (_probe_cells_expr). nprobe=1 is the corpus rule of ivf_cells_index
+    (same integer distances, same (d, cluster) tie-break)."""
+    return emb.select("vec_id", F.explode(_probe_cells_expr(
+        _coarse_rows(spark, sf_dir), nprobe)).alias("cluster"))
 
-    def build():
-        emb = table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding")
+
+def _ivfpq_explode(spark: SparkSession, sf_dir: str, emb: DataFrame,
+                   nprobe: int = 0, persist: bool = False) -> DataFrame:
+    """IVF-PQ's explode (see PQFamily): the residuals (vec_id, cluster,
+    sub, dim, q) of `emb` against its cells under sf_dir's published
+    coarse quantizer — the published corpus cells when nprobe is 0,
+    else each row's nprobe nearest cells."""
+    cells = (ivf_cells_index(spark, sf_dir) if nprobe == 0
+             else _probe_cells(spark, sf_dir, emb, nprobe))
+    e = _ivfpq_residual_exploded(emb, cells, ivf_coarse_index(spark, sf_dir))
+    if persist:
         from pyspark.storagelevel import StorageLevel
-        e = (_ivfpq_residual_exploded(
-            emb, ivf_cells_index(spark, sf_dir),
-            ivf_coarse_index(spark, sf_dir))
-            .persist(StorageLevel.DISK_ONLY))
-        staged["e"] = e
+        e = e.persist(StorageLevel.DISK_ONLY)
         # materialize before any plan reads it: AQE then plans every
         # join over `e` with the cached relation's real size, instead of
         # sometimes launching a shuffle over it before it broadcasts the
         # join's other side (one racing job per build)
         e.count()
-        assign = pq_train_assign(e)
-        return assign.join(
-            e.select("vec_id", "cluster").distinct(), "vec_id").select(
-            "vec_id", "cluster", "sub", "cid")
+    return e
 
-    def cleanup():
-        e = staged.pop("e", None)
-        if e is not None:
-            e.unpersist()
 
-    return cached_index(spark, sf_dir, "ivfpq_codes", build,
-                        tbl="embeddings", cleanup=cleanup,
-                        rev=IVF_REV)
+# A pinned IVF-PQ refresh carries the parent's coarse quantizer verbatim
+# and its cells plus the new vectors' cells under that quantizer: the
+# merged codes are assigned under exactly these two artifacts.
+IVFPQ = PQFamily(
+    name="ivfpq", codes="ivfpq_codes", cent="ivfpq_cent",
+    base="ivfpq_base", rev=IVF_REV,
+    code_cols=("vec_id", "cluster", "sub", "cid"), cell=("cluster",),
+    explode=_ivfpq_explode,
+    carry={"ivf_coarse": lambda spark, parent_dir, new:
+           ivf_coarse_index(spark, parent_dir),
+           "ivf_cells": lambda spark, parent_dir, new:
+           ivf_cells_index(spark, parent_dir).unionByName(
+               _probe_cells(spark, parent_dir, new, 1))})
+PQ_FAMILIES = (PQ, IVFPQ)
+
+
+def ivfpq_code_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted IVF-PQ codes (vec_id, cluster, sub, cid): coarse cell +
+    residual-PQ code per subspace — the full IVF-PQ index payload (one
+    int + PQ_M nibbles per vector)."""
+    return IVFPQ.code_index(spark, sf_dir)
 
 
 def ivfpq_centroid_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared persisted residual-PQ codebook (sub, cid, dim, cq)."""
-    def build():
-        emb = table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding")
-        e = _ivfpq_residual_exploded(
-            emb, ivf_cells_index(spark, sf_dir),
-            ivf_coarse_index(spark, sf_dir))
-        return (e.join(ivfpq_code_index(spark, sf_dir)
-                       .select("vec_id", "sub", "cid"),
-                       ["vec_id", "sub"])
-                .groupBy("sub", "cid", "dim")
-                .agg(F.expr("sum(q) DIV count(*)").alias("cq")))
-
-    return cached_index(spark, sf_dir, "ivfpq_cent", build,
-                        tbl="embeddings", rev=IVF_REV)
+    """Persisted residual-PQ codebook (sub, cid, dim, cq)."""
+    return IVFPQ.centroid_index(spark, sf_dir)
 
 
 def ivfpq_baseline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pq_baseline_index's IVF-PQ twin: the per-subspace corpus
-    baseline (n_corpus, corpus_distortion) under the published coarse
-    quantizer + residual codebook with the published assignment,
-    recorded once per embeddings content and READ by every
-    ivfpq_staleness call (the refresh verb re-collected the corpus
-    term per epoch check). Exact integers; rev follows the IVF family
-    (the baseline is a function of the rev-2 coarse artifacts)."""
-    def build():
-        coarse = ivf_coarse_index(spark, sf_dir)
-        rcent = ivfpq_centroid_index(spark, sf_dir)   # residual c2
-        codes = ivfpq_code_index(spark, sf_dir)
-        emb = (table(spark, sf_dir, "embeddings")
-               .select("vec_id", "embedding"))
-        e_c = _ivfpq_residual_exploded(
-            emb, ivf_cells_index(spark, sf_dir), coarse)
-        sq = (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
-        return (e_c.join(codes.select("vec_id", "sub", "cid"),
-                         ["vec_id", "sub"])
-                .join(F.broadcast(rcent), ["sub", "cid", "dim"])
-                .groupBy("vec_id", "sub").agg(F.sum(sq).alias("d"))
-                .groupBy("sub")
-                .agg(F.count("*").cast("long").alias("n_corpus"),
-                     F.sum("d").cast("long").alias("corpus_distortion")))
-
-    return cached_index(spark, sf_dir, "ivfpq_base", build,
-                        tbl="embeddings", rev=IVF_REV)
+    """Lazily recorded IVF-PQ corpus baseline
+    (PQFamily.baseline_index)."""
+    return IVFPQ.baseline_index(spark, sf_dir)
 
 
 def ivfpq_staleness(spark: SparkSession, sf_dir: str,
                     batch: DataFrame) -> DataFrame:
-    """The IVF-PQ twin of pq_staleness (round 14 — the retrain loop
-    generalizes to the SECOND codebook-bearing family): the batch is
-    coarse-assigned with the PUBLISHED quantizer (ivf_coarse — pinned
-    state, exactly why round 14 persisted it), its residuals
-    fresh-argmin encode against the published residual codebook, and
-    per-subspace mean distortion compares to the corpus's own under the
-    same codebooks at PQ_STALENESS_FACTOR. The corpus side reads the
-    recorded baseline artifact (ivfpq_baseline_index, r15)."""
-    coarse = ivf_coarse_index(spark, sf_dir)
-    rcent = ivfpq_centroid_index(spark, sf_dir)   # residual c2
-    sq = (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
-    corp = ivfpq_baseline_index(spark, sf_dir)
-    b_cells = (_ivf_assign_ranked(batch,
-                                  _ivf_coarse_arrays(spark, sf_dir))
-               .where(F.col("arank") == 1)
-               .select("vec_id", "cluster"))
-    e_b = _ivfpq_residual_exploded(batch, b_cells, coarse)
-    bagg = (e_b.join(F.broadcast(rcent), ["sub", "dim"])
-            .groupBy("vec_id", "sub", "cid").agg(F.sum(sq).alias("d"))
-            .groupBy("vec_id", "sub")
-            .agg(F.min(F.struct("d", "cid")).alias("m"))
-            .select("vec_id", "sub", F.col("m.d").alias("d"))
-            .groupBy("sub")
-            .agg(F.count("*").cast("long").alias("n_new"),
-                 F.sum("d").cast("long").alias("new_distortion")))
-    stale = ((F.col("new_distortion").cast("double") / F.col("n_new"))
-             > (F.lit(PQ_STALENESS_FACTOR)
-                * F.col("corpus_distortion").cast("double")
-                / F.col("n_corpus")))
-    return (corp.join(bagg, "sub")
-            .select(F.col("sub").cast("int").alias("sub"),
-                    "n_corpus", "corpus_distortion",
-                    "n_new", "new_distortion", stale.alias("stale"))
-            .orderBy("sub"))
+    """IVF-PQ staleness monitor over `batch` (PQFamily.staleness): the
+    batch is coarse-assigned with the PUBLISHED quantizer and its
+    residuals encode against the published residual codebook."""
+    return IVFPQ.staleness(spark, sf_dir, batch)
 
 
 def ivfpq_refresh(spark: SparkSession, merged_dir: str,
                   parent_dir: str) -> DataFrame:
-    """pq_refresh's IVF-PQ twin: the epoch-ingest verb for the
-    composed index. On a stale flag the WHOLE index retrains over the
-    merged corpus — fresh coarse quantizer (ivf_coarse), fresh residual
-    codebooks, fresh codes, all published under the merged content key;
-    otherwise the pinned path carries BOTH codebooks verbatim and
-    encodes only the new vectors (coarse cell via the pinned quantizer,
-    residual code via argmin against the pinned reconstruction
-    codebook). CLI: `index refresh --kind ivfpq`."""
-    _refresh_append_guard(spark, merged_dir, parent_dir)
-    m_emb = table(spark, merged_dir, "embeddings")
-    p_emb = table(spark, parent_dir, "embeddings")
-    new = (m_emb.join(p_emb.select("vec_id"), "vec_id", "left_anti")
-           .select("vec_id", "embedding"))
-    rows = ivfpq_staleness(spark, parent_dir, new).collect()
-    action = ("retrain" if any(r["stale"] for r in rows)
-              else "adopt_pinned")
-    if action == "retrain":
-        ivf_coarse_index(spark, merged_dir)
-        ivfpq_code_index(spark, merged_dir)
-        ivfpq_centroid_index(spark, merged_dir)
-    else:
-        coarse = ivf_coarse_index(spark, parent_dir)
-        rcent = ivfpq_centroid_index(spark, parent_dir)
-        sq = (F.col("q") - F.col("cq")) * (F.col("q") - F.col("cq"))
-        # the batch's coarse assignment feeds BOTH pinned builders —
-        # ONE lazy persist (r14 review, twice): each builder previously
-        # re-ran the full assignment chain, and the first fix's eager
-        # checkpoint paid the job even when every table ADOPTS (the
-        # builders never run on a re-refresh) and pinned its blocks for
-        # the session. persist() materializes only if a builder
-        # actually runs, and the explicit unpersist below releases it
-        # either way (a no-op when nothing materialized).
-        new_cells = (_ivf_assign_ranked(
-            new, _ivf_coarse_arrays(spark, parent_dir))
-            .where(F.col("arank") == 1)
-            .select("vec_id", "cluster")
-            .persist())
-
-        def build_codes():
-            e_b = _ivfpq_residual_exploded(new, new_cells, coarse)
-            new_codes = (e_b.join(F.broadcast(rcent), ["sub", "dim"])
-                         .groupBy("vec_id", "cluster", "sub", "cid")
-                         .agg(F.sum(sq).alias("d"))
-                         .groupBy("vec_id", "cluster", "sub")
-                         .agg(F.min(F.struct("d", "cid")).alias("m"))
-                         .select("vec_id", "cluster", "sub",
-                                 F.col("m.cid").alias("cid")))
-            return (ivfpq_code_index(spark, parent_dir)
-                    .unionByName(new_codes))
-
-        def build_cells():
-            return (ivf_cells_index(spark, parent_dir)
-                    .unionByName(new_cells))
-
-        pinned = {"encoding": "pinned"}  # provenance, see pq_refresh
-        try:
-            cached_index(spark, merged_dir, "ivf_coarse",
-                         lambda: coarse, tbl="embeddings",
-                         rev=IVF_REV, extra_props=pinned)
-            cached_index(spark, merged_dir, "ivf_cells",
-                         build_cells, tbl="embeddings",
-                         rev=IVF_REV, extra_props=pinned)
-            cached_index(spark, merged_dir, "ivfpq_codes",
-                         build_codes, tbl="embeddings",
-                         rev=IVF_REV, extra_props=pinned)
-            cached_index(spark, merged_dir, "ivfpq_cent",
-                         lambda: rcent, tbl="embeddings",
-                         rev=IVF_REV, extra_props=pinned)
-        finally:
-            # the published tables (or fallback checkpoints) no longer
-            # depend on the staging frame — release it even when a
-            # publish raises mid-sequence (no-op if every table
-            # adopted and it never materialized)
-            try:
-                new_cells.unpersist()
-            except Exception:  # noqa: BLE001 — cache hygiene only
-                pass
-    structs = [F.struct(F.lit(int(r["sub"])).alias("sub"),
-                        F.lit(int(r["n_new"])).cast("long").alias("n_new"),
-                        F.lit(bool(r["stale"])).alias("stale"),
-                        F.lit(action).alias("action"))
-               for r in rows]
-    if not structs:
-        return spark.range(0).select(
-            F.lit(0).alias("sub"), F.lit(0).cast("long").alias("n_new"),
-            F.lit(False).alias("stale"), F.lit(action).alias("action"))
-    return spark.range(1).select(F.inline(F.array(*structs)))
+    """IVF-PQ epoch refresh (PQFamily.refresh): a retrain publishes a
+    fresh coarse quantizer, residual codebook and codes; the pinned path
+    carries both quantizers. CLI `index refresh --kind ivfpq`."""
+    return IVFPQ.refresh(spark, merged_dir, parent_dir)
 
 
 def nd_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2713,8 +2618,7 @@ def nd_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     are coded against the cell centroid, so the LUT is per cell),
     (3) exact full-dimension cosine RE-RANKS the IVFPQ_SHORTLIST best.
 
-    HASH-GATED END TO END since round 14 (_ANN_IVFPQ_ORACLE — the last
-    ANN family leaves the no_oracle set): coarse training and cell
+    HASH-GATED END TO END (_ANN_IVFPQ_ORACLE): coarse training and cell
     assignment are the integer-exact kmeans convention, residuals are
     pure integer deltas against the integer cell centroids, the
     residual codebooks train through the exact PQ loop, the ADC LUT is
@@ -2722,45 +2626,14 @@ def nd_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bit-identical cosine fold. Recall stays threshold-tested in
     tests/ — approximate semantics, exact implementation."""
     emb = table(spark, sf_dir, "embeddings")
-    codes = ivfpq_code_index(spark, sf_dir)
-    rcent = ivfpq_centroid_index(spark, sf_dir)
-    q_emb = emb.where(F.col("vec_id") < 20).select("vec_id", "embedding")
-    q_cells = (q_emb.select(
-        "vec_id", F.explode(_probe_cells_expr(
-            _coarse_rows(spark, sf_dir), IVFPQ_NPROBE)).alias("cluster")))
-    qe = (_ivfpq_residual_exploded(q_emb, q_cells,
-                                   ivf_coarse_index(spark, sf_dir))
-          .select(F.col("vec_id").alias("qid"), "cluster", "sub",
-                  "dim", "q"))
-    lut = (qe.join(rcent, ["sub", "dim"])
-           .groupBy("qid", "cluster", "sub", F.col("cid"))
-           .agg(F.sum((F.col("q") - F.col("cq"))
-                      * (F.col("q") - F.col("cq"))).alias("d")))
-    ws = Window.partitionBy("qid").orderBy("adist", "nn")
-    short = (codes.select(F.col("vec_id").alias("nn"), "cluster",
-                          "sub", "cid")
-             .join(F.broadcast(lut), ["cluster", "sub", "cid"])
-             .where(F.col("qid") != F.col("nn"))
-             .groupBy("qid", "nn")
-             .agg(F.sum("d").alias("adist"))
-             .withColumn("srank", F.row_number().over(ws))
-             .where(F.col("srank") <= IVFPQ_SHORTLIST)
-             .select("qid", "nn"))
-    cv = emb.select(F.col("vec_id").alias("nn"),
-                    F.col("embedding").alias("c_emb"))
-    qv = emb.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb"))
-    wr = Window.partitionBy("qid").orderBy(F.desc("cos_raw"), F.asc("nn"))
-    return (cv.join(F.broadcast(short), "nn")
-            .join(F.broadcast(qv), "qid")
-            .select("qid", "nn",
-                    cosine(F.col("q_emb"), F.col("c_emb"))
-                    .alias("cos_raw"))
-            .withColumn("rank", F.row_number().over(wr))
-            .where(F.col("rank") <= 3)
-            .select(F.col("qid").alias("vec_id"), "rank", "nn",
-                    F.col("cos_raw").alias("cos"))
-            .orderBy("vec_id", "rank"))
+    qpred = F.col("vec_id") < 20
+    return adc_topk(
+        emb, ivfpq_code_index(spark, sf_dir),
+        ivfpq_centroid_index(spark, sf_dir), qpred, IVFPQ_SHORTLIST,
+        cell=IVFPQ.cell,
+        queries=_ivfpq_explode(spark, sf_dir, emb.where(qpred)
+                               .select("vec_id", "embedding"),
+                               nprobe=IVFPQ_NPROBE))
 
 
 # Shared coarse-quantizer CTE prefix (round 14): the integer-exact IVF

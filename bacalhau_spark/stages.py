@@ -289,36 +289,45 @@ def stage_pii_redact(spark: SparkSession, path: str) -> DataFrame:
             .select("doc_id", F.col("redacted").alias("text")))
 
 
-def stage_dedup(spark: SparkSession, path: str) -> DataFrame:
-    """Keep-first exact dedup over a parent's (doc_id, text) output:
-    survivor = lowest doc_id per content hash. One shuffle keyed by
-    md5(text) — constant-width key regardless of document size; the text
-    travels once (it must: survivors' text is the stage's output)."""
-    docs = spark.read.parquet(path).select("doc_id", "text")
+def _keep_first(docs: DataFrame) -> DataFrame:
+    """Keep-first exact dedup of (doc_id, text): survivor = lowest doc_id
+    per content hash. One shuffle keyed by md5(text) — constant-width key
+    regardless of document size; the text travels once (it must:
+    survivors' text is the output)."""
     win = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     return (docs.withColumn("_rn", F.row_number().over(win))
             .where(F.col("_rn") == 1).drop("_rn"))
 
 
-def stage_seq_pack(spark: SparkSession, path: str) -> DataFrame:
-    """Terminal stage: pack the surviving documents into SEQ_LEN-token
-    training bins (per-shard windows — no global order materialized) and
-    serialize the bin table as canonical sorted JSONL in ONE partition, so
-    the contentstore writer publishes a single deterministic blob and a
-    run-invariant manifest address. The single-partition sort is over the
-    BIN SUMMARY (thousands of rows at any corpus size), not the corpus;
-    at larger outputs, repartitionByRange over (shard, bin_id) keeps the
-    same determinism with parallel blobs."""
-    from bacalhau_spark.sources import contentstore
-
-    contentstore.register(spark)
-    docs = spark.read.parquet(path).select("doc_id", "text")
+def _pack_json(docs: DataFrame) -> DataFrame:
+    """Pack (doc_id, text) into SEQ_LEN-token training bins (per-shard
+    windows — no global order materialized) and serialize the bin table
+    as canonical sorted JSONL in ONE partition, so the contentstore
+    writer publishes a single deterministic blob and a run-invariant
+    manifest address. The single-partition sort is over the BIN SUMMARY
+    (thousands of rows at any corpus size), not the corpus; at larger
+    outputs, repartitionByRange over (shard, bin_id) keeps the same
+    determinism with parallel blobs."""
     bins = seq_pack_bins(
         docs.select("doc_id", F.size(words("text")).alias("n_tok")))
     return (bins.repartition(1)
             .sortWithinPartitions("shard", "bin_id")
             .select(F.to_json(F.struct("shard", "bin_id", "n_docs",
                                        "total_tokens")).alias("value")))
+
+
+def stage_dedup(spark: SparkSession, path: str) -> DataFrame:
+    """Keep-first exact dedup over a parent's (doc_id, text) output."""
+    return _keep_first(spark.read.parquet(path).select("doc_id", "text"))
+
+
+def stage_seq_pack(spark: SparkSession, path: str) -> DataFrame:
+    """Terminal stage: a parent's (doc_id, text) output packed into bins
+    and published as one canonical JSONL blob (_pack_json)."""
+    from bacalhau_spark.sources import contentstore
+
+    contentstore.register(spark)
+    return _pack_json(spark.read.parquet(path).select("doc_id", "text"))
 
 
 # ---------------------------------------------------------------------------
@@ -382,25 +391,15 @@ def stage_pii_redact_cs(spark: SparkSession, root: str) -> DataFrame:
 
 
 def stage_dedup_cs(spark: SparkSession, root: str) -> DataFrame:
-    """Keep-first exact dedup over a verified store mount (same one-shuffle
-    md5-key plan as stage_dedup); republishes to the store."""
-    docs = _read_doc_store(spark, root)
-    win = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    return _publish_doc_rows(
-        docs.withColumn("_rn", F.row_number().over(win))
-        .where(F.col("_rn") == 1).drop("_rn"))
+    """Keep-first exact dedup over a verified store mount (the
+    stage_dedup plan); republishes to the store."""
+    return _publish_doc_rows(_keep_first(_read_doc_store(spark, root)))
 
 
 def stage_seq_pack_cs(spark: SparkSession, root: str) -> DataFrame:
-    """Terminal stage over a verified store mount — same bin packing and
-    single-blob canonical serialization as stage_seq_pack."""
-    docs = _read_doc_store(spark, root)
-    bins = seq_pack_bins(
-        docs.select("doc_id", F.size(words("text")).alias("n_tok")))
-    return (bins.repartition(1)
-            .sortWithinPartitions("shard", "bin_id")
-            .select(F.to_json(F.struct("shard", "bin_id", "n_docs",
-                                       "total_tokens")).alias("value")))
+    """Terminal stage over a verified store mount — the stage_seq_pack
+    bin packing and single-blob serialization."""
+    return _pack_json(_read_doc_store(spark, root))
 
 
 # Engine-registry stages: runnable via `cli apply` / `cli pipeline` and

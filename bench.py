@@ -49,7 +49,7 @@ BENCH_QUERIES = (
     "nd_substr_dedup",     # sliding-window repeated-substring detector
     # round-9 addition: editdist verification rebuilt (single-scan
     # gather, agg-computed DP, pinned exchange width, shared band index)
-    # — 17.1 s -> 2.7 s cold at x10 (experiments/minhash_index_reuse_r9).
+    # — 17.1 s -> 2.7 s cold at x10 (experiments/minhash_index_reuse_r9.txt).
     # NOTE round 9 changed what nd_minhash_lsh measures warm: LSH
     # consumers read a session-cached signature/band index, so the warm
     # loop times the PROBE path (the production read). Round 10 restored

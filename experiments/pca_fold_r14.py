@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 
 from bacalhau_spark.catalog import table
 from bacalhau_spark.operators.similarity import (KM_DIMS, KM_OFF, KM_SCALE,
-                                                 PCA_K, _pca_model,
-                                                 _pca_model_sql,
+                                                 PCA_K, _double_lit_sql,
+                                                 _pca_model,
                                                  pca_project_exact_frame)
 from bacalhau_spark.session import get_session
 
@@ -60,6 +60,16 @@ def arrow_fold(spark, sf_dir):
 
     proj = make_udf(mu, w)
     return _qd(spark, sf_dir).select("vec_id", proj(F.col("q")).alias("proj"))
+
+
+def _pca_model_sql(mu, w):
+    """(MU, W) as Spark SQL array-literal text: MU a 64-double array, W
+    the transposed [component][dim] array-of-arrays."""
+    wt = [[w[d][k] for d in range(len(mu))] for k in range(PCA_K)]
+    mu_elems = ", ".join(_double_lit_sql(v) for v in mu)
+    wk = [", ".join(_double_lit_sql(v) for v in row) for row in wt]
+    return (f"array({mu_elems})",
+            "array(" + ", ".join(f"array({r})" for r in wk) + ")")
 
 
 def literal_chain(spark, sf_dir):

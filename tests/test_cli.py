@@ -153,6 +153,33 @@ def test_index_verify_is_the_store_fsck(spark, sf_dir, capsys):
         capsys.readouterr()
 
 
+def test_index_drop_takes_each_pq_family_baseline(spark, sf_dir, capsys):
+    """A product-quantizer family's corpus baseline is measured under its
+    codebook, so `index drop` must remove it with the codebook: after
+    `--kind pq` and the coarse-quantizer cascade of `--kind ivf`, no
+    pq_base or ivfpq_base table is left for a rebuilt codebook's
+    staleness monitor to read."""
+    import os
+
+    from bacalhau_spark.operators.similarity import (ivfpq_baseline_index,
+                                                     pq_baseline_index)
+    from bacalhau_spark.sources.indexstore import index_store_root
+
+    def baselines():
+        return sorted(n for n in os.listdir(index_store_root())
+                      if n.startswith(("pq_base__", "ivfpq_base__")))
+
+    # the baseline build publishes codes and codebook first
+    pq_baseline_index(spark, sf_dir).count()
+    ivfpq_baseline_index(spark, sf_dir).count()
+    assert {n.split("__", 1)[0] for n in baselines()} == {"pq_base",
+                                                          "ivfpq_base"}
+    assert cli.main(["index", "drop", "--kind", "pq"]) == 0
+    assert cli.main(["index", "drop", "--kind", "ivf"]) == 0
+    capsys.readouterr()
+    assert baselines() == []
+
+
 def test_index_refresh_argument_validation(capsys):
     """`index refresh` fails fast — BEFORE any Spark session spins up —
     on a non-codebook kind (per-row/banding kinds delta-adopt via
