@@ -816,9 +816,12 @@ class Engine:
                 # no sink — execute once, harvesting the plan's SQLMetrics
                 from bacalhau_spark.plans.telemetry import execute_and_measure
                 run_metrics.update(execute_and_measure(df))
-            if out:
-                df.write.mode("overwrite").format(
-                    spec.outputs.get("format", "parquet")).save(out)
+            fmt = spec.outputs.get("format", "parquet")
+            if out and fmt == "contentstore":
+                from bacalhau_spark.sources.contentstore import publish
+                publish(df, out)
+            elif out:
+                df.write.mode("overwrite").format(fmt).save(out)
             run_metrics["wall_s"] = round(time.time() - t_exec, 3)
             self._emit(run_id, EVT_METRICS,
                        json.dumps(run_metrics, sort_keys=True))

@@ -1,5 +1,6 @@
-"""Content-addressed store as a native Spark data source (DataSource V2,
-Python API — Spark 4's `pyspark.sql.datasource`).
+"""Content-addressed store: verified reads and streaming through a
+Spark DataSource V2 (Python API — Spark 4's `pyspark.sql.datasource`),
+batch publish through Spark's native text writer.
 
 The reference mounts content-addressed inputs into jobs: a StorageSpec
 lists CIDs, the api-copy driver fetches each into a local cache keyed by
@@ -20,9 +21,23 @@ plane as a first-class Spark source instead of an engine-side staging step:
 - a missing address fails at PLANNING time (the HasStorageLocally probe,
   `pkg/storage/ipfs_apicopy/storage.go:60-64`), not mid-job on one task.
 
-Records are JSONL lines; the fixed schema is
-(address string, line_no int, value string) — payload interpretation
-belongs to the query, exactly like the reference's opaque mounted files.
+Publishing follows the reference's two steps — write the results folder,
+then `ipfs add -r` it (`pkg/verifier/ipfs/verifier.go:37-43`): `publish`
+writes with `df.write.text` (no Python planner round trips or Python
+workers on the write) and the driver content-addresses each part file.
+Hashing on the driver is a single-box simplification: it reads every
+published byte once on one machine, where a cluster would hash on the
+executors or in the object store. The streaming writer
+(`writeStream.format("contentstore")`) stays a DataSource writer.
+
+Records are lines; the fixed read schema is
+(address string, line_no int, value string), and both writers take one
+(value string) column — payload interpretation belongs to the query,
+exactly like the reference's opaque mounted files (serialize richer rows
+with to_json). A blob is its rows joined by `\\n`, so a value may be
+neither null nor contain `\\n` (both writers refuse such a row), and
+readers split on `\\n` alone. An empty blob reads as zero rows (so a
+partition whose one row is the empty string reads back as none).
 """
 
 from __future__ import annotations
@@ -30,14 +45,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import threading
 import uuid
 
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamWriter, DataSourceWriter,
-                                    InputPartition,
+                                    DataSourceStreamWriter, InputPartition,
                                     SimpleDataSourceStreamReader,
                                     WriterCommitMessage)
 
@@ -105,10 +120,6 @@ class ContentStoreDataSource(DataSource):
 
     def reader(self, schema) -> "ContentStoreReader":
         return ContentStoreReader(self.options)
-
-    def writer(self, schema, overwrite: bool) -> "ContentStoreWriter":
-        _check_write_schema(schema)
-        return ContentStoreWriter(self.options)
 
     def simpleStreamReader(self, schema) -> "ContentStoreStreamReader":
         return ContentStoreStreamReader(self.options)
@@ -178,7 +189,10 @@ class ContentStoreStreamReader(SimpleDataSourceStreamReader):
                 content = f.read()
             if _hashlib.md5(content).hexdigest() != addr:
                 raise IOError(f"content integrity failure for {addr}")
-            for i, line in enumerate(content.decode("utf-8").splitlines()):
+            # rows are joined by "\n" alone; str.splitlines() would also
+            # break on U+2028, \x85 and the other Unicode line breaks
+            rows = content.decode("utf-8").split("\n") if content else []
+            for i, line in enumerate(rows):
                 out.append((addr, i, line))
         return iter(out)
 
@@ -228,74 +242,92 @@ class ContentStoreReader(DataSourceReader):
             # only correct outcome for a content-addressed read.
             raise IOError(
                 f"content integrity failure for {addr}: hash {actual}")
-        for i, line in enumerate(content.decode("utf-8").splitlines()):
+        # rows are joined by "\n" alone (see ContentStoreStreamReader)
+        rows = content.decode("utf-8").split("\n") if content else []
+        for i, line in enumerate(rows):
             yield (addr, i, line)
 
 
 @dataclass
 class _BlobCommit(WriterCommitMessage):
-    """One published blob per task: its address + row count. Picklable —
-    travels task -> driver for the commit fold."""
+    """One published blob per streaming task: its address + row count.
+    Picklable — travels task -> driver for the commit fold."""
     address: str
     n_rows: int
 
 
-class ContentStoreWriter(DataSourceWriter):
+_VALUE_ERROR = "contentstore values must be non-null and contain no newline"
+
+
+def publish(df, root: str) -> str:
     """The publisher analog (`pkg/verifier/ipfs/verifier.go:37-43`:
-    `ipfs add -r` results -> CID, broadcast in the Completed event):
-    each task serializes its partition to canonical JSONL and publishes
-    ONE content-addressed blob; the driver-side commit folds the task
-    addresses into a deterministic manifest blob (sorted, so the manifest
-    address is layout-invariant for identical partition contents) and
-    publishes THAT — the result "CID" a client fetches.
+    write the results folder, then `ipfs add -r` it -> CID): Spark's
+    native text writer writes `df`'s (value string) rows to a staging
+    dir under `root`, one line per row; the driver then content-
+    addresses every non-empty part file as ONE blob and publishes the
+    sorted manifest of (address, n_rows) — the result "CID" a client
+    fetches, recorded in the MANIFEST pointer. Returns its address.
 
-    Write rows as (value string); anything richer should be serialized by
-    the query first (to_json), mirroring the reference's opaque results
-    dir."""
+    The manifest is layout-invariant: blobs are keyed by content and
+    empty partitions publish nothing, so the same rows in the same
+    partitions give the same manifest however many empty partitions sit
+    between them. A null value or one containing `\\n` fails the write
+    (a blob is its rows joined by `\\n`, so either would change the row
+    count a reader sees); nothing is published then, and the staging
+    dir is removed on every path."""
+    from pyspark.sql import functions as F
 
-    def __init__(self, options):
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("contentstore requires option 'path'")
+    _check_write_schema(df.schema)
+    v = F.col(df.columns[0])
+    checked = df.select(
+        F.when(v.isNull() | v.contains("\n"),
+               F.raise_error(F.lit(_VALUE_ERROR)))
+        .otherwise(v).alias("value"))
+    staging = os.path.join(root, f".staging-{uuid.uuid4().hex}")
+    try:
+        checked.write.text(staging)
+        entries = {_pin_part(root, os.path.join(staging, name))
+                   for name in os.listdir(staging)
+                   if name.startswith("part-")
+                   and os.path.getsize(os.path.join(staging, name))}
+        manifest = "\n".join(f"{a} {n}" for a, n in sorted(entries))
+        addr = store_put(root, manifest.encode("utf-8"))
+        _publish_pointer(root, "MANIFEST", addr)
+        return addr
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
-    def write(self, iterator) -> _BlobCommit:
-        import hashlib as _hashlib
-        import os as _os
 
-        lines = []
-        for row in iterator:
-            lines.append(str(row[0]))
-        content = "\n".join(lines).encode("utf-8")
-        addr = _hashlib.md5(content).hexdigest()
-        _os.makedirs(self.root, exist_ok=True)
-        path = _os.path.join(self.root, addr)
-        if not _os.path.exists(path):
-            tmp = f"{path}.tmp.{_os.getpid()}"
-            with open(tmp, "wb") as f:
-                f.write(content)
-            _os.replace(tmp, path)
-        return _BlobCommit(address=addr, n_rows=len(lines))
-
-    def commit(self, messages) -> None:
-        # Deterministic manifest: sorted unique (address, n_rows) pairs.
-        # Identical logical results produce the identical manifest address
-        # regardless of task scheduling — the layout-invariance rule the
-        # engine's result_manifest also follows.
-        entries = sorted({(m.address, m.n_rows) for m in messages if m})
-        manifest = "\n".join(f"{a} {n}" for a, n in entries).encode("utf-8")
-        addr = store_put(self.root, manifest)
-        _publish_pointer(self.root, "MANIFEST", addr)
-
-    def abort(self, messages) -> None:
-        # Blobs are content-addressed and immutable; orphans from a failed
-        # write are harmless (unreferenced by any manifest) and reusable.
-        pass
+def _pin_part(root: str, path: str) -> tuple[str, int]:
+    """Turn one staged text part (every line `\\n`-terminated) into a
+    blob: strip the final `\\n` so the bytes are the rows joined by
+    `\\n`, hash them in chunks, and move the file to `root/<md5>` — or
+    drop it when that address is already pinned. Returns (address,
+    n_rows)."""
+    h = hashlib.md5()
+    n_rows = 0
+    with open(path, "r+b") as f:
+        f.seek(-1, os.SEEK_END)
+        if f.read(1) != b"\n":
+            raise IOError(f"staged part {path} does not end in a newline")
+        f.truncate(f.tell() - 1)
+        f.seek(0)
+        for chunk in iter(lambda: f.read(1 << 20), b""):
+            h.update(chunk)
+            n_rows += chunk.count(b"\n")
+    addr = h.hexdigest()
+    dst = os.path.join(root, addr)
+    if os.path.exists(dst):
+        os.remove(path)
+    else:
+        os.replace(path, dst)  # atomic: readers never see a partial blob
+    return addr, n_rows + 1
 
 
 class ContentStoreStreamWriter(DataSourceStreamWriter):
     """Streaming publish: every micro-batch's tasks publish their rows as
-    content-addressed blobs (same canonical-JSONL-per-partition shape as
-    the batch writer) and the driver-side commit publishes one manifest
+    content-addressed blobs (one blob per partition, the blob bytes
+    `publish` gives) and the driver-side commit publishes one manifest
     blob PER BATCH, recorded as MANIFEST-<batchId> — so a stream into the
     store is an append-only chain of verifiable manifests (the continuous
     form of the reference's publish-results-per-job loop). Exactly-once:
@@ -312,7 +344,9 @@ class ContentStoreStreamWriter(DataSourceStreamWriter):
         import hashlib as _hashlib
         import os as _os
 
-        lines = [str(row[0]) for row in iterator]
+        lines = [row[0] for row in iterator]
+        if any(v is None or "\n" in v for v in lines):
+            raise ValueError(_VALUE_ERROR)
         content = "\n".join(lines).encode("utf-8")
         addr = _hashlib.md5(content).hexdigest()
         _os.makedirs(self.root, exist_ok=True)
@@ -331,7 +365,9 @@ class ContentStoreStreamWriter(DataSourceStreamWriter):
         _publish_pointer(self.root, f"MANIFEST-{batchId}", addr)
 
     def abort(self, messages, batchId: int) -> None:
-        pass  # orphaned blobs are unreferenced and reusable (see batch)
+        # Blobs are content-addressed and immutable; orphans from a
+        # failed batch are harmless (no manifest names them) and reusable.
+        pass
 
 
 def batch_manifests(root: str) -> dict[int, list[tuple[str, int]]]:

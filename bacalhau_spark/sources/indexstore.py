@@ -454,6 +454,20 @@ def cached_index(spark: SparkSession, sf_dir: str, kind: str, build, *,
     return FRAMES.setdefault(spark, key, (out, root))[0]
 
 
+def published_rows(spark: SparkSession, sf_dir: str, kind: str,
+                   frame: DataFrame, *, tbl: str = "documents",
+                   rev: int = 1) -> int | None:
+    """`frame`'s row count without a Spark job, when `frame` is this
+    session's scan of a published table (what cached_index returned for
+    `kind`): the count the manifest recorded from the parquet footers.
+    None for a session-local frame, a frame the session tier does not
+    hold, or a manifest written before row counts were recorded."""
+    hit = FRAMES.get(spark, _tier1_key(sf_dir, kind, tbl, rev))
+    if hit is None or hit[0] is not frame or hit[1] is None:
+        return None
+    return (versioned.latest_manifest(hit[1]) or {}).get("n_rows")
+
+
 def rowwise_index(spark: SparkSession, sf_dir: str, kind: str, transform,
                   *, tbl: str = "documents", delta_key: str | None = None,
                   rev: int = 1) -> DataFrame:

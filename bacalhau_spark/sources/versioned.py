@@ -226,13 +226,17 @@ def _finish_version(df, root: str, vdir: str, n: int, prev: int,
     # (pkg/storage/ipfs_apicopy/storage.go:67-85); the lakehouse analog
     # is range stats per file so a selective read over a long append
     # chain prunes to the files whose ranges can match.
-    stats = {p: _footer_stats(os.path.join(root, p)) for p in new_files}
+    footers = {p: _footer_stats(os.path.join(root, p)) for p in new_files}
+    stats = {p: st for p, (st, _) in footers.items()}
+    n_rows = sum(n for _, n in footers.values())
     pkeys = {p: payload_key(os.path.join(root, p)) for p in new_files}
     files = new_files
     if mode == "append" and prev > 0:
         files = head["files"] + new_files
         stats = {**head.get("stats", {}), **stats}
         pkeys = {**head.get("payload_keys", {}), **pkeys}
+        # a head from before row counts were recorded has no total
+        n_rows = (head["n_rows"] + n_rows if "n_rows" in head else None)
     manifest = {
         "version": n,
         "files": files,
@@ -243,6 +247,10 @@ def _finish_version(df, root: str, vdir: str, n: int, prev: int,
         "payload_keys": pkeys,
         "created_unix": int(time.time()),
     }
+    if n_rows is not None:
+        # from the footers, so readers learn the table's size without
+        # a Spark job
+        manifest["n_rows"] = n_rows
     if batch_id is not None:
         manifest["batch_id"] = batch_id
     if props:
@@ -294,11 +302,12 @@ def payload_key(path: str) -> str:
     return h.hexdigest()
 
 
-def _footer_stats(path: str) -> dict:
-    """{column: [min, max]} folded over the file's row-group footers —
-    only JSON-portable leaf types (int/float/str); columns without
-    usable stats are simply absent, which the pruner treats as
-    can-match (never prunes on a column it has no range for)."""
+def _footer_stats(path: str) -> tuple[dict, int]:
+    """({column: [min, max]}, row count) folded over the file's
+    row-group footers — only JSON-portable leaf types (int/float/str);
+    columns without usable stats are simply absent, which the pruner
+    treats as can-match (never prunes on a column it has no range
+    for)."""
     import pyarrow.parquet as pq
 
     out: dict[str, list] = {}
@@ -323,7 +332,7 @@ def _footer_stats(path: str) -> dict:
             out[col.path_in_schema] = (
                 [mn, mx] if cur is None
                 else [min(cur[0], mn), max(cur[1], mx)])
-    return out
+    return out, md.num_rows
 
 
 _PRED_OPS = {

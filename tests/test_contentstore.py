@@ -1,11 +1,13 @@
-"""Content-store DataSource tests — the storage-provider plane
+"""Content-store tests — the storage-provider plane
 (`pkg/storage/types.go:7-18`, api-copy driver semantics) as a native
 Spark DataSource V2: per-address partitions, planning-time locality probe,
-verified (re-hashed) reads, idempotent content-addressed writes.
+verified (re-hashed) reads, idempotent content-addressed writes; and the
+batch publish through Spark's text writer.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pytest
@@ -83,9 +85,7 @@ def test_writer_publishes_content_addressed_manifest(spark, tmp_path):
     def write(n_parts):
         df = (spark.createDataFrame(rows, "value string")
               .repartitionByRange(n_parts, "value"))
-        cs.register(spark)
-        (df.write.format("contentstore").option("path", root)
-         .mode("append").save())
+        cs.publish(df, root)
         return cs.last_manifest(root)
 
     addr1, entries1 = write(4)
@@ -104,16 +104,86 @@ def test_writer_rejects_multi_column_and_non_string(spark, tmp_path):
     first, and str() of a non-string value changes the published bytes
     (and thus the address) without warning."""
     root = str(tmp_path / "bad_store")
-    cs.register(spark)
     two_cols = spark.createDataFrame([("a", 1)], "value string, n int")
     with pytest.raises(Exception, match="one string column"):
-        (two_cols.write.format("contentstore").option("path", root)
-         .mode("append").save())
+        cs.publish(two_cols, root)
     ints = spark.createDataFrame([(1,), (2,)], "value int")
     with pytest.raises(Exception, match="one string column"):
-        (ints.write.format("contentstore").option("path", root)
-         .mode("append").save())
+        cs.publish(ints, root)
     assert not os.path.exists(root)  # nothing was published
+
+
+def test_publish_manifest_ignores_empty_partitions(spark, tmp_path):
+    """The same rows in the same non-empty partitions publish the same
+    manifest however many empty partitions sit between them: an empty
+    partition publishes no blob and no manifest entry."""
+    root = str(tmp_path / "layout_store")
+
+    def write(n_parts):
+        # range() over 20 rows: 20 partitions hold one row each; 40 hold
+        # the same single rows with an empty partition before each
+        df = spark.range(0, 20, 1, n_parts).select(
+            F.format_string("r%03d", "id").alias("value"))
+        assert df.rdd.getNumPartitions() == n_parts
+        return cs.publish(df, root), cs.last_manifest(root)[1]
+
+    addr1, entries1 = write(20)
+    addr2, entries2 = write(40)
+    assert addr1 == addr2 and entries1 == entries2
+    assert len(entries1) == 20 and {n for _, n in entries1} == {1}
+    assert sorted(os.listdir(root)) == sorted(
+        [a for a, _ in entries1] + [addr1, "MANIFEST"])
+
+
+@pytest.mark.parametrize("bad", [None, "two\nlines"])
+def test_publish_refuses_null_and_newline_values(spark, tmp_path, bad):
+    """A blob is its rows joined by newlines, so a null or a value with
+    a newline would change the row count a reader sees: the write fails,
+    no MANIFEST is published and no staging dir is left behind."""
+    root = str(tmp_path / "refuse_store")
+    df = spark.createDataFrame([("ok",), (bad,), ("fine",)], "value string")
+    with pytest.raises(Exception, match="non-null and contain no newline"):
+        cs.publish(df, root)
+    left = os.listdir(root) if os.path.exists(root) else []
+    assert "MANIFEST" not in left
+    assert not [n for n in left if n.startswith(".staging-")]
+
+
+def test_publish_zero_rows_gives_empty_manifest(spark, tmp_path):
+    root = str(tmp_path / "empty_store")
+    addr = cs.publish(spark.createDataFrame([], "value string"), root)
+    assert addr == hashlib.md5(b"").hexdigest()
+    assert cs.last_manifest(root) == (addr, [])
+
+
+def test_reads_split_rows_on_newline_only(spark, tmp_path):
+    """Rows are joined by a newline alone: a value holding another Unicode
+    line break (U+2028, U+0085, form feed) is one row on both readers,
+    and an empty blob reads as zero rows."""
+    root = str(tmp_path / "lines_store")
+    values = ["a\u2028b", "c\x85d", "e\x0cf", ""]
+    addr = cs.store_put(root, "\n".join(values).encode("utf-8"))
+    empty = cs.store_put(root, b"")
+    rows = cs.read_addresses(spark, root, [addr, empty]).collect()
+    assert sorted((r.line_no, r.value) for r in rows) == list(
+        enumerate(values))
+    stream = cs.ContentStoreStreamReader({"path": root})
+    assert [v for _, _, v in stream._rows([addr, empty])] == values
+
+
+def test_doc_rows_with_unicode_line_breaks_round_trip(spark, tmp_path):
+    """A document text holding U+2028 or U+0085 survives a store-edged
+    hand-off: published by the edge serializer, mounted back through the
+    verified reader, it is still one row with its id and text."""
+    from bacalhau_spark.stages import _publish_doc_rows, _read_doc_store
+
+    root = str(tmp_path / "docs_store")
+    docs = spark.createDataFrame(
+        [(1, "line\u2028separator"), (2, "next\x85line")],
+        "doc_id bigint, text string")
+    cs.publish(_publish_doc_rows(docs), root)
+    back = sorted(tuple(r) for r in _read_doc_store(spark, root).collect())
+    assert back == [(1, "line\u2028separator"), (2, "next\x85line")]
 
 
 def test_manifest_pointers_published_atomically(spark, tmp_path):
@@ -121,10 +191,8 @@ def test_manifest_pointers_published_atomically(spark, tmp_path):
     residue after a commit, and a stale crash-leftover tmp pointer is
     ignored by batch_manifests instead of crashing it."""
     root = str(tmp_path / "ptr_store")
-    cs.register(spark)
     df = spark.createDataFrame([("x",), ("y",)], "value string")
-    (df.write.format("contentstore").option("path", root)
-     .mode("append").save())
+    cs.publish(df, root)
     assert not [n for n in os.listdir(root) if ".tmp." in n]
     addr, entries = cs.last_manifest(root)
     assert sum(n for _, n in entries) == 2

@@ -137,3 +137,31 @@ def test_failing_builder_raises_after_every_lane_has_joined(
                 assert os.path.exists(os.path.join(root, v,
                                                    "manifest.json")), \
                     f"manifestless {name}/{v}"
+
+
+def test_published_rows_reads_the_manifest_count(spark, sf_dir, cold,
+                                                 tmp_path, monkeypatch):
+    """stage_index_build takes a published kind's row count from its
+    manifest instead of a count job: the recorded count equals the
+    frame's, and a frame that is not the session tier's scan of a
+    published table (a derived frame, a session-local fallback) gets
+    None, so the stage counts it."""
+    from bacalhau_spark.operators.web import FRONT_DOOR_REV, canon_index
+
+    cold(tmp_path / "published")
+    frame = canon_index(spark, sf_dir)
+    n = indexstore.published_rows(spark, sf_dir, "canon", frame,
+                                  rev=FRONT_DOOR_REV)
+    assert n == frame.count() > 0
+    assert indexstore.published_rows(spark, sf_dir, "canon", frame.limit(1),
+                                      rev=FRONT_DOOR_REV) is None
+
+    cold(tmp_path / "unwritable")
+
+    def unwritable(*args, **kwargs):
+        raise OSError("store is read-only")
+    monkeypatch.setattr(versioned, "write_version", unwritable)
+    local = canon_index(spark, sf_dir)
+    assert indexstore.published_rows(spark, sf_dir, "canon", local,
+                                      rev=FRONT_DOOR_REV) is None
+    assert local.count() == n

@@ -6,6 +6,8 @@ cancellation of transitive dependents, and spec validation.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,7 +122,6 @@ def test_pq_refresh_stage_runs_in_the_dag(spark, tmp_path):
     the merged content key, and its commit-log output (monitor rows +
     chosen action) hands off to a dependent audit stage through the
     standard '@' token — the controller loop with no operator in it."""
-    import os
     import shutil
 
     from bacalhau_spark.sources.indexstore import index_table_root
@@ -330,6 +331,11 @@ def test_curation_pipeline_end_to_end(spark, tmp_path):
     # run-invariance: the whole DAG re-run publishes the SAME address
     _, store2 = run("run2")
     assert cs.last_manifest(store2)[0] == cs.last_manifest(store)[0]
+    # and the address itself is pinned at sf0.001, so a change to the
+    # packing or to the publish encoding shows here
+    if os.path.basename(SF_DIR) == "sf0.001":
+        assert cs.last_manifest(store)[0] == \
+            "0f9026cb9e95d21698f52d78b555fcf2"
 
 
 def test_reuse_parent_hand_off_reads_real_data(dag_engine, tmp_path, spark):

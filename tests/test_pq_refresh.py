@@ -22,14 +22,14 @@ def _emb_corpus(spark, src_df, dest_dir):
 
 
 def _drop_store(dirs):
+    from bacalhau_spark.operators.similarity import PQ_FAMILIES
     from bacalhau_spark.sources.indexstore import index_table_root
 
     for d in dirs:
-        for kind in ("pq_assign", "pq_cent", "ivf_coarse", "ivf_cells",
-                     "ivfpq_codes", "ivfpq_cent"):
-            for rev in (1, 2):
+        for fam in PQ_FAMILIES:
+            for kind in (fam.codes, fam.cent, fam.base, *fam.carry):
                 shutil.rmtree(
-                    index_table_root(d, kind, "embeddings", rev=rev),
+                    index_table_root(d, kind, "embeddings", rev=fam.rev),
                     ignore_errors=True)
 
 

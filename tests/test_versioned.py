@@ -564,6 +564,30 @@ def test_selective_read_survives_pre_stats_manifests(spark, tmp_path):
     assert got == [0, 1, 2]
 
 
+def test_manifest_records_row_count_from_footers(spark, tmp_path):
+    """Every version's manifest carries the table's row count (appends
+    add to the head's), so readers need no Spark job to learn it; an
+    append onto a head written before counts were recorded leaves the
+    key out rather than under-count."""
+    from bacalhau_spark.sources.versioned import latest_manifest
+
+    root = str(tmp_path / "t")
+    write_version(_df(spark, [(i, "x") for i in range(7)]).repartition(3),
+                  root)
+    assert latest_manifest(root)["n_rows"] == 7
+    write_version(_df(spark, [(8, "y"), (9, "z")]), root, mode="append")
+    assert latest_manifest(root)["n_rows"] == 9
+    mpath = os.path.join(root, "v=000002", "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    del m["n_rows"]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    write_version(_df(spark, [(10, "w")]), root, mode="append")
+    assert "n_rows" not in latest_manifest(root)
+    assert read_version(spark, root).count() == 10
+
+
 def test_failed_publish_cleans_partial_vdir(spark, tmp_path):
     """A publish that fails AFTER the parquet write (round-12 ADVICE:
     link_files collision, footer-stats failure, ...) must remove the
