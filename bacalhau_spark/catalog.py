@@ -29,8 +29,10 @@ HANDLES = SessionCache()
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy scan of one fixture table. No schema inference at read time —
-    parquet footers carry the authoritative schema (FIXTURES.md §2).
+    """Lazy scan of one fixture table. The schema comes from the parquet
+    footers (FIXTURES.md §2): the handle's first read per (session,
+    sf_dir) runs one Spark job to infer it, and every later use of the
+    cached handle, or of its schema (read_parts), runs none.
 
     events.ts is physically TIMESTAMP(NANOS) in the fixtures. Older Spark
     parquet readers reject it unless legacy nanosAsLong is set (read as raw
@@ -43,6 +45,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     return HANDLES.get_or_make(spark, ("table", sf_dir, name),
                                lambda: _read_table(spark, sf_dir, name))
+
+
+def read_parts(spark: SparkSession, sf_dir: str, name: str,
+               paths: list[str]) -> DataFrame:
+    """Some part files of table `name` under sf_dir (an appended epoch's
+    new shards, or its parent's), read with the table handle's schema:
+    the parts share the table's schema, and a read without one runs a
+    Spark job to infer it from a footer. The events handle normalizes
+    ts, so its parts keep inference."""
+    reader = spark.read
+    if name != "events":
+        reader = reader.schema(table(spark, sf_dir, name).schema)
+    return reader.parquet(*paths)
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

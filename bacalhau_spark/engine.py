@@ -448,8 +448,18 @@ class Engine:
         `bacalhau get` analog (`cmd/bacalhau/get.go:36-129`): results come
         from the run's sink, not from re-executing the plan."""
         spec, path = self._readable_sink(run_id)
-        df = self.spark.read.format(
-            spec.outputs.get("format", "parquet")).load(path)
+        fmt = spec.outputs.get("format", "parquet")
+        if fmt == "contentstore":
+            # a content store is read by address: the blobs its last
+            # manifest names, verified against their hashes
+            from bacalhau_spark.sources.contentstore import (last_manifest,
+                                                             read_addresses)
+            _addr, entries = last_manifest(path)
+            if not entries:
+                return []
+            df = read_addresses(self.spark, path, [a for a, _n in entries])
+        else:
+            df = self.spark.read.format(fmt).load(path)
         return [row.asDict(recursive=True) for row in df.limit(limit).collect()]
 
     def result_files(self, run_id: str,

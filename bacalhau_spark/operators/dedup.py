@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bacalhau_spark.catalog import spread_compute, table
+from bacalhau_spark.catalog import read_parts, spread_compute, table
 from bacalhau_spark.functions import shingles, words
 from bacalhau_spark.session import SessionCache
 from bacalhau_spark.sources.indexstore import (cached_index,
@@ -264,9 +264,10 @@ def _cand_delta(spark: SparkSession, sf_dir: str, new_paths: list[str],
     # appended ids disjoint from the parent's, and how many are there
     # (the broadcast gate) — instead of a semi-join action plus a count
     # action (each pays the scheduler floor on this cold path)
-    new_ids = (spark.read.parquet(*new_paths)
+    new_ids = (read_parts(spark, sf_dir, "documents", new_paths)
                .select("doc_id").distinct())
-    parent_ids = spark.read.parquet(*parent_paths).select("doc_id")
+    parent_ids = read_parts(spark, sf_dir, "documents",
+                            parent_paths).select("doc_id")
     marked = (new_ids.withColumn("is_new", F.lit(1))
               .unionByName(parent_ids.withColumn("is_new", F.lit(0)))
               .groupBy("doc_id")

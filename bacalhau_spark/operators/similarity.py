@@ -27,7 +27,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bacalhau_spark.catalog import spread_compute, table
+from bacalhau_spark.catalog import read_parts, spread_compute, table
 from bacalhau_spark.functions import cosine
 from bacalhau_spark.session import SessionCache
 from bacalhau_spark.sources.indexstore import (cached_index,
@@ -131,37 +131,42 @@ def _hyperplanes(band: int) -> list[list[float]]:
     return planes
 
 
-def lsh_signature(emb_col: Column, band: int = 0) -> Column:
-    """K-bit random-hyperplane signature for one band (JVM-side fold)."""
-    sig = F.lit(0)
-    for p, coefs in enumerate(_hyperplanes(band)):
-        plane = F.array(*[F.lit(c) for c in coefs])
-        dot = F.aggregate(
-            F.zip_with(emb_col, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, v: acc + v)
-        sig = sig + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return sig
+def _coef_literals(coefs: list[float], suffix: str = "") -> str:
+    """One plane's coefficients as SQL literals, shared by the Spark
+    expression and the DuckDB oracle. repr() round-trips float64
+    exactly, so both engines fold identical values; Spark needs the
+    "D" suffix, since a bare decimal parses as DECIMAL there."""
+    return ", ".join(repr(c) + suffix for c in coefs)
 
 
-def band_signatures(emb_col: Column) -> Column:
-    """Array of all B band signatures for a vector."""
-    return F.array(*[lsh_signature(emb_col, b) for b in range(N_BANDS)])
+def _band_signatures_sql() -> str:
+    """All N_BANDS K-bit random-hyperplane signatures of `embedding`
+    as one Spark SQL array (JVM-side folds): per band, the left fold
+    0 + sum over planes p of (dot_p >= 0 ? 2^p : 0), each dot a
+    zip_with/aggregate fold over the plane's literals. One string is
+    one parse, where a Column tree of the same expression costs ~15k
+    Py4J calls to build."""
+    bands = []
+    for band in range(N_BANDS):
+        sig = "0"
+        for p, coefs in enumerate(_hyperplanes(band)):
+            dot = (f"aggregate(zip_with(embedding, "
+                   f"array({_coef_literals(coefs, 'D')}), "
+                   f"(x, y) -> CAST(x AS DOUBLE) * y), "
+                   f"0.0D, (acc, v) -> acc + v)")
+            sig = f"({sig} + CASE WHEN {dot} >= 0 THEN {1 << p} ELSE 0 END)"
+        bands.append(sig)
+    return f"array({', '.join(bands)})"
 
 
-# Plan-construction cache for the signature expression: building it creates
-# N_BANDS x BAND_BITS x DIM literal Columns plus the fold lambdas through
-# Py4J (~2k JVM round trips, profiled ~1.7s PER QUERY CALL at the driver —
-# more than the whole execution). The tree is immutable and references only
-# F.col("embedding") + literals, so one instance is reusable across every
-# query in a session. Session-scoped (a Column holds JVM refs that die with
-# its session), in the module's one model cache beside the trained
+def embedding_band_signatures() -> Column:
+    """The band-signature array over the `embedding` column."""
+    return F.expr(_band_signatures_sql())
+
+
+# The module's one model cache, per session: the trained coarse
 # quantizer, the semantic-dedup histogram and the PCA basis.
 _MODELS = SessionCache()
-
-
-def embedding_band_signatures(spark: SparkSession) -> Column:
-    return _MODELS.get_or_make(spark, "sig_expr",
-                               lambda: band_signatures(F.col("embedding")))
 
 
 def lsh_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,7 +179,7 @@ def lsh_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (spread_compute(spark, emb.select("vec_id", "embedding"),
                                "vec_id")
                 .select("vec_id",
-                        F.posexplode(embedding_band_signatures(spark))
+                        F.posexplode(embedding_band_signatures())
                         .alias("band", "sig")))
 
     return rowwise_index(spark, sf_dir, "lshsig", transform,
@@ -684,7 +689,7 @@ def _planes_sql() -> str:
     rows = []
     for band in range(N_BANDS):
         for p, coefs in enumerate(_hyperplanes(band)):
-            arr = "[" + ", ".join(repr(c) for c in coefs) + "]"
+            arr = f"[{_coef_literals(coefs)}]"
             rows.append(f"({band}, {p}, {arr}::DOUBLE[])")
     return ", ".join(rows)
 
@@ -1890,7 +1895,8 @@ def _refresh_append_guard(spark: SparkSession, merged_dir: str,
                      if os.path.basename(pth) not in pk]
         if not new_paths:
             return  # merged == parent: nothing appended, nothing new
-        new_ids_all = spark.read.parquet(*new_paths).select("vec_id")
+        new_ids_all = read_parts(spark, merged_dir, "embeddings",
+                                 new_paths).select("vec_id")
         if not (new_ids_all.groupBy("vec_id")
                 .agg(F.count("*").alias("c"))
                 .where(F.col("c") > 1).isEmpty()):

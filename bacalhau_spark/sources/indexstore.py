@@ -30,7 +30,7 @@ import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bacalhau_spark.catalog import table
+from bacalhau_spark.catalog import read_parts, table
 from bacalhau_spark.session import SessionCache
 from bacalhau_spark.sources import versioned
 
@@ -382,7 +382,8 @@ def cached_index(spark: SparkSession, sf_dir: str, kind: str, build, *,
             new_paths = [p for p in table_part_paths(sf_dir, tbl)
                          if os.path.basename(p) not in pk]
             if delta_key is None or _ids_disjoint(
-                    spark, proot, pman, new_paths, delta_key):
+                    spark, proot, pman,
+                    read_parts(spark, sf_dir, tbl, new_paths), delta_key):
                 # a decline (None) must not leave `linked` set, or the
                 # full build would publish on top of hardlinked rows
                 frame = delta(new_paths)
@@ -478,7 +479,8 @@ def rowwise_index(spark: SparkSession, sf_dir: str, kind: str, transform,
     drift apart."""
     return cached_index(
         spark, sf_dir, kind, lambda: transform(table(spark, sf_dir, tbl)),
-        tbl=tbl, delta=lambda paths: transform(spark.read.parquet(*paths)),
+        tbl=tbl,
+        delta=lambda paths: transform(read_parts(spark, sf_dir, tbl, paths)),
         delta_key=delta_key, rev=rev)
 
 
@@ -528,20 +530,19 @@ def release(entries) -> None:
 
 
 def _ids_disjoint(spark: SparkSession, parent_root: str, parent_man: dict,
-                  new_paths: list[str], key_col: str) -> bool:
-    """Are the appended shards' ids DISJOINT from the parent index's?
-    Required before delta-adopting a GROUPING index: minhash signatures
-    aggregate per doc, so an appended shard re-carrying an existing
-    doc_id (the recurring re-crawl shape) makes union(parent, delta) !=
-    rebuild — the rebuild minimizes over the MERGED shingle set, the
-    union holds two rows. Per-ROW-map kinds don't need this: a
+                  new: DataFrame, key_col: str) -> bool:
+    """Are the appended shards' ids (`new`, their rows) DISJOINT from
+    the parent index's? Required before delta-adopting a GROUPING
+    index: minhash signatures aggregate per doc, so an appended shard
+    re-carrying an existing doc_id (the recurring re-crawl shape) makes
+    union(parent, delta) != rebuild — the rebuild minimizes over the
+    MERGED shingle set, the union holds two rows. Per-ROW-map kinds don't need this: a
     duplicated id duplicates identically in union and rebuild. Cost: one
     index-sized semi-join on the cold path."""
     parent_ids = versioned.read_version(
         spark, parent_root,
         version=parent_man["version"]).select(key_col)
-    new_ids = (spark.read.parquet(*new_paths)
-               .select(key_col).distinct())
+    new_ids = new.select(key_col).distinct()
     return new_ids.join(parent_ids, key_col, "left_semi").isEmpty()
 
 

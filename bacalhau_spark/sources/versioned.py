@@ -367,6 +367,16 @@ def _file_may_match(stats: dict, predicate) -> bool:
     return True
 
 
+def _manifest_ddl(manifest: dict) -> str | None:
+    """The version's schema as DDL from its recorded dtypes, or None
+    for a manifest written before dtypes were recorded."""
+    dtypes = manifest.get("dtypes")
+    if dtypes is None:
+        return None
+    return ", ".join("`{}` {}".format(c.replace("`", "``"), t)
+                     for c, t in dtypes)
+
+
 def read_version(spark: SparkSession, root: str,
                  version: int | None = None,
                  predicate=None) -> DataFrame:
@@ -389,17 +399,20 @@ def read_version(spark: SparkSession, root: str,
     vdir = _vdir(root, n)
     with open(os.path.join(vdir, _MANIFEST)) as f:
         manifest = json.load(f)
+    ddl = _manifest_ddl(manifest)
     if not manifest["files"]:
         # A legitimately empty version (e.g. an index table whose first
         # corpus batch was modality-sparse — round-12 ADVICE): the
         # manifest records the schema, so the snapshot is an empty
         # typed frame, not an error. Pre-r13 manifests without dtypes
         # cannot reconstruct a schema — those still fail loudly.
-        dtypes = manifest.get("dtypes")
-        if dtypes is None:
+        if ddl is None:
             raise ValueError(f"version {n} of {root} has no data files")
-        ddl = ", ".join(f"`{c}` {t}" for c, t in dtypes)
         return spark.createDataFrame([], ddl)
+    # The recorded schema skips parquet's schema inference, a one-task
+    # Spark job that reads a footer the manifest already describes;
+    # manifests without dtypes keep inferring.
+    reader = spark.read if ddl is None else spark.read.schema(ddl)
     files = manifest["files"]
     if predicate:
         stats = manifest.get("stats", {})
@@ -407,12 +420,11 @@ def read_version(spark: SparkSession, root: str,
                  if _file_may_match(stats.get(p, {}), predicate)]
         if not files:
             # Every file pruned: an empty frame with the table schema —
-            # read one file's schema without its rows.
+            # one file's scan without its rows.
             from pyspark.sql import functions as F
-            base = spark.read.parquet(
-                os.path.join(root, manifest["files"][0]))
+            base = reader.parquet(os.path.join(root, manifest["files"][0]))
             return base.where(F.lit(False))
-    df = spark.read.parquet(*[os.path.join(root, p) for p in files])
+    df = reader.parquet(*[os.path.join(root, p) for p in files])
     if predicate:
         from pyspark.sql import functions as F
         ops = {"==": "__eq__", "<=": "__le__", "<": "__lt__",

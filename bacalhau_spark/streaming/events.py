@@ -50,6 +50,7 @@ def q28_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the query's lifetime and restore the session value after.
 STREAM_STATE_PARTITIONS = 4
 
+import atexit  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
 import threading  # noqa: E402
@@ -90,9 +91,17 @@ def _stream_state_conf(spark: SparkSession):
 # default temp-dir behavior. A FRESH unique dir per start keeps the
 # no-resume semantics of Spark's temp checkpoints — results cannot
 # depend on a previous run's offsets — and _await_or_raise removes it.
+# A query the process never awaited keeps its dir until exit, when
+# _sweep_checkpoints removes whatever this process left.
 _STREAM_CKPT_BASE = os.environ.get("SPARK_GRAFT_STREAM_CKPT_DIR") or (
     "/dev/shm" if os.path.isdir("/dev/shm") else None)
 _CKPT_BY_QUERY: dict[str, str] = {}
+
+
+@atexit.register
+def _sweep_checkpoints() -> None:
+    for d in list(_CKPT_BY_QUERY.values()):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _start_scoped(spark: SparkSession, writer):

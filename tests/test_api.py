@@ -94,6 +94,32 @@ def test_describe_and_get_results(api, tmp_path):
     assert {"n_nationkey", "n_name", "n_regionkey"} <= set(rows[0])
 
 
+def test_results_read_a_contentstore_sink(spark, tmp_path):
+    """A `format: contentstore` run's rows come back through both the
+    engine and the results endpoint: the blobs its last manifest names,
+    read by address."""
+    from bacalhau_spark.registry import engine_registry
+    from bacalhau_spark.stages import stage_gopher_keep_cs
+
+    engine = Engine(spark, engine_registry())
+    server = ApiServer(engine, port=0).start_background()
+    try:
+        api = ApiClient(server.url)
+        run_id = api.submit({"query": "stage_gopher_keep_cs",
+                             "inputs": {"sf_dir": SF_DIR},
+                             "outputs": {"path": str(tmp_path / "cs"),
+                                         "format": "contentstore"}})
+        assert api.states(run_id) == "Completed"
+        want = sorted(r.value for r in
+                      stage_gopher_keep_cs(spark, SF_DIR).collect())
+        assert want
+        for rows in (engine.fetch_results(run_id, limit=len(want)),
+                     api.results(run_id, limit=len(want))):
+            assert sorted(r["value"] for r in rows) == want
+    finally:
+        server.shutdown()
+
+
 def test_error_mapping(api):
     with pytest.raises(ApiError) as exc:
         api.states("no-such-run")

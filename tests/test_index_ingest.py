@@ -1,14 +1,19 @@
 """stage_index_build's parallel lanes: every kind is built and published
 once, the rows match a one-lane run, every job stays in the caller's job
 group, and a failing builder surfaces only after every lane has joined,
-with nothing half-published in the store."""
+with nothing half-published in the store. Store artifacts and appended
+part files are read with the schema already known, so no read runs a
+Spark job to infer one."""
 
 from __future__ import annotations
 
 import collections
+import json
 import os
+import shutil
 import threading
 import time
+import uuid
 
 import pytest
 from pyspark import InheritableThread
@@ -165,3 +170,143 @@ def test_published_rows_reads_the_manifest_count(spark, sf_dir, cold,
     assert indexstore.published_rows(spark, sf_dir, "canon", local,
                                       rev=FRONT_DOOR_REV) is None
     assert local.count() == n
+
+
+def _epochs(sf_dir, tmp_path) -> tuple[str, str]:
+    """Epoch 0 holds the fixture's documents and embeddings as one part
+    file each; epoch 1 adds a part file of 50 rows under new ids to
+    each table."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    e0, e1 = str(tmp_path / "epoch0"), str(tmp_path / "epoch1")
+    for tbl, key in (("documents", "doc_id"), ("embeddings", "vec_id")):
+        src = os.path.join(sf_dir, f"{tbl}.parquet")
+        for e in (e0, e1):
+            os.makedirs(os.path.join(e, f"{tbl}.parquet"))
+            shutil.copyfile(src, os.path.join(e, f"{tbl}.parquet",
+                                              "part-0.parquet"))
+        t = pq.read_table(src).slice(0, 50)
+        i = t.schema.get_field_index(key)
+        t = t.set_column(i, key, pc.add(t.column(key), 1_000_000))
+        pq.write_table(t, os.path.join(e1, f"{tbl}.parquet",
+                                       "part-1.parquet"))
+    return e0, e1
+
+
+def _reads(spark, monkeypatch) -> list[tuple[tuple, int]]:
+    """Record each DataFrameReader.parquet call as (paths, Spark jobs
+    the call ran): a read runs a job only to infer a schema."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    sc = spark.sparkContext
+    calls: list[tuple[tuple, int]] = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        group = f"parquet-read-{uuid.uuid4().hex}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return parquet(self, *paths, **options)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+            _drain_listener(spark)
+            calls.append((paths, len(
+                sc.statusTracker().getJobIdsForGroup(group))))
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    return calls
+
+
+def _jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    _drain_listener(spark)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows_of(df) -> collections.Counter:
+    return collections.Counter(map(repr, df.collect()))
+
+
+def test_store_and_delta_reads_run_no_schema_job(spark, sf_dir, cold,
+                                                 tmp_path, monkeypatch):
+    """A cold then an appended ingest: every store artifact reads back
+    through read_version with its recorded schema and without a Spark
+    job (also when a predicate prunes every file, and for an empty
+    version), equal to an inferring read of the same files; the
+    appended ingest reads no store artifact and no appended part file
+    with a job."""
+    from bacalhau_spark.operators import dedup
+
+    e0, e1 = _epochs(sf_dir, tmp_path)
+    store = cold(tmp_path / "store")
+    # let the minhash candidate kind take its delta guard on one parent
+    # part file, so its part reads are covered too
+    monkeypatch.setattr(dedup, "CAND_DELTA_MIN_PARENT_SHARDS", 1)
+    stages.stage_index_build(spark, e0)
+    reads = _reads(spark, monkeypatch)
+    rows = _rows(stages.stage_index_build(spark, e1))
+    assert {k for k, _n, _v, parent in rows if parent} == {
+        "sig", "cand", "winnow", "phash", "aphash", "vphash", "canon",
+        "extract", "lshsig"}, rows
+
+    # the table handles' own first reads (the table directories) are
+    # the reads left inferring
+    parts = {os.path.join(e1, f"{t}.parquet", f"part-{i}.parquet")
+             for t in ("documents", "embeddings") for i in (0, 1)}
+    store_reads = [(p, n) for p, n in reads
+                   if all(x.startswith(store + os.sep) for x in p)]
+    part_reads = [(p, n) for p, n in reads if set(p) <= parts]
+    assert store_reads and part_reads
+    assert {p for p, _n in part_reads} >= {
+        (os.path.join(e1, "documents.parquet", "part-0.parquet"),),
+        (os.path.join(e1, "documents.parquet", "part-1.parquet"),),
+        (os.path.join(e1, "embeddings.parquet", "part-1.parquet"),)}
+    inferring = [(p, n) for p, n in store_reads + part_reads if n]
+    assert inferring == []
+
+    tables = sorted(os.listdir(store))
+    assert len(tables) == 2 * len(KINDS)
+    for name in tables:
+        root = os.path.join(store, name)
+        man = versioned.latest_manifest(root)
+        files = [os.path.join(root, f) for f in man["files"]]
+        got, n_jobs = _jobs(spark, lambda: versioned.read_version(spark,
+                                                                  root))
+        assert n_jobs == 0, name
+        inferred = spark.read.parquet(*files)
+        assert got.schema == inferred.schema, name
+        assert _rows_of(got) == _rows_of(inferred), name
+
+    # a predicate no file can match, on a table with ranged stats
+    root = os.path.join(store, next(n for n in tables
+                                    if n.startswith("lshsig__")))
+    impossible = [("vec_id", "<", -1)]
+    assert versioned.pruned_file_count(root, impossible)[0] == 0
+    pruned, n_jobs = _jobs(spark, lambda: versioned.read_version(
+        spark, root, predicate=impossible))
+    assert n_jobs == 0
+    assert pruned.schema == versioned.read_version(spark, root).schema
+    assert pruned.count() == 0
+
+    # an empty version: the manifest of a file-less head
+    man = versioned.latest_manifest(root)
+    empty = str(tmp_path / "empty_table")
+    os.makedirs(versioned._vdir(empty, 1))
+    with open(os.path.join(versioned._vdir(empty, 1),
+                           "manifest.json"), "w") as f:
+        json.dump(dict(man, version=1, files=[], n_files=0), f)
+    with open(os.path.join(empty, "_LATEST"), "w") as f:
+        f.write("1")
+    got, n_jobs = _jobs(spark, lambda: versioned.read_version(spark, empty))
+    assert n_jobs == 0
+    assert got.schema == versioned.read_version(spark, root).schema
+    assert got.count() == 0

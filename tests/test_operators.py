@@ -41,6 +41,55 @@ def test_lsh_recall_vs_brute_force(spark, sf_dir):
     assert recall >= 0.2, f"LSH top-1 recall {recall:.2f} below floor"
 
 
+def test_lsh_signature_expression_is_one_parse(spark, monkeypatch):
+    """The band-signature expression (8 bands x 4 planes x 64 literals
+    plus the folds) is built from one SQL string: a handful of Py4J
+    calls, not one per literal and lambda."""
+    from bacalhau_spark.operators.similarity import (
+        embedding_band_signatures)
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+    monkeypatch.setattr(client, "send_command", counted)
+    embedding_band_signatures()
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 10, len(calls)
+
+
+def test_lshsig_rows_equal_the_duckdb_signatures(spark, sf_dir, tmp_path,
+                                                 monkeypatch):
+    """A fresh build of the lshsig kind gives exactly the (vec_id, band,
+    sig) rows of the LSH oracles' DuckDB signature CTE."""
+    import duckdb
+
+    from bacalhau_spark.operators.similarity import (_LSH_SIG_CTES,
+                                                     lsh_signature_index)
+    from bacalhau_spark.sources.indexstore import clear_session_index
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_STORE", str(tmp_path))
+    clear_session_index(spark)
+    try:
+        got = sorted(map(tuple, lsh_signature_index(spark, sf_dir)
+                         .select("vec_id", "band", "sig").collect()))
+    finally:
+        clear_session_index(spark)
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                    f"read_parquet('{sf_dir}/embeddings.parquet')")
+        want = sorted(con.execute(
+            f"WITH {_LSH_SIG_CTES} SELECT vec_id, band, sig FROM sig"
+        ).fetchall())
+    finally:
+        con.close()
+    assert got and got == want
+
+
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     """IVF (coarse quantizer + nprobe cells) must recover most true top-3
     neighbors. Measured ~0.9 recall@3 on the fixtures; 0.6 is the regression

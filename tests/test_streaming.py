@@ -527,3 +527,48 @@ def test_failed_stream_start_removes_its_checkpoint_dir(spark, tmp_path,
     with pytest.raises(RuntimeError, match="start failed"):
         events._start_scoped(spark, FailingWriter())
     assert not glob.glob(str(tmp_path / "bacalhau-stream-ckpt-*"))
+
+
+_UNAWAITED_START = """
+import os, sys, types
+from bacalhau_spark.streaming import events
+
+class Conf(dict):
+    def get(self, key):
+        return self.setdefault(key, "8")
+    def set(self, key, value):
+        self[key] = value
+
+class Writer:
+    def option(self, key, value):
+        self.ckpt = value
+        return self
+    def start(self):
+        os.makedirs(os.path.join(self.ckpt, "offsets"))
+        return types.SimpleNamespace(id="never-awaited")
+
+events._start_scoped(types.SimpleNamespace(conf=Conf()), Writer())
+print(*os.listdir(sys.argv[1]))
+"""
+
+
+def test_exit_sweeps_checkpoint_dirs_of_unawaited_streams(tmp_path):
+    """A query started but never awaited keeps its checkpoint dir for
+    the process's lifetime; at exit the process removes the dirs it
+    created, and no other process's."""
+    import os
+    import subprocess
+    import sys
+
+    other = tmp_path / "bacalhau-stream-ckpt-other-process"
+    other.mkdir()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_STREAM_CKPT_DIR=str(tmp_path),
+               PYTHONPATH=repo)
+    out = subprocess.run(
+        [sys.executable, "-c", _UNAWAITED_START, str(tmp_path)],
+        env=env, capture_output=True, text=True, timeout=120, check=True)
+    created = set(out.stdout.split()) - {other.name}
+    assert len(created) == 1 and \
+        created.pop().startswith("bacalhau-stream-ckpt-"), out.stdout
+    assert os.listdir(tmp_path) == [other.name]
