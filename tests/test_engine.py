@@ -446,14 +446,20 @@ def test_async_rejection_raises_from_wait(spark):
 def test_capacity_sized_from_session(spark):
     """The default capacity manager binds to the SESSION's parallelism
     (gopsutil-probe analog), not a hardcoded 8: a spec requesting more
-    than 8 but within the session's cores is admitted."""
+    than 8 but within the session's cores is admitted. Its memory axis is
+    probed from the machine's physical pages, not the 32 GiB
+    DEFAULT_TOTAL fallback."""
+    import os
+
     from bacalhau_spark.capacity import detect_total
     from bacalhau_spark.engine import Engine
 
     cores = spark.sparkContext.defaultParallelism
     eng = Engine(spark, queries())
     assert eng.capacity.total.cpu == float(cores)
-    assert eng.capacity.total.memory > 32 << 30  # probed, not the old 32GB
+    # probed from the OS page count, not DEFAULT_TOTAL's 32 GiB
+    assert eng.capacity.total.memory == (os.sysconf("SC_PAGE_SIZE")
+                                         * os.sysconf("SC_PHYS_PAGES"))
     if cores > 8:
         rid = eng.submit(JobSpec(query="q01_scan_projection",
                                  inputs={"sf_dir": SF_DIR},
