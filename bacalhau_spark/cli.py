@@ -71,8 +71,7 @@ def cmd_apply(args) -> int:
     from bacalhau_spark.engine import Engine, JobSpec
     spec = JobSpec.load(args.file)
     # Executor-sizing keys from the spec's resources are submit-time-only in
-    # Spark, so they go into session construction here (the spec's
-    # scheduler-pool routing is applied per-job inside Engine.submit).
+    # Spark, so they go into session construction here.
     spark = _get_spark(args.cpus, extra_conf=spec.spark_conf)
     engine = Engine(spark, registry.engine_registry())
     run_id = engine.submit(spec)

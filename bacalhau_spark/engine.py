@@ -129,21 +129,6 @@ def context_module(name: str):
     return importlib.import_module(f"{ns}.{name}")
 
 
-def bind_active_session(spark: SparkSession) -> None:
-    """Bind `spark` as the JVM thread-local active session of the calling
-    thread. Run workers and the threads a query starts are fresh Python
-    threads whose pinned JVM twins have none, and Python DataSource
-    lookup (among other resolution paths) goes through it — a registered
-    source like "contentstore" would otherwise fail with
-    DATA_SOURCE_NOT_FOUND only when run through the engine."""
-    try:
-        spark._jvm.org.apache.spark.sql.classic.SparkSession \
-            .setActiveSession(spark._jsparkSession)
-    except Exception:  # noqa: BLE001 — non-classic builds
-        spark._jvm.org.apache.spark.sql.SparkSession \
-            .setActiveSession(spark._jsparkSession)
-
-
 class JobRejectedError(RuntimeError):
     """A submit-time policy hook declined the job (the SelectJob=false
     path, `pkg/computenode/computenode.go:348-405`)."""
@@ -190,14 +175,10 @@ class JobSpec:
         # Validate + sanitize at construction (the reference validates specs
         # at submit: resources `pkg/capacitymanager/capacitymanager.go:61-179`,
         # labels `pkg/job/util.go:8-23`). Bad resource strings raise here.
-        from bacalhau_spark.resources import (sanitize_annotation,
-                                              to_local_properties,
-                                              to_spark_conf)
-        # Two-tier resource application: executor sizing keys go into
-        # session construction (cli.py threads them into the builder);
-        # the scheduler pool is applied per-job at submit time.
+        from bacalhau_spark.resources import sanitize_annotation, to_spark_conf
+        # executor sizing keys go into session construction (cli.py
+        # threads them into the builder)
         self.spark_conf = to_spark_conf(self.resources)
-        self.local_properties = to_local_properties(self.resources)
         self.annotations = [sanitize_annotation(str(a))
                             for a in self.annotations]
         if self.timeout_s is not None:
@@ -744,15 +725,12 @@ class Engine:
 
     def _execute(self, run_id: str, spec: JobSpec) -> None:
         # Job-scoped runtime conf: tag every Spark job this run launches
-        # (group id + description for the UI/event log) and route it to the
-        # scheduler pool its resource request maps to. Local properties are
-        # per-thread (pinned-thread mode) and restored on exit, so
-        # concurrent/subsequent runs don't leak each other's pool.
+        # (group id + description for the UI/event log). Local properties
+        # are per-thread (pinned-thread mode) and restored on exit, so
+        # concurrent/subsequent runs don't leak each other's group.
         sc = self.spark.sparkContext
-        bind_active_session(self.spark)
         props = {"spark.jobGroup.id": run_id,
-                 "spark.job.description": f"bacalhau-spark:{spec.query}",
-                 **spec.local_properties}
+                 "spark.job.description": f"bacalhau-spark:{spec.query}"}
         prev = {k: sc.getLocalProperty(k) for k in props}
         for k, v in props.items():
             sc.setLocalProperty(k, v)
@@ -802,8 +780,7 @@ class Engine:
             df = fn(self.spark, sf_dir, **_extra_inputs(fn, spec.inputs))
             if spec.verified:
                 assert_deterministic(df)
-            self._emit(run_id, EVT_RUNNING,
-                       spec.local_properties.get("spark.scheduler.pool", ""))
+            self._emit(run_id, EVT_RUNNING)
             out = spec.outputs.get("path")
             t_exec = time.time()
             run_metrics: dict = {}

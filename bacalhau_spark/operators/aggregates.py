@@ -80,13 +80,18 @@ def q19b_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q19c_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (per-priority and per-status marginals, no
-    cross terms) — SQL surface, since the DataFrame API exposes only
-    rollup/cube."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        "SELECT o_orderpriority, o_orderstatus, COUNT(*) AS c FROM orders "
-        "GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus)) "
-        "ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST, c")
+    cross terms), registering no session-global view."""
+    return (
+        table(spark, sf_dir, "orders")
+        .groupingSets([["o_orderpriority"], ["o_orderstatus"]],
+                      "o_orderpriority", "o_orderstatus")
+        .agg(F.count("*").alias("c"))
+        .orderBy(
+            F.col("o_orderpriority").asc_nulls_first(),
+            F.col("o_orderstatus").asc_nulls_first(),
+            F.col("c"),
+        )
+    )
 
 
 def nd_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,7 +4,7 @@ Mapping:
 - ResourceUsageConfig strings ("500m" cpu, "2Gb" memory) parsed to floats /
   bytes (`pkg/capacitymanager/types.go:5-27`, parsing in
   `pkg/capacitymanager/capacitymanager.go:61-179`). In a Spark engine these
-  become session/pool configs (`spark.executor.cores/memory`,
+  become session configs (`spark.executor.cores/memory`,
   `spark.task.resource.gpu.amount`), so the parse + validate step is what
   survives.
 - Annotation sanitizing (`pkg/job/util.go:8-23`): labels restricted to a
@@ -61,25 +61,6 @@ def sanitize_annotation(s: str) -> str:
     chars) — the label-sanitizer contract fuzzed by the reference's
     bad_strings corpus."""
     return _ANNOTATION_RE.sub("", s)
-
-
-def to_local_properties(resources: dict) -> dict[str, str]:
-    """ResourceUsageConfig -> per-job runtime properties. Executor sizing is
-    submit-time-only in Spark (`to_spark_conf`), but the scheduler pool IS a
-    runtime, job-scoped knob (`spark.sparkContext.setLocalProperty`) — the
-    engine routes jobs to a pool by requested size class, the fair-scheduler
-    restatement of the reference's capacity manager
-    (`pkg/capacitymanager/capacitymanager.go:185-264`)."""
-    cores = parse_cpu(resources.get("cpu", 0))
-    if resources.get("gpu"):
-        pool = "gpu"
-    elif cores >= 4:
-        pool = "heavy"
-    elif cores > 0 or resources.get("memory") or resources.get("disk"):
-        pool = "default"
-    else:
-        return {}
-    return {"spark.scheduler.pool": f"bacalhau-{pool}"}
 
 
 def to_spark_conf(resources: dict) -> dict[str, str]:

@@ -92,21 +92,18 @@ def run_in_lanes(spark: SparkSession, chains, build) -> None:
     lane_count(spark) parallel lanes: each lane takes the next chain,
     longest first, and builds its items in order. Lanes are
     InheritableThreads: they carry the calling thread's Spark local
-    properties (job group, description, scheduler pool), so the
+    properties (job group and description), so the
     engine's timeout cancel and per-run job counts see every job a lane
     launches. After a failure no lane starts another chain; the first
     failure is re-raised only once every lane has joined, so no build is
     still writing when the caller sees the error."""
     from pyspark import InheritableThread
 
-    from bacalhau_spark.engine import bind_active_session
-
     pending = sorted(chains, key=len, reverse=True)
     errors: list[BaseException] = []
     lock = threading.Lock()
 
     def lane() -> None:
-        bind_active_session(spark)
         while True:
             with lock:
                 if errors or not pending:

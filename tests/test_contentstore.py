@@ -1,8 +1,10 @@
 """Content-store tests — the storage-provider plane
-(`pkg/storage/types.go:7-18`, api-copy driver semantics) as a native
-Spark DataSource V2: per-address partitions, planning-time locality probe,
-verified (re-hashed) reads, idempotent content-addressed writes; and the
-batch publish through Spark's text writer.
+(`pkg/storage/types.go:7-18`, api-copy driver semantics) as native Spark
+plans: driver-side missing-address probe, verified (re-hashed) `binaryFile`
+reads with no Python scan, the `binaryFile` stream of newly pinned blobs,
+idempotent content-addressed writes, the batch publish through Spark's
+text writer and its per-micro-batch `foreachBatch` form, and a read from
+a foreign cwd whose Python workers cannot import the package.
 """
 
 from __future__ import annotations
@@ -27,16 +29,40 @@ def store(tmp_path):
     return root, addrs
 
 
-def test_round_trip_and_partition_per_address(spark, store):
+def _streamed(spark, root, name):
+    """Every row the stream mount of `root` delivers, in one run."""
+    q = (cs.stream_addresses(spark, root).writeStream.format("memory")
+         .queryName(name).trigger(availableNow=True).start())
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    return spark.table(name).collect()
+
+
+def test_round_trip_is_a_native_scan(spark, store):
     root, addrs = store
     df = cs.read_addresses(spark, root, addrs)
     assert df.count() == 15
-    # one InputPartition per mounted address
-    assert df.rdd.getNumPartitions() == len(addrs)
+    # a binaryFile scan verified in the plan; no Python data-source scan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan binaryFile" in plan and "Python" not in plan
     # payload is opaque JSONL; the query interprets it (reference: opaque
     # mounted files interpreted by the container)
     parsed = df.select("address", F.get_json_object("value", "$.k").alias("k"))
     assert parsed.where(F.col("k").isNull()).count() == 0
+
+
+def test_reads_a_root_with_glob_characters(spark, tmp_path):
+    """Spark expands glob characters in read paths; a store root named
+    with them is still read literally, by the batch and the stream
+    mount."""
+    root = str(tmp_path / "st[1]{a}*?")
+    addr = cs.store_put(root, b"x\ny")
+    rows = cs.read_addresses(spark, root, [addr]).collect()
+    assert sorted(r.value for r in rows) == ["x", "y"]
+    assert sorted(r.value for r in _streamed(spark, root, "cs_glob")) == [
+        "x", "y"]
 
 
 def test_store_put_idempotent(store):
@@ -53,6 +79,18 @@ def test_missing_address_fails_at_planning(spark, store):
     root, addrs = store
     with pytest.raises(Exception, match="not in store"):
         cs.read_addresses(spark, root, addrs + ["f" * 32]).collect()
+
+
+def test_emptied_blob_fails_verified_read(spark, store):
+    """A file scan yields no row for a zero-byte file, so a blob
+    truncated to nothing must fail the read instead of reading as zero
+    rows; the genuinely empty blob still reads as zero rows."""
+    root, addrs = store
+    open(os.path.join(root, addrs[0]), "wb").close()
+    with pytest.raises(Exception, match="integrity"):
+        cs.read_addresses(spark, root, [addrs[0]]).collect()
+    empty = cs.store_put(root, b"")
+    assert cs.read_addresses(spark, root, [empty]).count() == 0
 
 
 def test_corrupted_blob_fails_verified_read(spark, store):
@@ -167,8 +205,9 @@ def test_reads_split_rows_on_newline_only(spark, tmp_path):
     rows = cs.read_addresses(spark, root, [addr, empty]).collect()
     assert sorted((r.line_no, r.value) for r in rows) == list(
         enumerate(values))
-    stream = cs.ContentStoreStreamReader({"path": root})
-    assert [v for _, _, v in stream._rows([addr, empty])] == values
+    streamed = sorted(_streamed(spark, root, "cs_lines"),
+                      key=lambda r: r.line_no)
+    assert [r.value for r in streamed] == values
 
 
 def test_doc_rows_with_unicode_line_breaks_round_trip(spark, tmp_path):
@@ -204,14 +243,14 @@ def test_manifest_pointers_published_atomically(spark, tmp_path):
 
 def test_stream_reader_emits_new_blobs_exactly_once(spark, tmp_path):
     """Streaming mounts: newly pinned blobs flow through readStream exactly
-    once; already-delivered addresses never re-emit (offset = delivered
-    address set; immutability makes set difference the new data)."""
+    once; already-delivered addresses never re-emit (the file source's
+    seen-file log is the offset; blobs are immutable, so a new name is
+    new data)."""
     import time as _time
 
     root = str(tmp_path / "stream_store")
     a1 = cs.store_put_json_rows(root, [{"k": 1}, {"k": 2}])
-    cs.register(spark)
-    q = (spark.readStream.format("contentstore").option("path", root).load()
+    q = (cs.stream_addresses(spark, root)
          .writeStream.format("memory").queryName("cs_stream")
          .trigger(processingTime="250 milliseconds").start())
 
@@ -236,9 +275,9 @@ def test_stream_reader_emits_new_blobs_exactly_once(spark, tmp_path):
 
 
 def test_stream_writer_publishes_per_batch_manifests(spark, tmp_path):
-    """Streaming publish: a file-stream source written to the contentstore
-    yields per-batch manifests whose blobs all pass the verified read and
-    whose row total equals the source."""
+    """Streaming publish: a file-stream source published per micro-batch
+    through foreachBatch yields per-batch manifests whose blobs all pass
+    the verified read and whose row total equals the source."""
     import shutil
 
     src_dir = tmp_path / "src"
@@ -247,10 +286,9 @@ def test_stream_writer_publishes_per_batch_manifests(spark, tmp_path):
                 src_dir / "d.parquet")
     out_root = str(tmp_path / "stream_out")
     schema = spark.read.parquet(str(src_dir)).schema
-    cs.register(spark)
     q = (spark.readStream.schema(schema).parquet(str(src_dir))
          .selectExpr("to_json(struct(*)) AS value")
-         .writeStream.format("contentstore").option("path", out_root)
+         .writeStream.foreachBatch(cs.stream_publisher(out_root))
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     try:
@@ -264,3 +302,43 @@ def test_stream_writer_publishes_per_batch_manifests(spark, tmp_path):
     addrs = [a for entries in batches.values() for a, _ in entries]
     df = cs.read_addresses(spark, out_root, addrs)
     assert df.count() == 500
+
+
+_FOREIGN_CWD = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession, functions as F
+from bacalhau_spark.engine import Engine, JobSpec
+from bacalhau_spark.sources import contentstore as cs
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+addr = cs.store_put_json_rows("store", [{"k": i} for i in range(3)])
+read = [r.value for r in cs.read_addresses(spark, "store", [addr]).collect()]
+engine = Engine(spark, {"rows": lambda spark_, sf_dir: spark_.range(20).select(
+    F.format_string("r%03d", "id").alias("value"))})
+run_id = engine.submit(JobSpec(query="rows", outputs={
+    "path": "published", "format": "contentstore"}))
+fetched = [r["value"] for r in engine.fetch_results(run_id, limit=100)]
+print(json.dumps({"read": read, "fetched": fetched}))
+"""
+
+
+def test_reads_from_a_foreign_cwd(tmp_path):
+    """From a cwd outside the repo with no PYTHONPATH, the package is
+    importable on the driver only: the verified read and the engine's
+    fetch of a contentstore sink still return the published rows,
+    because neither runs a Python worker."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD, repo], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["read"] == [json.dumps({"k": i}) for i in range(3)]
+    assert sorted(got["fetched"]) == [f"r{i:03d}" for i in range(20)]

@@ -95,29 +95,24 @@ def test_verified_mode_rejects_nondeterministic_plan(engine, spark):
 
 def test_resources_applied_as_job_scoped_conf(engine, spark):
     """A spec with resources observably changes the job-scoped config: the
-    scheduler pool + job group are set as local properties while the run's
-    Spark jobs execute, and restored afterwards (capacitymanager analog)."""
+    job group is set as a local property while the run's Spark jobs
+    execute, and submit-time keys are computed from the resources
+    (capacitymanager analog)."""
     captured = {}
 
     def probing_query(spark_, sf_dir):
         sc = spark_.sparkContext
-        captured["pool"] = sc.getLocalProperty("spark.scheduler.pool")
         captured["group"] = sc.getLocalProperty("spark.jobGroup.id")
         from bacalhau_spark.catalog import table
         return table(spark_, sf_dir, "nation")
 
     engine.registry["probe"] = probing_query
-    # cpu=4 routes to the heavy pool AND fits the session-probed capacity
-    # (the test session is local[4]; capacity binds to real parallelism)
+    # cpu=4 fits the session-probed capacity (the test session is
+    # local[4]; capacity binds to real parallelism)
     rid = engine.submit(JobSpec(query="probe", inputs={"sf_dir": SF_DIR},
                                 resources={"cpu": "4", "memory": "2Gb"}))
-    assert captured["pool"] == "bacalhau-heavy"
     assert captured["group"] == rid
-    # restored after the run — no leak into subsequent work
-    assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
-    # gpu requests route to the gpu pool; submit-time keys still computed
     spec = JobSpec(query="probe", resources={"gpu": 1, "cpu": "500m"})
-    assert spec.local_properties["spark.scheduler.pool"] == "bacalhau-gpu"
     assert spec.spark_conf["spark.task.resource.gpu.amount"] == "1"
 
 

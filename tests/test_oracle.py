@@ -120,3 +120,16 @@ def test_no_oracle_query_runs(name, spark, sf_dir):
     df = fn(spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_q19c_registers_no_session_view(spark, sf_dir, oracle_con):
+    """q19c plans over its frame, not a session-global `orders` view, so
+    concurrent runs over different sf_dirs cannot read each other's
+    table; its result still equals the oracle's."""
+    fn, sql = ALL_QUERIES["q19c_grouping_sets"]
+    spark.catalog.dropTempView("orders")
+    got = _normalize(fn(spark, sf_dir).toPandas())
+    assert "orders" not in {t.name for t in spark.catalog.listTables()}
+    want = _normalize(oracle_con.execute(sql).fetchdf())
+    assert list(got.columns) == list(want.columns)
+    assert _value_hash(got) == _value_hash(want)
