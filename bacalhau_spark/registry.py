@@ -64,10 +64,20 @@ _MODULES = (scans, scalar, filters, joins, aggregates, windows, sort, setops,
 #      nd_ngram_overlap), then the r11 block; blocks graded r13 (the
 #      r9 front + r13 changed-code set) cycle to the back.
 _PRIORITY: tuple[str, ...] = (
+    # 0. changed (standing rule): every memory-sink stream row now runs
+    #    through streaming.events._run_to_memory
+    "nd_stream_tumbling", "nd_stream_sessions", "nd_stream_stateful",
+    "nd_stream_stream_join", "nd_stream_static_join", "nd_stream_dedup",
+    "nd_stream_topk", "nd_stream_ewma", "nd_stream_hll_users",
+    "nd_stream_heavy_hitters", "nd_stream_gopher", "nd_stream_url_screen",
+    "nd_stream_html_extract", "nd_stream_quality_model",
+    "nd_stream_incremental_dedup", "nd_stream_band_screen",
+    "nd_stream_ann", "nd_stream_image_phash", "nd_stream_audio_phash",
+    "nd_stream_video_phash",
     # 1. changed/new round 14 (standing rule)
     "nd_pq_retrain", "nd_ann_pq", "nd_ann_lsh",
     "nd_pq_incremental", "nd_pq_quantize",
-    "nd_ann_ivfpq", "nd_ann_ivf", "nd_ann_ivf_pruned", "nd_stream_ann",
+    "nd_ann_ivfpq", "nd_ann_ivf", "nd_ann_ivf_pruned",
     "nd_ann_pca", "nd_pca_project",
     "nd_semantic_dedup", "nd_semantic_dedup_fast",
     "nd_winnowing",
@@ -93,7 +103,6 @@ _PRIORITY: tuple[str, ...] = (
     "nd_bigram_surprisal", "nd_ks_drift",
     "nd_ngram_overlap",
     "nd_quality_model_labeled", "nd_quality_model",
-    "nd_stream_quality_model",
     "nd_zipf_octaves", "nd_lang_outliers",
     "nd_embedding_covariance_fast",
     "nd_k_anonymity", "nd_target_encode", "nd_ewma_smooth",
@@ -104,7 +113,7 @@ _PRIORITY: tuple[str, ...] = (
     "nd_multimodal_resize", "nd_percentiles",
     # r13-graded blocks cycle to the back
     "nd_domain_blocklist", "nd_domain_cap", "nd_domain_cap_keep",
-    "nd_bpe_encode", "nd_unicode_dedup", "nd_stream_band_screen",
+    "nd_bpe_encode", "nd_unicode_dedup",
     "nd_boilerplate_strip", "nd_pmi_collocations",
     "nd_skipgram_pairs", "nd_bpe_merges", "nd_pagerank",
     "q04_math_funcs", "q09_like_filter", "q10_regex_filter",

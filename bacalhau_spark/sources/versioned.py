@@ -401,11 +401,11 @@ def read_version(spark: SparkSession, root: str,
         manifest = json.load(f)
     ddl = _manifest_ddl(manifest)
     if not manifest["files"]:
-        # A legitimately empty version (e.g. an index table whose first
-        # corpus batch was modality-sparse — round-12 ADVICE): the
-        # manifest records the schema, so the snapshot is an empty
-        # typed frame, not an error. Pre-r13 manifests without dtypes
-        # cannot reconstruct a schema — those still fail loudly.
+        # A legitimately empty version (write_version of an empty
+        # frame): the manifest records the schema, so the snapshot is
+        # an empty typed frame, not an error. Manifests written before
+        # dtypes were recorded cannot reconstruct a schema — those
+        # still fail loudly.
         if ddl is None:
             raise ValueError(f"version {n} of {root} has no data files")
         return spark.createDataFrame([], ddl)
@@ -688,27 +688,18 @@ def _already_committed(root: str, batch_id: int) -> bool:
     return False
 
 
-def _commit_once(df: DataFrame, root: str, batch_id: int,
-                 props: dict | None = None,
-                 allow_empty_head: bool = False) -> None:
-    """THE exactly-once streaming commit protocol, stated once (both
-    public committers share it): finish a pointer-crashed commit, skip
-    a replayed batch, heal a manifestless crashed slot, append. An
-    EMPTY first batch is skipped outright unless `allow_empty_head` —
-    the indexed committer must publish the empty version to keep
-    corpus vN ≡ index vN when the first corpus batch is modality-
-    sparse (round-12 ADVICE: the silent skip left the pair off by one
-    forever); read_version reconstructs an empty typed frame from the
-    manifest's dtypes, so a files=[] head is readable."""
+def _commit_once(df: DataFrame, root: str, batch_id: int) -> None:
+    """THE exactly-once streaming commit protocol, stated once: finish a
+    pointer-crashed commit, skip a replayed batch, heal a manifestless
+    crashed slot, append. An EMPTY first batch is skipped outright — an
+    empty table has no version to publish yet."""
     finish_pending(root)
     if _already_committed(root, batch_id):
         return  # replayed batch: its snapshot is already published
-    if latest_version(root) == 0 and df.isEmpty() \
-            and not allow_empty_head:
+    if latest_version(root) == 0 and df.isEmpty():
         return
     clear_pending(root)
-    write_version(df, root, batch_id=batch_id, mode="append",
-                  props=props)
+    write_version(df, root, batch_id=batch_id, mode="append")
 
 
 def stream_to_versioned(stream_df: DataFrame, root: str,
@@ -725,73 +716,6 @@ def stream_to_versioned(stream_df: DataFrame, root: str,
 
     def commit(df: DataFrame, batch_id: int) -> None:
         _commit_once(df, root, batch_id)
-
-    return (stream_df.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
-
-
-def stream_to_versioned_indexed(stream_df: DataFrame, root: str,
-                                index_root: str, index_fn,
-                                checkpoint: str):
-    """stream_to_versioned PLUS transactional index maintenance: every
-    micro-batch appends BOTH the corpus version and its derived-index
-    version (index_fn(batch) — a per-row-pure transform: signatures,
-    perceptual hashes, the canon/extract front door) under the SAME
-    batch id, so the index stays fresh AT INGEST instead of waiting for
-    the next stage_index_build epoch, and corpus version N always has
-    a matching index version N (consumers join time-travel reads of
-    the pair; each index manifest also records its corpus_version so
-    the pairing is auditable after the fact). The two tables must be
-    ALIGNED when the stream attaches — a corpus bootstrapped
-    out-of-band (backfill versions the index never saw) would silently
-    skew every later pair, so misalignment raises at attach time
-    instead. The batch is persisted across the two writes: two actions
-    over one unpersisted plan would re-execute the source scan, and
-    under any non-deterministic upstream the index would fingerprint a
-    DIFFERENT row set than the corpus it claims to mirror.
-
-    Crash atomicity without a cross-table transaction: the corpus
-    commits FIRST; a crash between the two commits leaves the index
-    one batch behind, and the replayed batch — foreachBatch is
-    at-least-once — skips the already-published corpus version by
-    batch id but still publishes the missing index version (each
-    table's commit protocol is independent), so the pair re-converges
-    exactly-once per table. Only per-row-pure index_fns are sound
-    here: an append of index_fn(batch) equals index_fn(corpus) exactly
-    when the transform is per-row (the delta-adoption rule)."""
-    cv, iv = latest_version(root), latest_version(index_root)
-    # one legitimate misalignment exists: the corpus exactly ONE ahead
-    # with a batch-id-bearing head IS the mid-crash state this function
-    # recovers from (corpus committed, index commit lost) — the
-    # replayed batch re-converges it. Anything else is an out-of-band
-    # backfill the index never saw, and silent attachment would skew
-    # every later version pair.
-    head = latest_manifest(root) if cv else None
-    mid_crash = (cv == iv + 1 and head is not None
-                 and head.get("batch_id") is not None)
-    if cv != iv and not mid_crash:
-        raise ValueError(
-            f"corpus/index misaligned at attach: {root} is at v{cv}, "
-            f"{index_root} at v{iv} — backfill the index (or start "
-            "both empty) before attaching the indexed ingest")
-
-    def commit(df: DataFrame, batch_id: int) -> None:
-        df.persist()
-        try:
-            _commit_once(df, root, batch_id)
-            if latest_version(root) == 0:
-                return  # empty first corpus batch: neither table moves
-            # allow_empty_head: a modality-sparse first batch must
-            # still publish index v1 (files=[], schema-bearing) or
-            # every later pair is off by one (round-12 ADVICE).
-            _commit_once(index_fn(df), index_root, batch_id,
-                         props={"corpus_table": root,
-                                "corpus_version": latest_version(root)},
-                         allow_empty_head=True)
-        finally:
-            df.unpersist()
 
     return (stream_df.writeStream.foreachBatch(commit)
             .option("checkpointLocation", checkpoint)

@@ -4,7 +4,7 @@ The reference's only streaming surface is the heartbeat event plane
 (`JobEventRunning`, `pkg/executor/constants.go:66-72`) consumed by polling
 waiters (`cmd/bacalhau/docker_run.go:60-139`). The Spark-first engine
 promotes it to Structured Streaming: readStream over the event log,
-watermarked windowed aggregates, memory/foreachBatch sinks. Q28's contract:
+watermarked windowed aggregates, memory sinks. Q28's contract:
 the streaming aggregate must equal the batch aggregate over the same data
 (tested in tests/test_streaming.py).
 """
@@ -46,8 +46,8 @@ def q28_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 6.0s -> 2.0s at 4 partitions, identical rows). This is the same
 # deployment knob a real job sizes to its key cardinality — NOT a
 # correctness setting; results are partitioning-invariant (append/complete
-# rows are compared order-insensitively). The helpers scope the conf to
-# the query's lifetime and restore the session value after.
+# rows are compared order-insensitively). The runner scopes the conf to
+# the query's start and restores the session value after.
 STREAM_STATE_PARTITIONS = 4
 
 import atexit  # noqa: E402
@@ -60,7 +60,7 @@ from contextlib import contextmanager  # noqa: E402
 # serializes the set -> start -> restore window below: the conf is
 # SESSION-global, so two engine worker threads interleaving get/set
 # could capture the other's temporary 4 as "prev" and pin the session
-# at 4 shuffle partitions forever (round-12 review)
+# at 4 shuffle partitions forever
 _STATE_CONF_LOCK = threading.Lock()
 
 
@@ -76,53 +76,74 @@ def _stream_state_conf(spark: SparkSession):
             spark.conf.set(key, prev)
 
 
-# Ephemeral checkpoint base for the availableNow memory-sink runs
-# (round 15): with no explicit checkpointLocation Spark creates a
-# force-deleted temp dir under java.io.tmpdir — on this box an ext4
-# mount, so every offsets/commit/state write pays a journaled-fs sync.
-# The WAL of a FINITE availableNow replay whose sink is in-memory has
-# no durability contract (Spark itself deletes it on stop), so it goes
-# on tmpfs when one exists: measured 0.81 -> 0.63 s on the tumbling
-# aggregate and 0.58 -> 0.50 s on a stateless projection, identical
-# results (experiments/stream_floor_r15.txt). Parameterized for
-# deployments (a durable pipeline — sources/versioned.py — sets its own
+# Ephemeral checkpoint base for the availableNow memory-sink runs: with
+# no explicit checkpointLocation Spark creates a force-deleted temp dir
+# under java.io.tmpdir — often a journaled filesystem, so every
+# offsets/commit/state write pays a sync. The WAL of a FINITE
+# availableNow replay whose sink is in-memory has no durability contract
+# (Spark itself deletes it on stop), so it goes on tmpfs when one
+# exists: measured 0.81 -> 0.63 s on the tumbling aggregate and
+# 0.58 -> 0.50 s on a stateless projection, identical results
+# (experiments/stream_floor_r15.txt). Parameterized for deployments (a
+# durable pipeline — sources/versioned.py — sets its own
 # checkpointLocation explicitly and never routes through here); unset
 # SPARK_GRAFT_STREAM_CKPT_DIR with no /dev/shm falls back to Spark's
-# default temp-dir behavior. A FRESH unique dir per start keeps the
+# default temp-dir behavior. A FRESH unique dir per run keeps the
 # no-resume semantics of Spark's temp checkpoints — results cannot
-# depend on a previous run's offsets — and _await_or_raise removes it.
-# A query the process never awaited keeps its dir until exit, when
-# _sweep_checkpoints removes whatever this process left.
+# depend on a previous run's offsets — and _run_to_memory removes it.
+# A run still blocked in its await when the process exits keeps its
+# dir until then, when _sweep_checkpoints removes whatever this process
+# left.
 _STREAM_CKPT_BASE = os.environ.get("SPARK_GRAFT_STREAM_CKPT_DIR") or (
     "/dev/shm" if os.path.isdir("/dev/shm") else None)
-_CKPT_BY_QUERY: dict[str, str] = {}
+_LIVE_CKPTS: set[str] = set()
 
 
 @atexit.register
 def _sweep_checkpoints() -> None:
-    for d in list(_CKPT_BY_QUERY.values()):
+    for d in list(_LIVE_CKPTS):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def _start_scoped(spark: SparkSession, writer):
-    """Start a streaming query with fixture-sized state partitioning
-    (STREAM_STATE_PARTITIONS) — the conf is captured at analysis time, so
-    scoping the context manager around start() is sufficient."""
-    with _stream_state_conf(spark):
-        if _STREAM_CKPT_BASE:
-            d = os.path.join(
-                _STREAM_CKPT_BASE,
-                f"bacalhau-stream-ckpt-{uuid.uuid4().hex}")
-            try:
-                q = writer.option("checkpointLocation", d).start()
-            except BaseException:
-                # a failed start never reaches _await_or_raise, the
-                # dir's only other remover
-                shutil.rmtree(d, ignore_errors=True)
-                raise
-            _CKPT_BY_QUERY[str(q.id)] = d
-            return q
-        return writer.start()
+def _run_to_memory(spark: SparkSession, frame: DataFrame, mode: str,
+                   timeout: int = 120) -> DataFrame:
+    """Run a finite streaming frame to completion (availableNow) into a
+    memory sink and return the sink's rows as a batch frame — THE one
+    start/await/read path of every memory-sink stream row.
+
+    The sink is named per run, so concurrent runs of one row never
+    collide on Spark's one-active-query-per-name rule, and its temp view
+    is dropped before returning: the returned frame's analyzed plan
+    holds the sink itself, not the name, so it stays readable while the
+    catalog keeps nothing. A run that does not finish within `timeout`
+    raises instead of returning: stopping a query mid-batch and reading
+    its sink would serve a silently truncated result. Start, await and
+    cleanup share one try/finally, so no path leaks the query, its
+    checkpoint dir or its view."""
+    name = f"stream_{uuid.uuid4().hex}"
+    writer = (frame.writeStream.format("memory").queryName(name)
+              .outputMode(mode).trigger(availableNow=True))
+    ckpt = None
+    if _STREAM_CKPT_BASE:
+        ckpt = os.path.join(_STREAM_CKPT_BASE, f"bacalhau-stream-ckpt-{name}")
+        _LIVE_CKPTS.add(ckpt)
+        writer = writer.option("checkpointLocation", ckpt)
+    q = None
+    try:
+        # the state-partition conf is captured at analysis time, so
+        # scoping it around start() is sufficient
+        with _stream_state_conf(spark):
+            q = writer.start()
+        if not q.awaitTermination(timeout):
+            raise TimeoutError(f"stream did not finish within {timeout}s")
+        return spark.table(name)
+    finally:
+        if q is not None:
+            q.stop()
+        if ckpt is not None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+            _LIVE_CKPTS.discard(ckpt)
+        spark.catalog.dropTempView(name)
 
 
 def stream_tumbling_window(spark: SparkSession, sf_dir: str,
@@ -138,22 +159,6 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str,
         .agg(F.count("*").alias("c"), F.round(F.sum("value"), 3).alias("s"))
         .select(F.col("w.start").alias("ws"), "event_type", "c", "s")
     )
-
-
-def run_stream_to_memory(spark: SparkSession, sf_dir: str,
-                         table_name: str = "stream_q28",
-                         timeout_sec: int = 120) -> DataFrame:
-    """Run the streaming aggregate to completion over the (finite) fixture
-    dir and return the materialized result for batch comparison."""
-    q = _start_scoped(spark, (
-        stream_tumbling_window(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, timeout_sec)
-    return spark.table(table_name).orderBy("ws", "event_type")
 
 
 def sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,22 +213,6 @@ def stream_session_window(spark: SparkSession, sf_dir: str,
     )
 
 
-def run_stream_session_to_memory(spark: SparkSession, sf_dir: str,
-                                 table_name: str = "stream_sessions",
-                                 timeout_sec: int = 120) -> DataFrame:
-    """Run the streaming sessionization over the finite fixture dir; returns
-    the materialized sessions for comparison with the batch nd_sessionize."""
-    q = _start_scoped(spark, (
-        stream_session_window(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, timeout_sec)
-    return spark.table(table_name).orderBy("user_id", "s_start")
-
-
 STATE_SCHEMA = "n bigint, total double, last_type string, last_event_id bigint"
 STATEFUL_OUT_SCHEMA = ("user_id bigint, n bigint, total double, "
                        "last_type string")
@@ -262,22 +251,6 @@ def stateful_user_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .applyInPandasWithState(fold, STATEFUL_OUT_SCHEMA, STATE_SCHEMA,
                                 "update", GroupStateTimeout.NoTimeout)
     )
-
-
-def run_stateful_fold(spark: SparkSession, sf_dir: str,
-                      table_name: str = "stream_user_state",
-                      timeout_sec: int = 120) -> DataFrame:
-    """Run the stateful fold over the finite fixture; the last update per
-    user is the final state (single micro-batch with availableNow)."""
-    q = _start_scoped(spark, (
-        stateful_user_fold(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, timeout_sec)
-    return spark.table(table_name).orderBy("user_id")
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str,
@@ -325,18 +298,11 @@ def batch_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "p_id", "c_id")
 
 
-def run_stream_stream_join(spark: SparkSession, sf_dir: str,
-                           table_name: str = "stream_ssj",
-                           timeout_sec: int = 120) -> DataFrame:
-    q = _start_scoped(spark, (
-        stream_stream_join(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, timeout_sec)
-    return spark.table(table_name)
+def nd_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked stream-stream interval join (purchase -> click within
+    1h), append mode. The pair SET is deterministic (its order is not;
+    the gate hashes order-insensitively)."""
+    return _run_to_memory(spark, stream_stream_join(spark, sf_dir), "append")
 
 
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,18 +320,12 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_stream_static_join(spark: SparkSession, sf_dir: str,
-                           table_name: str = "stream_ssj_static",
-                           timeout_sec: int = 120) -> DataFrame:
-    q = _start_scoped(spark, (
-        stream_static_join(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, timeout_sec)
-    return spark.table(table_name).orderBy("c_mktsegment")
+def nd_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-static enrichment join (events stream x customer dim),
+    counts per segment. They must equal the batch join's."""
+    return (_run_to_memory(spark, stream_static_join(spark, sf_dir),
+                           "complete")
+            .orderBy("c_mktsegment"))
 
 
 def stream_dedup(spark: SparkSession, sf_dir: str,
@@ -383,40 +343,16 @@ def stream_dedup(spark: SparkSession, sf_dir: str,
     )
 
 
-def run_stream_dedup(spark: SparkSession, sf_dir: str,
-                     table_name: str = "stream_dedup",
-                     timeout_sec: int = 120) -> DataFrame:
-    q = _start_scoped(spark, (
-        stream_dedup(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, timeout_sec)
-    return spark.table(table_name)
-
-
-def run_stream_foreach_batch(spark: SparkSession, sf_dir: str,
-                             out_dir: str, timeout_sec: int = 120) -> list[int]:
-    """foreachBatch sink: each micro-batch of the windowed aggregate is
-    written as parquet under out_dir/batch=<id> (the custom-sink surface —
-    idempotent by batch id, the exactly-once pattern for external stores).
-    Returns the batch ids written."""
-    seen: list[int] = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        seen.append(batch_id)
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-
-    q = _start_scoped(spark, (
-        stream_tumbling_window(spark, sf_dir)
-        .writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, timeout_sec)
-    return seen
+def nd_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming dropDuplicates; the registry row gates on the
+    deterministic deduped key set. First-arrival order inside a batch
+    decides which duplicate's event_id survives — engine-specific by
+    design (exercised in tests/test_streaming.py) — so the row projects
+    the keys and re-sorts after the sink (the sessions/stateful
+    recipe)."""
+    return (_run_to_memory(spark, stream_dedup(spark, sf_dir), "append")
+            .select("user_id", "event_type")
+            .orderBy("user_id", "event_type"))
 
 
 def nd_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -427,7 +363,9 @@ def nd_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     local batch≡stream equivalence test. With the finite fixture in one
     micro-batch nothing is late, so the result must equal the batch
     aggregate exactly."""
-    return run_stream_to_memory(spark, sf_dir, table_name="stream_q28_gate")
+    return (_run_to_memory(spark, stream_tumbling_window(spark, sf_dir),
+                           "complete")
+            .orderBy("ws", "event_type"))
 
 
 def nd_stream_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -440,12 +378,9 @@ def nd_stream_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-time shape of a curation pipeline: documents stream in, flags
     stream out, the same expression tree as the batch query."""
     from bacalhau_spark.operators.curation import gopher_flags_frame
-    q = _start_scoped(spark, gopher_flags_frame(_doc_stream(spark, sf_dir))
-                      .writeStream.format("memory")
-                      .queryName("stream_gopher_gate")
-                      .outputMode("append").trigger(availableNow=True))
-    _await_or_raise(q, 120)
-    return spark.table("stream_gopher_gate").orderBy("doc_id")
+    return (_run_to_memory(
+        spark, gopher_flags_frame(_doc_stream(spark, sf_dir)), "append")
+        .orderBy("doc_id"))
 
 
 def nd_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,8 +391,9 @@ def nd_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_stream_session_equals_batch). The final
     orderBy re-sorts the memory sink's engine-ordered rows, so the output
     is batch-order independent and shares nd_sessionize's oracle."""
-    return run_stream_session_to_memory(spark, sf_dir,
-                                        table_name="gate_sessions")
+    return (_run_to_memory(spark, stream_session_window(spark, sf_dir),
+                           "complete")
+            .orderBy("user_id", "s_start"))
 
 
 def nd_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,7 +405,9 @@ def nd_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     key's row each micro-batch; the max-n row per user is the final state
     (n is monotone), making the result multi-batch-safe even though the
     single-file fixture runs as one batch."""
-    raw = run_stateful_fold(spark, sf_dir, table_name="gate_state")
+    raw = (_run_to_memory(spark, stateful_user_fold(spark, sf_dir),
+                          "update")
+           .orderBy("user_id"))
     win = Window.partitionBy("user_id").orderBy(F.col("n").desc())
     return (raw.withColumn("_rn", F.row_number().over(win))
             .where(F.col("_rn") == 1)
@@ -486,24 +424,6 @@ def _doc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = table(spark, sf_dir, "documents").schema
     return (spark.readStream.schema(schema)
             .parquet(f"{sf_dir}/documents.parqu*"))
-
-
-def _await_or_raise(q, timeout_sec: int) -> None:
-    """Await an availableNow query and fail LOUDLY on timeout: stopping
-    a query mid-batch and then reading its memory sink would serve a
-    silently truncated result as a GRADED answer. Every streaming
-    surface routes through this (the pre-round-6 inline await-then-stop
-    sites migrated in round 12; their queries front that round's
-    grading window per the standing rule)."""
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"stream did not finish within {timeout_sec}s")
-    finally:
-        q.stop()
-        d = _CKPT_BY_QUERY.pop(str(q.id), None)
-        if d is not None:
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def nd_stream_url_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,11 +446,7 @@ def nd_stream_url_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id", "canon", "domain",
                    F.coalesce("blk", F.lit(0)).cast("int")
                    .alias("blocked")))
-    q = _start_scoped(spark, out.writeStream.format("memory")
-                      .queryName("stream_url_screen")
-                      .outputMode("append").trigger(availableNow=True))
-    _await_or_raise(q, 120)
-    return spark.table("stream_url_screen").orderBy("doc_id")
+    return _run_to_memory(spark, out, "append").orderBy("doc_id")
 
 
 def _stream_url_oracle() -> str:
@@ -569,11 +485,7 @@ def nd_stream_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                          _html_expr().alias("html")))
     out = html_extract_frame(survivors).select(
         "doc_id", "domain", "title", "content")
-    q = _start_scoped(spark, out.writeStream.format("memory")
-                      .queryName("stream_html_extract")
-                      .outputMode("append").trigger(availableNow=True))
-    _await_or_raise(q, 120)
-    return spark.table("stream_html_extract").orderBy("doc_id")
+    return _run_to_memory(spark, out, "append").orderBy("doc_id")
 
 
 def _stream_html_oracle() -> str:
@@ -595,7 +507,7 @@ FROM pages ORDER BY doc_id
 
 def _stream_phash_screen(spark: SparkSession, sf_dir: str, *,
                          frame_fn, index_fn, n_bands: int,
-                         bucket_cap: int, query_name: str) -> DataFrame:
+                         bucket_cap: int) -> DataFrame:
     """Streaming near-dup ingest screen, generic over the perceptual-
     hash modality (image/audio/video) — the nd_stream_band_screen shape
     over the persisted signature index: streamed re-uploads (the %5==4
@@ -642,11 +554,8 @@ def _stream_phash_screen(spark: SparkSession, sf_dir: str, *,
     out = (verified.groupBy("doc_id")
            .agg(F.count("*").cast("long").alias("n_cands"),
                 F.min("hamming").cast("long").alias("min_hamming")))
-    q = _start_scoped(spark, out.writeStream.format("memory")
-                      .queryName(query_name)
-                      .outputMode("complete").trigger(availableNow=True))
-    _await_or_raise(q, 180)
-    return spark.table(query_name).orderBy("doc_id")
+    return (_run_to_memory(spark, out, "complete", timeout=180)
+            .orderBy("doc_id"))
 
 
 def _stream_phash_screen_oracle(h_cte: str, n_bands: int,
@@ -691,8 +600,7 @@ def nd_stream_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _stream_phash_screen(
         spark, sf_dir, frame_fn=phash_frame, index_fn=phash_index,
-        n_bands=4, bucket_cap=PHASH_BUCKET_CAP,
-        query_name="stream_image_phash")
+        n_bands=4, bucket_cap=PHASH_BUCKET_CAP)
 
 
 def _stream_image_phash_oracle() -> str:
@@ -713,8 +621,7 @@ def nd_stream_audio_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _stream_phash_screen(
         spark, sf_dir, frame_fn=audio_phash_frame,
         index_fn=audio_phash_index,
-        n_bands=4, bucket_cap=APHASH_BUCKET_CAP,
-        query_name="stream_audio_phash")
+        n_bands=4, bucket_cap=APHASH_BUCKET_CAP)
 
 
 def _stream_audio_phash_oracle() -> str:
@@ -736,8 +643,7 @@ def nd_stream_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _stream_phash_screen(
         spark, sf_dir, frame_fn=video_phash_frame,
         index_fn=video_phash_index,
-        n_bands=VPHASH_NBANDS, bucket_cap=VPHASH_BUCKET_CAP,
-        query_name="stream_video_phash")
+        n_bands=VPHASH_NBANDS, bucket_cap=VPHASH_BUCKET_CAP)
 
 
 def _stream_video_phash_oracle() -> str:
@@ -763,13 +669,9 @@ def nd_stream_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                    quality_score_frame)
 
     w = fit_quality_weights(spark, sf_dir)
-    q = _start_scoped(spark, quality_score_frame(
+    scored = quality_score_frame(
         _doc_stream(spark, sf_dir).select("doc_id", "text"), w)
-        .writeStream.format("memory")
-        .queryName("stream_quality_gate")
-        .outputMode("append").trigger(availableNow=True))
-    _await_or_raise(q, 120)
-    return spark.table("stream_quality_gate").orderBy("doc_id")
+    return _run_to_memory(spark, scored, "append").orderBy("doc_id")
 
 
 def nd_stream_incremental_dedup(spark: SparkSession,
@@ -806,12 +708,7 @@ def nd_stream_incremental_dedup(spark: SparkSession,
     flagged = (batch.join(corpus, batch.fp == corpus.cfp, "left")
                .select("doc_id", "fp",
                        F.col("cfp").isNull().alias("is_new")))
-    q = _start_scoped(spark, flagged
-                      .writeStream.format("memory")
-                      .queryName("stream_incr_dedup_gate")
-                      .outputMode("append").trigger(availableNow=True))
-    _await_or_raise(q, 120)
-    return spark.table("stream_incr_dedup_gate").orderBy("doc_id")
+    return _run_to_memory(spark, flagged, "append").orderBy("doc_id")
 
 
 def nd_stream_band_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -849,12 +746,12 @@ def nd_stream_band_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = fresh.unionByName(recrawl)
     # Short docs are dropped on the CHEAP equivalent predicate (a doc
     # has shingles iff it has >= MH_SHINGLE_N words; _word_hashes is
-    # size-preserving) placed BEFORE the hash projections. The r14
-    # before-form filtered `size(sk) > 0` AFTER them, and predicate
-    # pushdown inlined the ENTIRE rolling-shingle expression into the
-    # scan filter with _word_hashes re-inlined per window term — the
-    # documented 50x HOF re-evaluation trap, arriving via the
-    # optimizer (19.4 s -> ~1 s for the whole screen at sf0.1).
+    # size-preserving) placed BEFORE the hash projections. Filtering
+    # `size(sk) > 0` AFTER them instead lets predicate pushdown inline
+    # the ENTIRE rolling-shingle expression into the scan filter with
+    # _word_hashes re-inlined per window term — the documented 50x HOF
+    # re-evaluation trap, arriving via the optimizer (19.4 s -> ~1 s for
+    # the whole screen at sf0.1).
     from bacalhau_spark.functions import words
     from bacalhau_spark.operators.dedup import MH_SHINGLE_N
     batch = batch.where(F.size(words("text")) >= MH_SHINGLE_N)
@@ -873,8 +770,8 @@ def nd_stream_band_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact every batch LSH consumer probes) instead of re-deriving
     # the corpus signature lineage per call — signatures are per-doc
     # pure, so filtering the index by doc_id is exactly the old
-    # filter-then-sign corpus build (r14; the phash stream screens
-    # already read their index_fn for the static side).
+    # filter-then-sign corpus build (the phash stream screens read
+    # their index_fn for the static side the same way).
     from bacalhau_spark.operators.dedup import minhash_signature_index
     corpus_keys = (minhash_signature_index(spark, sf_dir)
                    .where(F.col("doc_id") % 5 != 4)
@@ -887,12 +784,8 @@ def nd_stream_band_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = (bands.join(corpus_idx, "bkey")
             .groupBy("doc_id")
             .agg(F.count("*").cast("int").alias("bands_hit")))
-    q = _start_scoped(spark, hits
-                      .writeStream.format("memory")
-                      .queryName("stream_band_screen_gate")
-                      .outputMode("complete").trigger(availableNow=True))
-    _await_or_raise(q, 180)
-    return spark.table("stream_band_screen_gate").orderBy("doc_id")
+    return (_run_to_memory(spark, hits, "complete", timeout=180)
+            .orderBy("doc_id"))
 
 
 def _emb_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -958,12 +851,7 @@ def nd_stream_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                    (F.col("pos") + 1).cast("int").alias("rank"),
                    F.col("s.nn").alias("nn"),
                    F.col("s.cos").alias("cos")))
-    qh = _start_scoped(spark, out
-                       .writeStream.format("memory")
-                       .queryName("stream_ann_probe")
-                       .outputMode("complete").trigger(availableNow=True))
-    _await_or_raise(qh, 180)
-    return (spark.table("stream_ann_probe")
+    return (_run_to_memory(spark, out, "complete", timeout=180)
             .orderBy("vec_id", "rank"))
 
 
@@ -1036,29 +924,15 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_stream_topk(spark: SparkSession, sf_dir: str,
-                    table_name: str = "stream_topk",
-                    timeout_sec: int = 120) -> DataFrame:
-    q = _start_scoped(spark, (
-        stream_topk(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, timeout_sec)
-    return (spark.table(table_name)
-            .select("user_id", "n", "total_mv",
-                    (F.col("total_mv") / F.lit(1000.0)).alias("total"))
-            .orderBy(F.col("total_mv").desc(), "user_id"))
-
-
 def nd_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming top-k, oracle-gated: integer accumulation makes the
     set + ordering deterministic (see stream_topk); the one double in
     the output is a single int/1000.0 division, bit-identical across
     engines."""
-    return run_stream_topk(spark, sf_dir, table_name="gate_topk")
+    return (_run_to_memory(spark, stream_topk(spark, sf_dir), "complete")
+            .select("user_id", "n", "total_mv",
+                    (F.col("total_mv") / F.lit(1000.0)).alias("total"))
+            .orderBy(F.col("total_mv").desc(), "user_id"))
 
 
 _TOPK_ORACLE = f"""
@@ -1072,8 +946,7 @@ ORDER BY total_mv DESC, user_id LIMIT {TOPK_K}
 """
 
 
-def ewma_user_stream(spark: SparkSession, sf_dir: str,
-                     stream: DataFrame | None = None) -> DataFrame:
+def ewma_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming form of [[nd_ewma_smooth]]: the per-user alpha=1/2 EWMA
     as keyed streaming state (applyInPandasWithState) — running
     (ewma_milli, n) per user instead of the batch form's collected
@@ -1104,7 +977,7 @@ def ewma_user_stream(spark: SparkSession, sf_dir: str,
         # micro-batch rows span multiple chunks (> arrow maxRecordsPer
         # Batch) arrives as 2+ pdfs in shuffle-read order, and sorting
         # each chunk independently would fold the order-dependent
-        # recurrence out of (ts, event_id) order (round-12 review)
+        # recurrence out of (ts, event_id) order
         batch = _pd.concat(list(pdf_iter), ignore_index=True)
         for v in batch.sort_values(["ts", "event_id"])["v"]:
             v = int(v)
@@ -1114,8 +987,7 @@ def ewma_user_stream(spark: SparkSession, sf_dir: str,
         yield _pd.DataFrame({"user_id": [key[0]], "n_events": [n],
                              "ewma_milli": [ewma]})
 
-    src = stream if stream is not None else _event_stream(spark, sf_dir)
-    milli = src.select(
+    milli = _event_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id",
         F.round(F.col("value") * 1000).cast("long").alias("v"))
     return milli.groupBy("user_id").applyInPandasWithState(
@@ -1123,21 +995,12 @@ def ewma_user_stream(spark: SparkSession, sf_dir: str,
         "ewma long, n long", "update", GroupStateTimeout.NoTimeout)
 
 
-def nd_stream_ewma(spark: SparkSession, sf_dir: str,
-                   table_name: str = "gate_stream_ewma") -> DataFrame:
+def nd_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EWMA, oracle-gated: shares nd_ewma_smooth's FULL
     value-hash oracle (identical integer fold, identical columns) —
     multi-batch equality vs the batch twin additionally graded across a
     real 2-file micro-batch boundary in tests/test_streaming.py."""
-    q = _start_scoped(spark, (
-        ewma_user_stream(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, 120)
-    raw = spark.table(table_name)
+    raw = _run_to_memory(spark, ewma_user_stream(spark, sf_dir), "update")
     win = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (raw.withColumn("_rn", F.row_number().over(win))
             .where(F.col("_rn") == 1)
@@ -1145,8 +1008,7 @@ def nd_stream_ewma(spark: SparkSession, sf_dir: str,
             .orderBy("user_id"))
 
 
-def nd_stream_hll_users(spark: SparkSession, sf_dir: str,
-                        table_name: str = "stream_hll") -> DataFrame:
+def nd_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming distinct-user estimation per 6-hour tumbling window —
     the HLL registers maintained AS the aggregation state: max-merge is
     idempotent and monotone, so micro-batch boundaries are invisible by
@@ -1172,14 +1034,7 @@ def nd_stream_hll_users(spark: SparkSession, sf_dir: str,
                 hll_rho(F.col("fp")).alias("rho"))
         .groupBy("window_start", "j")
         .agg(F.max("rho").alias("m_j")))
-    q = _start_scoped(spark, (
-        regs_stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    ))
-    _await_or_raise(q, 120)
-    regs = spark.table(table_name)
+    regs = _run_to_memory(spark, regs_stream, "complete")
     truth = (table(spark, sf_dir, "events")
              .groupBy(F.window("ts", "6 hours").alias("w"))
              .agg(F.countDistinct("user_id").alias("n_true"))
@@ -1193,8 +1048,7 @@ def nd_stream_hll_users(spark: SparkSession, sf_dir: str,
             .orderBy("window_start"))
 
 
-def nd_stream_heavy_hitters(spark: SparkSession, sf_dir: str,
-                            table_name: str = "stream_cms") -> DataFrame:
+def nd_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming count-min-sketch maintenance: token frequencies tracked
     over an unbounded DOCUMENT stream with BOUNDED state — the
     complete-mode aggregation state is exactly the CMS_D × CMS_W
@@ -1225,11 +1079,7 @@ def nd_stream_heavy_hitters(spark: SparkSession, sf_dir: str,
             .select(cms_x(F.col("tok")).alias("x")))
     counters = (toks.select(cms_positions()).select("sp.seed", "sp.p")
                 .groupBy("seed", "p").agg(F.count("*").alias("c")))
-    q = _start_scoped(spark, counters.writeStream.format("memory")
-                      .queryName(table_name).outputMode("complete")
-                      .trigger(availableNow=True))
-    _await_or_raise(q, 120)
-    sketch = spark.table(table_name)
+    sketch = _run_to_memory(spark, counters, "complete")
     dt = (table(spark, sf_dir, "documents")
           .select(F.explode(words("text")).alias("tok")).distinct()
           .select("tok", cms_x(F.col("tok")).alias("x")))
@@ -1309,41 +1159,26 @@ QUERIES = {
         "FROM events GROUP BY 1, 2 ORDER BY ws, event_type",
     ),
     "nd_stream_static_join": (
-        lambda spark, sf_dir: run_stream_static_join(
-            spark, sf_dir, table_name="gate_ssj_static"),
-        # stream-static enrichment counts must equal the batch join's
+        nd_stream_static_join,
         "SELECT c_mktsegment, COUNT(*) AS n "
         "FROM events JOIN customer ON user_id = c_custkey "
         "GROUP BY c_mktsegment ORDER BY c_mktsegment",
     ),
     "nd_stream_stream_join": (
-        lambda spark, sf_dir: run_stream_stream_join(
-            spark, sf_dir, table_name="gate_ssj"),
-        # the append-mode pair SET is deterministic (order is not; the gate
-        # hashes order-insensitively)
+        nd_stream_stream_join,
         "SELECT p.user_id, p.event_id AS p_id, c.event_id AS c_id "
         "FROM events p JOIN events c ON p.user_id = c.user_id "
         "AND p.event_type = 'purchase' AND c.event_type = 'click' "
         "AND c.ts >= p.ts AND c.ts <= p.ts + INTERVAL 1 HOUR",
     ),
-    # First-arrival order INSIDE a batch decides which duplicate's
-    # event_id survives — engine-specific by design (exercised in
-    # tests/test_streaming.py). The deduped KEY SET, however, is fully
-    # deterministic, so the registry row gates on the key projection
-    # re-sorted after the sink (determinized round 5, same recipe as
-    # sessions/stateful).
     "nd_stream_dedup": (
-        lambda spark, sf_dir: (
-            run_stream_dedup(spark, sf_dir, table_name="gate_dedup")
-            .select("user_id", "event_type")
-            .orderBy("user_id", "event_type")),
+        nd_stream_dedup,
         "SELECT DISTINCT user_id, event_type FROM events "
         "ORDER BY user_id, event_type",
     ),
-    # Determinized round 5: the single-file fixture runs as one
-    # availableNow micro-batch, a final batch re-sort removes sink order,
-    # and the one float fold is rounded on both sides — so both formerly
-    # rows-only queries now carry full value-hash oracles.
+    # the single-file fixture runs as one availableNow micro-batch, a
+    # final batch re-sort removes sink order, and the one float fold is
+    # rounded on both sides — so both rows carry full value-hash oracles
     "nd_stream_sessions": (nd_stream_sessions, _SESSIONIZE_ORACLE),
     "nd_stream_incremental_dedup": (nd_stream_incremental_dedup,
                                     _STREAM_INCR_ORACLE),

@@ -14,19 +14,17 @@ from pyspark.sql import functions as F
 
 from bacalhau_spark.catalog import table
 from bacalhau_spark.operators.windows import nd_sessionize
-from bacalhau_spark.streaming.events import (batch_purchase_click_join,
+from bacalhau_spark.streaming.events import (_run_to_memory,
+                                             batch_purchase_click_join,
+                                             nd_stream_sessions,
+                                             nd_stream_tumbling,
                                              q28_tumbling_window,
-                                             run_stateful_fold,
-                                             run_stream_foreach_batch,
-                                             run_stream_session_to_memory,
-                                             run_stream_stream_join,
-                                             run_stream_to_memory)
+                                             stateful_user_fold)
 
 
 def test_stream_equals_batch(spark, sf_dir):
     batch = q28_tumbling_window(spark, sf_dir).collect()
-    stream = run_stream_to_memory(spark, sf_dir,
-                                  table_name="t_stream_q28").collect()
+    stream = nd_stream_tumbling(spark, sf_dir).collect()
     assert len(batch) == len(stream)
     b = {(r["ws"], r["event_type"]): (r["c"], r["s"]) for r in batch}
     s = {(r["ws"], r["event_type"]): (r["c"], r["s"]) for r in stream}
@@ -35,16 +33,15 @@ def test_stream_equals_batch(spark, sf_dir):
 
 def test_stream_session_equals_batch(spark, sf_dir):
     batch = nd_sessionize(spark, sf_dir).collect()
-    stream = run_stream_session_to_memory(
-        spark, sf_dir, table_name="t_stream_sessions").collect()
+    stream = nd_stream_sessions(spark, sf_dir).collect()
     b = {(r["user_id"], r["s_start"], r["s_end"]): r["n"] for r in batch}
     s = {(r["user_id"], r["s_start"], r["s_end"]): r["n"] for r in stream}
     assert b == s
 
 
 def test_stateful_fold_equals_batch(spark, sf_dir):
-    got = run_stateful_fold(spark, sf_dir,
-                            table_name="t_stream_state").collect()
+    got = _run_to_memory(spark, stateful_user_fold(spark, sf_dir),
+                         "update").collect()
     want = (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -60,9 +57,9 @@ def test_stateful_fold_equals_batch(spark, sf_dir):
 
 
 def test_stream_stream_join_equals_batch(spark, sf_dir):
+    from bacalhau_spark.streaming.events import nd_stream_stream_join
     got = {(r["user_id"], r["p_id"], r["c_id"])
-           for r in run_stream_stream_join(
-               spark, sf_dir, table_name="t_ssj").collect()}
+           for r in nd_stream_stream_join(spark, sf_dir).collect()}
     want = {(r["user_id"], r["p_id"], r["c_id"])
             for r in batch_purchase_click_join(spark, sf_dir).collect()}
     assert want, "batch join produced no pairs (fixture regression)"
@@ -70,10 +67,9 @@ def test_stream_stream_join_equals_batch(spark, sf_dir):
 
 
 def test_stream_static_join_equals_batch(spark, sf_dir):
-    from bacalhau_spark.streaming.events import run_stream_static_join
+    from bacalhau_spark.streaming.events import nd_stream_static_join
     got = {(r["c_mktsegment"], r["n"]) for r in
-           run_stream_static_join(spark, sf_dir,
-                                  table_name="t_ss_static").collect()}
+           nd_stream_static_join(spark, sf_dir).collect()}
     want = {(r["c_mktsegment"], r["n"]) for r in
             table(spark, sf_dir, "events")
             .join(table(spark, sf_dir, "customer"),
@@ -85,25 +81,15 @@ def test_stream_static_join_equals_batch(spark, sf_dir):
 def test_stream_dedup_one_row_per_key(spark, sf_dir):
     """Streaming dropDuplicates must emit exactly one row per
     (user_id, event_type) — same key set as batch distinct."""
-    from bacalhau_spark.streaming.events import run_stream_dedup
-    got = run_stream_dedup(spark, sf_dir, table_name="t_sdedup").collect()
+    from bacalhau_spark.streaming.events import stream_dedup
+    got = _run_to_memory(spark, stream_dedup(spark, sf_dir),
+                         "append").collect()
     keys = [(r["user_id"], r["event_type"]) for r in got]
     assert len(keys) == len(set(keys)), "duplicate keys survived"
     want = {(r["user_id"], r["event_type"])
             for r in table(spark, sf_dir, "events")
             .select("user_id", "event_type").distinct().collect()}
     assert set(keys) == want
-
-
-def test_foreach_batch_sink(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "fb_out")
-    batch_ids = run_stream_foreach_batch(spark, sf_dir, out)
-    assert batch_ids, "no micro-batches executed"
-    files = glob.glob(f"{out}/batch=*/*.parquet")
-    assert files, "foreachBatch wrote no parquet"
-    written = spark.read.parquet(f"{out}/batch={max(batch_ids)}")
-    batch = q28_tumbling_window(spark, sf_dir)
-    assert written.count() == batch.count()
 
 
 # ---------------------------------------------------------------------------
@@ -297,33 +283,24 @@ def test_multibatch_stream_cms_equals_batch(spark, sf_dir, tmp_path,
         [tuple(r) for r in expect.collect()]
 
 
-def test_multibatch_stream_ewma_equals_batch(spark, sf_dir, tmp_path):
+def test_multibatch_stream_ewma_equals_batch(spark, sf_dir, tmp_path,
+                                             monkeypatch):
     """The streaming EWMA across a REAL batch boundary: events split into
     2 time-ordered files, one per trigger, so the keyed (ewma, n) state
     RESUMES across micro-batches mid-recurrence. Because the fixture
-    streams in (ts, event_id) order, the stitched fold must equal the
-    batch twin's whole-history fold exactly — same integer recurrence,
+    streams in (ts, event_id) order, the stitched fold — the registry
+    row's max-n final-state selection included — must equal the batch
+    twin's whole-history fold exactly: same integer recurrence,
     value-identical columns."""
-    from pyspark.sql import Window
-
     from bacalhau_spark.operators.pipeline import nd_ewma_smooth
-    from bacalhau_spark.streaming.events import (_await_or_raise,
-                                                 ewma_user_stream)
+    from bacalhau_spark.registry import queries
+    from bacalhau_spark.streaming import events as ev
 
     split_dir = _split_events_fixture(sf_dir, tmp_path)
-    q = (ewma_user_stream(spark, sf_dir,
-                          stream=_paced_event_stream(spark, split_dir))
-         .writeStream.format("memory").queryName("ewma_mb")
-         .outputMode("update").trigger(availableNow=True)
-         .option("checkpointLocation", str(tmp_path / "ck_ewma"))
-         .start())
-    _await_or_raise(q, 120)
-    raw = spark.table("ewma_mb")
-    win = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    got = (raw.withColumn("_rn", F.row_number().over(win))
-           .where(F.col("_rn") == 1)
-           .select("user_id", "n_events", "ewma_milli")
-           .orderBy("user_id").collect())
+    monkeypatch.setattr(
+        ev, "_event_stream",
+        lambda spark_, _sf: _paced_event_stream(spark_, split_dir))
+    got = queries()["nd_stream_ewma"](spark, sf_dir).collect()
     expect = nd_ewma_smooth(spark, sf_dir).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in expect]
 
@@ -344,8 +321,7 @@ def test_multibatch_stream_hll_equals_batch(spark, sf_dir, tmp_path,
     monkeypatch.setattr(
         ev, "_event_stream",
         lambda spark_, _sf: _paced_event_stream(spark_, split_dir))
-    got = ev.nd_stream_hll_users(spark, sf_dir,
-                                 table_name="stream_hll_mb").collect()
+    got = ev.nd_stream_hll_users(spark, sf_dir).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in single]
 
 
@@ -504,18 +480,63 @@ def test_multibatch_html_extract_equals_batch(spark, sf_dir, tmp_path,
         [tuple(r) for r in want.collect()]
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_concurrent_stream_runs_share_no_sink(spark, sf_dir):
+    """Every memory-sink stream row submitted twice at once through
+    Engine.submit_async: each run names its own sink, so both copies
+    complete — a fixed sink name fails the second with Spark's
+    one-active-query-per-name rule — and each result equals the row's
+    single-run result. Afterwards the catalog holds no temp view any of
+    the runs made."""
+    from bacalhau_spark.engine import Engine, JobSpec
+    from bacalhau_spark.registry import queries
+    from bacalhau_spark.sources.sinks import result_manifest
+    from bacalhau_spark.streaming import events as ev
+
+    before = _temp_views(spark)
+    rows = [n for n in ev.QUERIES if n.startswith("nd_stream_")]
+    single = {n: result_manifest(ev.QUERIES[n][0](spark, sf_dir))
+              for n in rows}
+    eng = Engine(spark, queries())
+    # FIFO admission: the two copies of a row are adjacent, so they are
+    # admitted and run side by side
+    runs = [(n, eng.submit_async(JobSpec(query=n, inputs={"sf_dir": sf_dir},
+                                         verified=True)))
+            for n in rows for _ in range(2)]
+    failed = {}
+    for n, rid in runs:
+        try:
+            eng.wait(rid, timeout=600)
+        except Exception as exc:  # noqa: BLE001 — collected, asserted below
+            failed.setdefault(n, repr(exc)[:200])
+    assert not failed, failed
+    got = {}
+    for n, rid in runs:
+        got.setdefault(n, []).append(eng.describe(rid)["manifest"])
+    assert got == {n: [m, m] for n, m in single.items()}
+    assert _temp_views(spark) == before
+
+
 def test_failed_stream_start_removes_its_checkpoint_dir(spark, tmp_path,
                                                         monkeypatch):
     """A start() that raises after creating its checkpoint dir must not
-    leak the dir: the query never reaches the await path that removes
-    it on success."""
+    leak the dir or a sink view: start and cleanup share the runner's
+    one try/finally."""
     import os
+    import types
 
     from bacalhau_spark.streaming import events
 
     monkeypatch.setattr(events, "_STREAM_CKPT_BASE", str(tmp_path))
 
     class FailingWriter:
+        # a DataStreamWriter stand-in: every builder call chains
+        def __getattr__(self, _name):
+            return lambda *args, **kwargs: self
+
         def option(self, key, value):
             self.ckpt = value
             return self
@@ -524,13 +545,41 @@ def test_failed_stream_start_removes_its_checkpoint_dir(spark, tmp_path,
             os.makedirs(os.path.join(self.ckpt, "offsets"))
             raise RuntimeError("start failed")
 
+    before = _temp_views(spark)
+    frame = types.SimpleNamespace(writeStream=FailingWriter())
     with pytest.raises(RuntimeError, match="start failed"):
-        events._start_scoped(spark, FailingWriter())
+        events._run_to_memory(spark, frame, "append")
     assert not glob.glob(str(tmp_path / "bacalhau-stream-ckpt-*"))
+    assert not events._LIVE_CKPTS
+    assert _temp_views(spark) == before
 
 
-_UNAWAITED_START = """
-import os, sys, types
+def test_timed_out_stream_removes_its_checkpoint_dir_and_view(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A run whose await times out raises TimeoutError — never a
+    truncated result — and leaves neither its checkpoint dir nor its
+    sink's temp view behind."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from bacalhau_spark.streaming import events
+
+    monkeypatch.setattr(events, "_STREAM_CKPT_BASE", str(tmp_path))
+    monkeypatch.setattr(StreamingQuery, "awaitTermination",
+                        lambda self, timeout=None: False)
+    before = _temp_views(spark)
+    with pytest.raises(TimeoutError):
+        events._run_to_memory(
+            spark, events.stream_tumbling_window(spark, sf_dir),
+            "complete", timeout=1)
+    assert not glob.glob(str(tmp_path / "bacalhau-stream-ckpt-*"))
+    assert not events._LIVE_CKPTS
+    assert _temp_views(spark) == before
+    assert not [q for q in spark.streams.active
+                if (q.name or "").startswith("stream_")]
+
+
+_UNAWAITED_RUN = """
+import os, sys, threading, time, types
 from bacalhau_spark.streaming import events
 
 class Conf(dict):
@@ -540,22 +589,32 @@ class Conf(dict):
         self[key] = value
 
 class Writer:
+    def __getattr__(self, _name):
+        return lambda *args, **kwargs: self
     def option(self, key, value):
         self.ckpt = value
         return self
     def start(self):
         os.makedirs(os.path.join(self.ckpt, "offsets"))
-        return types.SimpleNamespace(id="never-awaited")
+        # an await that never returns
+        return types.SimpleNamespace(
+            awaitTermination=lambda timeout: threading.Event().wait())
 
-events._start_scoped(types.SimpleNamespace(conf=Conf()), Writer())
+spark = types.SimpleNamespace(conf=Conf())
+frame = types.SimpleNamespace(writeStream=Writer())
+threading.Thread(target=events._run_to_memory, args=(spark, frame, "append"),
+                 daemon=True).start()
+deadline = time.time() + 60
+while len(os.listdir(sys.argv[1])) < 2 and time.time() < deadline:
+    time.sleep(0.05)
 print(*os.listdir(sys.argv[1]))
 """
 
 
 def test_exit_sweeps_checkpoint_dirs_of_unawaited_streams(tmp_path):
-    """A query started but never awaited keeps its checkpoint dir for
-    the process's lifetime; at exit the process removes the dirs it
-    created, and no other process's."""
+    """A run still blocked in its await when the process exits keeps its
+    checkpoint dir for the process's lifetime; at exit the process
+    removes the dirs it created, and no other process's."""
     import os
     import subprocess
     import sys
@@ -566,7 +625,7 @@ def test_exit_sweeps_checkpoint_dirs_of_unawaited_streams(tmp_path):
     env = dict(os.environ, SPARK_GRAFT_STREAM_CKPT_DIR=str(tmp_path),
                PYTHONPATH=repo)
     out = subprocess.run(
-        [sys.executable, "-c", _UNAWAITED_START, str(tmp_path)],
+        [sys.executable, "-c", _UNAWAITED_RUN, str(tmp_path)],
         env=env, capture_output=True, text=True, timeout=120, check=True)
     created = set(out.stdout.split()) - {other.name}
     assert len(created) == 1 and \

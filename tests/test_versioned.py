@@ -139,77 +139,6 @@ def test_stream_replay_self_heals_crashed_slot(spark, sf_dir, tmp_path):
     assert read_version(spark, root).count() == 1 + t.num_rows
 
 
-def test_stream_indexed_ingest_keeps_index_in_lockstep(spark, sf_dir,
-                                                       tmp_path):
-    """stream_to_versioned_indexed: every micro-batch appends the
-    corpus version AND its derived-index version under the same batch
-    id — after N batches, index version k equals the transform of
-    corpus version k for every k (the index is fresh AT INGEST, no
-    separate stage_index_build epoch), and a crash between the two
-    commits re-converges on replay: the corpus's batch-id skip holds
-    while the missing index version still publishes."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from bacalhau_spark.catalog import table
-    from bacalhau_spark.sources.versioned import (
-        history, stream_to_versioned_indexed)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    t = pq.read_table(f"{sf_dir}/documents.parquet").sort_by("doc_id")
-    half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), str(src / "documents-0.parquet"))
-    pq.write_table(t.slice(half), str(src / "documents-1.parquet"))
-    schema = table(spark, sf_dir, "documents").schema
-
-    def index_fn(df):
-        return df.select("doc_id", F.md5("text").alias("fp"))
-
-    def stream():
-        return (spark.readStream.schema(schema)
-                .option("pathGlobFilter", "documents-*.parquet")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
-                .select("doc_id", "source", "text"))
-
-    root, iroot = str(tmp_path / "corpus"), str(tmp_path / "fp_index")
-    ck = str(tmp_path / "ck")
-
-    # batch 0 crashes BETWEEN the corpus commit and the index commit
-    boom = {"armed": True}
-
-    def crashing_index_fn(df):
-        if boom["armed"]:
-            boom["armed"] = False
-            raise RuntimeError("crash between the two commits")
-        return index_fn(df)
-
-    q = stream_to_versioned_indexed(stream(), root, iroot,
-                                    crashing_index_fn, ck)
-    try:
-        q.awaitTermination(120)
-    except Exception:  # noqa: BLE001 — the injected crash
-        pass
-    q.stop()
-    assert latest_version(root) == 1, "corpus batch 0 committed"
-    assert latest_version(iroot) == 0, "index batch 0 lost in the crash"
-
-    # replay from the same checkpoint: corpus skips, index catches up
-    q = stream_to_versioned_indexed(stream(), root, iroot, index_fn, ck)
-    assert q.awaitTermination(120)
-    q.stop()
-    assert latest_version(root) == 2
-    assert latest_version(iroot) == 2
-    assert [m.get("batch_id") for m in history(root)] == \
-        [m.get("batch_id") for m in history(iroot)]
-    for v in (1, 2):
-        corpus_v = read_version(spark, root, version=v)
-        idx_v = read_version(spark, iroot, version=v)
-        assert sorted(map(tuple, index_fn(corpus_v).collect())) == \
-            sorted(map(tuple, idx_v.collect())), f"lockstep broken at v{v}"
-
-
 def test_pointer_crash_heals_and_replay_skips(spark, sf_dir, tmp_path):
     """The OTHER crash point (round-12 review): a crash BETWEEN the
     manifest publish and the pointer flip leaves a fully-durable
@@ -266,22 +195,12 @@ def test_pointer_crash_heals_and_replay_skips(spark, sf_dir, tmp_path):
 
 
 def test_indexed_ingest_guards(spark, tmp_path):
-    """Attach-time alignment guard (a corpus bootstrapped out-of-band
-    would silently skew every corpus/index version pair) and the
-    empty-first-batch guard (a files=[] head is unreadable)."""
-    import pytest
+    """The streaming commit's empty-first-batch guard: an empty table
+    has no version to publish yet."""
+    from bacalhau_spark.sources.versioned import _commit_once
 
-    from bacalhau_spark.sources.versioned import (
-        _commit_once, stream_to_versioned_indexed)
-
-    root, iroot = str(tmp_path / "c"), str(tmp_path / "i")
-    write_version(_df(spark, [(1, "a")]), root)  # backfill, never indexed
-    with pytest.raises(ValueError, match="misaligned"):
-        stream_to_versioned_indexed(None, root, iroot, lambda d: d,
-                                    str(tmp_path / "ck"))
-
-    # empty FIRST batch: no version published (the head would be
-    # unreadable); empty LATER batch: appends a readable version
+    # empty FIRST batch: no version published; empty LATER batch:
+    # appends a readable version
     empty = _df(spark, [(1, "a")]).where("k < 0")
     fresh = str(tmp_path / "f")
     _commit_once(empty, fresh, batch_id=0)
@@ -610,62 +529,6 @@ def test_failed_publish_cleans_partial_vdir(spark, tmp_path):
                          mode="append") == 2
     assert sorted(r.k for r in read_version(spark, root).collect()) \
         == [1, 2]
-
-
-def test_empty_first_index_batch_keeps_lockstep(spark, sf_dir, tmp_path):
-    """A modality-sparse FIRST batch (index_fn yields zero rows) must
-    still publish index v1 — as a files=[] schema-bearing version —
-    or every later corpus/index pair is silently off by one (round-12
-    ADVICE). read_version reconstructs the empty snapshot from the
-    manifest's recorded dtypes."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from bacalhau_spark.catalog import table
-    from bacalhau_spark.sources.versioned import (
-        history, stream_to_versioned_indexed)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    t = pq.read_table(f"{sf_dir}/documents.parquet").sort_by("doc_id")
-    half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), str(src / "documents-0.parquet"))
-    pq.write_table(t.slice(half), str(src / "documents-1.parquet"))
-    schema = table(spark, sf_dir, "documents").schema
-    cut = t.column("doc_id")[half].as_py()
-
-    def index_fn(df):
-        # sparse on batch 0 (all doc_id < cut), populated on batch 1
-        return (df.where(F.col("doc_id") >= cut)
-                .select("doc_id", F.md5("text").alias("fp")))
-
-    def stream():
-        return (spark.readStream.schema(schema)
-                .option("pathGlobFilter", "documents-*.parquet")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
-                .select("doc_id", "source", "text"))
-
-    root, iroot = str(tmp_path / "corpus"), str(tmp_path / "idx")
-    q = stream_to_versioned_indexed(stream(), root, iroot, index_fn,
-                                    str(tmp_path / "ck"))
-    assert q.awaitTermination(120)
-    q.stop()
-    assert latest_version(root) == 2
-    assert latest_version(iroot) == 2, \
-        "sparse first batch must still publish index v1"
-    assert [m.get("batch_id") for m in history(root)] == \
-        [m.get("batch_id") for m in history(iroot)]
-    # v1 is the empty typed snapshot
-    v1 = read_version(spark, iroot, version=1)
-    assert v1.columns == ["doc_id", "fp"]
-    assert v1.count() == 0
-    # lockstep holds at every version
-    for v in (1, 2):
-        corpus_v = read_version(spark, root, version=v)
-        idx_v = read_version(spark, iroot, version=v)
-        assert sorted(map(tuple, index_fn(corpus_v).collect())) == \
-            sorted(map(tuple, idx_v.collect())), f"off by one at v{v}"
 
 
 def test_failed_pointer_flip_preserves_durable_version(spark, tmp_path,

@@ -17,18 +17,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bacalhau_spark import registry
 
-# The three streaming queries registered as lambdas (their production
-# bodies are the run_* functions; the lambdas add determinization
-# projections) carry no docstring — catalog text supplied here.
-_LAMBDA_DOCS = {
-    "nd_stream_static_join": "Stream-static enrichment join (events "
-    "stream x customer dim), counts per segment",
-    "nd_stream_stream_join": "Watermarked stream-stream interval join "
-    "(purchase -> click within 1h), append mode",
-    "nd_stream_dedup": "Streaming dropDuplicates; the registry row gates "
-    "on the deterministic deduped key set",
-}
-
 
 def main() -> None:
     lines = [
@@ -45,8 +33,6 @@ def main() -> None:
     for name, (fn, sql) in registry.ALL_QUERIES.items():
         mod = fn.__module__.replace("bacalhau_spark.", "")
         raw = inspect.getdoc(fn) or ""
-        if not raw and name in _LAMBDA_DOCS:
-            raw = _LAMBDA_DOCS[name]
         # first SENTENCE: split on period-followed-by-whitespace/eol, not
         # any period (decimals like 'cos >= 0.4' must survive)
         doc = re.split(r"\.(?:\s|$)", raw, maxsplit=1)[0]
