@@ -15,7 +15,6 @@ Mapping (SURVEY.md §2.5):
 from __future__ import annotations
 
 import argparse
-from functools import partial
 import sys
 
 from pyspark.sql import SparkSession
@@ -250,11 +249,15 @@ def cmd_index(args) -> int:
       manifest, fingerprint age) — the store's commit-log view.
     - `index build --sf-dir D [--kind K]` PRE-BUILDS indexes off the
       query path (an ingest job publishes the index; every later
-      session adopts instead of rebuilding). Kinds: sig, cand, winnow,
-      phash, aphash, vphash, pq, ivfpq, ivf, ivfvec, lshsig, canon,
-      extract, or all (canon/extract are the materialized crawl front
-      door; aphash/vphash the audio and video near-dup signatures;
-      ivfvec the cell-clustered inverted file whose probes file-prune).
+      session adopts instead of rebuilding). It runs the epoch ingest's
+      lanes (stages.index_ingest) over the store kinds K selects: a
+      store kind (stages.INDEX_KINDS: sig, cand, winnow, phash, aphash,
+      vphash, canon, extract, lshsig, ivf_coarse, ivf_cells,
+      ivf_vectors, pq_assign, pq_cent, ivfpq_codes, ivfpq_cent), a
+      family (pq, ivfpq, ivf = the coarse quantizer and its cells,
+      ivfvec = the cell-clustered inverted file with them) or all. A
+      kind's builder also builds the kinds before it in its chain.
+      Prints each built store kind's row count.
     - `index refresh --kind pq|ivfpq --sf-dir MERGED --parent PARENT`
       runs a product-quantizer family's staleness loop: encodes
       MERGED's new vectors against PARENT's published codebooks, and on
@@ -284,18 +287,16 @@ def cmd_index(args) -> int:
       (manifestless) are never age-swept.
 
     The product-quantizer kinds pq and ivfpq name families
-    (similarity.PQ_FAMILIES): build publishes codes and codebook, which
-    verify and drop select together with, for ivfpq, the coarse-
-    quantizer tables the codes are assigned under. A family's corpus
-    baseline is recorded lazily by its first staleness read, and drop
-    removes it whenever it removes the codes or codebook it was
-    measured under.
+    (similarity.PQ_FAMILIES): they select codes and codebook together
+    with, for ivfpq, the coarse-quantizer tables the codes are assigned
+    under. A family's corpus baseline is recorded lazily by its first
+    staleness read, and drop removes it whenever it removes the codes
+    or codebook it was measured under.
     """
     import json as _json
     import os
     import shutil as _shutil
 
-    from bacalhau_spark.operators import dedup
     from bacalhau_spark.operators.similarity import PQ_FAMILIES
     from bacalhau_spark.sources import indexstore
     from bacalhau_spark.sources import versioned as _v
@@ -511,67 +512,19 @@ def cmd_index(args) -> int:
                                "stale": r["stale"],
                                "action": r["action"]}))
         return 0
-    # build
+    # build: the epoch ingest's lanes over the selected store kinds
+    from bacalhau_spark.stages import INDEX_KINDS, index_ingest
+
+    kinds = (set(INDEX_KINDS) if args.kind == "all"
+             else _KIND_ALIASES.get(args.kind, {args.kind}))
+    if not kinds <= set(INDEX_KINDS):
+        print(f"index: unknown kind {args.kind!r}; one of "
+              f"{sorted(_KIND_ALIASES)}, a store kind "
+              f"{sorted(INDEX_KINDS)} or all", flush=True)
+        return 2
     spark = _get_spark(args.cpus)
-    builders = {
-        "sig": lambda: dedup.minhash_signature_index(spark, args.sf_dir),
-        "cand": lambda: dedup.band_candidate_index(spark, args.sf_dir),
-        "winnow": lambda: dedup.winnow_posting_index(spark, args.sf_dir),
-    }
-
-    def _phash():
-        from bacalhau_spark.operators.multimodal import phash_index
-        return phash_index(spark, args.sf_dir)
-
-    def _aphash():
-        from bacalhau_spark.operators.multimodal import audio_phash_index
-        return audio_phash_index(spark, args.sf_dir)
-
-    def _vphash():
-        from bacalhau_spark.operators.multimodal import video_phash_index
-        return video_phash_index(spark, args.sf_dir)
-
-    def _ivf():
-        from bacalhau_spark.operators.similarity import (ivf_cells_index,
-                                                         ivf_coarse_index)
-        ivf_coarse_index(spark, args.sf_dir)
-        return ivf_cells_index(spark, args.sf_dir)
-
-    def _ivfvec():
-        from bacalhau_spark.operators.similarity import ivf_vectors_index
-        return ivf_vectors_index(spark, args.sf_dir)
-
-    def _lshsig():
-        from bacalhau_spark.operators.similarity import lsh_signature_index
-        return lsh_signature_index(spark, args.sf_dir)
-
-    def _canon():
-        from bacalhau_spark.operators.web import canon_index
-        return canon_index(spark, args.sf_dir)
-
-    def _extract():
-        from bacalhau_spark.operators.web import html_extract_index
-        return html_extract_index(spark, args.sf_dir)
-
-    def _pq_family(fam):
-        # codes and codebook; the baseline is recorded by the first
-        # staleness read, not here
-        fam.code_index(spark, args.sf_dir)
-        return fam.centroid_index(spark, args.sf_dir)
-
-    builders.update(phash=_phash, aphash=_aphash, vphash=_vphash,
-                    **{name: partial(_pq_family, fam)
-                       for name, fam in families.items()},
-                    ivf=_ivf, ivfvec=_ivfvec, lshsig=_lshsig,
-                    canon=_canon, extract=_extract)
-    kinds = list(builders) if args.kind == "all" else [args.kind]
-    built = {}
-    for k in kinds:
-        if k not in builders:
-            print(f"index: unknown kind {k!r}; one of "
-                  f"{sorted(builders)} or all", flush=True)
-            return 2
-        built[k] = builders[k]().count()
+    built = {kind: n for kind, n, _version, _parent
+             in index_ingest(spark, args.sf_dir, kinds)}
     print(_json.dumps({"built": built, "store": root}))
     return 0
 
@@ -697,14 +650,15 @@ def build_parser() -> argparse.ArgumentParser:
                     help="refresh: the prior epoch's fixture dir whose "
                          "published codebook is the pinned baseline")
     ix.add_argument("--kind", default="all",
-                    help="sig|cand|winnow|phash|aphash|vphash|lshsig|"
-                         "pq|ivfpq|ivf|ivfvec|canon|extract|all "
-                         "(compound kinds select their store family for "
-                         "drop/verify: pq = assign+cent, ivfpq = "
-                         "codes+cent plus the coarse-quantizer tables, "
-                         "ivfvec = vectors plus those tables; drop also "
-                         "takes a dropped codebook's baseline; raw store "
-                         "kinds like pq_cent narrow to one table)")
+                    help="a store kind (sig, cand, winnow, phash, "
+                         "aphash, vphash, canon, extract, lshsig, "
+                         "ivf_coarse, pq_cent, ...), a family or all. "
+                         "A family selects its store kinds for build, "
+                         "drop and verify: pq = assign+cent, ivfpq = "
+                         "codes+cent plus the coarse-quantizer tables "
+                         "(ivf = coarse+cells), ivfvec = vectors plus "
+                         "those tables; drop also takes a dropped "
+                         "codebook's baseline")
     ix.add_argument("--stale-days", type=float, default=None,
                     help="drop only tables whose latest manifest is "
                          "older than N days (dead-content reclamation)")

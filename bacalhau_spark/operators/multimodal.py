@@ -234,13 +234,11 @@ def _bmp_gray_fn():
 
 
 def _thumb_bands_fn():
-    """Factory for the shared REAL-path frame helpers (ship-by-value
-    rule): `thumb` block-means an (h, w) grayscale matrix (or a flat
-    list) onto the 8-row x 9-col grid with numpy slice-sums, and
-    `bands` packs the 64 dHash gradient-sign bits into four 16-bit
-    integers — the one statement of the thumbnail/bit layout the
-    image closure uses once and the video closure uses per sampled
-    frame."""
+    """Factory for the REAL-path frame helpers (ship-by-value rule):
+    `thumb` block-means an (h, w) grayscale matrix (or a flat list)
+    onto the 8-row x 9-col grid with numpy slice-sums, and `bands`
+    packs the 64 dHash gradient-sign bits into four 16-bit integers —
+    the one statement of the thumbnail/bit layout."""
     import numpy as np
 
     def thumb(gray, w=None, h=None):
@@ -371,11 +369,12 @@ def image_near_dup_real(hashes: DataFrame,
                         max_hamming: int | None = None,
                         n_bands: int = 4) -> DataFrame:
     """Banded near-dup pairs over a REAL-media hash frame
-    (image/audio/video _real_frame output — `n_bands` 4 for the
-    single-hash modalities, VPHASH_NBANDS for video's time-aligned
-    signature): the same capped bucket-and-expand candidates + exact
-    xor/bit_count Hamming verify the fake-decode screens run — one
-    statement of the downstream machinery for every decode path."""
+    (image_phash_real_frame output, or any (doc_id, b0..) band frame —
+    `n_bands` 4 for the single-hash modalities, VPHASH_NBANDS for
+    video's time-aligned signature): the same capped bucket-and-expand
+    candidates + exact xor/bit_count Hamming verify the fake-decode
+    screens run — one statement of the downstream machinery for every
+    decode path."""
     if max_hamming is None:  # constant defined further down the module
         max_hamming = PHASH_MAX_HAMMING
     lean = hashes.select("doc_id",
@@ -970,145 +969,48 @@ def audio_phash_frame(docs: DataFrame) -> DataFrame:
 
 
 def decode_wav_samples(payload: bytes) -> tuple[int, int, list[int]]:
-    """Dependency-free REAL decoder for 16-bit PCM WAV bytes:
-    (sample_rate, n_channels, mono samples — channels averaged with
-    truncating integer division). The audio twin of decode_bmp_gray:
-    RIFF/fmt/data chunk walk with struct only, so the real-sample path
-    (decode → window energies → envelope dHash → band join) runs in any
-    environment; a soundfile library, when present, would extend
-    coverage through the same closures."""
-    # ONE statement of the parse (r13 review): the worker factory's
-    # closure is the implementation; this driver API converts to list
-    rate, channels, mono = _wav_mono_fn()(payload, full=True)
-    return rate, channels, [int(v) for v in mono]
-
-
-def _wav_mono_fn():
-    """Factory for the worker-side WAV decode (ships by value — the
-    _bmp_gray_fn rule; same math as decode_wav_samples — numpy
-    frombuffer for the sample plane, a real clip is millions of
-    samples)."""
+    """Dependency-free decoder for 16-bit PCM WAV bytes: (sample_rate,
+    n_channels, mono samples — channels averaged, truncated toward
+    zero). The audio twin of decode_bmp_gray: a RIFF/fmt/data chunk
+    walk with struct only, numpy for the sample plane."""
     import struct
 
     import numpy as np
 
-    def wav_mono(payload: bytes, full: bool = False):
-        payload = bytes(payload)
-        if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-            raise ValueError("not a WAV payload")
-        pos, n = 12, len(payload)
-        fmt = data = None
-        while pos + 8 <= n:
-            cid = payload[pos:pos + 4]
-            (size,) = struct.unpack_from("<I", payload, pos + 4)
-            body = payload[pos + 8:pos + 8 + size]
-            if cid == b"fmt ":
-                if len(body) < 16:
-                    raise ValueError("truncated WAV fmt chunk")
-                fmt = struct.unpack_from("<HHIIHH", body, 0)
-            elif cid == b"data":
-                data = body
-            pos += 8 + size + (size & 1)
-        if fmt is None or data is None:
-            raise ValueError("WAV missing fmt/data chunk")
-        audio_format, channels, rate, _bps, _al, bits = fmt
-        if audio_format != 1 or bits != 16 or channels < 1:
-            raise ValueError("unsupported WAV variant")
-        frames = len(data) // (2 * channels)
-        pcm = (np.frombuffer(data, dtype="<i2",
-                             count=frames * channels)
-               .reshape(frames, channels).astype(np.int64))
-        # channel average truncated toward zero (np.fix), any sign
-        mono = np.fix(pcm.sum(axis=1) / channels).astype(np.int64)
-        return (rate, channels, mono) if full else mono
-
-    return wav_mono
-
-
-REAL_APHASH_SCHEMA = ("doc_id bigint, n_samples int, decoder string, "
-                      "b0 bigint, b1 bigint, b2 bigint, b3 bigint")
-
-
-def audio_phash_real_frame(bin_df: DataFrame) -> DataFrame:
-    """REAL-sample envelope dHash over a (doc_id, payload binary)
-    frame: decode 16-bit PCM WAV (struct-only, any environment),
-    block-sum squared samples into APHASH_NWIN equal windows, pack the
-    64 energy-gradient bits into the SAME four 16-bit bands as
-    audio_phash_frame — so the capped band-candidate + exact-Hamming
-    machinery (image_near_dup_real works unchanged on this frame too)
-    composes over real audio. Undecodable payloads fall back to the
-    deterministic fake per payload (one bad blob never fails a batch);
-    the `decoder` column says which path each payload took."""
-    _wav_mono = _wav_mono_fn()  # driver-side: ship the local by value
-
-    def batches(it):
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
-        import numpy as _np
-
-        def energies(mono):
-            # 65 numpy slice-sums of squared samples — never a
-            # per-sample Python loop
-            nwin = APHASH_NWIN
-            m = _np.asarray(mono, dtype=_np.int64)
-            n = len(m)
-            sq = m * m
-            es = []
-            for w in range(nwin):
-                lo = w * n // nwin
-                hi = min(max((w + 1) * n // nwin, lo + 1), n)
-                es.append(int(sq[lo:hi].sum()))
-            return es
-
-        def fake_energies(payload):
-            h = _hashlib.md5(bytes(payload)).hexdigest()
-            return [int(_hashlib.md5(f"{h}:{w}".encode())
-                        .hexdigest()[:6], 16) for w in range(APHASH_NWIN)]
-
-        def bands(es):
-            out = []
-            for b in range(4):
-                v = 0
-                for i in range(16):
-                    if es[16 * b + i] > es[16 * b + i + 1]:
-                        v |= 1 << i
-                out.append(v)
-            return out
-
-        for pdf in it:
-            rows = {"doc_id": [], "n_samples": [], "decoder": [],
-                    "b0": [], "b1": [], "b2": [], "b3": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    mono = _wav_mono(payload)
-                    if len(mono) < APHASH_NWIN:
-                        raise ValueError("clip shorter than the window "
-                                         "grid")
-                    es, ns, dec = energies(mono), len(mono), "wav"
-                except Exception:
-                    es, ns, dec = fake_energies(payload), 0, "fake"
-                bb = bands(es)
-                rows["doc_id"].append(int(doc_id))
-                rows["n_samples"].append(ns)
-                rows["decoder"].append(dec)
-                for i in range(4):
-                    rows[f"b{i}"].append(bb[i])
-            yield _pd.DataFrame(rows)
-
-    return bin_df.select("doc_id", "payload").mapInPandas(
-        batches, REAL_APHASH_SCHEMA)
+    payload = bytes(payload)
+    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        raise ValueError("not a WAV payload")
+    pos, n = 12, len(payload)
+    fmt = data = None
+    while pos + 8 <= n:
+        cid = payload[pos:pos + 4]
+        (size,) = struct.unpack_from("<I", payload, pos + 4)
+        body = payload[pos + 8:pos + 8 + size]
+        if cid == b"fmt ":
+            if len(body) < 16:
+                raise ValueError("truncated WAV fmt chunk")
+            fmt = struct.unpack_from("<HHIIHH", body, 0)
+        elif cid == b"data":
+            data = body
+        pos += 8 + size + (size & 1)
+    if fmt is None or data is None:
+        raise ValueError("WAV missing fmt/data chunk")
+    audio_format, channels, rate, _bps, _al, bits = fmt
+    if audio_format != 1 or bits != 16 or channels < 1:
+        raise ValueError("unsupported WAV variant")
+    frames = len(data) // (2 * channels)
+    pcm = (np.frombuffer(data, dtype="<i2", count=frames * channels)
+           .reshape(frames, channels).astype(np.int64))
+    mono = np.fix(pcm.sum(axis=1) / channels).astype(np.int64)
+    return rate, channels, [int(v) for v in mono]
 
 
 def _avi_frames_fn():
-    """Factory for the worker-side AVI decode (ships by value — the
+    """Factory for the AVI decode (a local closure ships by value — the
     _bmp_gray_fn rule): payload -> (width, height, [grayscale frame
     matrices]) for uncompressed 24bpp AVI ('00db'/'00dc' DIB frames —
-    the RIFF sibling of the BMP/WAV parsers, so the REAL video path
-    runs in any environment; a codec library would extend coverage
-    through the same closure). Frame pixel math is numpy-vectorized
-    like the BMP path."""
+    the RIFF sibling of the BMP/WAV parsers). Frame pixel math is
+    numpy-vectorized like the BMP path."""
     import struct
 
     import numpy as np
@@ -1153,72 +1055,6 @@ def _avi_frames_fn():
         return w, h, grays
 
     return avi_frames
-
-
-def video_phash_real_frame(bin_df: DataFrame) -> DataFrame:
-    """REAL-frame video signature over a (doc_id, payload binary)
-    frame: decode uncompressed-AVI DIB frames (struct+numpy, any
-    environment), sample VPHASH_NFRAMES frames EVENLY across the clip,
-    dHash each sampled frame exactly like a still (block-mean 8x9
-    thumbnail, gradient signs), and pack the per-frame bands into the
-    SAME 16-band time-aligned layout as video_phash_frame — so
-    phash_candidate_pairs(n_bands=16) and the Hamming verify compose
-    unchanged over real video (image_near_dup_real with
-    n_bands=VPHASH_NBANDS, max_hamming=VPHASH_MAX_HAMMING). The
-    capability triplet closes: image (BMP), audio (WAV), video (AVI)
-    all decode real bytes through the fake paths' exact band
-    machinery. Undecodable payloads fall back per payload."""
-    _avi = _avi_frames_fn()
-    thumb, frame_bands = _thumb_bands_fn()
-    # bind the module constants as plain ints so the worker closure
-    # ships them by value (a module-global reference would pickle by
-    # name and break foreign-cwd runs)
-    nbands, nframes = VPHASH_NBANDS, VPHASH_NFRAMES
-
-    def batches(it):
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
-        def fake_bands(payload):
-            hh = _hashlib.md5(bytes(payload)).hexdigest()
-            return [int(_hashlib.md5(f"{hh}:{k}".encode())
-                        .hexdigest()[:4], 16) for k in range(nbands)]
-
-        def decode(payload):
-            try:
-                w, h, grays = _avi(payload)
-            except Exception:
-                return fake_bands(payload), 0, 0, 0, "fake"
-            n = len(grays)
-            # even sampling across the clip (first and last frame
-            # always included when n > 1)
-            idx = [(k * (n - 1)) // (nframes - 1)
-                   if n > 1 else 0 for k in range(nframes)]
-            bands = []
-            for f in idx:
-                bands.extend(frame_bands(thumb(grays[f])))
-            return bands, w, h, n, "avi"
-
-        for pdf in it:
-            rows = {"doc_id": [], "width": [], "height": [],
-                    "n_frames": [], "decoder": []}
-            rows.update({f"b{k}": [] for k in range(nbands)})
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                bands, w, h, n, dec = decode(payload)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_frames"].append(n)
-                rows["decoder"].append(dec)
-                for k in range(nbands):
-                    rows[f"b{k}"].append(bands[k])
-            yield _pd.DataFrame(rows)
-
-    schema = ("doc_id bigint, width int, height int, n_frames int, "
-              "decoder string, " + ", ".join(
-                  f"b{k} bigint" for k in range(VPHASH_NBANDS)))
-    return bin_df.select("doc_id", "payload").mapInPandas(batches, schema)
 
 
 def audio_phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:

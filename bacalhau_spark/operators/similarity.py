@@ -32,7 +32,7 @@ from bacalhau_spark.functions import cosine
 from bacalhau_spark.session import SessionCache
 from bacalhau_spark.sources.indexstore import (cached_index,
                                                docs_fingerprint,
-                                               index_table_root,
+                                               published_manifest,
                                                rowwise_index,
                                                scan_table_windows,
                                                table_part_paths)
@@ -503,9 +503,9 @@ def ivf_vectors_pruned(spark: SparkSession, sf_dir: str,
     manifest-stat pruned read (`cluster in cells`) that opens only the
     files whose recorded cell range intersects the probe set — the
     two-phase ANN read with the gather phase actually skipping data.
-    Falls back to a row filter over the session frame when the store
-    was unusable (read-only tmp, empty head) — correctness never
-    depends on pruning."""
+    Falls back to a row filter when the frame is session-local (an
+    unusable store, an empty head, or a head the store refused to
+    adopt) — correctness never depends on pruning."""
     from bacalhau_spark.sources import versioned
 
     frame = ivf_vectors_index(spark, sf_dir)  # ensures built/published
@@ -513,17 +513,12 @@ def ivf_vectors_pruned(spark: SparkSession, sf_dir: str,
         # no probed cells (no query rows): empty result, and the
         # fallback's isin(*[]) below would raise
         return frame.where(F.lit(False))
-    root = index_table_root(sf_dir, "ivf_vectors", "embeddings",
-                            rev=IVF_REV)
-    try:
-        man = versioned.latest_manifest(root)
-    except Exception:  # noqa: BLE001 — fallback path decides
-        man = None
-    if man and man.get("files"):
-        return versioned.read_version(
-            spark, root, version=man["version"],
-            predicate=[("cluster", "in", tuple(cells))])
-    return frame.where(F.col("cluster").isin(*cells))
+    man = published_manifest(spark, frame)
+    if man is None:
+        return frame.where(F.col("cluster").isin(*cells))
+    return versioned.read_version(
+        spark, man["root"], version=man["version"],
+        predicate=[("cluster", "in", tuple(cells))])
 
 
 def nd_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

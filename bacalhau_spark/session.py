@@ -127,6 +127,10 @@ class SessionCache:
         with self._lock:
             return list(self._scoped(spark).values())
 
+    def items(self, spark: SparkSession) -> list:
+        with self._lock:
+            return list(self._scoped(spark).items())
+
     def evict(self, spark: SparkSession, match=None) -> list:
         """Remove this session's entries whose key satisfies `match`
         (all of them by default); returns the removed values."""

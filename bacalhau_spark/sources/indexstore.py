@@ -455,18 +455,29 @@ def cached_index(spark: SparkSession, sf_dir: str, kind: str, build, *,
     return FRAMES.setdefault(spark, key, (out, root))[0]
 
 
-def published_rows(spark: SparkSession, sf_dir: str, kind: str,
-                   frame: DataFrame, *, tbl: str = "documents",
-                   rev: int = 1) -> int | None:
-    """`frame`'s row count without a Spark job, when `frame` is this
-    session's scan of a published table (what cached_index returned for
-    `kind`): the count the manifest recorded from the parquet footers.
-    None for a session-local frame, a frame the session tier does not
-    hold, or a manifest written before row counts were recorded."""
-    hit = FRAMES.get(spark, _tier1_key(sf_dir, kind, tbl, rev))
-    if hit is None or hit[0] is not frame or hit[1] is None:
-        return None
-    return (versioned.latest_manifest(hit[1]) or {}).get("n_rows")
+def _adopted_root(spark: SparkSession, frame: DataFrame) -> str | None:
+    """The persisted table root `frame`'s tier-1 entry names: the table
+    it was read from, or for a view the root of its base; else None."""
+    return next((r for f, r in FRAMES.values(spark) if f is frame), None)
+
+
+def published_manifest(spark: SparkSession,
+                       frame: DataFrame) -> dict | None:
+    """The latest manifest of the persisted table that tier 1 says
+    `frame` was read from, with the table's directory under `root`: what
+    a consumer of cached_index's frame looks its artifact up by, instead
+    of re-deriving the table's address. None for a session-local frame
+    (including the fallback from a head the store refused to adopt), a
+    view derived from an artifact, and any frame tier 1 does not hold."""
+    for (_src, _fp, kind, tbl, rev), (f, root) in FRAMES.items(spark):
+        if f is frame and root is not None:
+            man = versioned.latest_manifest(root)
+            props = (man or {}).get("props", {})
+            # a view's entry carries its base's root under its own name
+            if (props.get("kind"), props.get("table"),
+                    props.get("builder_rev", 1)) == (kind, tbl, rev):
+                return dict(man, root=root)
+    return None
 
 
 def rowwise_index(spark: SparkSession, sf_dir: str, kind: str, transform,
@@ -503,9 +514,8 @@ def session_view(spark: SparkSession, sf_dir: str, name: str, base, make):
             _touch_adopted(hit[1])
         return hit[0]
     frame = base()
-    # the base's own entry names the root it was adopted from (a view's
-    # entry carries its base's), so the view can refresh it on a hit
-    root = next((r for f, r in FRAMES.values(spark) if f is frame), None)
+    # the view carries its base's root, so a view hit refreshes it
+    root = _adopted_root(spark, frame)
     made = make(frame)
     # same-path entries under an older fingerprint are superseded (the
     # source was rewritten in place): release them, or N rewrites pin N

@@ -66,17 +66,49 @@ def stage_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.col("content").alias("text")))
 
 
-# stage_index_build's kinds as dependency chains: each kind's builder
-# calls the builders of the kinds before it in its chain (cand bands the
-# signatures; the IVF cells, vectors and IVF-PQ kinds read the coarse
-# quantizer; the PQ codebook reads the codes), and no builder calls into
-# another chain. One chain is built in order on one lane, so no kind is
-# built twice.
-INGEST_CHAINS = (("sig", "cand"), ("winnow",), ("phash",), ("aphash",),
-                 ("vphash",), ("canon",), ("extract",), ("lshsig",),
-                 ("ivf_coarse", "ivf_cells", "ivf_vectors", "ivfpq_codes",
-                  "ivfpq_cent"),
-                 ("pq_assign", "pq_cent"))
+_DEDUP = "bacalhau_spark.operators.dedup"
+_MEDIA = "bacalhau_spark.operators.multimodal"
+_WEB = "bacalhau_spark.operators.web"
+_SIM = "bacalhau_spark.operators.similarity"
+
+# Every store kind the epoch ingest publishes, in row order: kind ->
+# (builder module, builder name, the kind it follows in its chain). A
+# builder calls the builders of the kinds before it in its chain (cand
+# bands the signatures; the IVF cells, vectors and IVF-PQ kinds read the
+# coarse quantizer; the PQ codebook reads the codes), and no builder
+# calls into another chain. Builders are looked up when the ingest runs,
+# so a wrapped or patched module attribute is the one called.
+INDEX_KINDS = {
+    "sig": (_DEDUP, "minhash_signature_index", None),
+    "cand": (_DEDUP, "band_candidate_index", "sig"),
+    "winnow": (_DEDUP, "winnow_posting_index", None),
+    "phash": (_MEDIA, "phash_index", None),
+    "aphash": (_MEDIA, "audio_phash_index", None),
+    "vphash": (_MEDIA, "video_phash_index", None),
+    "canon": (_WEB, "canon_index", None),
+    "extract": (_WEB, "html_extract_index", None),
+    "lshsig": (_SIM, "lsh_signature_index", None),
+    "ivf_coarse": (_SIM, "ivf_coarse_index", None),
+    "ivf_cells": (_SIM, "ivf_cells_index", "ivf_coarse"),
+    "ivf_vectors": (_SIM, "ivf_vectors_index", "ivf_cells"),
+    "pq_assign": (_SIM, "pq_code_index", None),
+    "pq_cent": (_SIM, "pq_centroid_index", "pq_assign"),
+    "ivfpq_codes": (_SIM, "ivfpq_code_index", "ivf_vectors"),
+    "ivfpq_cent": (_SIM, "ivfpq_centroid_index", "ivfpq_codes"),
+}
+
+
+def _chains() -> tuple:
+    """INDEX_KINDS as chains, in the order of their first kinds: one
+    chain is built in order on one lane, so no kind is built twice."""
+    chain_of: dict[str, list] = {}
+    for kind, (_module, _attr, after) in INDEX_KINDS.items():
+        chain_of[kind] = chain_of[after] if after else []
+        chain_of[kind].append(kind)
+    return tuple(tuple(c) for k, c in chain_of.items() if c[0] == k)
+
+
+INGEST_CHAINS = _chains()
 
 
 def lane_count(spark: SparkSession) -> int:
@@ -129,87 +161,54 @@ def run_in_lanes(spark: SparkSession, chains, build) -> None:
         raise errors[0]
 
 
-def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entry stage: the INDEX-INGEST job as a pipeline verb — pre-build
-    and publish the corpus's persisted per-doc indexes (minhash
-    signatures, image/audio/video perceptual hashes, the materialized
-    crawl front door) OFF the query path: the production shape where
-    one ingest job per crawl epoch publishes the artifacts and every
-    later consumer — batch query, streaming screen, next session —
-    adopts. On an appended corpus the build delta-adopts (only new
-    shards hashed; sources.indexstore.cached_index). Emits the store's
-    commit-log view for the built kinds: (kind, n_rows, version,
-    delta_parent) — a deterministic function of the corpus content, so
-    the stage output is graded like any other stage's. The kinds build
-    chain by chain on parallel lanes (INGEST_CHAINS, run_in_lanes); the
-    rows keep the declared kind order."""
-    from bacalhau_spark.operators.dedup import (band_candidate_index,
-                                                minhash_signature_index,
-                                                winnow_posting_index)
-    from bacalhau_spark.operators.multimodal import (audio_phash_index,
-                                                     phash_index,
-                                                     video_phash_index)
-    from bacalhau_spark.operators.similarity import (IVF_REV,
-                                                     ivf_cells_index,
-                                                     ivf_coarse_index,
-                                                     ivf_vectors_index,
-                                                     ivfpq_centroid_index,
-                                                     ivfpq_code_index,
-                                                     lsh_signature_index,
-                                                     pq_centroid_index,
-                                                     pq_code_index)
-    from bacalhau_spark.operators.web import (FRONT_DOOR_REV, canon_index,
-                                              html_extract_index)
-    from bacalhau_spark.sources import versioned
-    from bacalhau_spark.sources.indexstore import (index_table_root,
-                                                   published_rows)
+def index_ingest(spark: SparkSession, sf_dir: str,
+                 kinds=INDEX_KINDS) -> list[tuple]:
+    """Build and publish `kinds` (INDEX_KINDS by default) over sf_dir,
+    chain by chain on parallel lanes (INGEST_CHAINS, run_in_lanes; a
+    chain keeps only the selected kinds, and a builder still builds the
+    kinds before it). Returns the store's commit-log view of each kind,
+    in INDEX_KINDS order: (kind, n_rows, version, delta_parent). A
+    published kind's row count comes from its manifest, a session-local
+    frame is counted, and its version is 0."""
+    from importlib import import_module
 
-    # kind -> (builder, builder rev, source table): the table root folds
-    # the rev, so a commit-log lookup at the wrong rev reads a
-    # nonexistent table (the r13 rev bump surfaced exactly that).
-    # Since r14 the stage publishes EVERY persisted artifact family —
-    # per-row/banding kinds over documents AND the trained-state kinds
-    # over embeddings (lshsig bands, PQ codes+codebook, the coarse
-    # quantizer, IVF-PQ codes+residual codebook) — so one ingest job
-    # per epoch leaves nothing for the query path to train.
-    builders = {"sig": (minhash_signature_index, 1, "documents"),
-                "cand": (band_candidate_index, 1, "documents"),
-                "winnow": (winnow_posting_index, 2, "documents"),
-                "phash": (phash_index, 1, "documents"),
-                "aphash": (audio_phash_index, 1, "documents"),
-                "vphash": (video_phash_index, 1, "documents"),
-                "canon": (canon_index, FRONT_DOOR_REV, "documents"),
-                "extract": (html_extract_index, FRONT_DOOR_REV,
-                            "documents"),
-                "lshsig": (lsh_signature_index, 1, "embeddings"),
-                "ivf_coarse": (ivf_coarse_index, IVF_REV, "embeddings"),
-                "ivf_cells": (ivf_cells_index, IVF_REV, "embeddings"),
-                "ivf_vectors": (ivf_vectors_index, IVF_REV, "embeddings"),
-                "pq_assign": (pq_code_index, 1, "embeddings"),
-                "pq_cent": (pq_centroid_index, 1, "embeddings"),
-                "ivfpq_codes": (ivfpq_code_index, IVF_REV, "embeddings"),
-                "ivfpq_cent": (ivfpq_centroid_index, IVF_REV,
-                               "embeddings")}
+    from bacalhau_spark.sources.indexstore import published_manifest
+
     rows = {}
 
     def build(kind: str) -> None:
-        fn, rev, tbl = builders[kind]
-        frame = fn(spark, sf_dir)
-        n = published_rows(spark, sf_dir, kind, frame, tbl=tbl, rev=rev)
-        if n is None:
-            n = frame.count()
-        man = versioned.latest_manifest(
-            index_table_root(sf_dir, kind, tbl, rev=rev)) or {}
-        rows[kind] = (kind, n, int(man.get("version", 0)),
+        module, attr, _after = INDEX_KINDS[kind]
+        frame = getattr(import_module(module), attr)(spark, sf_dir)
+        man = published_manifest(spark, frame) or {}
+        n = man.get("n_rows")
+        rows[kind] = (kind, frame.count() if n is None else n,
+                      int(man.get("version", 0)),
                       man.get("props", {}).get("delta_parent") or "")
 
-    run_in_lanes(spark, INGEST_CHAINS, build)
+    chains = [tuple(k for k in chain if k in kinds)
+              for chain in INGEST_CHAINS]
+    run_in_lanes(spark, [c for c in chains if c], build)
+    return [rows[k] for k in INDEX_KINDS if k in rows]
+
+
+def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Entry stage: the INDEX-INGEST job as a pipeline verb — pre-build
+    and publish every persisted artifact family of the corpus (the
+    per-doc indexes over documents and the trained-state kinds over
+    embeddings) OFF the query path: the production shape where one
+    ingest job per crawl epoch publishes the artifacts and every later
+    consumer — batch query, streaming screen, next session — adopts. On
+    an appended corpus the build delta-adopts (only new shards hashed;
+    sources.indexstore.cached_index). Emits index_ingest's rows (kind,
+    n_rows, version, delta_parent) — a deterministic function of the
+    corpus content, so the stage output is graded like any other
+    stage's."""
     return spark.range(1).select(F.inline(F.array(*[
         F.struct(F.lit(k).alias("kind"),
                  F.lit(n).cast("long").alias("n_rows"),
                  F.lit(v).alias("version"),
                  F.lit(dp).alias("delta_parent"))
-        for k, n, v, dp in (rows[kind] for kind in builders)])))
+        for k, n, v, dp in index_ingest(spark, sf_dir)])))
 
 
 def stage_pq_refresh(spark: SparkSession, sf_dir: str,

@@ -52,10 +52,8 @@ BENCH_QUERIES = (
     # — 17.1 s -> 2.7 s cold at x10 (experiments/minhash_index_reuse_r9.txt).
     # NOTE round 9 changed what nd_minhash_lsh measures warm: LSH
     # consumers read a session-cached signature/band index, so the warm
-    # loop times the PROBE path (the production read). Round 10 restored
-    # series comparability: a dedicated cold pass (index evicted per
-    # run) reports nd_minhash_lsh_cold_s, and every r3/r7/r8-comparable
-    # subtotal uses the COLD number (round-9 verdict, What's wrong #1).
+    # loop times the PROBE path (the production read); a dedicated cold
+    # pass (index evicted per run) reports nd_minhash_lsh_cold_s.
     "nd_editdist_dedup",   # LSH candidates verified by bounded DP
     # round-10 addition: the learned quality filter — bounded driver-side
     # perceptron training + literal-weight codegen scoring (sf0.1 DuckDB
@@ -150,21 +148,14 @@ def main() -> None:
             "max": round(max(runs), 3),
         }
 
-    # COLD minhash pass (round-9 verdict, "Restore bench-series
-    # comparability"): the session-shared signature/band index makes the
-    # warm loop above time the PROBE path — the production read, kept in
-    # `queries` — but the r3/r7/r8-comparable subtotals predate the
-    # index and must stay on the one-shot BUILD+probe number to remain
-    # apples-to-apples with the r8-and-earlier series (and with the
-    # 0.525 s DuckDB baseline, which re-derives signatures per run).
-    # Each timed run evicts the session index first, so every run pays
-    # the full signature+band build.
-    # Round 11 moved the shared indexes into a PERSISTED parquet store
-    # (cross-session reuse), so cold now evicts BOTH tiers
-    # (persisted=True) and the cold number includes the index PUBLISH
-    # (parquet write + read-back) — the honest production build cost.
-    # The r8-and-earlier series measured build+probe without a publish;
-    # the step is the write cost (decomposed in
+    # COLD minhash pass: the session-shared signature/band index makes
+    # the warm loop above time the PROBE path — the production read,
+    # kept in `queries`. The cold number is the one-shot BUILD+probe,
+    # the like-for-like partner of the 0.525 s DuckDB baseline, which
+    # re-derives signatures per run. Each timed run evicts BOTH index
+    # tiers (persisted=True), so every run pays the full signature+band
+    # build and its PUBLISH (parquet write + read-back) — the
+    # production build cost (decomposed in
     # experiments/index_persist_r11.txt).
     from bacalhau_spark.sources.indexstore import clear_session_index
     mh_fn, _ = ALL_QUERIES["nd_minhash_lsh"]
@@ -178,10 +169,9 @@ def main() -> None:
 
     # COLD html_extract pass (round 12): the crawl front door is now a
     # materialized artifact (web.html_extract_index), so the warm row
-    # above measures the production ARTIFACT READ; the r11 series
-    # measured the inline extraction chain per run, whose like-for-like
-    # partner is this cold number (build + publish + read, both tiers
-    # evicted per run) — r11_comparable_total swaps it in.
+    # above measures the production ARTIFACT READ; this cold number is
+    # the inline extraction's like-for-like partner (build + publish +
+    # read, both tiers evicted per run).
     he_fn, _ = ALL_QUERIES["nd_html_extract"]
     he_runs = []
     for _ in range(3):
@@ -212,48 +202,18 @@ def main() -> None:
         phash_cold[cold_name] = round(statistics.median(ph_runs), 3)
     video_phash_cold = phash_cold["nd_video_phash"]
 
-    def total(names, cold_minhash: bool = True) -> float:
-        # r8-and-earlier comparable subtotals swap in the COLD minhash
-        # number (those series predate the session index); the r9 series
-        # was PUBLISHED with the warm probe (BENCH_r09 measured the
-        # session-index read), so r9_comparable_total keeps the warm
-        # basis — computing it cold showed a spurious step vs BENCH_r09
-        # (round-10 ADVICE).
-        return round(sum(minhash_cold
-                         if cold_minhash and n == "nd_minhash_lsh"
-                         else timings[n] for n in names), 3)
-
-    # The headline set grew 12 -> 14 in round 4, 14 -> 16 in round 8,
-    # 16 -> 17 in round 9 and 17 -> 18 in round 10; the r3/r7/r8/r9-set
-    # subtotals keep the BENCH_r{N} total series directly comparable
-    # across the boundaries.
-    r12_added = ("nd_audio_phash", "nd_video_phash")
-    r11_added = ("nd_html_extract", "nd_image_phash") + r12_added
-    r10_added = ("nd_quality_model",)
-    r9_added = ("nd_editdist_dedup",)
-    r8_added = ("nd_kmeans", "nd_substr_dedup")
-    post_r7_added = r8_added + r9_added + r10_added + r11_added
-    r3_set = [n for n in BENCH_QUERIES
-              if n not in ("nd_gopher_filter", "nd_bpe_pair_count")
-              and n not in post_r7_added]
-    r7_set = [n for n in BENCH_QUERIES if n not in post_r7_added]
-    r8_set = [n for n in BENCH_QUERIES
-              if n not in r9_added + r10_added + r11_added]
-    r9_set = [n for n in BENCH_QUERIES
-              if n not in r10_added + r11_added]
-    r10_set = [n for n in BENCH_QUERIES if n not in r11_added]
     floor_end = scheduler_floor(spark)
 
     # SIDECAR (round 15, r14 verdict What's-wrong #2): the one-line
     # contract JSON had grown past the driver's tail capture (BENCH_r13
     # stored truncated -> parsed: null -> PERF lost the whole
     # round-over-round table), so everything that is diagnostics rather
-    # than contract — per-query spreads, the r3..r11 comparable
-    # subtotals, floor-adjusted values — moves to BENCH_sidecar.json
-    # next to this file. The printed line keeps exactly the driver
-    # contract (metric/value/unit/queries/sf) plus the floor probes and
-    # the per-round cold keys (small scalars the per-round series
-    # quotes). No `queries` entry is removed or renamed.
+    # than contract — per-query spreads and floor-adjusted values —
+    # moves to BENCH_sidecar.json next to this file. The printed line
+    # keeps exactly the contract fields (metric/value/unit/queries/sf)
+    # plus the floor probes and the per-round cold keys (small scalars
+    # the per-round series quotes). No `queries` entry is removed or
+    # renamed.
     sidecar = {
         "spreads": spreads,
         # floor-adjusted medians (t - floor_s, clamped at 0): the
@@ -265,25 +225,6 @@ def main() -> None:
         "queries_floor_adj": {
             n: round(max(t - floor_start["median"], 0.0), 3)
             for n, t in timings.items()},
-        "r3_comparable_total": total(r3_set),
-        "r7_comparable_total": total(r7_set),
-        "r8_comparable_total": total(r8_set),
-        "r9_comparable_total": total(r9_set, cold_minhash=False),
-        # r10's series measured COLD minhash (the restored basis) but
-        # WITHOUT the round-11 index-store publish in the cold path;
-        # the publish measured at par with the old localCheckpoint
-        # materialize (experiments/index_persist_r11.txt), so the
-        # subtotal remains comparable.
-        "r10_comparable_total": total(r10_set),
-        # r11's series measured nd_html_extract as the inline chain per
-        # run (no artifact existed) and nd_minhash_lsh warm in `value`;
-        # the comparable total therefore swaps ONLY html_extract to the
-        # cold (build+publish+read) number. The r11 series is the
-        # 20-row set (pre the r12 audio/video additions).
-        "r11_comparable_total": round(
-            sum(html_extract_cold if n == "nd_html_extract"
-                else timings[n] for n in BENCH_QUERIES
-                if n not in ("nd_audio_phash", "nd_video_phash")), 3),
         "floor_s": floor_start["median"],
         "floor_min_s": floor_start["min"],
         "floor_end_s": floor_end["median"],
@@ -311,9 +252,8 @@ def main() -> None:
         "floor_end_s": floor_end["median"],
         # Warm (queries.nd_minhash_lsh) = session-index PROBE, the
         # production read path; cold = per-run index BUILD+probe, the
-        # r8-and-earlier measurement and the like-for-like partner of
-        # the 0.525 s re-deriving DuckDB baseline. The sidecar's
-        # comparable subtotals use COLD.
+        # like-for-like partner of the 0.525 s re-deriving DuckDB
+        # baseline.
         "nd_minhash_lsh_cold_s": minhash_cold,
         "nd_html_extract_cold_s": html_extract_cold,
         "nd_video_phash_cold_s": video_phash_cold,

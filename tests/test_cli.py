@@ -68,6 +68,43 @@ def test_index_verb_build_list_drop(spark, sf_dir, capsys):
     assert cli.main(["index", "build", "--kind", "bogus"]) == 2
 
 
+def test_index_build_runs_the_ingest_over_the_selected_kinds(
+        spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """`index build` runs the epoch ingest over the store kinds `--kind`
+    selects: a raw store kind publishes itself and the kinds its builder
+    builds first, a family publishes its store kinds (for ivfpq the
+    codes, the codebook and the coarse-quantizer tables, never a
+    baseline), the output is keyed by store kind, and an unknown kind
+    exits 2."""
+    import os
+
+    from bacalhau_spark.sources.indexstore import clear_session_index
+
+    def build(kind: str) -> tuple[dict, set]:
+        store = tmp_path / kind
+        monkeypatch.setenv("SPARK_GRAFT_INDEX_STORE", str(store))
+        clear_session_index(spark)
+        assert cli.main(["index", "build", "--sf-dir", sf_dir,
+                         "--kind", kind]) == 0
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        return out["built"], {n.split("__", 1)[0]
+                              for n in os.listdir(store)}
+
+    try:
+        built, published = build("ivf_cells")
+        assert published == {"ivf_coarse", "ivf_cells"}
+        assert set(built) == {"ivf_cells"} and built["ivf_cells"] > 0
+
+        built, published = build("ivfpq")
+        family = {"ivfpq_codes", "ivfpq_cent", "ivf_coarse", "ivf_cells"}
+        assert published == family
+        assert set(built) == family and all(n > 0 for n in built.values())
+    finally:
+        clear_session_index(spark)
+    assert cli.main(["index", "build", "--kind", "bogus"]) == 2
+    assert cli.main(["index", "build", "--kind", "pq_base"]) == 2
+
+
 def test_index_drop_releases_persisted_views(spark, sf_dir, capsys):
     """`index drop` clears the session tier so no frame outlives its
     files; the persisted winnow-capped view must be unpersisted on the

@@ -1,4 +1,5 @@
-"""stage_index_build's parallel lanes: every kind is built and published
+"""The epoch ingest (stages.index_ingest, run by stage_index_build and
+`index build`) on parallel lanes: every kind is built and published
 once, the rows match a one-lane run, every job stays in the caller's job
 group, and a failing builder surfaces only after every lane has joined,
 with nothing half-published in the store. Store artifacts and appended
@@ -66,8 +67,21 @@ def _rows(df) -> list[tuple]:
 
 
 def test_chains_cover_every_kind_once():
+    """INGEST_CHAINS are INDEX_KINDS' chains, in the order of their
+    first kinds, each kind after the kind it follows; the ingest's rows
+    take the table's order."""
     flat = [k for chain in stages.INGEST_CHAINS for k in chain]
     assert sorted(flat) == sorted(KINDS)
+    assert tuple(stages.INDEX_KINDS) == KINDS
+    assert stages.INGEST_CHAINS == (
+        ("sig", "cand"), ("winnow",), ("phash",), ("aphash",),
+        ("vphash",), ("canon",), ("extract",), ("lshsig",),
+        ("ivf_coarse", "ivf_cells", "ivf_vectors", "ivfpq_codes",
+         "ivfpq_cent"),
+        ("pq_assign", "pq_cent"))
+    for chain in stages.INGEST_CHAINS:
+        for before, kind in zip((None,) + chain, chain):
+            assert stages.INDEX_KINDS[kind][2] == before
 
 
 def test_lanes_publish_each_kind_once_inside_the_callers_job_group(
@@ -144,22 +158,29 @@ def test_failing_builder_raises_after_every_lane_has_joined(
                     f"manifestless {name}/{v}"
 
 
-def test_published_rows_reads_the_manifest_count(spark, sf_dir, cold,
-                                                 tmp_path, monkeypatch):
-    """stage_index_build takes a published kind's row count from its
-    manifest instead of a count job: the recorded count equals the
-    frame's, and a frame that is not the session tier's scan of a
-    published table (a derived frame, a session-local fallback) gets
-    None, so the stage counts it."""
-    from bacalhau_spark.operators.web import FRONT_DOOR_REV, canon_index
+def test_published_manifest_reads_the_manifest_count(spark, sf_dir, cold,
+                                                     tmp_path, monkeypatch):
+    """index_ingest takes a published kind's row count from the manifest
+    published_manifest looks up by the frame, instead of a count job:
+    the recorded count equals the frame's, and a frame that is not the
+    session tier's scan of a published table (a derived frame, a view
+    over an artifact, a session-local fallback) gets None, so the
+    ingest counts it."""
+    from bacalhau_spark.operators.dedup import (winnow_capped_postings,
+                                                winnow_posting_index)
+    from bacalhau_spark.operators.web import canon_index
 
     cold(tmp_path / "published")
     frame = canon_index(spark, sf_dir)
-    n = indexstore.published_rows(spark, sf_dir, "canon", frame,
-                                  rev=FRONT_DOOR_REV)
-    assert n == frame.count() > 0
-    assert indexstore.published_rows(spark, sf_dir, "canon", frame.limit(1),
-                                      rev=FRONT_DOOR_REV) is None
+    man = indexstore.published_manifest(spark, frame)
+    assert man["n_rows"] == frame.count() > 0
+    assert man["props"]["kind"] == "canon"
+    assert os.path.dirname(man["root"]) == str(tmp_path / "published")
+    assert indexstore.published_manifest(spark, frame.limit(1)) is None
+    assert indexstore.published_manifest(
+        spark, winnow_posting_index(spark, sf_dir)) is not None
+    assert indexstore.published_manifest(
+        spark, winnow_capped_postings(spark, sf_dir)) is None
 
     cold(tmp_path / "unwritable")
 
@@ -167,9 +188,8 @@ def test_published_rows_reads_the_manifest_count(spark, sf_dir, cold,
         raise OSError("store is read-only")
     monkeypatch.setattr(versioned, "write_version", unwritable)
     local = canon_index(spark, sf_dir)
-    assert indexstore.published_rows(spark, sf_dir, "canon", local,
-                                      rev=FRONT_DOOR_REV) is None
-    assert local.count() == n
+    assert indexstore.published_manifest(spark, local) is None
+    assert local.count() == man["n_rows"]
 
 
 def _epochs(sf_dir, tmp_path) -> tuple[str, str]:

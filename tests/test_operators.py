@@ -171,6 +171,43 @@ def test_ivf_pruned_composite_layout_equality(spark, sf_dir, tmp_path,
                           ignore_errors=True)
 
 
+def test_ivf_pruned_never_reads_a_refused_head(spark, sf_dir, tmp_path,
+                                               monkeypatch):
+    """A head the store refuses to adopt (a foreign table at this
+    content's address — a truncated-digest collision) leaves the
+    inverted file session-local, and the pruned probe must then filter
+    that frame, not scan the foreign table's rows: corpus B, holding
+    corpus A's published ivf_vectors table at its own address, probes
+    exactly like nd_ann_ivf over B."""
+    import shutil
+
+    from bacalhau_spark.operators import similarity as S
+    from bacalhau_spark.sources.indexstore import (clear_session_index,
+                                                   index_table_root)
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_STORE", str(tmp_path / "store"))
+    clear_session_index(spark)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    emb.coalesce(1).write.parquet(f"{a}/embeddings.parquet")
+    # B: A's vectors with every non-query id moved, so A's rows name
+    # neighbors B does not have
+    (emb.withColumn("vec_id", F.when(F.col("vec_id") < 20, F.col("vec_id"))
+                    .otherwise(F.col("vec_id") + 1_000_000))
+     .coalesce(1).write.parquet(f"{b}/embeddings.parquet"))
+    try:
+        S.ivf_vectors_index(spark, a)
+        shutil.copytree(index_table_root(a, "ivf_vectors", "embeddings",
+                                         rev=S.IVF_REV),
+                        index_table_root(b, "ivf_vectors", "embeddings",
+                                         rev=S.IVF_REV))
+        base = [tuple(r) for r in S.nd_ann_ivf(spark, b).collect()]
+        got = [tuple(r) for r in S.nd_ann_ivf_pruned(spark, b).collect()]
+        assert got == base and got
+    finally:
+        clear_session_index(spark)
+
+
 def test_pca_ann_recall_vs_brute_force(spark, sf_dir):
     """The reduce-then-index pipeline (PCA 8-dim candidates, full-dim
     scoring) must recover most true top-3 neighbors — PCA keeps the
@@ -1259,62 +1296,6 @@ def _make_wav(samples, channels=1, rate=8000):
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
 
-def test_real_sample_audio_phash_near_dup(spark, tmp_path):
-    """r13: REAL audio bytes through the real path — binaryFile ->
-    struct-only 16-bit PCM WAV decode -> block-sum window energies ->
-    the SAME envelope-dHash band layout as audio_phash_frame -> the
-    generic capped-candidate/Hamming screen. A re-encode-noise near-dup
-    lands within the gate; a different amplitude envelope is far; a
-    stereo clip decodes via channel averaging."""
-    import hashlib
-
-    from bacalhau_spark.operators.multimodal import (APHASH_MAX_HAMMING,
-                                                     audio_phash_real_frame,
-                                                     decode_wav_samples,
-                                                     image_near_dup_real,
-                                                     real_binary_table)
-
-    n = 65 * 32
-
-    def base(i):
-        return int(hashlib.md5(f"s:{i}".encode()).hexdigest()[:4],
-                   16) % 201 - 100
-
-    def clip(env_mul, env_add, noise=0):
-        out = []
-        for i in range(n):
-            w = i * 65 // n
-            amp = 50 + ((w * env_mul + env_add) % 101)
-            v = amp * base(i) // 100
-            if noise:
-                v += int(hashlib.md5(f"n:{i}".encode())
-                         .hexdigest()[:2], 16) % (2 * noise + 1) - noise
-            out.append(v)
-        return out
-
-    d = tmp_path / "clips"
-    d.mkdir()
-    (d / "a_base.wav").write_bytes(_make_wav(clip(37, 0)))
-    (d / "b_noisy.wav").write_bytes(_make_wav(clip(37, 0, noise=3)))
-    (d / "c_other.wav").write_bytes(_make_wav(clip(53, 17)))
-
-    # unit: the driver-side decoder round-trips, stereo averages
-    rate, ch, mono = decode_wav_samples(_make_wav([10, -10, 7, 3],
-                                                  channels=2))
-    assert (rate, ch) == (8000, 2) and mono == [0, 5]
-
-    hashes = audio_phash_real_frame(real_binary_table(spark, str(d)))
-    rows = {r["doc_id"]: r for r in hashes.collect()}
-    assert len(rows) == 3
-    assert all(r["decoder"] == "wav" and r["n_samples"] == n
-               for r in rows.values())
-    pairs = {(r["a_id"], r["b_id"]): r["hamming"]
-             for r in image_near_dup_real(
-                 hashes, max_hamming=APHASH_MAX_HAMMING).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] <= APHASH_MAX_HAMMING
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
 def _make_avi(frames_px):
     """Minimal uncompressed 24bpp AVI from [[row-major gray grid]] —
     RIFF('AVI ') with an avih header and raw '00db' DIB frames
@@ -1344,60 +1325,6 @@ def _make_avi(frames_px):
         movi += chunk(b"00db", bytes(body))
     payload = (b"AVI " + chunk(b"LIST", hdrl) + chunk(b"LIST", movi))
     return b"RIFF" + struct.pack("<I", len(payload)) + payload
-
-
-def test_real_frame_video_phash_near_dup(spark, tmp_path):
-    """r13: REAL video bytes complete the real-decode triplet —
-    binaryFile -> struct-only uncompressed-AVI decode -> even frame
-    sampling -> per-frame block-mean dHash packed into the SAME 16-band
-    time-aligned layout as video_phash_frame -> the generic capped
-    band screen with n_bands=16. A re-encode-noise near-dup lands
-    within the gate; a video whose frames play in REVERSE (same frame
-    set, different time alignment) must NOT match — the property the
-    frame-position band encoding exists for."""
-    from bacalhau_spark.operators.multimodal import (VPHASH_MAX_HAMMING,
-                                                     VPHASH_NBANDS,
-                                                     image_near_dup_real,
-                                                     real_binary_table,
-                                                     video_phash_real_frame)
-
-    w, h, nf = 27, 16, 6
-
-    def frame(fidx, noise=0, invert=False):
-        out = []
-        for y in range(h):
-            row = []
-            for x in range(w):
-                v = (x * (7 + fidx * 3) + y) % 256
-                if invert:
-                    v = 255 - v
-                if noise and (x * 31 + y * 17 + fidx) % 97 == 0:
-                    v = min(255, v + noise)
-                row.append(v)
-            out.append(row)
-        return out
-
-    base = [frame(f) for f in range(nf)]
-    noisy = [frame(f, noise=6) for f in range(nf)]
-    rev = list(reversed([frame(f, invert=True) for f in range(nf)]))
-    d = tmp_path / "vids"
-    d.mkdir()
-    (d / "a_base.avi").write_bytes(_make_avi(base))
-    (d / "b_noisy.avi").write_bytes(_make_avi(noisy))
-    (d / "c_other.avi").write_bytes(_make_avi(rev))
-
-    hashes = video_phash_real_frame(real_binary_table(spark, str(d)))
-    rows = {r["doc_id"]: r for r in hashes.collect()}
-    assert len(rows) == 3
-    assert all(r["decoder"] == "avi"
-               and (r["width"], r["height"], r["n_frames"]) == (w, h, nf)
-               for r in rows.values())
-    pairs = {(r["a_id"], r["b_id"]): r["hamming"]
-             for r in image_near_dup_real(
-                 hashes, max_hamming=VPHASH_MAX_HAMMING,
-                 n_bands=VPHASH_NBANDS).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] <= VPHASH_MAX_HAMMING
-    assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
 def test_shingle_posting_index_shared_and_equivalent(spark, sf_dir):
