@@ -289,14 +289,14 @@ class Engine:
         # per-run event index + latest-state map, maintained by _emit:
         # /list and /states are the endpoints clients HAMMER (the
         # quick_read.sh burst), and deriving state by scanning the
-        # global log made each /list O(runs x events) — the round-12
-        # read burst measured 15 req/s at 200 runs (p50 6.7 s) for what
-        # is a dictionary read. With the index: O(runs) per /list.
+        # global log made each /list O(runs x events) — a read burst
+        # measured 15 req/s at 200 runs (p50 6.7 s) for what is a
+        # dictionary read. With the index: O(runs) per /list.
         self._run_events: dict[str, list[JobEvent]] = {}
         self._latest: dict[str, str] = {}
         # monotone state revision, bumped per emit: the API front's
-        # /list response cache key (r13 — render the table once per
-        # state CHANGE, not once per request)
+        # /list response cache key (render the table once per state
+        # CHANGE, not once per request)
         self._state_rev = 0
         self._ordinals: dict[str, int] = {}
         self._specs: dict[str, JobSpec] = {}
@@ -805,8 +805,12 @@ class Engine:
                 run_metrics.update(execute_and_measure(df))
             fmt = spec.outputs.get("format", "parquet")
             if out and fmt == "contentstore":
-                from bacalhau_spark.sources.contentstore import publish
-                publish(df, out)
+                from bacalhau_spark.sources.contentstore import (json_lines,
+                                                                 publish)
+                # one string column is published as its lines; richer
+                # rows as canonical JSON lines
+                lines = [t for _, t in df.dtypes] == ["string"]
+                publish(df if lines else json_lines(df), out)
             elif out:
                 df.write.mode("overwrite").format(fmt).save(out)
             run_metrics["wall_s"] = round(time.time() - t_exec, 3)
@@ -851,7 +855,7 @@ class Engine:
 
 
 def _extra_inputs(fn, inputs: dict) -> dict:
-    """MULTI-INPUT stages (round 14): a registry callable may declare
+    """MULTI-INPUT stages: a registry callable may declare
     parameters beyond the standard (spark, sf_dir) pair — matched BY
     NAME from the spec's inputs dict (e.g. stage_pq_refresh(spark,
     sf_dir, parent_dir) run with inputs {"sf_dir": "@merge",

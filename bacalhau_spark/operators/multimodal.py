@@ -968,95 +968,6 @@ def audio_phash_frame(docs: DataFrame) -> DataFrame:
         "doc_id", *[F.expr(e).alias(f"b{i}") for i, e in enumerate(bands)])
 
 
-def decode_wav_samples(payload: bytes) -> tuple[int, int, list[int]]:
-    """Dependency-free decoder for 16-bit PCM WAV bytes: (sample_rate,
-    n_channels, mono samples — channels averaged, truncated toward
-    zero). The audio twin of decode_bmp_gray: a RIFF/fmt/data chunk
-    walk with struct only, numpy for the sample plane."""
-    import struct
-
-    import numpy as np
-
-    payload = bytes(payload)
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos, n = 12, len(payload)
-    fmt = data = None
-    while pos + 8 <= n:
-        cid = payload[pos:pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8:pos + 8 + size]
-        if cid == b"fmt ":
-            if len(body) < 16:
-                raise ValueError("truncated WAV fmt chunk")
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_format, channels, rate, _bps, _al, bits = fmt
-    if audio_format != 1 or bits != 16 or channels < 1:
-        raise ValueError("unsupported WAV variant")
-    frames = len(data) // (2 * channels)
-    pcm = (np.frombuffer(data, dtype="<i2", count=frames * channels)
-           .reshape(frames, channels).astype(np.int64))
-    mono = np.fix(pcm.sum(axis=1) / channels).astype(np.int64)
-    return rate, channels, [int(v) for v in mono]
-
-
-def _avi_frames_fn():
-    """Factory for the AVI decode (a local closure ships by value — the
-    _bmp_gray_fn rule): payload -> (width, height, [grayscale frame
-    matrices]) for uncompressed 24bpp AVI ('00db'/'00dc' DIB frames —
-    the RIFF sibling of the BMP/WAV parsers). Frame pixel math is
-    numpy-vectorized like the BMP path."""
-    import struct
-
-    import numpy as np
-
-    def avi_frames(payload):
-        payload = bytes(payload)
-        if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-            raise ValueError("not an AVI payload")
-        dims = {}
-        frames = []
-
-        def walk(pos, end):
-            while pos + 8 <= end:
-                cid = payload[pos:pos + 4]
-                (size,) = struct.unpack_from("<I", payload, pos + 4)
-                body = pos + 8
-                if cid == b"LIST":
-                    walk(body + 4, body + size)  # skip the list type
-                elif cid == b"avih":
-                    if body + 40 > len(payload):
-                        raise ValueError("truncated AVI avih chunk")
-                    dims["w"], dims["h"] = struct.unpack_from(
-                        "<II", payload, body + 32)
-                elif cid in (b"00db", b"00dc"):
-                    frames.append(payload[body:body + size])
-                pos = body + size + (size & 1)  # word-aligned chunks
-
-        walk(12, len(payload))
-        w, h = dims.get("w", 0), dims.get("h", 0)
-        if not w or not h or not frames:
-            raise ValueError("AVI missing avih header or DIB frames")
-        stride = (w * 3 + 3) // 4 * 4
-        grays = []
-        for data in frames:
-            if len(data) < stride * h:
-                raise ValueError("truncated AVI frame")
-            raw = (np.frombuffer(data, dtype=np.uint8, count=stride * h)
-                   .reshape(h, stride)[:, :w * 3]
-                   .reshape(h, w, 3).astype(np.int64))[::-1]
-            grays.append((299 * raw[:, :, 2] + 587 * raw[:, :, 1]
-                          + 114 * raw[:, :, 0]) // 1000)
-        return w, h, grays
-
-    return avi_frames
-
-
 def audio_phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The envelope-hash table as a shared PERSISTED index (the
     phash_index lifecycle): synthesize+hash once per source content,

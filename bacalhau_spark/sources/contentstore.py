@@ -37,7 +37,9 @@ publish per micro-batch through `foreachBatch`.
 Records are lines; the read schema is (address string, line_no int,
 value string), and publish takes one (value string) column — payload
 interpretation belongs to the query, exactly like the reference's opaque
-mounted files (serialize richer rows with to_json). A blob is its rows
+mounted files. `json_lines` serializes richer rows as canonical JSON
+lines; the engine's `format: contentstore` sink calls it for any frame
+that is not already one string column. A blob is its rows
 joined by `\\n`, so a value may be neither null nor contain `\\n`
 (publish refuses such a row), and reads split on `\\n` alone. An empty
 blob reads as zero rows (so a partition whose one row is the empty string
@@ -121,10 +123,22 @@ def _check_write_schema(schema) -> None:
         raise ValueError(
             "contentstore writes exactly one string column (value string); "
             f"got schema {schema.simpleString()} — serialize richer rows "
-            "with to_json first")
+            "with json_lines first")
 
 
 _VALUE_ERROR = "contentstore values must be non-null and contain no newline"
+_JSON_PARTITIONS = 4  # fixed hash-partition count => deterministic blobs
+
+
+def json_lines(df):
+    """`df`'s rows as canonical JSON lines, one (value string) column
+    ready for `publish`: hash-partitioned into a fixed count on the first
+    column and sorted within each partition by every column, so each
+    blob's bytes — and therefore its address — are a pure function of
+    the rows, and a re-run publishes the same manifest."""
+    return (df.repartition(_JSON_PARTITIONS, df.columns[0])
+            .sortWithinPartitions(*df.columns)
+            .select(F.to_json(F.struct(*df.columns)).alias("value")))
 
 
 def publish(df, root: str) -> str:

@@ -4,9 +4,14 @@ The oracle-graded queries in `operators/` read the fixture tables by
 scale-factor directory. A DAG-of-jobs pipeline instead hands a PARENT
 STAGE'S PUBLISHED OUTPUT to the child via the '@parent' token
 (`engine.submit_pipeline`), so these stage functions take a plain path —
-each reads whatever parquet its parent wrote, applies one curation verb
-(reusing the same core frame functions the graded queries exercise), and
-returns the frame the engine publishes to the stage's declared sink.
+each reads whatever its parent published (`_read_docs`: a parquet
+directory, or a contentstore root mounted through the verified read),
+applies one curation verb (reusing the same core frame functions the
+graded queries exercise), and returns the frame the engine publishes to
+the stage's declared sink. The sink's `format:` is the one place an edge's
+transport is chosen: a `format: contentstore` sink publishes canonical
+JSON lines (`contentstore.json_lines`), and the child's read re-hashes
+every blob against its address, so that hand-off is integrity-checked.
 
 The flagship chain (examples/pipeline_curation.yaml, tested end-to-end in
 tests/test_pipeline_dag.py) is the reference's ROADMAP pipelines item
@@ -19,11 +24,13 @@ the pipeline's end artifact is a content-addressed manifest whose address
 is RUN-INVARIANT: re-running the whole DAG over the same fixture produces
 the identical manifest address — the determinism contract the reference
 states per-job (`pkg/executor/python_wasm/executor.go:48-73`), extended
-across an entire DAG.
+across an entire DAG. examples/pipeline_curation_verified.yaml runs the
+same stages with every edge through the store.
 """
 
 from __future__ import annotations
 
+import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -33,6 +40,29 @@ from bacalhau_spark.catalog import table
 from bacalhau_spark.functions import words
 from bacalhau_spark.operators.curation import (gopher_keep, pii_redact_frame,
                                                seq_pack_bins)
+from bacalhau_spark.sources import contentstore
+
+
+_DOC_SCHEMA = "doc_id bigint, text string"
+
+
+def _read_docs(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """A parent stage's published output as a frame of `schema`. A
+    contentstore root (it holds the MANIFEST pointer) is mounted by its
+    last manifest's addresses through the verified read and each JSON
+    line parsed with `from_json`; an empty manifest (a parent that kept
+    no rows) reads as zero rows. Anything else is a parquet directory,
+    read with `schema` so the call launches no footer job."""
+    if not os.path.exists(os.path.join(path, "MANIFEST")):
+        return spark.read.schema(schema).parquet(path)
+    _, entries = contentstore.last_manifest(path)
+    if entries:
+        lines = contentstore.read_addresses(spark, path,
+                                            [a for a, _ in entries])
+    else:
+        lines = spark.range(0).select(F.lit("").alias("value"))
+    return (lines.select(F.from_json("value", schema).alias("d"))
+            .select("d.*"))
 
 
 def stage_gopher_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,11 +243,10 @@ def stage_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stage_pq_refresh(spark: SparkSession, sf_dir: str,
                      parent_dir: str) -> DataFrame:
-    """The STALENESS LOOP as a pipeline stage (round 14) — the last
-    mile of the round-13 verdict's #1: the CLI verb consumed the
-    signal, this puts the same consumer INSIDE the epoch-ingest DAG so
-    a scheduled pipeline (new crawl epoch lands -> refresh decision ->
-    index publish) needs no operator in the loop. A MULTI-INPUT stage
+    """The STALENESS LOOP as a pipeline stage: the same consumer as the
+    CLI verb, INSIDE the epoch-ingest DAG, so a scheduled pipeline
+    (new crawl epoch lands -> refresh decision -> index publish) needs
+    no operator in the loop. A MULTI-INPUT stage
     (engine._extra_inputs): `sf_dir` is the merged epoch N+1 corpus,
     `parent_dir` epoch N (either may arrive as an '@parent' token).
     Emits pq_refresh's per-subspace commit-log rows — the monitor
@@ -243,40 +272,37 @@ def stage_ivfpq_refresh(spark: SparkSession, sf_dir: str,
 
 def stage_split(spark: SparkSession, path: str) -> DataFrame:
     """Leakage-safe train/heldout SPLIT as a DAG stage (the terminal
-    verb of a training-data pipeline — round-11 verdict #6): near-dup
-    cluster labels over the PARENT'S corpus (whatever the dedup stage
-    published, not a fixture), whole clusters assigned to one side by a
-    deterministic md5 bucket of the label
-    (dedup.leakage_safe_split_labels — the same rule the registered
-    nd_leakage_safe_split audit hash-gates). Emits
-    (doc_id, text, cluster_id, split); the per-split terminal publishes
-    below filter it, so the split computes ONCE however many sides
-    consume it."""
+    verb of a training-data pipeline): near-dup cluster labels over the
+    PARENT'S corpus (whatever the dedup stage published, not a fixture),
+    whole clusters assigned to one side by a deterministic md5 bucket of
+    the label (dedup.leakage_safe_split_labels — the same rule the
+    registered nd_leakage_safe_split audit hash-gates). Emits
+    (doc_id, text, cluster_id, split); the per-split stages below filter
+    it, so the split computes ONCE however many sides consume it."""
     from bacalhau_spark.operators.dedup import leakage_safe_split_labels
 
-    docs = spark.read.parquet(path).select("doc_id", "text")
+    docs = _read_docs(spark, path, _DOC_SCHEMA)
     return (docs.join(leakage_safe_split_labels(docs), "doc_id")
             .select("doc_id", "text", "cluster_id", "split"))
 
 
 def _stage_split_half(spark: SparkSession, path: str,
                       which: str) -> DataFrame:
-    docs = (spark.read.parquet(path)
+    return (_read_docs(spark, path, f"{_DOC_SCHEMA}, split string")
             .where(F.col("split") == which).select("doc_id", "text"))
-    return _publish_doc_rows(docs)
 
 
 def stage_split_train(spark: SparkSession, path: str) -> DataFrame:
-    """Terminal publish of the TRAIN side of a stage_split parent —
-    canonical JSONL through the contentstore publish, so the training
-    corpus's manifest address is run-invariant."""
+    """The (doc_id, text) TRAIN side of a stage_split parent; published
+    to a contentstore sink, the training corpus's manifest address is
+    run-invariant."""
     return _stage_split_half(spark, path, "train")
 
 
 def stage_split_heldout(spark: SparkSession, path: str) -> DataFrame:
-    """Terminal publish of the HELDOUT side (the eval corpus no
-    training near-duplicate can leak into, by the split's cluster-
-    granular construction)."""
+    """The (doc_id, text) HELDOUT side (the eval corpus no training
+    near-duplicate can leak into, by the split's cluster-granular
+    construction)."""
     return _stage_split_half(spark, path, "heldout")
 
 
@@ -284,8 +310,7 @@ def stage_pii_redact(spark: SparkSession, path: str) -> DataFrame:
     """Scrub emails / IPv4 / phone numbers from a parent's (doc_id, text)
     output; emits the redacted text under the same column name so stages
     compose positionally. Zero shuffle."""
-    docs = spark.read.parquet(path).select("doc_id", "text")
-    return (pii_redact_frame(docs)
+    return (pii_redact_frame(_read_docs(spark, path, _DOC_SCHEMA))
             .select("doc_id", F.col("redacted").alias("text")))
 
 
@@ -318,81 +343,13 @@ def _pack_json(docs: DataFrame) -> DataFrame:
 
 def stage_dedup(spark: SparkSession, path: str) -> DataFrame:
     """Keep-first exact dedup over a parent's (doc_id, text) output."""
-    return _keep_first(spark.read.parquet(path).select("doc_id", "text"))
+    return _keep_first(_read_docs(spark, path, _DOC_SCHEMA))
 
 
 def stage_seq_pack(spark: SparkSession, path: str) -> DataFrame:
     """Terminal stage: a parent's (doc_id, text) output packed into bins
     and published as one canonical JSONL blob (_pack_json)."""
-    return _pack_json(spark.read.parquet(path).select("doc_id", "text"))
-
-
-# ---------------------------------------------------------------------------
-# Contentstore-edged variants: EVERY DAG edge routed through the verified
-# store (the round-5 verdict's item 6). The plain stages above hand off via
-# shared-filesystem parquet — fine on the one-box devstack premise, but the
-# reference mounts every input content-addressed (StorageSpec CIDs), so each
-# edge here publishes canonical JSONL through the contentstore publish and
-# the child reads it back through the verified source: a blob whose bytes no
-# longer match its address fails the CHILD'S read task, making every
-# stage-to-stage hand-off integrity-checked, not just the terminal manifest.
-# ---------------------------------------------------------------------------
-
-_DOC_SCHEMA = "doc_id bigint, text string"
-_EDGE_PARTITIONS = 4  # fixed hash-partition count => deterministic blobs
-
-
-def _publish_doc_rows(docs: DataFrame) -> DataFrame:
-    """Serialize a (doc_id, text) frame to the store's (value string)
-    contract as canonical JSONL, deterministically partitioned: fixed-n
-    hash repartition by doc_id + within-partition sort makes every blob's
-    bytes — and therefore its content address — a pure function of the
-    data, so intermediate manifests are run-invariant too, not just the
-    terminal one."""
-    return (docs.repartition(_EDGE_PARTITIONS, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .select(F.to_json(F.struct("doc_id", "text")).alias("value")))
-
-
-def _read_doc_store(spark: SparkSession, root: str) -> DataFrame:
-    """Mount the parent stage's published output via the VERIFIED
-    contentstore source: the MANIFEST pointer names the blob set, every
-    blob is re-hashed against its address at read (the HasStorageLocally
-    probe plans it, the task-side check enforces it)."""
-    from bacalhau_spark.sources import contentstore
-
-    _, entries = contentstore.last_manifest(root)
-    rows = contentstore.read_addresses(spark, root,
-                                       [a for a, _ in entries])
-    return (rows.select(F.from_json("value", _DOC_SCHEMA).alias("d"))
-            .select("d.doc_id", "d.text"))
-
-
-def stage_gopher_keep_cs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entry stage, store-published: gopher-gated fixture documents as
-    canonical (value) rows for the contentstore publish."""
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _publish_doc_rows(gopher_keep(docs))
-
-
-def stage_pii_redact_cs(spark: SparkSession, root: str) -> DataFrame:
-    """PII scrub over a verified store mount; republishes to the store."""
-    docs = _read_doc_store(spark, root)
-    return _publish_doc_rows(
-        pii_redact_frame(docs).select("doc_id",
-                                      F.col("redacted").alias("text")))
-
-
-def stage_dedup_cs(spark: SparkSession, root: str) -> DataFrame:
-    """Keep-first exact dedup over a verified store mount (the
-    stage_dedup plan); republishes to the store."""
-    return _publish_doc_rows(_keep_first(_read_doc_store(spark, root)))
-
-
-def stage_seq_pack_cs(spark: SparkSession, root: str) -> DataFrame:
-    """Terminal stage over a verified store mount — the stage_seq_pack
-    bin packing and single-blob serialization."""
-    return _pack_json(_read_doc_store(spark, root))
+    return _pack_json(_read_docs(spark, path, _DOC_SCHEMA))
 
 
 # Engine-registry stages: runnable via `cli apply` / `cli pipeline` and
@@ -411,8 +368,4 @@ STAGES = {
     "stage_split_train": stage_split_train,
     "stage_split_heldout": stage_split_heldout,
     "stage_seq_pack": stage_seq_pack,
-    "stage_gopher_keep_cs": stage_gopher_keep_cs,
-    "stage_pii_redact_cs": stage_pii_redact_cs,
-    "stage_dedup_cs": stage_dedup_cs,
-    "stage_seq_pack_cs": stage_seq_pack_cs,
 }

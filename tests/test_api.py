@@ -99,19 +99,20 @@ def test_results_read_a_contentstore_sink(spark, tmp_path):
     engine and the results endpoint: the blobs its last manifest names,
     read by address."""
     from bacalhau_spark.registry import engine_registry
-    from bacalhau_spark.stages import stage_gopher_keep_cs
+    from bacalhau_spark.sources.contentstore import json_lines
+    from bacalhau_spark.stages import stage_gopher_keep
 
     engine = Engine(spark, engine_registry())
     server = ApiServer(engine, port=0).start_background()
     try:
         api = ApiClient(server.url)
-        run_id = api.submit({"query": "stage_gopher_keep_cs",
+        run_id = api.submit({"query": "stage_gopher_keep",
                              "inputs": {"sf_dir": SF_DIR},
                              "outputs": {"path": str(tmp_path / "cs"),
                                          "format": "contentstore"}})
         assert api.states(run_id) == "Completed"
-        want = sorted(r.value for r in
-                      stage_gopher_keep_cs(spark, SF_DIR).collect())
+        want = sorted(r.value for r in json_lines(
+            stage_gopher_keep(spark, SF_DIR)).collect())
         assert want
         for rows in (engine.fetch_results(run_id, limit=len(want)),
                      api.results(run_id, limit=len(want))):

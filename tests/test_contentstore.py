@@ -214,14 +214,14 @@ def test_doc_rows_with_unicode_line_breaks_round_trip(spark, tmp_path):
     """A document text holding U+2028 or U+0085 survives a store-edged
     hand-off: published by the edge serializer, mounted back through the
     verified reader, it is still one row with its id and text."""
-    from bacalhau_spark.stages import _publish_doc_rows, _read_doc_store
+    from bacalhau_spark.stages import _DOC_SCHEMA, _read_docs
 
     root = str(tmp_path / "docs_store")
     docs = spark.createDataFrame(
-        [(1, "line\u2028separator"), (2, "next\x85line")],
-        "doc_id bigint, text string")
-    cs.publish(_publish_doc_rows(docs), root)
-    back = sorted(tuple(r) for r in _read_doc_store(spark, root).collect())
+        [(1, "line\u2028separator"), (2, "next\x85line")], _DOC_SCHEMA)
+    cs.publish(cs.json_lines(docs), root)
+    back = sorted(tuple(r) for r in
+                  _read_docs(spark, root, _DOC_SCHEMA).collect())
     assert back == [(1, "line\u2028separator"), (2, "next\x85line")]
 
 

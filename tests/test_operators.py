@@ -1284,49 +1284,6 @@ def test_pq_incremental_staleness_monitor(spark, sf_dir):
         "the synthesized distribution shift must be visible"
 
 
-def _make_wav(samples, channels=1, rate=8000):
-    """Minimal 16-bit PCM WAV from an int sample list (struct-only)."""
-    import struct
-    data = b"".join(struct.pack("<h", max(-32768, min(32767, v)))
-                    for v in samples)
-    fmt = struct.pack("<HHIIHH", 1, channels, rate,
-                      rate * channels * 2, channels * 2, 16)
-    body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
-def _make_avi(frames_px):
-    """Minimal uncompressed 24bpp AVI from [[row-major gray grid]] —
-    RIFF('AVI ') with an avih header and raw '00db' DIB frames
-    (bottom-up, stride-padded), struct-only."""
-    import struct
-
-    h, w = len(frames_px[0]), len(frames_px[0][0])
-    stride = (w * 3 + 3) // 4 * 4
-
-    def chunk(cid, body):
-        return cid + struct.pack("<I", len(body)) + body \
-            + (b"\x00" if len(body) % 2 else b"")
-
-    avih = struct.pack("<8I", 40_000, stride * h, 0, 0,
-                       len(frames_px), 0, 1, len(frames_px)) \
-        + struct.pack("<II", w, h) + b"\x00" * 16
-    hdrl = b"hdrl" + chunk(b"avih", avih)
-    movi = b"movi"
-    for px in frames_px:
-        body = bytearray()
-        for row in reversed(px):  # DIB stores rows bottom-up
-            line = bytearray()
-            for v in row:
-                line += bytes([v, v, v])
-            line += bytes(stride - len(line))
-            body += line
-        movi += chunk(b"00db", bytes(body))
-    payload = (b"AVI " + chunk(b"LIST", hdrl) + chunk(b"LIST", movi))
-    return b"RIFF" + struct.pack("<I", len(payload)) + payload
-
-
 def test_shingle_posting_index_shared_and_equivalent(spark, sf_dir):
     """r14: the jaccard family's session-shared posting index.
 

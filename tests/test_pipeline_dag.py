@@ -409,38 +409,35 @@ def test_reference_to_pathless_stage_rejected(dag_engine):
         ])
 
 
-def _verified_curation_stages(base: str) -> list[dict]:
-    return [
-        {"name": "gopher", "query": "stage_gopher_keep_cs",
-         "inputs": {"sf_dir": SF_DIR},
-         "outputs": {"path": f"{base}/s_gopher", "format": "contentstore"}},
-        {"name": "pii", "query": "stage_pii_redact_cs", "after": ["gopher"],
-         "inputs": {"sf_dir": "@gopher"},
-         "outputs": {"path": f"{base}/s_pii", "format": "contentstore"}},
-        {"name": "dedup", "query": "stage_dedup_cs", "after": ["pii"],
-         "inputs": {"sf_dir": "@pii"},
-         "outputs": {"path": f"{base}/s_dedup", "format": "contentstore"}},
-        {"name": "pack", "query": "stage_seq_pack_cs", "after": ["dedup"],
-         "inputs": {"sf_dir": "@dedup"},
-         "outputs": {"path": f"{base}/s_pack", "format": "contentstore"}},
-    ]
+def _verified_curation_stages(base: str, parquet=()) -> list[dict]:
+    """The flagship chain (_curation_stages) with a `format:
+    contentstore` sink on every stage, except the stages named in
+    `parquet`, which keep their parquet sink."""
+    stages = _curation_stages(base, f"{base}/store")
+    for stage in stages:
+        if stage["name"] not in parquet:
+            stage["outputs"]["format"] = "contentstore"
+    return stages
 
 
 def test_verified_pipeline_every_edge_through_store(spark, tmp_path):
-    """Round-5 verdict item 6: the curation DAG with EVERY edge routed
-    through the contentstore (examples/pipeline_curation_verified.yaml) —
-    each stage publishes content-addressed blobs, each child mounts its
-    parent through the verified source. The terminal manifest must equal
-    a run-invariant address across two executions AND match the plain
-    (parquet-edged) pipeline's packing result."""
+    """The curation DAG with EVERY edge routed through the contentstore
+    (examples/pipeline_curation_verified.yaml): the plain stages, each
+    sink `format: contentstore`, so each stage publishes content-
+    addressed blobs and each child mounts its parent through the
+    verified read. Every stage's manifest must be run-invariant, and a
+    mixed DAG (pii's edge parquet) and the plain parquet-edged pipeline
+    must publish the same addresses on their store sinks: an address
+    does not depend on how the stage's parent arrived."""
     from bacalhau_spark.registry import engine_registry
     from bacalhau_spark.sources import contentstore as cs
 
     eng = Engine(spark, engine_registry())
 
-    def run(tag):
+    def run(tag, parquet=()):
         base = str(tmp_path / tag)
-        statuses = eng.submit_pipeline(_verified_curation_stages(base))
+        statuses = eng.submit_pipeline(
+            _verified_curation_stages(base, parquet))
         assert all(v not in ("Cancelled", "Rejected")
                    for v in statuses.values())
         return base
@@ -449,21 +446,21 @@ def test_verified_pipeline_every_edge_through_store(spark, tmp_path):
     b2 = run("v2")
     # every stage (not just the terminal one) published a manifest, and
     # every stage's address is run-invariant
-    for stage in ("s_gopher", "s_pii", "s_dedup", "s_pack"):
+    for stage in ("gopher_kept", "pii_clean", "deduped", "store"):
         a1 = cs.last_manifest(f"{b1}/{stage}")[0]
         a2 = cs.last_manifest(f"{b2}/{stage}")[0]
         assert a1 == a2, f"{stage} manifest is not run-invariant"
-    # cross-check against the plain parquet-edged flagship: identical
-    # terminal bins (same curation semantics, different transport)
+    mixed = run("mixed", parquet=("pii",))
+    assert not os.path.exists(f"{mixed}/pii_clean/MANIFEST")
+    assert spark.read.parquet(f"{mixed}/pii_clean").count() > 0
+    for stage in ("gopher_kept", "deduped", "store"):
+        assert cs.last_manifest(f"{mixed}/{stage}")[0] == \
+            cs.last_manifest(f"{b1}/{stage}")[0], stage
+    # the plain parquet-edged flagship packs the same terminal blob
     b3 = str(tmp_path / "plain")
     eng.submit_pipeline(_curation_stages(b3, f"{b3}/store"))
-    plain_bins = sorted(
-        ln for a, _ in cs.last_manifest(f"{b3}/store")[1]
-        for ln in open(f"{b3}/store/{a}").read().splitlines())
-    cs_bins = sorted(
-        ln for a, _ in cs.last_manifest(f"{b1}/s_pack")[1]
-        for ln in open(f"{b1}/s_pack/{a}").read().splitlines())
-    assert plain_bins == cs_bins
+    assert cs.last_manifest(f"{b3}/store")[0] == \
+        cs.last_manifest(f"{b1}/store")[0]
 
 
 def test_verified_edge_detects_tampered_blob(spark, tmp_path):
@@ -474,13 +471,13 @@ def test_verified_edge_detects_tampered_blob(spark, tmp_path):
 
     from bacalhau_spark.registry import engine_registry
     from bacalhau_spark.sources import contentstore as cs
-    from bacalhau_spark.stages import stage_pii_redact_cs
+    from bacalhau_spark.stages import stage_pii_redact
 
     eng = Engine(spark, engine_registry())
     base = str(tmp_path / "t")
-    root = f"{base}/s_gopher"
+    root = f"{base}/gopher_kept"
     eng.submit(JobSpec.from_dict(
-        {"query": "stage_gopher_keep_cs", "inputs": {"sf_dir": SF_DIR},
+        {"query": "stage_gopher_keep", "inputs": {"sf_dir": SF_DIR},
          "outputs": {"path": root, "format": "contentstore"}}))
     addr = cs.last_manifest(root)[1][0][0]
     blob = f"{root}/{addr}"
@@ -488,4 +485,36 @@ def test_verified_edge_detects_tampered_blob(spark, tmp_path):
     with open(blob, "wb") as f:
         f.write(data[:-1] + bytes([data[-1] ^ 1]))
     with pytest.raises(Exception, match="(?i)integrity"):
-        stage_pii_redact_cs(spark, root).collect()
+        stage_pii_redact(spark, root).collect()
+
+
+def test_empty_store_parent_reads_as_zero_rows(spark, tmp_path):
+    """A parent stage that kept no rows publishes an empty manifest;
+    its child reads zero rows of the declared schema instead of failing
+    the mount."""
+    from bacalhau_spark.sources import contentstore as cs
+    from bacalhau_spark.stages import stage_pii_redact
+
+    root = str(tmp_path / "empty")
+    cs.publish(spark.range(0).select(F.lit("x").alias("value")), root)
+    assert cs.last_manifest(root)[1] == []
+    out = stage_pii_redact(spark, root)
+    assert out.columns == ["doc_id", "text"]
+    assert out.count() == 0
+
+
+def test_parquet_parent_reads_launch_no_job(spark, tmp_path):
+    """A stage reads its parquet parent with the schema it expects, so
+    the call plans without a Spark job (a schemaless read infers the
+    schema from a footer in a one-task job at the call)."""
+    from bacalhau_spark.stages import (stage_dedup, stage_gopher_keep,
+                                       stage_pii_redact)
+
+    from tests.test_index_ingest import _jobs
+
+    parent = str(tmp_path / "parent")
+    stage_gopher_keep(spark, SF_DIR).write.parquet(parent)
+    for stage in (stage_pii_redact, stage_dedup):
+        out, jobs = _jobs(spark, lambda: stage(spark, parent))
+        assert jobs == 0, stage.__name__
+        assert out.count() > 0

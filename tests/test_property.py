@@ -952,73 +952,26 @@ def test_bmp_decode_roundtrip(w, h, seed):
     assert gray == [v for row in px for v in row]
 
 
-@settings(max_examples=30, deadline=None)
-@given(samples=st.lists(st.integers(-32768, 32767),
-                        min_size=1, max_size=200),
-       channels=st.integers(1, 3))
-def test_wav_decode_roundtrip(samples, channels):
-    """The struct-only WAV parser round-trips arbitrary 16-bit PCM:
-    interleave the sample list across `channels` identical channels
-    and recover it exactly (identical channels make the truncating
-    average the identity)."""
-    from bacalhau_spark.operators.multimodal import decode_wav_samples
-
-    from tests.test_operators import _make_wav
-
-    inter = [v for v in samples for _ in range(channels)]
-    rate, ch, mono = decode_wav_samples(
-        _make_wav(inter, channels=channels))
-    assert (rate, ch) == (8000, channels)
-    assert list(mono) == samples
-
-
-@settings(max_examples=20, deadline=None)
-@given(w=st.integers(1, 10), h=st.integers(1, 8),
-       nf=st.integers(1, 5), seed=st.integers(0, 2**31))
-def test_avi_decode_roundtrip(w, h, nf, seed):
-    """The struct-only AVI parser recovers every frame's luma grid
-    from the test builder's RIFF layout, top-down, at the declared
-    dimensions."""
-    import hashlib
-
-    from bacalhau_spark.operators.multimodal import _avi_frames_fn
-
-    from tests.test_operators import _make_avi
-
-    frames = [[[int(hashlib.md5(f"{seed}:{f}:{y}:{x}".encode())
-                    .hexdigest()[:2], 16) for x in range(w)]
-               for y in range(h)] for f in range(nf)]
-    gw, gh, grays = _avi_frames_fn()(_make_avi(frames))
-    assert (gw, gh, len(grays)) == (w, h, nf)
-    for f in range(nf):
-        assert grays[f].tolist() == frames[f]
-
-
 @settings(max_examples=60, deadline=None)
 @given(junk=st.binary(min_size=0, max_size=256))
 def test_media_parsers_reject_junk_loudly(junk):
-    """Arbitrary bytes never crash the parsers with anything but the
+    """Arbitrary bytes never crash the BMP parser with anything but the
     declared ValueError — the per-payload fallback contract the real
     mapInPandas closures rely on (one bad blob never fails a batch).
-    Magic-prefixed junk (a truncated/corrupt container) must also
-    raise ValueError, never IndexError/struct.error."""
+    Magic-prefixed junk (a truncated/corrupt bitmap) must also raise
+    ValueError, never IndexError/struct.error."""
     import pytest
 
-    from bacalhau_spark.operators.multimodal import (_avi_frames_fn,
-                                                     decode_bmp_gray,
-                                                     decode_wav_samples)
+    from bacalhau_spark.operators.multimodal import decode_bmp_gray
 
-    for fn, magic in ((decode_bmp_gray, b"BM"),
-                      (decode_wav_samples, b"RIFF\x10\x00\x00\x00WAVE"),
-                      (_avi_frames_fn(), b"RIFF\x10\x00\x00\x00AVI ")):
-        for payload in (junk, magic + junk):
-            try:
-                fn(payload)
-            except ValueError:
-                pass  # the declared refusal
-            except Exception as exc:  # noqa: BLE001
-                pytest.fail(f"{fn}: undeclared {type(exc).__name__} "
-                            f"on {len(payload)}-byte payload")
+    for payload in (junk, b"BM" + junk):
+        try:
+            decode_bmp_gray(payload)
+        except ValueError:
+            pass  # the declared refusal
+        except Exception as exc:  # noqa: BLE001
+            pytest.fail(f"decode_bmp_gray: undeclared {type(exc).__name__} "
+                        f"on {len(payload)}-byte payload")
 
 
 @given(files=st.lists(st.lists(st.integers(-50, 50), min_size=1,
