@@ -431,14 +431,8 @@ class Engine:
         spec, path = self._readable_sink(run_id)
         fmt = spec.outputs.get("format", "parquet")
         if fmt == "contentstore":
-            # a content store is read by address: the blobs its last
-            # manifest names, verified against their hashes
-            from bacalhau_spark.sources.contentstore import (last_manifest,
-                                                             read_addresses)
-            _addr, entries = last_manifest(path)
-            if not entries:
-                return []
-            df = read_addresses(self.spark, path, [a for a, _n in entries])
+            from bacalhau_spark.sources.contentstore import read_root
+            df = read_root(self.spark, path)
         else:
             df = self.spark.read.format(fmt).load(path)
         return [row.asDict(recursive=True) for row in df.limit(limit).collect()]

@@ -388,66 +388,6 @@ def nd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("a_id", "b_id"))
 
 
-CC_MAX_ITERS = 12
-
-
-def nd_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS: connected components over the LSH candidate
-    pairs, labeling every involved doc with its component's min doc_id —
-    the step that turns pairwise candidates into dedup groups (keep the
-    canonical min-id doc, drop the rest).
-
-    Distributed min-label propagation: each iteration joins the (tiny
-    relative to the corpus) edge set to the current labels and takes the
-    neighborhood minimum; convergence in O(component diameter) rounds —
-    near-dup components are shallow in practice (dup clusters are
-    near-cliques from the band join), so iterations are few and each is a
-    bounded equi join, never an all-pairs pass. The driver reads ONE
-    aggregate per iteration (Σ labels, strictly decreasing) to detect the
-    fixpoint — constant bytes, not data.
-    """
-    pairs = band_candidate_index(spark, sf_dir)
-    edges = sym_edges(pairs).persist()
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .select("id", F.col("id").alias("label")).persist())
-    prev_sum, converged = None, False
-    for _ in range(CC_MAX_ITERS):
-        nbr = (edges.join(labels, edges.dst == labels.id)
-               .groupBy("src").agg(F.min("label").alias("nbr_label")))
-        new_labels = (
-            labels.join(nbr, labels.id == nbr.src, "left")
-            .select("id", F.least(
-                "label", F.coalesce("nbr_label", "label")).alias("label"))
-            .persist())
-        cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # Partial labels are WRONG labels (docs merged with the wrong
-        # canonical id); fail loudly rather than return them. Components
-        # needing >12 rounds mean a propagation-distance-12 chain — raise
-        # CC_MAX_ITERS or switch to large-star/small-star doubling.
-        labels.unpersist()
-        edges.unpersist()
-        raise RuntimeError(
-            f"nd_dedup_clusters did not converge in {CC_MAX_ITERS} "
-            "min-label rounds; component diameter exceeds the cap")
-    # localCheckpoint materializes the converged labels and cuts the
-    # iterative lineage, so the per-iteration caches can be dropped before
-    # returning (they would otherwise sit in executor storage for the
-    # session's lifetime).
-    out = (labels.select(F.col("id").alias("doc_id"),
-                         F.col("label").alias("cluster_id"))
-           .localCheckpoint(eager=True))
-    labels.unpersist()
-    edges.unpersist()
-    return out.orderBy("doc_id")
-
-
 # 12 doubling rounds reach diameter ~2^11 (detection costs one extra
 # equal-sum round) — deep enough for any real near-dup chain while
 # staying log-scale.
@@ -455,19 +395,19 @@ CC_DOUBLING_MAX_ITERS = 12
 
 
 def cc_labels_doubling(edges: DataFrame) -> DataFrame:
-    """Min-label propagation WITH POINTER JUMPING over a symmetric
-    (src, dst) edge frame: each round takes the neighborhood minimum
-    (the nd_dedup_clusters step) and then re-reads the label of the
-    label node (l(v) <- l(l(v)) — labels are node ids, every label row
-    exists, and l(w) <= w always since a node's own label joins its
-    min). Jumping squares the propagation distance per round, so
-    convergence is O(log diameter) instead of O(diameter) — the
-    large-star/small-star family's payoff, and the scale path the
-    nd_dedup_clusters docstring promises for deep components (a
+    """Connected components of a symmetric (src, dst) edge frame, each
+    node labeled with its component's min id: min-label propagation WITH
+    POINTER JUMPING. Each round takes the neighborhood minimum and then
+    re-reads the label of the label node (l(v) <- l(l(v)) — labels are
+    node ids, every label row exists, and l(w) <= w always since a
+    node's own label joins its min). Jumping squares the propagation
+    distance per round, so convergence is O(log diameter) (a
     diameter-4000 chain converges in ~12 rounds, not 4000). Each round
-    is TWO bounded equi joins on the edge/label frames, still never an
+    is TWO bounded equi joins on the edge/label frames, never an
     all-pairs pass; the driver reads one aggregate per round (Σ labels,
-    strictly decreasing) to detect the fixpoint. Returns (id, label)."""
+    strictly decreasing) to detect the fixpoint. Returns (id, label)
+    as a checkpointed frame; past CC_DOUBLING_MAX_ITERS rounds it
+    raises rather than return partial (wrong) labels."""
     from pyspark.storagelevel import StorageLevel
 
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
@@ -507,23 +447,17 @@ def cc_labels_doubling(edges: DataFrame) -> DataFrame:
         f"~2^{CC_DOUBLING_MAX_ITERS - 1}")
 
 
-def nd_cc_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the LSH candidate pairs via min-label
-    propagation + pointer jumping (cc_labels_doubling) — value-identical
-    to nd_dedup_clusters (same labels, SAME oracle: the recursive
-    transitive-closure SQL), but O(log diameter) rounds instead of
-    O(diameter): the variant a 100 TB dedup run uses when clusters
-    chain (crawl mirrors of mirrors), where plain propagation's
-    CC_MAX_ITERS would blow. Both are kept registered so the driver
-    hash-gates the doubling math against the closure directly."""
-    pairs = band_candidate_index(spark, sf_dir)
-    edges = sym_edges(pairs)
-    labels = cc_labels_doubling(edges)
-    out = (labels.select(F.col("id").alias("doc_id"),
-                         F.col("label").alias("cluster_id"))
-           .localCheckpoint(eager=True))
-    labels.unpersist()
-    return out.orderBy("doc_id")
+def nd_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup CLUSTERS: connected components over the LSH candidate
+    pairs (cc_labels_doubling), labeling every involved doc with its
+    component's min doc_id — the step that turns pairwise candidates
+    into dedup groups (keep the canonical min-id doc, drop the rest).
+    Emits (doc_id, cluster_id)."""
+    labels = cc_labels_doubling(sym_edges(band_candidate_index(spark,
+                                                               sf_dir)))
+    return (labels.select(F.col("id").alias("doc_id"),
+                          F.col("label").alias("cluster_id"))
+            .orderBy("doc_id"))
 
 
 WINNOW_W = 4        # fingerprint-selection window (in k-gram positions)
@@ -1165,7 +1099,7 @@ def _shingle_pair_stats(docs: DataFrame, n: int, df_cap: int,
     return shared, sizes
 
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
+def ngram_jaccard_pairs(docs: DataFrame | None, n: int = 3,
                         threshold: float = JACCARD_THRESHOLD,
                         df_cap: int = SHINGLE_DF_CAP,
                         postings: DataFrame | None = None,
@@ -1182,15 +1116,18 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     Shingles with document frequency > `df_cap` are dropped BEFORE the
     self-join (stop-shingle guard against the O(f²) hot-shingle bucket);
     sizes and Jaccard are computed over the filtered shingle universe, so
-    the score stays a true Jaccard of the retained sets."""
-    # Three rewrites off the r3 form (9.1s → ~3s at sf0.1, same oracle):
+    the score stays a true Jaccard of the retained sets. Given
+    `pair_stats` (shared, sizes) — shingle_pair_index's frames — the
+    pair core is not rebuilt and `docs` is unused (None); the same
+    holds for weighted_jaccard_pairs and containment_pairs."""
+    # The pair core's shape (a self-join form measured 9.1 s vs ~3 s at
+    # sf0.1, same oracle):
     # 1. Token array projected BEFORE shingling (HOF re-evaluation trap —
     #    an inlined words() would re-split per window index; see
     #    _rolling_shingle_keys).
     # 2. ONE shingle-keyed aggregation builds the posting lists; the
-    #    stop-shingle guard is a length check on the collected list (the
-    #    r3 form paid a count-aggregate + broadcast anti join, then the
-    #    self-join shuffled the index twice more).
+    #    stop-shingle guard is a length check on the collected list (no
+    #    count-aggregate + broadcast anti join).
     # 3. Bucket-and-expand replaces the index self-join (the
     #    _band_candidates rewrite): surviving buckets — provably <= df_cap
     #    members — emit their a<b pairs from a sorted member list in
@@ -1209,7 +1146,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
         F.col("na") + F.col("nb") - F.col("shared"))
     # The sizes frames are EXPLICITLY broadcast: the planner's stats over
     # the checkpointed posting scan misestimate which side is small, and
-    # it was observed (r8, containment's identical join) broadcasting the
+    # it was observed (containment's identical join) broadcasting the
     # PAIR aggregate — 11.3M rows at x10, a 2x wall-clock hit. sizes is
     # one row per doc; past broadcast limits (~10^8 docs) the production
     # form drops the hint for a shuffle-hash join on the pair keys.
@@ -1223,20 +1160,13 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
 
 def nd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard near-dup pairs (similarity >= 0.5) over the
-    documents fixture — see ngram_jaccard_pairs. The scan is spread
-    (catalog.spread_compute): the explode + per-shingle md5 is the
-    CPU-dwarfs-row-bytes profile, and a single-row-group input would pin
-    the whole index build to one task (profiled 1.69s -> 0.35s at
-    sf0.1). The posting lists come from the session-shared
-    shingle_posting_index (r14): ngram/weighted/containment consume the
-    same df-capped postings, built once per (session, table content) —
-    and the REDUCED pair-stats frames come from shingle_pair_index
-    (tier 2, same lifecycle), so the per-call work is the bounded
+    documents fixture — see ngram_jaccard_pairs. The REDUCED pair-stats
+    frames come from the session-shared shingle_pair_index (over the
+    df-capped postings ngram/weighted/containment share, built once per
+    session and table content), so the per-call work is the bounded
     joins + threshold + sort."""
-    docs = spread_compute(spark, table(spark, sf_dir, "documents")
-                          .select("doc_id", "text"), "doc_id")
     return ngram_jaccard_pairs(
-        docs, pair_stats=shingle_pair_index(spark, sf_dir))
+        None, pair_stats=shingle_pair_index(spark, sf_dir))
 
 
 def _weighted_pair_stats(docs: DataFrame, n: int, df_cap: int,
@@ -1270,7 +1200,7 @@ def _weighted_pair_stats(docs: DataFrame, n: int, df_cap: int,
     return shared, sizes
 
 
-def weighted_jaccard_pairs(docs: DataFrame, n: int = 3,
+def weighted_jaccard_pairs(docs: DataFrame | None, n: int = 3,
                            threshold: float = JACCARD_THRESHOLD,
                            df_cap: int = SHINGLE_DF_CAP,
                            postings: DataFrame | None = None,
@@ -1311,14 +1241,10 @@ def weighted_jaccard_pairs(docs: DataFrame, n: int = 3,
 
 def nd_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rarity-weighted word-3-gram Jaccard pairs (>= 0.5) over the
-    documents fixture — see weighted_jaccard_pairs. Spread scan for the
-    same CPU-dwarfs-row-bytes reason as nd_ngram_jaccard; pair stats
-    from the weighted tier of shingle_pair_index."""
-    docs = spread_compute(spark, table(spark, sf_dir, "documents")
-                          .select("doc_id", "text"), "doc_id")
+    documents fixture — see weighted_jaccard_pairs; pair stats from the
+    weighted tier of shingle_pair_index."""
     return weighted_jaccard_pairs(
-        docs, pair_stats=shingle_pair_index(spark, sf_dir,
-                                            weighted=True))
+        None, pair_stats=shingle_pair_index(spark, sf_dir, weighted=True))
 
 
 _WEIGHTED_JACCARD_ORACLE = f"""
@@ -1353,7 +1279,7 @@ ORDER BY a_id, b_id
 CONTAIN_THRESHOLD = 0.8
 
 
-def containment_pairs(docs: DataFrame, n: int = 3,
+def containment_pairs(docs: DataFrame | None, n: int = 3,
                       threshold: float = CONTAIN_THRESHOLD,
                       df_cap: int = SHINGLE_DF_CAP,
                       postings: DataFrame | None = None,
@@ -1417,13 +1343,10 @@ def containment_pairs(docs: DataFrame, n: int = 3,
 
 def nd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram containment pairs (C >= 0.8) over the documents
-    fixture — see containment_pairs. Spread scan for the same
-    CPU-dwarfs-row-bytes reason as nd_ngram_jaccard; pair stats from
-    shingle_pair_index (shared frame-identical with the ngram row's)."""
-    docs = spread_compute(spark, table(spark, sf_dir, "documents")
-                          .select("doc_id", "text"), "doc_id")
+    fixture — see containment_pairs; pair stats from
+    shingle_pair_index (the ngram row's frames)."""
     return containment_pairs(
-        docs, pair_stats=shingle_pair_index(spark, sf_dir))
+        None, pair_stats=shingle_pair_index(spark, sf_dir))
 
 
 _MH_AB_VALUES = ", ".join(f"({s}, {a}::BIGINT, {b}::BIGINT)"
@@ -1486,9 +1409,9 @@ def nd_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break non-portably). Emits one row per cluster:
     (cluster_id, survivor_id, survivor_words, n_members, n_dropped).
 
-    Scale shape: cluster labels come from the bounded min-label
-    propagation (nd_dedup_clusters' core — edge-set-sized joins, never
-    corpus-sized); the word counts join in BY DOC ID on the
+    Scale shape: cluster labels come from nd_dedup_clusters (edge-set-
+    sized joins, never corpus-sized); the word counts join in BY DOC ID
+    on the
     cluster-member subset only (a semi-join-sized probe of the corpus,
     broadcast at fixture scale), and the per-cluster argmax is a window
     over cluster-sized partitions of that small frame."""
@@ -1545,7 +1468,7 @@ def leakage_safe_split_frame(spark: SparkSession,
     are their own singleton cluster (label = own doc_id); assignment is
     a deterministic md5 bucket of the label, so the split is stable
     across runs and engines. Scale shape: the cluster labels come from
-    the shared band index + min-label CC; the split itself is one
+    the shared band index + nd_dedup_clusters; the split itself is one
     broadcast-sized left join (labels cover only clustered docs) plus
     per-row codegen."""
     labels = nd_dedup_clusters(spark, sf_dir)
@@ -1559,9 +1482,9 @@ def leakage_safe_split_labels(docs: DataFrame,
     """(doc_id, cluster_id, split) for an ARBITRARY (doc_id, text)
     frame — the frame-level form of leakage_safe_split_frame for
     pipeline stages whose corpus is a PARENT STAGE'S output, not a
-    fixture table (round-11 verdict #6: the split is the terminal verb
-    of every real training-data DAG and must compose via '@parent'
-    hand-offs): minhash signatures → banded candidates → doubling-CC
+    fixture table (the split is the terminal verb of a training-data
+    DAG and composes via '@parent' hand-offs): minhash signatures →
+    banded candidates → doubling-CC
     cluster labels → whole-cluster md5-bucket assignment, the identical
     rule the registered audit states. Scale shape: the candidate set is
     capped bucket-and-expand, CC is O(log diameter) bounded joins, the
@@ -1697,7 +1620,7 @@ def nd_editdist_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Connected components via transitive closure: `reach(id, r)` = every node
 # r reachable from id over the symmetric candidate edges; the component
 # label is MIN(reach). Closure is fine at oracle scale (the candidate edge
-# set is tiny); the Spark side uses iterative min-label propagation.
+# set is tiny); the Spark side is cc_labels_doubling.
 _CLUSTERS_ORACLE = f"""
 {_MH_SH_CTES.replace("WITH w AS", "WITH RECURSIVE w AS", 1)},
 mh AS (SELECT doc_id, seed, min((a * x + b) % {MH_PRIME}) AS mh
@@ -2568,19 +2491,13 @@ ORDER BY source_a, source_b
 """
 
 
-# Bloom-prefilter geometry. M bits packed into M/64 longs; k=3 positions
-# per fingerprint derived from ONE md5 via the universal-hash family above
-# (no extra md5 calls). M is deliberately small at fixture scale so false
-# positives actually occur (~450 corpus keys x 3 bits into 2048 -> fill
-# ~0.5 -> fpr ~0.1) and the false-positive accounting is a live code path;
-# production sizing is ~10-14 bits/key. At 100 TB the plan-literal bitmap
-# stops at the 8 MB broadcast-literal ceiling (~3.5M corpus keys); past
-# that the same admission/verify split swaps the literal for Spark's
-# runtime join bloom (spark.sql.optimizer.runtimeFilter.bloomFilter.
-# enabled) or a partitioned bitmap join — the operator's shape (cheap
-# bitmap probe admits, exact join verifies hits only) is unchanged.
+# Bloom-prefilter geometry. M bits, k=3 positions per fingerprint derived
+# from ONE md5 via the universal-hash family above (no extra md5 calls). M
+# is deliberately small at fixture scale so false positives actually
+# occur (~450 corpus keys x 3 bits into 2048 -> fill ~0.5 -> fpr ~0.1)
+# and the false-positive accounting is a live code path; production
+# sizing is ~10-14 bits/key.
 BLOOM_BITS = 2048
-BLOOM_WORDS = BLOOM_BITS // 64
 BLOOM_K = 3
 BLOOM_AB = tuple(
     ((2654435761 * (s + 1) + 40503) % MH_PRIME or 1,
@@ -2599,22 +2516,17 @@ def _bloom_pos_cols(fp):
 
 def nd_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered incremental dedup admission: the corpus's exact
-    fingerprint set is folded into a BLOOM_BITS-bit packed-long bitmap;
-    an incoming batch probes the bitmap in pure codegen and only bloom
-    HITS reach the exact verification join. No false negatives (every
-    true duplicate hits), so misses are admitted join-free — at 100 TB
-    that's the difference between anti-joining every increment against
-    a ~10^10-row fingerprint index and joining only the ~dup-rate+fpr
-    fraction of it.
-
-    The bitmap build is a constant-size collect (BLOOM_WORDS=32 packed
-    longs — the IVF model-state pattern), re-broadcast as a literal
-    array; the probe is three element_at/shift/AND expressions inside
-    one codegen stage, zero extra shuffle on the batch side. Batch
-    synthesis mirrors nd_incremental_dedup: fresh docs (doc_id%7==0)
-    plus re-keyed re-crawl copies of corpus docs (doc_id%9==1) so true
-    duplicates exist. Output: per-language admission audit
-    (batch size, bloom hits, verified dups, false positives).
+    fingerprint set is folded into a BLOOM_BITS-bit bitmap; an incoming
+    batch probes the bitmap and only bloom HITS reach the exact
+    verification join. No false negatives (every true duplicate hits),
+    so misses are admitted join-free — at 100 TB that's the difference
+    between anti-joining every increment against a ~10^10-row
+    fingerprint index and joining only the ~dup-rate+fpr fraction of
+    it (bloom_admit_frame). Batch synthesis mirrors
+    nd_incremental_dedup: fresh docs (doc_id%7==0) plus re-keyed
+    re-crawl copies of corpus docs (doc_id%9==1) so true duplicates
+    exist. Output: per-language admission audit (batch size, bloom
+    hits, verified dups, false positives).
 
     Reference intent: pkg/computenode's bid admission — a cheap local
     check gates the expensive path; re-expressed for the dedup plane."""
@@ -2633,100 +2545,21 @@ def nd_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bloom_admit_frame(corpus_fp: DataFrame, batch: DataFrame) -> DataFrame:
     """The bloom-admission core over ARBITRARY frames — corpus_fp holds
-    distinct 60-bit fingerprints as `cfp`, batch holds (lang, fp) rows;
-    also the property-test surface (tests/test_property.py pins bitmap,
-    probe, and audit counts against a pure-Python model). `cfp`
-    distinctness is semantically required (a duplicated cfp would
-    multiply verification-join hit rows and inflate every audit
-    counter), so it is enforced here rather than assumed: the
-    `.distinct()` is a no-op shuffle-wise for compliant callers (the
-    aggregation collapses map-side) and cheap relative to the bitmap
-    collect for non-compliant ones."""
-    corpus_fp = corpus_fp.distinct()
-    # 1) bitmap build: k positions per DISTINCT corpus fp, OR-folded into
-    #    BLOOM_WORDS packed longs (constant-size collect).
-    rows = (corpus_fp
-            .select(F.explode(F.array(
-                *_bloom_pos_cols(F.col("cfp")))).alias("p"))
-            .distinct()
-            .select(F.shiftright("p", 6).alias("w"),
-                    F.expr("shiftleft(CAST(1 AS BIGINT), "
-                           "CAST(p % 64 AS INT))").alias("m"))
-            .groupBy("w").agg(F.expr("bit_or(m)").alias("m"))
-            .collect())
-    bitmap = [0] * BLOOM_WORDS
-    for r in rows:
-        bitmap[r["w"]] = r["m"]
-    bloom = F.array(*[F.lit(int(v)).cast("long") for v in bitmap])
-    # 2) batch probes the literal bitmap in codegen.
-    probed = batch.withColumn("bloom", bloom)
-    for i, p in enumerate(_bloom_pos_cols(F.col("fp"))):
-        probed = probed.withColumn(f"p{i}", p)
-    hit = F.lit(True)
-    for i in range(BLOOM_K):
-        hit = hit & F.expr(
-            f"(element_at(bloom, CAST(shiftright(p{i}, 6) AS INT) + 1)"
-            f" & shiftleft(CAST(1 AS BIGINT), CAST(p{i} % 64 AS INT)))"
-            " != 0")
-    probed = probed.withColumn("hit", hit).select("lang", "fp", "hit")
-    # 3) exact verification join over bloom HITS only; misses are
-    #    admitted without touching the fingerprint index.
-    hits = (probed.where("hit")
-            .join(corpus_fp, F.col("fp") == F.col("cfp"), "left")
-            .select("lang", F.lit(True).alias("hit"),
-                    F.col("cfp").isNotNull().alias("dup")))
-    miss = (probed.where(~F.col("hit"))
-            .select("lang", F.lit(False).alias("hit"),
-                    F.lit(False).alias("dup")))
-    return (hits.unionByName(miss)
-            .groupBy("lang")
-            .agg(F.count("*").alias("n_batch"),
-                 F.sum(F.col("hit").cast("long")).alias("n_bloom_hits"),
-                 F.sum(F.col("dup").cast("long")).alias("n_dup"),
-                 F.sum((F.col("hit") & ~F.col("dup")).cast("long"))
-                 .alias("n_false_pos"))
-            .orderBy("lang"))
-
-
-def nd_bloom_prefilter_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bloom admission's scale form — the registered variant the
-    literal-bitmap docstring promises past its ~3.5M-key / 8 MB literal
-    ceiling. Identical hash family, identical audit, identical oracle
-    row as nd_bloom_prefilter (the two are additionally
-    frame-equivalence-gated in tests and pinned against the same
-    pure-Python model), but the bitmap is a TABLE, not a literal: one
-    (word, mask) row per set 64-bit word, built by the same
-    explode→distinct→bit_or fold and NEVER collected — no driver state,
-    no plan-size ceiling; a 10^10-key filter at 10 bits/key is ~1.5G
-    rows of two longs, a small fact table. The probe explodes each
-    distinct batch fingerprint to its BLOOM_K word probes and joins the
-    bitmap table on the word index: at fixture scale AQE broadcasts the
-    tiny word table; at corpus scale it is a co-partitioned shuffle
+    distinct 60-bit fingerprints as `cfp`, batch holds (lang, fp) rows.
+    The bitmap is a TABLE, not a literal: one (word, mask) row per set
+    64-bit word, built by an explode→distinct→bit_or fold and never
+    collected — no driver state, no plan-size ceiling (a 10^10-key
+    filter at 10 bits/key is ~1.5G rows of two longs). The probe
+    explodes each distinct batch fingerprint to its BLOOM_K word probes
+    and joins the bitmap on the word index: at fixture scale AQE
+    broadcasts the tiny word table; at corpus scale it is a shuffle
     join on a uniformly-distributed key (bloom positions are
-    universal-hash outputs — no skew by construction). A row is a hit
-    iff all BLOOM_K probes find their bit set; only hits reach the
-    exact verification join, exactly as the literal form."""
-    docs = table(spark, sf_dir, "documents")
-    fp60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long")
-    corpus_fp = (docs.where(F.col("doc_id") % 7 != 0)
-                 .select(fp60.alias("cfp")).distinct())
-    batch = (docs.where(F.col("doc_id") % 7 == 0)
-             .select("lang", fp60.alias("fp"))
-             .unionByName(
-                 docs.where((F.col("doc_id") % 7 != 0)
-                            & (F.col("doc_id") % 9 == 1))
-                 .select("lang", fp60.alias("fp"))))
-    return bloom_admit_part_frame(corpus_fp, batch)
-
-
-def bloom_admit_part_frame(corpus_fp: DataFrame,
-                           batch: DataFrame) -> DataFrame:
-    """The partitioned-bitmap admission core over ARBITRARY frames (same
-    contract as bloom_admit_frame; cfp distinctness enforced here too).
-    The batch is pre-aggregated to (lang, fp, cnt) so each distinct
-    fingerprint probes once and the audit re-weights by cnt — probe
-    volume is bounded by distinct batch keys × BLOOM_K regardless of
-    batch duplication."""
+    universal-hash outputs). A row is a hit iff all BLOOM_K probes find
+    their bit set. The batch is pre-aggregated to (lang, fp, cnt) so
+    each distinct fingerprint probes once and the audit re-weights by
+    cnt. `cfp` distinctness is semantically required (a duplicated cfp
+    would multiply verification-join hit rows and inflate every audit
+    counter), so it is enforced here rather than assumed."""
     corpus_fp = corpus_fp.distinct()
     # 1) bitmap table: (w, m) — one row per set word, distributed.
     words_tbl = (corpus_fp
@@ -2755,8 +2588,8 @@ def bloom_admit_part_frame(corpus_fp: DataFrame,
              .groupBy("lang", "fp", "cnt")
              .agg((F.sum(F.col("ok").cast("int")) == F.lit(BLOOM_K))
                   .alias("hit")))
-    # 3) exact verification join over bloom HITS only, as the literal
-    #    form; misses never touch the fingerprint index.
+    # 3) exact verification join over bloom HITS only; misses never
+    #    touch the fingerprint index.
     hits = (flags.where("hit")
             .join(corpus_fp, F.col("fp") == F.col("cfp"), "left")
             .select("lang", "cnt", F.lit(True).alias("hit"),
@@ -2816,7 +2649,6 @@ FROM flag GROUP BY lang ORDER BY lang
 QUERIES = {
     "nd_source_overlap": (nd_source_overlap, _SOURCE_OVERLAP_ORACLE),
     "nd_bloom_prefilter": (nd_bloom_prefilter, _BLOOM_ORACLE),
-    "nd_bloom_prefilter_part": (nd_bloom_prefilter_part, _BLOOM_ORACLE),
     "nd_substr_dedup": (nd_substr_dedup, _SUBSTR_DEDUP_ORACLE),
     "nd_neardup_decontam": (nd_neardup_decontam, _NEARDUP_DECONTAM_ORACLE),
     "nd_cross_dedup": (
@@ -2844,7 +2676,6 @@ QUERIES = {
     ),
     "nd_minhash_lsh": (nd_minhash_lsh, _MINHASH_ORACLE),
     "nd_dedup_clusters": (nd_dedup_clusters, _CLUSTERS_ORACLE),
-    "nd_cc_doubling": (nd_cc_doubling, _CLUSTERS_ORACLE),
     "nd_curation_pipeline": (nd_curation_pipeline, _pipeline_oracle()),
     "nd_unicode_dedup": (nd_unicode_dedup, _UNICODE_DEDUP_ORACLE),
     "nd_winnowing": (nd_winnowing, _winnow_oracle()),

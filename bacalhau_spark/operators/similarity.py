@@ -280,21 +280,6 @@ NPROBE = 4
 NPROBE_PCA = 6
 
 
-def pair_cosine_udf():
-    """Vectorized pairwise cosine for two embedding columns (row-aligned):
-    one einsum per Arrow batch."""
-
-    def fn(a, b):
-        import numpy as _np
-        import pandas as _pd
-        A = _np.stack(a.values).astype("float64")
-        B = _np.stack(b.values).astype("float64")
-        return _pd.Series(_np.einsum("ij,ij->i", A, B))
-
-    from pyspark.sql.functions import pandas_udf
-    return pandas_udf(fn, "double")
-
-
 # Builder revision for the IVF plane (coarse quantizer, cells, IVF-PQ
 # codes + residual codebook). rev=2 since round 14: the coarse training
 # moved from session-local float AVGs (numpy dot-argmax assignment,
@@ -812,51 +797,6 @@ SEMDEDUP_BUCKET_CAP = 50
 SEMDEDUP_TAU = 0.3
 
 
-def nd_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style embedding-space dedup: coarse-partition the corpus
-    into deterministic sign-pattern buckets (the sign of the first
-    SEMDEDUP_SIGN_BITS dims folded into one int — a data-independent
-    hyperplane LSH whose planes are the coordinate axes), then screen
-    WITHIN each bucket: a vector is dropped when any lower-id bucket-mate
-    has cosine >= SEMDEDUP_TAU with it (greedy keep-first against all
-    earlier ids — deterministic and non-recursive, unlike connected
-    components; nd_dedup_clusters is the transitive variant for the text
-    families). Emits (vec_id, bucket, kept).
-
-    Scale shape (capped bucket-and-expand since round 13 — the sibling
-    screens' quadratic guard, closing the round-12 verdict's last
-    uncapped pair expansion): real encoder embeddings are NOT
-    sign-balanced (post-ReLU / mean-offset representations concentrate
-    mass in a few orthants), so "each added bit halves expected bucket
-    size" fails exactly where the screen matters — one hot orthant
-    degrades an uncapped bucket join to O(n²). The plan instead: (1)
-    ONE map-side-combined histogram over the 16-bit sign key — bounded
-    model state (≤2^16 entries at any corpus size), collected once per
-    session and compiled to InSet codegen literals (never a window over
-    the skewed key, which would serialize the hot bucket into one
-    sorted partition); (2) members of 8-bit buckets above
-    SEMDEDUP_BUCKET_CAP deterministically SUB-BUCKET on
-    SEMDEDUP_SUB_BITS sign bits (offset past the 8-bit key space); (3)
-    buckets still above the cap after escalation are excluded from pair
-    generation entirely (their members are kept — the same lenient-on-
-    pathology semantics as PHASH_BUCKET_CAP/LSH_BUCKET_CAP, and the
-    oracle states the identical rule); (4) surviving buckets — provably
-    ≤ cap members — collect (vec_id, embedding) lists and expand a<b
-    pairs in codegen (bucket-and-expand, never a pair self-join), so
-    per-task pair work is bounded by cap²/2 regardless of corpus skew.
-    Production SemDeDup uses k-means cells the same way — the IVF cells
-    of nd_ann_ivf would slot in here; sign buckets are the
-    deterministic/oracle-able stand-in. The dot product is the
-    bit-identical left fold (_DOT_SQL), so kept flags are hash-exact.
-
-    Reference intent: the dedup job family run over bacalhau-style
-    embedding shards (docs/examples analog), re-expressed as one
-    declarative plan."""
-    return _semantic_dedup_plan(
-        spark, sf_dir,
-        lambda a, b: cosine(a, b))
-
-
 def _sign_bucket(nbits: int):
     """The first `nbits` coordinate-sign bits folded into one int — the
     deterministic hyperplane LSH key, stated once for the 8-bit coarse
@@ -952,14 +892,45 @@ _SEMDEDUP_PAIR_EXPAND = (
     "a.embedding AS a_emb, b.embedding AS b_emb))))")
 
 
-def _semantic_dedup_plan(spark: SparkSession, sf_dir: str,
-                         cos_fn) -> DataFrame:
-    """The bucketed keep-first screen with a pluggable pairwise-cosine
-    kernel: the exact left fold (oracle-able) or the Arrow-batched numpy
-    einsum (the production inner loop). Candidate generation is capped
-    bucket-and-expand (see nd_semantic_dedup's scale-shape note):
-    buckets above SEMDEDUP_BUCKET_CAP after the sign-bit escalation
-    generate NO pairs — their members are kept."""
+def nd_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup-style embedding-space dedup: coarse-partition the corpus
+    into deterministic sign-pattern buckets (the sign of the first
+    SEMDEDUP_SIGN_BITS dims folded into one int — a data-independent
+    hyperplane LSH whose planes are the coordinate axes), then screen
+    WITHIN each bucket: a vector is dropped when any lower-id bucket-mate
+    has cosine >= SEMDEDUP_TAU with it (greedy keep-first against all
+    earlier ids — deterministic and non-recursive, unlike connected
+    components; nd_dedup_clusters is the transitive variant for the text
+    families). Emits (vec_id, bucket, kept).
+
+    Scale shape (capped bucket-and-expand — the sibling screens'
+    quadratic guard): real encoder embeddings are NOT
+    sign-balanced (post-ReLU / mean-offset representations concentrate
+    mass in a few orthants), so "each added bit halves expected bucket
+    size" fails exactly where the screen matters — one hot orthant
+    degrades an uncapped bucket join to O(n²). The plan instead: (1)
+    ONE map-side-combined histogram over the 16-bit sign key — bounded
+    model state (≤2^16 entries at any corpus size), collected once per
+    session and compiled to InSet codegen literals (never a window over
+    the skewed key, which would serialize the hot bucket into one
+    sorted partition); (2) members of 8-bit buckets above
+    SEMDEDUP_BUCKET_CAP deterministically SUB-BUCKET on
+    SEMDEDUP_SUB_BITS sign bits (offset past the 8-bit key space); (3)
+    buckets still above the cap after escalation are excluded from pair
+    generation entirely (their members are kept — the same lenient-on-
+    pathology semantics as PHASH_BUCKET_CAP/LSH_BUCKET_CAP, and the
+    oracle states the identical rule); (4) surviving buckets — provably
+    ≤ cap members — collect (vec_id, embedding) lists and expand a<b
+    pairs in codegen (bucket-and-expand, never a pair self-join), so
+    per-task pair work is bounded by cap²/2 regardless of corpus skew.
+    Production SemDeDup uses k-means cells the same way — the IVF cells
+    of nd_ann_ivf would slot in here; sign buckets are the
+    deterministic/oracle-able stand-in. The dot product is the
+    bit-identical left fold (_DOT_SQL), so kept flags are hash-exact.
+
+    Reference intent: the dedup job family run over bacalhau-style
+    embedding shards (docs/examples analog), re-expressed as one
+    declarative plan."""
     assigned = _semantic_assignment(spark, sf_dir)
     _hot8, excluded = _semantic_bucket_rules(
         _semantic_bucket_model(spark, sf_dir))
@@ -977,7 +948,7 @@ def _semantic_dedup_plan(spark: SparkSession, sf_dir: str,
     dropped = (buckets.select(
                    F.explode(F.expr(_SEMDEDUP_PAIR_EXPAND)).alias("p"))
                .select("p.a_id", "p.b_id", "p.a_emb", "p.b_emb")
-               .where(cos_fn(F.col("a_emb"), F.col("b_emb"))
+               .where(cosine(F.col("a_emb"), F.col("b_emb"))
                       >= SEMDEDUP_TAU)
                .select(F.greatest("a_id", "b_id").alias("vec_id"))
                .distinct()
@@ -987,23 +958,6 @@ def _semantic_dedup_plan(spark: SparkSession, sf_dir: str,
             .select("vec_id", "bucket",
                     F.col("hit").isNull().alias("kept"))
             .orderBy("vec_id"))
-
-
-def nd_semantic_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The semantic screen's PRODUCTION inner loop: the identical
-    bucketed keep-first plan as nd_semantic_dedup with the pairwise dot
-    computed by the Arrow-batched numpy einsum (pair_cosine_udf) instead
-    of the per-element codegen fold — semantic_crossover_r6 measured the
-    fold as the stable ~4x one-box gap, and this kernel is the same one
-    the IVF/ANN family uses for dense scoring. No SQL oracle BY DESIGN:
-    numpy's pairwise summation order differs from the left fold in the
-    last bits, so a cosine landing within float noise of SEMDEDUP_TAU
-    could flag differently — tests assert kept-set equivalence with the
-    exact screen plus a threshold-margin check that makes the
-    equivalence principled rather than lucky."""
-    return _semantic_dedup_plan(
-        spark, sf_dir,
-        lambda a, b: pair_cosine_udf()(a, b))
 
 
 _SEMDEDUP_ORACLE = f"""
@@ -1190,13 +1144,11 @@ def nd_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes too — ROUND is the only non-portable double op, and none is
     used).
 
-    Scale shape: pair generation happens INSIDE the scan stage in pure
-    codegen (nested sequence-transforms over the projected quantized
-    array — no self-join, the classic x-join-x formulation would
-    shuffle the matrix twice), and map-side combine collapses each
-    partition to at most D*(D+1)/2 = 2080 rows before the ONE exchange;
-    per-dim sums are a 64-row sibling branch broadcast back. Output
-    size is D^2-bounded at any corpus size — the consumer runs
+    Scale shape: each Arrow batch reduces to D*(D+1)/2 = 2080 partial
+    rows in one integer matmul (covariance_frame) — no self-join, the
+    classic x-join-x formulation would shuffle the matrix twice — and
+    the partials meet in ONE exchange. Output size is D^2-bounded at
+    any corpus size — the consumer runs
     eigh/Cholesky driver-side on the 64x64 result (the IVF-centroid
     model-state pattern). Overflow ceiling documented: |q| <= ~2^11, so
     sum_ij stays in int64 past 10^12 vectors; the derived cov column
@@ -1206,67 +1158,15 @@ def nd_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def covariance_frame(emb: DataFrame) -> DataFrame:
     """The sufficient-statistics core over an ARBITRARY
-    (vec_id, embedding) frame — also the PCA fit's input surface."""
-    # Spread first: the embeddings fixture is a single row group, so
-    # without it the 2080-struct pair explode (and the _fast twin's
-    # gram matmuls) run on ONE core (r14: 2.25 s -> 1.39 s at sf0.1;
-    # partials are integer sums, partitioning-invariant).
-    from bacalhau_spark.catalog import spread_compute
-    emb = spread_compute(emb.sparkSession, emb, "vec_id")
-    # quantized array projected BEFORE the pair HOF (re-evaluation trap)
-    qd = emb.select(F.expr(
-        f"transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) "
-        f"* {KM_SCALE}) AS BIGINT) + {KM_OFF})").alias("q"))
-    d1 = KM_DIMS - 1
-    pairs = F.expr(
-        f"flatten(transform(sequence(0, {d1}), i -> "
-        f"transform(sequence(i, {d1}), j -> struct("
-        "CAST(i AS INT) AS i, CAST(j AS INT) AS j, "
-        "element_at(q, i + 1) * element_at(q, j + 1) AS xy))))")
-    cross = (qd.select(F.explode(pairs).alias("p"))
-             .select("p.i", "p.j", "p.xy")
-             .groupBy("i", "j")
-             .agg(F.count("*").alias("n"), F.sum("xy").alias("sum_ij")))
-    sums = (qd.select(F.posexplode("q").alias("dim", "qv"))
-            .groupBy("dim").agg(F.sum("qv").alias("s"))
-            .select(F.col("dim").cast("int").alias("dim"), "s"))
-    si = sums.select(F.col("dim").alias("i"), F.col("s").alias("sum_i"))
-    sj = sums.select(F.col("dim").alias("j"), F.col("s").alias("sum_j"))
-    return (cross.join(F.broadcast(si), "i").join(F.broadcast(sj), "j")
-            .select("i", "j", "n", "sum_i", "sum_j", "sum_ij",
-                    ((F.col("sum_ij").cast("double")
-                      - F.col("sum_i").cast("double") * F.col("sum_j")
-                      / F.col("n")) / F.col("n")).alias("cov"))
-            .orderBy("i", "j"))
-
-
-def nd_embedding_covariance_fast(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """The covariance statistics' production inner loop — identical
-    output to nd_embedding_covariance (same quantization, same integer
-    sufficient statistics, same derived-cov double chain), so unlike
-    the float-kernel nd_semantic_dedup_fast it carries the FULL value-
-    hash oracle, not just an equivalence gate: int64 numpy matmul is
-    exact, so the Gram matrix is the same 64-bit integer either way.
-
-    Why it exists: the exact twin generates the upper triangle by
-    per-row codegen explode — N x 2080 struct rows through the partial
-    aggregate, which is the dominant cost from 10x up (measured flat at
-    ~7.5x DuckDB in experiments/registry_crossover_r8b.txt). Here each
-    Arrow batch computes ONE q^T q BLAS matmul + a column sum and emits
-    2080 partial rows per batch — the same 'Python where it wins'
-    kernel shape as the PCA transform; the shuffle carries 2080 rows
-    per batch instead of 2080 per vector."""
-    return covariance_frame_fast(table(spark, sf_dir, "embeddings"))
-
-
-def covariance_frame_fast(emb: DataFrame) -> DataFrame:
-    """Arrow-batched sufficient-statistics core: per batch, quantize
-    exactly as covariance_frame (float64 mul, floor, int64 — the same
-    op chain, so the integers agree), one int64 Gram matmul, one column
-    sum; the per-batch partials reduce in a 2080-key groupBy.
-    Spread like the exact twin: one input row group would otherwise pin
-    the whole matmul pass to a single Python worker."""
+    (vec_id, embedding) frame — also the PCA fit's input surface. Per
+    Arrow batch: quantize (float64 mul, floor, int64 — the oracle's op
+    chain, so the integers agree), one int64 Gram matmul q^T q (integer
+    arithmetic, so exact) and one column sum, emitted as D*(D+1)/2 = 2080
+    partial rows; the partials reduce in a 2080-key groupBy, so the
+    shuffle carries 2080 rows per batch, not per vector. The scan is
+    spread first: one input row group would otherwise pin the whole
+    matmul pass to a single Python worker (partials are integer sums,
+    partitioning-invariant)."""
     from bacalhau_spark.catalog import spread_compute
     emb = spread_compute(emb.sparkSession, emb, "vec_id")
 
@@ -1366,45 +1266,6 @@ def _fit_pca(spark: SparkSession, sf_dir: str) -> tuple:
     return (mu.tolist(), w.tolist(), evals[order].tolist(), int(n))
 
 
-def _pca_project_udf(mu: list, w: list):
-    """Arrow-batched projection: one centered (n x D) @ (D x K) matmul
-    per batch. Factory-wrapped so the function pickles by value
-    (foreign-cwd worker rule)."""
-
-    def fn(q):
-        import numpy as _np
-        import pandas as _pd
-        m = _np.asarray(mu, dtype="float64")
-        wm = _np.asarray(w, dtype="float64")
-        x = _np.stack(q.values).astype("float64")
-        return _pd.Series(list((x - m) @ wm))
-
-    from pyspark.sql.functions import pandas_udf
-    return pandas_udf(fn, "array<double>")
-
-
-def pca_project_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composable PCA-transform core — (vec_id, proj array<double>):
-    FIT is driver-side eigh on the exact 64x64 sufficient statistics
-    (constant model state), and TRANSFORM is a broadcast of (mean,
-    components) into an Arrow-batched matmul over the quantized
-    vectors — the corpus side is one map-stage, nothing shuffles, the
-    same 'Python where it wins' kernel shape as the IVF assignment UDF.
-    This array-valued frame is what downstream consumers compose over
-    (nd_ann_pca indexes it); the REGISTERED surface is nd_pca_project's
-    exploded form, which the driver harness can canonicalize."""
-    mu, w, _evals, _n = _pca_model(spark, sf_dir)
-    emb = table(spark, sf_dir, "embeddings")
-    qd = emb.select("vec_id", F.expr(
-        f"transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) "
-        f"* {KM_SCALE}) AS BIGINT) + {KM_OFF})").alias("q"))
-    # no presentation orderBy here: the core is a map-stage consumers
-    # compose over (nd_ann_pca indexes it unordered); the registered
-    # surface adds its own deterministic order
-    return qd.select("vec_id",
-                     _pca_project_udf(mu, w)(F.col("q")).alias("proj"))
-
-
 def _double_lit_sql(v: float) -> str:
     """A float64 as engine-portable SQL text: repr() is the shortest
     round-trip representation, and both Java's and DuckDB's parsers
@@ -1418,25 +1279,19 @@ def nd_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop the covariance operator opens. The registered surface is
     the EXPLODED projection — (vec_id, k, proj_k) scalar rows — because
     the driver's canonicalizer (pandas sort_values -> factorize) cannot
-    hash an array<double> column (the round-8 red row); the array-valued
-    frame stays available as pca_project_frame for composition
-    (nd_ann_pca's Arrow matmul path).
+    hash an array<double> column; the array-valued frame is
+    pca_project_exact_frame (nd_ann_pca indexes it).
 
-    HASH-GATED since round 13 (the r12 verdict's ask — this row leaves
-    the no_oracle set): the projection is computed as the exact LEFT
-    FOLD over the quantized vector against (mean, components) inlined
-    as double literals — the _DOT_SQL convention — and the oracle
-    (similarity._pca_oracle_sql) derives the SAME model constants
-    independently (DuckDB runs the covariance oracle over the same
-    parquet, numpy eigh + the same sign canonicalization in the driver
-    process) and replays the identical fold in SQL. The covariance
-    doubles are already proven bit-identical cross-engine
-    (nd_embedding_covariance's green hash row), and eigh is
-    deterministic for identical input within one process, so the
-    constants agree exactly. Since r14 the fold executes as the Arrow
-    cumsum kernel (see pca_project_exact_frame: same op sequence,
-    bit-identical, and the opaque UDF attribute stops posexplode and
-    the sort sampler re-evaluating the fold — 12.4 s -> 2.0 s)."""
+    Hash-gated: the projection is the exact LEFT FOLD over the quantized
+    vector against (mean, components) — the _DOT_SQL convention — and
+    the oracle (similarity._pca_oracle_sql) derives the SAME model
+    constants independently (DuckDB runs the covariance oracle over the
+    same parquet, numpy eigh + the same sign canonicalization in the
+    driver process) and replays the identical fold in SQL. The
+    covariance doubles are bit-identical cross-engine
+    (nd_embedding_covariance's hash row), and eigh is deterministic for
+    identical input within one process, so the constants agree
+    exactly."""
     return (pca_project_exact_frame(spark, sf_dir)
             .select("vec_id", F.posexplode("proj").alias("k", "proj_k"))
             .orderBy("vec_id", "k"))
@@ -1444,24 +1299,18 @@ def nd_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pca_project_exact_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EXACT-FOLD projection as an array-valued frame (vec_id,
-    proj) — the core nd_pca_project explodes, factored (round 14) so
-    nd_ann_pca can index the bit-reproducible projection instead of
-    the Arrow-matmul twin: the matmul's blocked summation differs in
-    the last bits, and only the fold is oracle-replayable.
+    proj) — the core nd_pca_project explodes and nd_ann_pca indexes.
 
-    The fold runs as an ARROW-BATCHED cumsum kernel (guide §4.2): per
-    component k the oracle's chain  acc + (q_d - mu_d) * w_kd  (d
-    ascending, acc0 = 0.0) is replayed as elementwise (x - mu) * w_k
-    followed by np.cumsum — np.add.accumulate is a strictly SEQUENTIAL
-    scan, so the IEEE op sequence per component is identical to the
-    SQL fold's and the result bit-identical (asserted row-for-row in
-    experiments/pca_fold_r14.py, re-gated by the driver hash). The r14
-    before-state was an interpreted HOF struct-fold: 0.37 s on the bare
-    frame but 12.4 s through nd_pca_project, because posexplode INLINED
-    the fold expression (re-evaluated per emitted component) and the
-    final sort's range-sampling pass re-executed the child. The UDF
-    output is an opaque attribute, so neither re-evaluation can occur
-    (2.0 s end-to-end, same values; plans/r14/*_after.txt)."""
+    The fold runs as an ARROW-BATCHED cumsum kernel: per component k
+    the oracle's chain  acc + (q_d - mu_d) * w_kd  (d ascending, acc0 =
+    0.0) is replayed as elementwise (x - mu) * w_k followed by
+    np.cumsum — np.add.accumulate is a strictly SEQUENTIAL scan, so the
+    IEEE op sequence per component is identical to the SQL fold's and
+    the result bit-identical (a blocked matmul would differ in the last
+    bits). The UDF output is an opaque attribute, so neither
+    nd_pca_project's posexplode nor its sort's range-sampling pass can
+    re-evaluate the fold (an inlined HOF fold measured 12.4 s vs 2.0 s
+    through nd_pca_project)."""
     mu, w, _evals, _n = _pca_model(spark, sf_dir)
 
     def _make_udf(mu_l: list, w_l: list):
@@ -1602,7 +1451,7 @@ def nd_ann_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA-reduced ANN — the reduce-then-index production shape every
     embedding-retrieval/dedup system runs: candidates are generated in
     the CHEAP 8-dim PCA space (an IVF-style coarse partition over
-    pca_project_frame — seed centroids are the first N_CLUSTERS
+    pca_project_exact_frame — seed centroids are the first N_CLUSTERS
     projected vectors, assignment is squared-Euclidean), then scored
     with FULL-dimension cosine (the standard two-phase read: reduced-
     space candidate generation, exact full-precision ranking). This is
@@ -1616,10 +1465,9 @@ def nd_ann_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     NPROBE cells); full vectors are fetched per candidate pair, never
     per corpus row.
 
-    HASH-GATED END TO END since round 14 (_ann_pca_oracle_sql, the
+    HASH-GATED END TO END (_ann_pca_oracle_sql, the
     nd_ann_pq/nd_ann_lsh convention): the projection is the exact fold
-    (pca_project_exact_frame — the Arrow matmul twin differs in last
-    bits and stays the composition surface), the seed centroids are
+    (pca_project_exact_frame), the seed centroids are
     derived IN-PLAN from that projection, cell assignment is the same
     squared-distance fold with a (d2, cell) tie-break, and every cell
     candidate is re-ranked with the bit-identical cosine fold (an
@@ -1637,7 +1485,7 @@ def nd_ann_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MATERIALIZE the projection before the 16-way seed join: codegen
     # inlines a projected expression into the join stage, so without a
     # barrier every one of the 16 output rows per vector re-evaluates
-    # the full 8x64 fold (measured 8.0 s vs ~1 s at sf0.1 — the r4
+    # the full 8x64 fold (measured 8.0 s vs ~1 s at sf0.1 — the
     # project-before-HOF rule, one join deeper). The checkpointed frame
     # is (vec_id, 8 doubles) — bounded, and shared by the seed lookup,
     # the corpus branch and the probe branch (the shared-lineage rule).
@@ -2751,8 +2599,6 @@ WHERE rank <= 3 ORDER BY vec_id, rank
 QUERIES = {
     "nd_embedding_covariance": (nd_embedding_covariance,
                                 _COVARIANCE_ORACLE),
-    "nd_embedding_covariance_fast": (nd_embedding_covariance_fast,
-                                     _COVARIANCE_ORACLE),
     # callable oracle: the SQL inlines model constants derived per
     # fixture (registry.oracle_sql resolves callables at collection)
     "nd_pca_project": (nd_pca_project, _pca_oracle_sql),
@@ -2766,7 +2612,6 @@ QUERIES = {
     "nd_ann_ivfpq": (nd_ann_ivfpq, _ANN_IVFPQ_ORACLE),
     "nd_semantic_dedup": (nd_semantic_dedup, _SEMDEDUP_ORACLE),
     "nd_kmeans": (nd_kmeans, _KMEANS_ORACLE),
-    "nd_semantic_dedup_fast": (nd_semantic_dedup_fast, None),
     "nd_embedding_quantize": (nd_embedding_quantize, _QUANTIZE_ORACLE),
     "q30_nn": (
         q30_nn,

@@ -298,17 +298,13 @@ def nd_domain_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_blocked) — kept and blocked tally in ONE artifact scan + one
     source-keyed agg over the materialized front door.
 
-    Compile strategy by blocklist SIZE (r13, closing the last
-    front-door row above the 2x bar): the registered blocklist is a
-    handful of LITERALS, and experiments/blocklist_floor_r13.txt
-    measured the broadcast-join form paying ~0.4 s/call over the IN
-    predicate at x100 — the broadcast materialization job + the second
-    plan side, a constant the tiny dim never earns. Small literal lists
-    therefore compile to `domain IN (...)` inside the scan's codegen
-    (exactly the IN-vs-join conversion a cost-based optimizer makes);
-    the million-row-TABLE shape — broadcast left join, corpus never
-    shuffles, dim ships once per executor — lives in
-    blocklist_audit_frame below, value-equal by test."""
+    The blocklist is a handful of LITERALS, so it compiles to
+    `domain IN (...)` inside the scan's codegen: a broadcast join
+    measured ~0.4 s/call more at x100 (the broadcast materialization
+    job + the second plan side, a constant the tiny dim never earns). A million-row blocklist TABLE
+    would take a broadcast left join instead (corpus never shuffles,
+    dim ships once per executor), as the streaming URL screen does with
+    blocked_frame."""
     canon = canon_index(spark, sf_dir)
     blk = F.col("domain").isin(*BLOCKED_DOMAINS)
     return (canon.groupBy("source")
@@ -316,24 +312,6 @@ def nd_domain_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum(F.when(blk, 0).otherwise(1))
                  .cast("long").alias("n_kept"),
                  F.sum(F.when(blk, 1).otherwise(0)).cast("long")
-                 .alias("n_blocked"))
-            .orderBy("source"))
-
-
-def blocklist_audit_frame(spark: SparkSession,
-                          canon: DataFrame,
-                          blocked: DataFrame) -> DataFrame:
-    """The TABLE-blocklist audit shape: broadcast left join + block
-    flag — what nd_domain_blocklist compiles to when the blocklist is
-    a real table (millions of rows: an IN literal would blow the plan,
-    the broadcast ships the dim once per executor and the corpus never
-    shuffles). `blocked` is a (domain, blk=1) frame."""
-    marked = canon.join(F.broadcast(blocked), "domain", "left")
-    return (marked.groupBy("source")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum(F.when(F.col("blk").isNull(), 1).otherwise(0))
-                 .cast("long").alias("n_kept"),
-                 F.sum(F.coalesce("blk", F.lit(0))).cast("long")
                  .alias("n_blocked"))
             .orderBy("source"))
 

@@ -24,48 +24,25 @@ _MODULES = (scans, scalar, filters, joins, aggregates, windows, sort, setops,
             asof, dedup, similarity, text, multimodal, sinks, streaming_events,
             udfs, tpch, pipeline, curation, graph, versioned, web)
 
-# The round driver grades the FIRST 50 registry entries per round (see
-# CORRECTNESS_r01.json: exactly the first 50 of round-1's module order got
-# rows). Registry order therefore rotates per round so every query
-# accumulates a hard driver-side correctness row — the analog of the
-# reference grading every scenario (pkg/test/scenario/test_scenarios.go:17).
-#
-# Standing rule (adopted round 4, per the round-3 verdict): any query whose
-# Spark code or oracle SQL changed since its last green driver row goes
-# inside the next 50-entry window — a green row only certifies the code it
-# graded (the reference grades every scenario every run,
-# pkg/test/scenario/test_scenarios.go:17-171).
-#
-# Round-14 window — the r1–r13 union is debt-free (218 triple-green +
-# 8 no-oracle by design, 0 FAILs per the round-13 verdict). Standing
-# changed-code rule fronts the window, then the r10/r11 first-row
-# blocks come due exactly as the round-13 boundary note planned:
-#   1. changed/new round 14: the NEW nd_pq_retrain row (the retrain
-#      arm of the staleness loop, dual training chains in the oracle);
-#      nd_ann_pq and nd_ann_lsh move from no_oracle to END-TO-END
-#      hash grades (new oracles replay training/LUT/candidates + the
-#      bit-identical cosine re-rank; nd_ann_pq also refactored through
-#      adc_topk); NEW nd_ann_ivf_pruned (the inverted file published
-#      range-clustered on cell id; manifest-stat pruned gather, same
-#      oracle as nd_ann_ivf); NEW nd_stream_ann (real-time ANN over the
-#      published inverted file — the streaming twin sharing nd_ann_ivf's
-#      hash oracle); nd_pq_incremental refactored through the factored
-#      pq_staleness; nd_winnowing reads the session-cached capped
-#      frame; the session model caches gained content fingerprints in
-#      their keys (semantic screen, PCA basis/seeds, IVF centroids —
-#      every consumer re-grades); the index publish path gained
-#      killed-builder healing and the key-map reuse, and the cand
-#      delta gained the width gate (every store-backed (cached_index)
-#      row re-grades: minhash family, phash x3 + real, winnow, pq /
-#      ivfpq planes, lshsig rows, front door); write_version's
-#      parquet-write scope moved inside the cleanup try (the two
-#      versioned rows re-grade).
-#   2. the r10 first-row block comes due (q18_count_distinct ..
-#      nd_ngram_overlap), then the r11 block; blocks graded r13 (the
-#      r9 front + r13 changed-code set) cycle to the back.
+# The driver grades the FIRST 50 registry entries per round, so registry
+# order rotates per round and every query accumulates a driver-side
+# correctness row — the analog of the reference grading every scenario
+# (pkg/test/scenario/test_scenarios.go:17-171). Standing rule: any query
+# whose Spark code or oracle SQL changed since its last green driver row
+# goes inside the next 50-entry window, because a green row only
+# certifies the code it graded. Blocks: changed code first, then the
+# blocks that come due, then the most recently graded blocks.
 _PRIORITY: tuple[str, ...] = (
-    # 0. changed (standing rule): every memory-sink stream row now runs
-    #    through streaming.events._run_to_memory
+    # changed: the kept implementation of each answer (doubling CC,
+    # table-bitmap bloom, Gram-kernel covariance and the PCA fit over
+    # it, the fold-only semantic screen) and the jaccard rows without
+    # their unused documents scan
+    "nd_dedup_clusters", "nd_dedup_survivors", "nd_leakage_safe_split",
+    "nd_bloom_prefilter", "nd_embedding_covariance", "nd_pca_project",
+    "nd_ann_pca", "nd_semantic_dedup",
+    "nd_ngram_jaccard", "nd_weighted_jaccard", "nd_containment",
+    # changed: every memory-sink stream row runs through
+    # streaming.events._run_to_memory
     "nd_stream_tumbling", "nd_stream_sessions", "nd_stream_stateful",
     "nd_stream_stream_join", "nd_stream_static_join", "nd_stream_dedup",
     "nd_stream_topk", "nd_stream_ewma", "nd_stream_hll_users",
@@ -74,21 +51,19 @@ _PRIORITY: tuple[str, ...] = (
     "nd_stream_incremental_dedup", "nd_stream_band_screen",
     "nd_stream_ann", "nd_stream_image_phash", "nd_stream_audio_phash",
     "nd_stream_video_phash",
-    # 1. changed/new round 14 (standing rule)
+    # changed earlier: the PQ/IVF planes, the session-model cache keys
+    # and every store-backed row
     "nd_pq_retrain", "nd_ann_pq", "nd_ann_lsh",
     "nd_pq_incremental", "nd_pq_quantize",
     "nd_ann_ivfpq", "nd_ann_ivf", "nd_ann_ivf_pruned",
-    "nd_ann_pca", "nd_pca_project",
-    "nd_semantic_dedup", "nd_semantic_dedup_fast",
     "nd_winnowing",
-    "nd_minhash_lsh", "nd_dedup_clusters", "nd_dedup_survivors",
-    "nd_cc_doubling", "nd_minhash_estimate", "nd_editdist_dedup",
+    "nd_minhash_lsh", "nd_minhash_estimate", "nd_editdist_dedup",
     "nd_versioned_timetravel", "nd_versioned_pruned_read",
     "nd_image_phash", "nd_audio_phash", "nd_video_phash",
     "nd_image_phash_real",
     "nd_ann_lsh_candidates", "nd_ann_lsh_bucketstats",
     "nd_url_canonicalize", "nd_html_extract",
-    # 2. the round-10 first-row block comes due
+    # the next blocks that come due
     "q18_count_distinct", "q18b_approx_distinct",
     "q19_rollup", "q19b_cube", "q19c_grouping_sets", "q26_intersect",
     "q26b_except", "q26c_union_all", "q26d_intersect_all",
@@ -96,22 +71,20 @@ _PRIORITY: tuple[str, ...] = (
     "qj_full_outer", "tpch_q11_important_parts",
     "tpch_q15_top_supplier", "tpch_q20_part_promotion",
     "tpch_q21_waiting_supplier", "tpch_q5_local_volume",
-    "nd_dataset_card", "nd_bloom_prefilter",
-    # ~window boundary (50): the r11 block queues next for round 15
-    "nd_bloom_prefilter_part", "nd_substr_dedup", "nd_neardup_decontam",
-    "nd_heavy_hitters_cms", "nd_embedding_covariance",
+    "nd_dataset_card",
+    "nd_substr_dedup", "nd_neardup_decontam",
+    "nd_heavy_hitters_cms",
     "nd_bigram_surprisal", "nd_ks_drift",
     "nd_ngram_overlap",
     "nd_quality_model_labeled", "nd_quality_model",
     "nd_zipf_octaves", "nd_lang_outliers",
-    "nd_embedding_covariance_fast",
     "nd_k_anonymity", "nd_target_encode", "nd_ewma_smooth",
     "nd_secret_scan", "nd_snapshot_diff", "nd_event_funnel",
     "nd_retention_cohorts", "nd_hll_distinct", "nd_applyinpandas",
     "nd_bpe_count", "nd_corpus_stats",
     "nd_dedup_stats", "nd_domain_mix", "nd_embedding_quantize",
     "nd_multimodal_resize", "nd_percentiles",
-    # r13-graded blocks cycle to the back
+    # most recently graded blocks cycle to the back
     "nd_domain_blocklist", "nd_domain_cap", "nd_domain_cap_keep",
     "nd_bpe_encode", "nd_unicode_dedup",
     "nd_boilerplate_strip", "nd_pmi_collocations",
@@ -152,7 +125,7 @@ _PROVIDER_CACHE: dict[int, str] = {}
 
 def oracle_sql() -> dict[str, str]:
     """Oracle strings for the driver. An entry may register a CALLABLE
-    provider instead of a static string (r13: nd_pca_project inlines
+    provider instead of a static string (nd_pca_project inlines
     model constants derived from the grading fixture) — resolved here,
     at the driver's default grading scale, and memoized per provider
     (resolution reads fixture parquet + fits the model; the driver may

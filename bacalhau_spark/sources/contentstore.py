@@ -284,6 +284,19 @@ def read_addresses(spark, root: str, addresses: list[str]):
         [_literal(os.path.join(root, a)) for a in addresses]))
 
 
+def read_root(spark, root: str):
+    """Mount the blobs the last manifest of the store at `root` names, as
+    verified rows (`read_addresses`) — the `get` verb over a published
+    result. An empty manifest (a publish that kept no rows) reads as
+    zero rows of the same schema."""
+    _addr, entries = last_manifest(root)
+    if entries:
+        return read_addresses(spark, root, [a for a, _n in entries])
+    return spark.range(0).select(F.lit("").alias("address"),
+                                 F.lit(0).alias("line_no"),
+                                 F.lit("").alias("value"))
+
+
 def stream_addresses(spark, root: str):
     """Streaming mount: every blob newly pinned into `root` flows through
     once, as verified rows — the ingest-time analog of the reference's

@@ -48,21 +48,15 @@ _DOC_SCHEMA = "doc_id bigint, text string"
 
 def _read_docs(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """A parent stage's published output as a frame of `schema`. A
-    contentstore root (it holds the MANIFEST pointer) is mounted by its
-    last manifest's addresses through the verified read and each JSON
-    line parsed with `from_json`; an empty manifest (a parent that kept
-    no rows) reads as zero rows. Anything else is a parquet directory,
-    read with `schema` so the call launches no footer job."""
+    contentstore root (it holds the MANIFEST pointer) is mounted through
+    `contentstore.read_root` (verified; an empty manifest reads as zero
+    rows) and each JSON line parsed with `from_json`. Anything else is
+    a parquet directory, read with `schema` so the call launches no
+    footer job."""
     if not os.path.exists(os.path.join(path, "MANIFEST")):
         return spark.read.schema(schema).parquet(path)
-    _, entries = contentstore.last_manifest(path)
-    if entries:
-        lines = contentstore.read_addresses(spark, path,
-                                            [a for a, _ in entries])
-    else:
-        lines = spark.range(0).select(F.lit("").alias("value"))
-    return (lines.select(F.from_json("value", schema).alias("d"))
-            .select("d.*"))
+    return (contentstore.read_root(spark, path)
+            .select(F.from_json("value", schema).alias("d")).select("d.*"))
 
 
 def stage_gopher_keep(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,8 +18,8 @@ Fixtures (all deterministic, production ~64k-row groups):
 
 Also runs the bloom admission A/B the r7 verdict asked for: the same
 audit computed with NO bloom (every batch row left-joins the corpus
-fingerprint index) vs the literal-bitmap prefilter vs the
-partitioned-bitmap scale variant, interleaved in one session —
+fingerprint index) vs the bloom prefilter (bloom_admit_frame),
+interleaved in one session —
 quantifying the "only bloom hits reach the exact join" claim.
 
 Run: python experiments/registry_crossover_r8.py [--mult 10]
@@ -41,8 +41,7 @@ from experiments.scale_crossover import (ROW_GROUP_ROWS, SF_DIR,
                                          build_scaled_embeddings,
                                          build_scaled_perturbed)
 
-DOC_QUERIES = ("nd_dataset_card", "nd_bloom_prefilter",
-               "nd_bloom_prefilter_part", "nd_substr_dedup")
+DOC_QUERIES = ("nd_dataset_card", "nd_bloom_prefilter", "nd_substr_dedup")
 EVENT_QUERIES = ("nd_scd2_history", "nd_mad_outlier", "nd_stream_topk")
 EMB_QUERIES = ("nd_kmeans",)
 
@@ -99,13 +98,12 @@ def _measure(spark, con, names, d, label):
 
 
 def _bloom_ab(spark, d, label):
-    """Plain anti-join admission vs literal-bitmap vs partitioned-bitmap,
-    same audit frame, interleaved round-robin (JIT-ramp rule)."""
+    """Plain anti-join admission vs the bloom prefilter, same audit
+    frame, interleaved round-robin (JIT-ramp rule)."""
     from pyspark.sql import functions as F
 
     from bacalhau_spark.catalog import table
-    from bacalhau_spark.operators.dedup import (bloom_admit_frame,
-                                                bloom_admit_part_frame)
+    from bacalhau_spark.operators.dedup import bloom_admit_frame
 
     def inputs():
         docs = table(spark, d, "documents")
@@ -132,8 +130,7 @@ def _bloom_ab(spark, d, label):
 
     variants = {
         "plain_antijoin": plain,
-        "bloom_literal": lambda: bloom_admit_frame(*inputs()),
-        "bloom_partitioned": lambda: bloom_admit_part_frame(*inputs()),
+        "bloom": lambda: bloom_admit_frame(*inputs()),
     }
     timings = {k: [] for k in variants}
     for k, v in variants.items():  # warm all

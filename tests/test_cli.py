@@ -14,12 +14,11 @@ def test_list_queries(capsys):
     assert cli.main(["list-queries"]) == 0
     out = capsys.readouterr().out
     assert "q17_hash_agg\toracle" in out
-    # r14: the whole ANN plane carries oracle grades; the semantic fast
-    # twin stays the representative rows-only (numpy-summation,
-    # equivalence-gated by design) row
+    # the whole ANN plane carries oracle grades; an approximate sketch
+    # is the representative rows-only row
     assert "nd_ann_lsh\toracle" in out
     assert "nd_ann_ivf\toracle" in out
-    assert "nd_semantic_dedup_fast\trows-only" in out
+    assert "q18b_approx_distinct\trows-only" in out
 
 
 def test_version(capsys):

@@ -743,42 +743,6 @@ def test_epoch_manifest_matches_shuffle_rollup(spark, sf_dir):
         == [tuple(r) for r in rolled.collect()]
 
 
-def test_semantic_dedup_fast_equals_exact(spark, sf_dir):
-    """The Arrow-batched numpy screen must produce the identical kept set
-    as the exact-fold screen — and the equivalence must be principled:
-    no same-bucket candidate's cosine sits within float noise of the
-    threshold (where numpy's summation order could legitimately flag
-    differently from the left fold)."""
-    from bacalhau_spark.operators.similarity import (SEMDEDUP_SIGN_BITS,
-                                                     SEMDEDUP_TAU,
-                                                     nd_semantic_dedup,
-                                                     nd_semantic_dedup_fast)
-    exact = [(r.vec_id, r.bucket, r.kept)
-             for r in nd_semantic_dedup(spark, sf_dir).collect()]
-    fast = [(r.vec_id, r.bucket, r.kept)
-            for r in nd_semantic_dedup_fast(spark, sf_dir).collect()]
-    assert fast == exact
-
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    bucket = sum(
-        (F.when(F.element_at("embedding", i + 1) >= 0, F.lit(1 << i))
-         .otherwise(F.lit(0)) for i in range(SEMDEDUP_SIGN_BITS)),
-        start=F.lit(0)).cast("int")
-    b = emb.select("vec_id", bucket.alias("bucket"), "embedding")
-    a_side = b.select(F.col("vec_id").alias("a_id"), "bucket",
-                      F.col("embedding").alias("a_emb"))
-    b_side = b.select(F.col("vec_id").alias("b_id"), "bucket",
-                      F.col("embedding").alias("b_emb"))
-    margin = (a_side.join(b_side, "bucket")
-              .where(F.col("a_id") < F.col("b_id"))
-              .select(F.abs(cosine(F.col("a_emb"), F.col("b_emb"))
-                            - F.lit(SEMDEDUP_TAU)).alias("m"))
-              .agg(F.min("m")).first()[0])
-    assert margin > 1e-6, (
-        f"a candidate cosine sits {margin} from tau — kernel equivalence "
-        "would be luck, not guarantee")
-
-
 def test_bloom_prefilter_no_false_negatives(spark, sf_dir):
     """Bloom admission must never miss a true duplicate: every verified
     dup is a bloom hit, and false positives are exactly hits minus dups."""
@@ -803,7 +767,7 @@ def test_kmeans_partitions_corpus(spark, sf_dir):
 
 
 def test_pca_project_matches_numpy_and_identities(spark, sf_dir):
-    """The PCA surface's correctness gate (it is no_oracle by design):
+    """The PCA surface's identities (the hash gate pins only values):
     (1) components orthonormal, (2) eigenvalues descending, (3) the
     Spark projection equals a pure-numpy PCA of the same quantized
     rows, (4) per-component projection variance equals its eigenvalue
@@ -814,14 +778,14 @@ def test_pca_project_matches_numpy_and_identities(spark, sf_dir):
     from bacalhau_spark.operators.similarity import (KM_OFF, KM_SCALE,
                                                      _pca_model,
                                                      nd_pca_project,
-                                                     pca_project_frame)
+                                                     pca_project_exact_frame)
 
     mu, w, evals, n = _pca_model(spark, sf_dir)
     w = np.asarray(w)
     assert np.allclose(w.T @ w, np.eye(w.shape[1]), atol=1e-9)
     assert all(a >= b - 1e-9 for a, b in zip(evals, evals[1:]))
 
-    rows = pca_project_frame(spark, sf_dir).collect()
+    rows = pca_project_exact_frame(spark, sf_dir).collect()
     emb = {r["vec_id"]: r["embedding"]
            for r in table(spark, sf_dir, "embeddings").collect()}
     q = np.array([[np.floor(float(v) * KM_SCALE) + KM_OFF
@@ -906,9 +870,8 @@ def test_weighted_jaccard_emphasizes_rare_content(spark):
 def test_cc_doubling_converges_on_deep_chains(spark):
     """Pointer jumping's reason to exist: a 200-node path graph
     (diameter 199) converges within CC_DOUBLING_MAX_ITERS=12 doubling
-    rounds — plain min-propagation would need ~199 rounds, far past
-    nd_dedup_clusters' CC_MAX_ITERS=12 cap — and every node lands on
-    the chain-head label."""
+    rounds — plain min-propagation would need ~199 rounds — and every
+    node lands on the chain-head label."""
     from bacalhau_spark.operators.dedup import cc_labels_doubling
 
     n = 200

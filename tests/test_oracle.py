@@ -114,6 +114,33 @@ def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
         "ROUND(SUM(double)) at a data-engineered boundary).")
 
 
+# Registered pairs that share one oracle on purpose, with the reason.
+SHARED_ORACLE_PAIRS = {
+    # the same math through the Python-worker plane: nd_pandas_udf grades
+    # the pandas_udf path against the builtin row's answer
+    frozenset({"q04_math_funcs", "nd_pandas_udf"}),
+    # the pruned gather reads the `ivf_vectors` store kind, which the
+    # epoch ingest publishes; whether that kind stays is a separate change
+    frozenset({"nd_ann_ivf", "nd_ann_ivf_pruned"}),
+}
+
+
+def test_no_two_batch_rows_share_an_oracle():
+    """One implementation per answer: two batch rows graded by the same
+    oracle SQL compute the same result twice, and the caller would pick
+    a kernel by naming a row. Streaming rows are exempt — a stream twin
+    re-grades the batch answer through the stream runner."""
+    by_sql: dict = {}
+    for name, (fn, sql) in ALL_QUERIES.items():
+        if isinstance(sql, str) and \
+                not fn.__module__.startswith("bacalhau_spark.streaming"):
+            by_sql.setdefault(sql, set()).add(name)
+    shared = [names for names in by_sql.values() if len(names) > 1]
+    assert all(frozenset(n) in SHARED_ORACLE_PAIRS for n in shared), \
+        sorted(sorted(n) for n in shared
+               if frozenset(n) not in SHARED_ORACLE_PAIRS)
+
+
 @pytest.mark.parametrize("name", NO_ORACLE_CASES)
 def test_no_oracle_query_runs(name, spark, sf_dir):
     fn, _ = ALL_QUERIES[name]

@@ -503,6 +503,43 @@ def test_empty_store_parent_reads_as_zero_rows(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_store_edges_carry_the_pii_and_dedup_changes(spark, tmp_path):
+    """Over the fixture the pii and dedup stages change no row, so the
+    pinned addresses cannot tell a skipped stage from a run one. Over a
+    corpus holding one email and one exact duplicate, each stage's
+    contentstore edge must carry its change: a new manifest address,
+    the email redacted, the duplicate dropped."""
+    import json
+
+    from bacalhau_spark.registry import engine_registry
+    from bacalhau_spark.sources import contentstore as cs
+
+    roots = [str(tmp_path / "docs")]
+    cs.publish(cs.json_lines(spark.createDataFrame(
+        [(1, "write to ada@example.org for the notes"),
+         (2, "the same words twice over"),
+         (3, "the same words twice over")],
+        "doc_id bigint, text string")), roots[0])
+    eng = Engine(spark, engine_registry())
+    for query in ("stage_pii_redact", "stage_dedup"):
+        roots.append(str(tmp_path / query))
+        run_id = eng.submit(JobSpec.from_dict(
+            {"query": query, "inputs": {"sf_dir": roots[-2]},
+             "outputs": {"path": roots[-1], "format": "contentstore"}}))
+        assert eng.state(run_id) == "Completed", query
+    addrs = [cs.last_manifest(root)[0] for root in roots]
+    assert len(set(addrs)) == len(addrs), addrs
+
+    def docs_at(root):
+        return sorted((d["doc_id"], d["text"]) for d in (
+            json.loads(r.value) for r in cs.read_root(spark, root).collect()))
+
+    redacted = (1, "write to <EMAIL> for the notes")
+    dup = (2, "the same words twice over")
+    assert docs_at(roots[1]) == [redacted, dup, (3, dup[1])]
+    assert docs_at(roots[2]) == [redacted, dup]
+
+
 def test_parquet_parent_reads_launch_no_job(spark, tmp_path):
     """A stage reads its parquet parent with the schema it expects, so
     the call plans without a Spark job (a schemaless read infers the

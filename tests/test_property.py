@@ -384,28 +384,22 @@ def _ref_bloom(corpus_fps, batch):
                       min_size=1, max_size=12),
        overlap=st.lists(st.integers(0, 11), max_size=4))
 def test_bloom_admission_matches_reference(spark, corpus, batch, overlap):
-    """Bloom bitmap build + codegen probe + hits-only verification vs the
+    """Bloom bitmap build + word-table probe + hits-only verification vs the
     pure-Python model: per-language batch/hit/dup/false-positive counts
     must agree exactly. `overlap` injects corpus fps into the batch so
     true duplicates (guaranteed hits) are always exercised; small batch
-    fps make bloom false positives likely at 2048 bits. The
-    partitioned-bitmap scale variant (bloom_admit_part_frame — bitmap
-    as a joined table, never collected) is pinned against the SAME
-    model on the same draws, which is also its frame-level equivalence
-    gate to the literal form."""
-    from bacalhau_spark.operators.dedup import (bloom_admit_frame,
-                                                bloom_admit_part_frame)
+    fps make bloom false positives likely at 2048 bits."""
+    from bacalhau_spark.operators.dedup import bloom_admit_frame
 
     batch = list(batch) + [("en", corpus[i % len(corpus)])
                            for i in overlap]
     cdf = spark.createDataFrame([(f,) for f in set(corpus)], "cfp long")
     bdf = spark.createDataFrame(batch, "lang string, fp long")
     want = _ref_bloom(corpus, batch)
-    for frame_fn in (bloom_admit_frame, bloom_admit_part_frame):
-        got = {r["lang"]: (r["n_batch"], r["n_bloom_hits"], r["n_dup"],
-                           r["n_false_pos"])
-               for r in frame_fn(cdf, bdf).collect()}
-        assert got == want, frame_fn.__name__
+    got = {r["lang"]: (r["n_batch"], r["n_bloom_hits"], r["n_dup"],
+                       r["n_false_pos"])
+           for r in bloom_admit_frame(cdf, bdf).collect()}
+    assert got == want
 
 
 def _ref_kmeans(vectors, k, iters):

@@ -550,9 +550,6 @@ def test_round7_operators_scale_shapes(spark, sf_dir):
     - nd_kmeans: the E-step probes the K×dims centroid table through a
       BROADCAST hash join (the exploded matrix never shuffles to meet
       centroids), and nothing in the plan is a cartesian product.
-    - nd_bloom_prefilter: the bitmap probe is pure codegen (element_at
-      over a literal array — no join anywhere on the probe path), and no
-      exchange ever carries document text, only fingerprints.
     - nd_scd2_history: both window passes share ONE user_id exchange —
       the event stream moves exactly once.
     - nd_mad_outlier: the per-group median/MAD scalars return to the
@@ -565,7 +562,6 @@ def test_round7_operators_scale_shapes(spark, sf_dir):
 
     from bacalhau_spark.operators.aggregates import nd_mad_outlier
     from bacalhau_spark.operators.curation import nd_dataset_card
-    from bacalhau_spark.operators.dedup import nd_bloom_prefilter
     from bacalhau_spark.operators.similarity import nd_kmeans
     from bacalhau_spark.operators.windows import nd_scd2_history
 
@@ -578,13 +574,6 @@ def test_round7_operators_scale_shapes(spark, sf_dir):
     km_e.unpersist()
     assert "BroadcastHashJoin" in km_plan
     assert "CartesianProduct" not in km_plan
-
-    bloom_plan = _formatted_plan(nd_bloom_prefilter(spark, sf_dir))
-    assert "element_at" in bloom_plan  # the literal-bitmap codegen probe
-    for m in re.finditer(r"Arguments: hashpartitioning\(([^)]*)\)",
-                         bloom_plan):
-        assert "text" not in m.group(1)
-    assert "CartesianProduct" not in bloom_plan
 
     scd_plan = _formatted_plan(nd_scd2_history(spark, sf_dir))
     hash_exchanges = re.findall(
@@ -628,24 +617,23 @@ def test_curation_family_never_expands_document_stream(spark, sf_dir):
 def test_round8_operators_scale_shapes(spark, sf_dir):
     """Round-8 operators' 100 TB plan claims, asserted:
 
-    - nd_bloom_prefilter_part: the bitmap is built DISTRIBUTED (bit_or
+    - nd_bloom_prefilter: the bitmap is built DISTRIBUTED (bit_or
       aggregate in-plan) and probed via a join — there is no element_at
       literal probe anywhere, i.e. nothing was collected to the driver
-      and re-broadcast as a plan literal (the 8 MB ceiling the variant
-      exists to remove); no exchange carries document text; no
-      cartesian product.
+      and re-broadcast as a plan literal (no 8 MB literal ceiling); no
+      exchange carries document text; no cartesian product.
     """
     import re
 
-    from bacalhau_spark.operators.dedup import nd_bloom_prefilter_part
+    from bacalhau_spark.operators.dedup import nd_bloom_prefilter
 
-    part_plan = _formatted_plan(nd_bloom_prefilter_part(spark, sf_dir))
-    assert "bit_or" in part_plan
-    assert "element_at" not in part_plan
+    bloom_plan = _formatted_plan(nd_bloom_prefilter(spark, sf_dir))
+    assert "bit_or" in bloom_plan
+    assert "element_at" not in bloom_plan
     for m in re.finditer(r"Arguments: hashpartitioning\(([^)]*)\)",
-                         part_plan):
+                         bloom_plan):
         assert "text" not in m.group(1)
-    assert "CartesianProduct" not in part_plan
+    assert "CartesianProduct" not in bloom_plan
 
     # nd_substr_dedup: the sliding-window repeated-substring detector
     # must never shuffle document text (exchanges carry doc_id/window
@@ -686,15 +674,14 @@ def test_round8_operators_scale_shapes(spark, sf_dir):
         assert "text" not in m.group(1)
     assert "CartesianProduct" not in cms_plan
 
-    # nd_embedding_covariance: pair generation must be a Generate in the
-    # scan stage (no self-join of the exploded matrix — the x-join-x
-    # formulation would shuffle it twice), the per-dim sums return via
-    # BROADCAST, and no exchange carries the embedding array.
+    # nd_embedding_covariance: each batch reduces to its Gram partials
+    # in ONE MapInPandas (no self-join of the matrix — the x-join-x
+    # formulation would shuffle it twice), and no exchange carries the
+    # embedding array.
     from bacalhau_spark.operators.similarity import nd_embedding_covariance
 
     cov_plan = _formatted_plan(nd_embedding_covariance(spark, sf_dir))
-    assert "Generate" in cov_plan
-    assert "BroadcastHashJoin" in cov_plan
+    assert len(re.findall(r"^\(\d+\) MapInPandas", cov_plan, re.M)) == 1
     assert "SortMergeJoin" not in cov_plan
     for m in re.finditer(r"Arguments: hashpartitioning\(([^)]*)\)",
                          cov_plan):

@@ -22,21 +22,13 @@ def test_url_canonicalize_is_pure_mapper(spark, sf_dir):
 
 
 def test_domain_blocklist_broadcasts_block_side(spark, sf_dir):
-    """Compile strategy per blocklist size (r13): the registered row's
-    15-literal blocklist compiles to an IN predicate — no join, no
-    broadcast-materialization job, one artifact scan — while the
-    TABLE shape (blocklist_audit_frame) broadcasts the dim so the
-    corpus never shuffles. Neither plans a Python-RDD literal scan."""
+    """The registered row's literal blocklist compiles to an IN
+    predicate — no join, no broadcast-materialization job, one artifact
+    scan, no Python-RDD literal scan."""
     plan = _plan(web.nd_domain_blocklist(spark, sf_dir))
     assert "BroadcastHashJoin" not in plan, plan
     assert "BatchEvalPython" not in plan and "Scan ExistingRDD" not in plan
     assert plan.count("documents.parquet") <= 2  # one scan node (2 prints)
-
-    tbl_plan = _plan(web.blocklist_audit_frame(
-        spark, web.canon_index(spark, sf_dir), web.blocked_frame(spark)))
-    assert "BroadcastHashJoin" in tbl_plan, tbl_plan
-    assert "BatchEvalPython" not in tbl_plan
-    assert "Scan ExistingRDD" not in tbl_plan
 
 
 def test_canonicalize_is_idempotent(spark, sf_dir):
@@ -272,17 +264,21 @@ def test_blocklist_blocks_exactly_blocked_sources(spark, sf_dir):
 
 
 def test_blocklist_table_shape_equals_literal_compile(spark, sf_dir):
-    """r13: nd_domain_blocklist compiles its literal blocklist to an IN
-    predicate (no broadcast job for a 15-entry dim); the broadcast-join
-    TABLE shape (blocklist_audit_frame) must produce the identical
-    audit — the compile choice is a cost decision, never a semantic
-    one."""
+    """nd_domain_blocklist compiles its literal blocklist to an IN
+    predicate (no broadcast job for a 15-entry dim); its audit must
+    equal the per-row rule applied to the blocklist TABLE
+    (blocked_frame) — the compile choice is a cost decision, never a
+    semantic one."""
     lit_rows = [tuple(r) for r in
                 web.nd_domain_blocklist(spark, sf_dir).collect()]
-    tbl_rows = [tuple(r) for r in web.blocklist_audit_frame(
-        spark, web.canon_index(spark, sf_dir),
-        web.blocked_frame(spark)).collect()]
-    assert lit_rows == tbl_rows
+    blocked = {r.domain for r in web.blocked_frame(spark).collect()}
+    audit: dict = {}
+    for r in web.canon_index(spark, sf_dir).select(
+            "source", "domain").collect():
+        n, kept, blk = audit.get(r.source, (0, 0, 0))
+        hit = r.domain in blocked
+        audit[r.source] = (n + 1, kept + (not hit), blk + hit)
+    assert lit_rows == [(s, *audit[s]) for s in sorted(audit)]
     # the registered plan carries no join at all
     plan = web.nd_domain_blocklist(spark, sf_dir)._jdf.queryExecution() \
         .executedPlan().toString()
