@@ -5,13 +5,13 @@ are first-class engine operators designed for the 100 TB regime:
 
 - exact dedup: hash-groupBy on a content fingerprint — shuffles one 16-byte
   hash + key per row, never the text itself.
-- MinHash + LSH: shingle → seeded minhash signature → banded bucket join.
-  The candidate-pair join is an *equi* join on (band, signature), so Spark
-  hash-partitions buckets across the cluster; giant buckets are split by AQE
-  skew handling. No O(n²) comparison ever happens.
+- MinHash + LSH: shingle → seeded minhash signature → folded band keys,
+  bucketed, capped and expanded to a<b pairs by operators.buckets (the
+  one bucket core every banded near-dup family shares). No O(n²)
+  comparison ever happens.
 - SimHash: 16-bit sign-of-sum signature, one groupBy per (doc, bit).
-- n-gram Jaccard: inverted-index self-join on shingles (candidate pairs only
-  from shared shingles), then exact Jaccard on the pair counts.
+- n-gram Jaccard: capped shingle posting lists, pairs expanded per list,
+  then exact Jaccard on the pair counts.
 
 All hashing is md5-based (cross-engine deterministic) so every operator is
 checkable against the DuckDB oracle bit-for-bit.
@@ -19,17 +19,17 @@ checkable against the DuckDB oracle bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bacalhau_spark.catalog import read_parts, spread_compute, table
 from bacalhau_spark.functions import shingles, words
-from bacalhau_spark.session import SessionCache
-from bacalhau_spark.sources.indexstore import (cached_index,
-                                               docs_fingerprint,
-                                               rowwise_index, session_view,
+from bacalhau_spark.operators.buckets import (BUCKET_CAP, band_cols, bands,
+                                              cand_count, gated_broadcast,
+                                              live_keys, pair_sides, pairs,
+                                              postings, within_cap)
+from bacalhau_spark.sources.indexstore import (cached_index, rowwise_index,
+                                               session_view,
                                                table_part_paths)
 # Re-exported: callers that predate sources.indexstore (the benchmark's
 # crawl workload among them) import the cold-path lever from here.
@@ -39,17 +39,6 @@ N_HASHES = 16   # minhash signature length
 N_BANDS = 4     # LSH bands (4 rows per band)
 ROWS_PER_BAND = N_HASHES // N_BANDS
 JACCARD_THRESHOLD = 0.5
-
-# Quadratic-bucket guards. A shingle appearing in f docs (or an LSH bucket
-# holding f docs) contributes O(f²) candidate pairs — one boilerplate
-# sentence across a 100 TB corpus would otherwise create a single quadratic
-# bucket no partitioning can save. Both caps drop the offending key before
-# the self-join (the standard stop-shingle / hot-bucket filter; the oracle
-# applies the identical filter, and docs pairing ONLY through ubiquitous
-# shingles are by definition not near-duplicates of interest). Fixture
-# maxima are df=25 / bucket=4, so the caps never fire at test scale.
-SHINGLE_DF_CAP = 50
-LSH_BUCKET_CAP = 50
 
 # Universal-hash family for minhash: ONE md5 per shingle (the expensive
 # part), then h_s(x) = (a_s*x + b_s) mod p over its 60-bit integer prefix —
@@ -149,36 +138,20 @@ def _minhash_signatures(spark: SparkSession, docs: DataFrame) -> DataFrame:
         spark, docs.select("doc_id", "text"), "doc_id"))
 
 
-# THE sorted-bucket pair expansion, stated once (band candidates,
-# winnow, jaccard and phash buckets all expand identically — the a<b
-# filter downstream drops the self-pair a doubly-bucketed doc emits):
-# a<b pairs in codegen over the sorted member list, never a self-join.
-PAIR_EXPAND_SQL = ("flatten(transform(ids, (a, i) -> "
-                   "transform(slice(ids, i + 2, size(ids)), "
-                   "b -> struct(a AS a_id, b AS b_id))))")
-
-
-def sym_edges(pairs: DataFrame) -> DataFrame:
+def sym_edges(cand: DataFrame) -> DataFrame:
     """(a_id, b_id) pairs -> the symmetric (src, dst) edge set, via
     explode, not union-of-two-selects: the union form is two branches
     over the same lineage, which Spark evaluates twice when a consumer
     persists (no subplan sharing). One statement for every CC caller."""
-    return (pairs.select(F.explode(F.array(
+    return (cand.select(F.explode(F.array(
         F.struct(F.col("a_id").alias("src"), F.col("b_id").alias("dst")),
         F.struct(F.col("b_id").alias("src"), F.col("a_id").alias("dst")),
     )).alias("e")).select("e.src", "e.dst"))
 
 
 def minhash_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE shared minhash signature index (persisted store-backed
-    since round 11): built once per
-    (session, sf_dir), reused by every LSH consumer — nd_minhash_lsh,
-    nd_dedup_clusters/survivors, nd_minhash_estimate, nd_editdist_dedup.
-    Before round 9 each consumer re-derived the full signature lineage
-    (nd_editdist_dedup's 17.1 s at x10 was ~90% signature rebuild,
-    experiments/registry_crossover_r8d.txt); the production pipeline
-    builds the index ONCE and band-joins it many times, and this cache
-    is that lifecycle at session scope."""
+    """THE persisted minhash signature index (kind `sig`), built once
+    per table content and read by every LSH consumer."""
     return rowwise_index(
         spark, sf_dir, "sig", lambda docs: _minhash_signatures(spark, docs),
         # signatures AGGREGATE per doc — delta adoption is only sound
@@ -188,19 +161,10 @@ def minhash_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def band_candidate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared persisted LSH candidate-pair set (default bucket cap) over
-    the cached signature index — the second tier of the shared index:
-    clusters, survivors, estimate and editdist all consume the same
-    pairs, so the band join also runs once per table-content
-    fingerprint and persists alongside the signatures.
-
-    Delta-adopts appended corpora since round 13 (_cand_delta): banding
-    is EXACTLY incremental — a candidate pair either involves a new doc
-    (the probe finds it) or was already a parent pair (hardlinked) — so
-    a crawl epoch stops re-paying the full candidate-generation cost
-    the round-12 verdict flagged as the global-kind frontier. Reference
-    analog: incremental CID pinning,
-    pkg/storage/ipfs_apicopy/storage.go:116-134."""
+    """The persisted LSH candidate pairs over the signature index, shared
+    by clusters, survivors, estimate and editdist. An appended corpus
+    delta-adopts (_cand_delta): a candidate pair either involves a new
+    doc (the probe finds it) or was already a parent pair (hardlinked)."""
     staged: list[DataFrame] = []
     return cached_index(
         spark, sf_dir, "cand",
@@ -208,62 +172,45 @@ def band_candidate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta=lambda new: _cand_delta(spark, sf_dir, new, staged=staged),
         # the delta probe persists two key-sized staging frames across
         # its guard actions and the publish; release them once the
-        # artifact is materialized (the round-10 PQ staging rule)
+        # artifact is materialized
         cleanup=lambda: [f.unpersist() for f in staged])
 
 
-# Width gate for the cand delta (round-13 verdict #2): the delta path
-# pays a fixed guard cost — the disjointness pass, the persisted
-# (doc_id, bkey) materialization, the crossed-cap counts — that only
-# amortizes once the PARENT corpus is wide enough. One-box calibration
-# (experiments/index_delta_r13.txt, re-pinned in index_delta_r14.txt):
-# 0.93x SLOWDOWN at 30 parent shards, 1.33x at 100, 3.09x at 300 —
-# crossover ~x50. Below the gate _cand_delta declines and the store
-# takes the cheaper full rebuild; the parent's shard count is already
-# in hand (the manifest's per-file keys), so the choice costs nothing.
+# Width gate for the cand delta: the delta path pays a fixed guard cost
+# (the disjointness pass, the persisted (doc_id, bkey) materialization,
+# the crossed-cap counts) that only amortizes once the PARENT corpus is
+# wide enough. One-box calibration (experiments/index_delta_r13.txt,
+# re-pinned in index_delta_r14.txt): 0.93x at 30 parent shards, 1.33x
+# at 100, 3.09x at 300 — crossover ~x50. Below the gate _cand_delta
+# declines and the store takes the cheaper full rebuild.
 CAND_DELTA_MIN_PARENT_SHARDS = 50
 
 
 def _cand_delta(spark: SparkSession, sf_dir: str, new_paths: list[str],
-                bucket_cap: int = LSH_BUCKET_CAP,
                 staged: list | None = None):
-    """The NEW candidate pairs of an appended corpus — the rows that,
+    """The NEW candidate pairs of an appended corpus: the rows that,
     unioned with the parent's hardlinked pair files, equal
-    _band_candidates over the full corpus EXACTLY. Soundness argument
-    (band keys are per-doc functions — a doc's signature never changes
-    when other docs are appended):
+    _band_candidates over the full corpus exactly. Band keys are per-doc
+    functions, so
 
       rebuild = { (a<b) sharing a band key k : n_full(k) <= cap }
       parent  = { (a<b), both old, sharing k : n_parent(k) <= cap }
       probe   = { (a<b), >=1 new, sharing k  : n_full(k) <= cap }
 
-    parent ∪ probe = rebuild iff no bucket CROSSES the cap (a bucket
-    with 2 <= n_parent <= cap < n_full holds parent pairs the rebuild
-    would drop) and ids are disjoint (a re-carried id changes its own
-    signature row under the merged corpus). Both shapes are detected
-    here and DECLINE adoption (return None -> full rebuild):
-    n_parent(k) is derived as n_full(k) - n_new(k) — no parent scan —
-    and disjointness is one column-pruned semi-join over the parent
-    part files. Parent-and-probe are disjoint row sets by construction
-    (every probe pair names a new id), so the published union needs no
-    distinct. Buckets already above the cap in the parent only grow:
-    dropped by parent, rebuild, and probe alike — consistent.
-
-    Scale shape: the expensive side (full signatures) reads the
-    DELTA-ADOPTED persisted sig index; everything else is the new
-    shards' signatures (delta-sized) plus two map-side-combined key
-    counts; the probe join keys on the single folded 8-byte band key
-    with the hot-bucket gate applied before expansion."""
+    and parent ∪ probe = rebuild iff no bucket CROSSES the cap
+    (2 <= n_parent <= cap < n_full) and the new ids are disjoint from
+    the parent's. Either violation declines (returns None: full
+    rebuild). n_parent(k) is n_full(k) - n_new(k), so the parent is
+    never scanned for keys; every probe pair names a new id, so the
+    published union needs no distinct."""
     new = set(new_paths)
     parent_paths = [p for p in table_part_paths(sf_dir, "documents")
                     if p not in new]
     if len(parent_paths) < CAND_DELTA_MIN_PARENT_SHARDS:
-        return None  # below the one-box crossover the guard overhead
-        # exceeds the savings (0.93x at x30) — take the rebuild
-    # ONE column-pruned pass answers both guard questions — are the
+        return None
+    # ONE column-pruned pass answers both guard questions: are the
     # appended ids disjoint from the parent's, and how many are there
-    # (the broadcast gate) — instead of a semi-join action plus a count
-    # action (each pays the scheduler floor on this cold path)
+    # (the broadcast gate)
     new_ids = (read_parts(spark, sf_dir, "documents", new_paths)
                .select("doc_id").distinct())
     parent_ids = read_parts(spark, sf_dir, "documents",
@@ -280,24 +227,17 @@ def _cand_delta(spark: SparkSession, sf_dir: str, new_paths: list[str],
         F.coalesce(F.sum("all_new"), F.lit(0)).alias("n_new")).first()
     if g["overlap"] > 0:
         return None  # re-carried ids: signatures themselves change
-    sig = minhash_signature_index(spark, sf_dir)
-    band = F.explode(F.array(*_band_key_exprs())).alias("bkey")
-    # the (doc_id, bkey) key table is consumed by THREE downstream
-    # plans (full counts, the new-side keys, the probe target) and
-    # Spark never shares subplans — persist it once (index-sized:
-    # #docs x bands x 16 bytes), released by the caller's cleanup
-    full_keys = sig.select("doc_id", band).persist()
-    # count-gated broadcast (the EDIT_BROADCAST_MAX_PAIRS convention):
-    # a typical epoch delta is small next to the corpus, but a giant
-    # backfill must degrade to a shuffle join, not die on the ceiling
-    ids_side = (F.broadcast(new_ids)
-                if g["n_new"] <= EDIT_BROADCAST_MAX_PAIRS
-                else new_ids)
-    new_keys = full_keys.join(ids_side, "doc_id")
+    # the (doc_id, bkey) key table feeds the full counts, the new-side
+    # keys and the probe target; Spark shares no subplans, so persist it
+    # once (released by the caller's cleanup)
+    full_keys = (bands(_band_keys(minhash_signature_index(spark, sf_dir)))
+                 .select("doc_id", "bkey").persist())
+    new_keys = full_keys.join(gated_broadcast(new_ids, g["n_new"]),
+                              "doc_id")
     full_n = full_keys.groupBy("bkey").agg(F.count("*").alias("n_full"))
     new_n = new_keys.groupBy("bkey").agg(F.count("*").alias("n_new"))
     # persisted too: the crossed-cap guard's action and the probe's
-    # live-bucket gate both read it (distinct-bkey-sized)
+    # live-bucket gate both read it
     counts = (full_n.join(new_n, "bkey", "left")
               .select("bkey", "n_full",
                       (F.col("n_full")
@@ -307,11 +247,11 @@ def _cand_delta(spark: SparkSession, sf_dir: str, new_paths: list[str],
     if staged is not None:
         staged.extend([full_keys, counts])
     crossed = counts.where((F.col("n_parent") >= 2)
-                           & (F.col("n_parent") <= bucket_cap)
-                           & (F.col("n_full") > bucket_cap))
+                           & within_cap(F.col("n_parent"))
+                           & ~within_cap(F.col("n_full")))
     if not crossed.isEmpty():
         return None  # a hot bucket crossed the cap: union != rebuild
-    live = counts.where(F.col("n_full") <= bucket_cap).select("bkey")
+    live = counts.where(within_cap(F.col("n_full"))).select("bkey")
     probe = (new_keys.join(live, "bkey")
              .select("bkey", F.col("doc_id").alias("n_id")))
     return (probe.join(full_keys, "bkey")
@@ -321,60 +261,18 @@ def _cand_delta(spark: SparkSession, sf_dir: str, new_paths: list[str],
             .distinct())
 
 
-def _band_candidates(sig_wide: DataFrame,
-                     bucket_cap: int = LSH_BUCKET_CAP) -> DataFrame:
-    """LSH band join over the wide signatures: distinct (a_id < b_id) pairs
-    sharing at least one full 4-row band. Buckets larger than `bucket_cap`
-    are dropped before pair expansion (hot-bucket guard: a bucket of f docs
-    is f(f-1)/2 pairs)."""
-    # ONE long bucket key with the band INDEX folded in as the leading
-    # polynomial term — not a (band, sig) pair. The bucket stream then
-    # shuffles/sorts/aggregates a single 8-byte key: A/B at sf0.1, the
-    # window-guard plan dropped 1.13 s -> 1.00 s median (interleaved, 7
-    # runs), and the guard's window sort became free relative to the
-    # post-collect-filter form (0.996 vs 0.993 — the two-key sort was the
-    # entire guard cost). The fold runs mod BKEY_PRIME (43-bit — see its
-    # comment for the collision budget; the r5 review caught the first
-    # cut folding mod the 31-bit MH_PRIME, which would birthday-merge
-    # buckets from ~1e5 rows). Cross-band key collisions remain possible
-    # in principle; the oracle folds IDENTICALLY, so the gate compares
-    # like for like.
-    # the fold itself lives in _band_key_exprs — the ONE definition both
-    # the index build and the incremental probe share (divergence would
-    # make every probe silently miss the index's key space)
-    band_cols = _band_key_exprs()
-    sig = sig_wide.select(
-        "doc_id",
-        F.explode(F.array(*band_cols)).alias("bkey"))
-    # Hot-bucket guard as a WINDOW count over bkey — not a separate
-    # count-aggregate + anti join. The r3 two-branch form recomputed the
-    # entire signature lineage TWICE (Spark does not share subplans across
-    # DataFrame branches); measured at sf0.1 the band stage cost ~2x the
-    # signature stage for that reason alone. The window form is single-
-    # lineage: ONE exchange hash-partitions on bkey, the window count runs
-    # over sorted runs, and the bucket aggregation below reuses the same
-    # partitioning (no second exchange). Degenerate hot buckets are
-    # bounded by the window exec's spill path (disk, not an in-memory
-    # aggregation buffer), then dropped before any per-bucket list exists.
-    from pyspark.sql.window import Window
-    bucket_n = F.count("*").over(Window.partitionBy("bkey"))
-    sig = (sig.withColumn("n", bucket_n)
-           .where(F.col("n") <= bucket_cap).drop("n"))
-    # Bucket-and-expand instead of a self-join: the surviving buckets —
-    # now provably ≤ cap elements — collect their member lists and the
-    # a<b pairs are generated in codegen over the sorted list. The
-    # join-side row explosion of the self-join form never happens.
-    buckets = (sig.groupBy("bkey")
-               .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-               .where(F.size("ids") >= 2))
-    pairs = F.expr(PAIR_EXPAND_SQL)
-    # a_id < b_id filter: if one DOC's two band keys collide, its doc_id
-    # sits twice in the sorted member list and the expansion emits a
-    # (x, x) self-pair — which the oracle's a.doc_id < b.doc_id self-join
-    # never produces. The strict inequality drops it in codegen.
-    return (buckets.select(F.explode(pairs).alias("p"))
-            .select("p.a_id", "p.b_id")
-            .where(F.col("a_id") < F.col("b_id"))
+def _band_keys(sig_wide: DataFrame) -> DataFrame:
+    """(doc_id, b0..b3): the folded band-bucket keys of wide signature
+    rows."""
+    return sig_wide.select("doc_id", *_band_key_exprs())
+
+
+def _band_candidates(sig_wide: DataFrame) -> DataFrame:
+    """Distinct (a_id < b_id) pairs sharing at least one full band over
+    wide signature rows. The key is the single folded long (the band
+    index leads the fold), so buckets group on bkey alone, exactly as
+    the oracle does."""
+    return (pairs(postings(bands(_band_keys(sig_wide)), "bkey"))
             .distinct())
 
 
@@ -466,46 +364,20 @@ WINNOW_MIN_SHARED = 2
 
 def nd_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (the MOSS algorithm; Schleimer,
-    Wilkerson & Aiken, SIGMOD'03) — the THIRD fingerprint-selection
-    modality next to minhash (random permutations) and simhash (sign
-    sums): slide a WINNOW_W window over the rolling k-gram hash stream
-    and keep each window's MINIMUM, guaranteeing any shared run of at
-    least WINNOW_W + k - 1 words yields a shared fingerprint (the
-    local-containment guarantee minhash deliberately trades away for
-    whole-document similarity). Output: candidate pairs sharing >=
-    WINNOW_MIN_SHARED selected fingerprints, with the shared count.
-    Tie positions are irrelevant here because the per-doc fingerprint
-    SET is what survives (standard winnowing's rightmost-min rule only
-    matters for positional audits).
-
-    Scale shape: hash stream and window minima are pure codegen over
-    the projected word-hash array (the rolling-key lesson: project
-    before any HOF indexes it); per-doc DISTINCT collapses map-side;
-    the inverted index reuses the posting-list discipline — df-capped
-    buckets (a fingerprint in f docs is f(f-1)/2 pairs; ubiquitous
-    boilerplate fingerprints are dropped, the stop-shingle rule),
-    bucket-and-expand in codegen, never an index self-join; only
-    8-byte fingerprints and id pairs ever shuffle. The posting frame
-    comes from the shared persisted index (build once, probe many — the
-    minhash_signature_index lifecycle, round-10 extension). Warm reads
-    since round 14 expand over the session-cached df-CAPPED frame
-    (winnow_capped_postings) — the window guard runs once per (session,
-    table content), not once per read."""
-    return _winnow_expand(winnow_capped_postings(spark, sf_dir))
+    Wilkerson & Aiken, SIGMOD'03): slide a WINNOW_W window over the
+    rolling k-gram hash stream and keep each window's minimum, so any
+    shared run of at least WINNOW_W + k - 1 words yields a shared
+    fingerprint. Output: (a_id, b_id, shared_fps) for pairs sharing >=
+    WINNOW_MIN_SHARED selected fingerprints, over the session's capped
+    postings of the persisted fingerprint index."""
+    return winnow_pairs_from_postings(winnow_capped_postings(spark, sf_dir))
 
 
 def winnow_postings(docs: DataFrame) -> DataFrame:
-    """Winnow fingerprint posting frame (doc_id, fp) over an ARBITRARY
-    (doc_id, text) frame: rolling k-gram hashes, window minima, per-doc
-    distinct. This is the index payload — #selected-fps x 16 bytes,
-    never text. PER-DOC-PURE since r13: the df cap moved to READ time
-    (winnow_pairs_from_postings), because a build-time cap made the
-    artifact a global function of the corpus — a fingerprint whose df
-    CROSSES the cap on an appended epoch would need parent-row REMOVAL,
-    which hardlink-plus-delta cannot express; the uncapped postings
-    delta-adopt exactly (per-doc fingerprints never change when other
-    docs append), and the read-side cap over the merged index computes
-    the same full-corpus df the rebuild would."""
+    """(doc_id, fp) winnow fingerprints of a (doc_id, text) frame: rolling
+    k-gram hashes, window minima, per-doc distinct. Per-doc pure, so the
+    persisted index delta-adopts exactly; the cap applies at read time,
+    over the merged index."""
     wh = docs.select("doc_id", _word_hashes(F.col("text")).alias("wh"))
     ks = wh.select("doc_id", _rolling_shingle_keys(F.col("wh")).alias("ks"))
     n = F.size("ks")
@@ -520,17 +392,10 @@ def winnow_postings(docs: DataFrame) -> DataFrame:
 
 
 def winnow_posting_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared winnow posting index over the fixture documents — the
-    index store's lifecycle (build once per table content, published to
-    the persisted store, every consumer scans the parquet artifact).
-
-    rev 2: the artifact is the UNCAPPED per-doc posting set (see
-    winnow_postings), so an appended epoch publishes the parent's
-    hardlinked files + only the new shards' postings; rev 1's df-capped
-    artifacts at the same content address are never adopted (they lack
-    the capped-out rows). delta_key: the (doc_id, fp) distinct is
-    global, so a re-carried doc_id would duplicate rows across parent
-    and delta — the sig rule."""
+    """The persisted uncapped winnow fingerprint index (kind `winnow`).
+    rev 2: rev 1's capped artifacts lack the capped-out rows and are
+    never adopted. delta_key: the (doc_id, fp) distinct is global, so a
+    re-carried doc_id would duplicate rows across parent and delta."""
     return rowwise_index(
         spark, sf_dir, "winnow",
         lambda docs: winnow_postings(spread_compute(
@@ -538,67 +403,27 @@ def winnow_posting_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_key="doc_id", rev=2)
 
 
-def _winnow_df_cap(postings: DataFrame) -> DataFrame:
-    """The read-time df cap over an (uncapped) posting frame (r13 — see
-    winnow_postings): a window count over fp drops ubiquitous-
-    boilerplate fingerprints before any per-bucket list exists — the
-    _band_candidates guard shape, single lineage: ONE exchange
-    hash-partitions on fp, the window count runs over sorted runs, the
-    bucket aggregation downstream reuses the partitioning, and a
-    degenerate hot bucket is bounded by the window exec's spill path
-    then dropped before any list exists. (The count+semi-join
-    alternative was measured 20% SLOWER at sf0.1: Spark shares no
-    subplans, so the count branch re-scanned the whole posting
-    lineage.)"""
-    from pyspark.sql.window import Window
-
-    df_n = F.count("*").over(Window.partitionBy("fp"))
-    return (postings.withColumn("df", df_n)
-            .where(F.col("df") <= SHINGLE_DF_CAP).drop("df"))
-
-
-def _winnow_expand(capped: DataFrame) -> DataFrame:
-    """Bucket-and-expand over a df-capped posting frame: pairs sharing
-    >= WINNOW_MIN_SHARED selected fingerprints."""
-    buckets = (capped.groupBy("fp")
-               .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-               .where(F.size("ids") >= 2))
-    pairs = F.expr(PAIR_EXPAND_SQL)
-    return (buckets.select(F.explode(pairs).alias("p"))
-            .select("p.a_id", "p.b_id")
+def winnow_pairs_from_postings(post: DataFrame) -> DataFrame:
+    """(a_id, b_id, shared_fps) over capped (fp, ids) postings."""
+    return (pairs(post)
             .groupBy("a_id", "b_id")
             .agg(F.count("*").cast("long").alias("shared_fps"))
             .where(F.col("shared_fps") >= WINNOW_MIN_SHARED)
             .orderBy("a_id", "b_id"))
 
 
-def winnow_pairs_from_postings(postings: DataFrame) -> DataFrame:
-    """Candidate pairs over an (uncapped) posting frame — the direct
-    path: read-time df cap, then bucket-and-expand. Decomposition-
-    shared with the cached path (nd_winnowing), so index and direct
-    form cannot drift."""
-    return _winnow_expand(_winnow_df_cap(postings))
-
-
 def winnow_capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The df-CAPPED pair-ready posting frame as a session view: the
-    persisted artifact must stay the per-doc-pure UNCAPPED set (delta
-    adoption depends on it — a capped artifact is a global function of
-    the corpus), but every read would re-pay the ~0.25 s window guard.
-    The capped view is DERIVED, so it caches at the session tier only —
+    """The capped (fp, ids) postings of the winnow index as a session
+    view: derived from the corpus as a whole, so session-only —
     persist(), recompute-on-loss."""
     return session_view(spark, sf_dir, "winnow_capped",
                         lambda: winnow_posting_index(spark, sf_dir),
-                        lambda postings: _winnow_df_cap(postings).persist())
+                        lambda idx: postings(idx, "fp").persist())
 
 
 def winnowing_pairs(docs: DataFrame) -> DataFrame:
-    """The full (uncached) winnowing pipeline over an ARBITRARY
-    (doc_id, text) frame — the unit-test surface for the
-    local-containment guarantee, and the one definition nd_winnowing's
-    cached path decomposes into (postings + bucket-expand share the
-    code, so index and direct form cannot drift)."""
-    return winnow_pairs_from_postings(winnow_postings(docs))
+    """The uncached winnowing pipeline over a (doc_id, text) frame."""
+    return winnow_pairs_from_postings(postings(winnow_postings(docs), "fp"))
 
 
 def _winnow_oracle() -> str:
@@ -617,7 +442,7 @@ win AS (SELECT doc_id, list_min(ks[i + 1:i + {WINNOW_W}]) AS fp
         FROM ks, unnest(range(greatest(len(ks) - {WINNOW_W - 1}, 0))) u(i)),
 sel AS (SELECT DISTINCT doc_id, fp FROM win),
 capped AS (SELECT doc_id, fp FROM sel
-           QUALIFY COUNT(*) OVER (PARTITION BY fp) <= {SHINGLE_DF_CAP})
+           QUALIFY COUNT(*) OVER (PARTITION BY fp) <= {BUCKET_CAP})
 SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        CAST(COUNT(*) AS BIGINT) AS shared_fps
 FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
@@ -740,8 +565,8 @@ def nd_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = (mkept.groupBy(F.md5("text").alias("fp"))
             .agg(F.min("doc_id").alias("doc_id")))
     sdocs = docs.join(surv.select("doc_id"), "doc_id")
-    # Survivor-slice signatures from the SHARED minhash signature index
-    # (r14 closing slice): signatures are per-doc pure and the survivors
+    # Survivor-slice signatures from the SHARED minhash signature index:
+    # signatures are per-doc pure and the survivors
     # carry UNMODIFIED text, so index-filtered-to-survivors is exactly
     # _mh_sig_frame(sdocs) — the same filter-then-sign == sign-then-
     # filter equivalence the decontam/incremental screens use. The
@@ -749,10 +574,10 @@ def nd_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs over the induced subgraph's signatures as before. At corpus
     # scale this removes the one remaining full-text signature pass in
     # the composed funnel — stage 4 becomes an index scan + band join.
-    pairs = _band_candidates(
+    cand = _band_candidates(
         minhash_signature_index(spark, sf_dir)
         .join(F.broadcast(surv.select("doc_id")), "doc_id"))
-    edges = sym_edges(pairs)
+    edges = sym_edges(cand)
     labels = cc_labels_doubling(edges)
     # one doc per near-dup cluster: drop labeled non-roots
     kept3 = sdocs.join(
@@ -942,202 +767,91 @@ def nd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shingle_doc_postings(docs: DataFrame, n: int) -> DataFrame:
-    """Per-doc-pure (doc_id, shingle) posting rows over 60-bit md5 keys
-    — the PERSISTED payload of the jaccard family's inverted index
-    (round 15; the winnow_postings convention): a doc's shingle set is
-    a pure function of its own text, so an appended epoch's rows UNION
-    exactly with the parent's (delta adoption — only new shards are
-    ever tokenized/hashed), and the stop-shingle df cap is applied at
-    READ time so the artifact never becomes a global function of the
-    corpus (a build-time cap would need parent-row removal when a
-    shingle's df crosses the cap on append — inexpressible as
-    hardlink-plus-delta)."""
+SHINGLE_N = 3  # word n-gram width of the jaccard family
+
+
+def shingle_doc_postings(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) rows of a (doc_id, text) frame over 60-bit md5
+    keys of its word SHINGLE_N-grams: the persisted payload of the
+    jaccard family's index. Per-doc pure, so an appended epoch's rows
+    union exactly with the parent's; the cap applies when the grouped
+    view is derived."""
     return (docs.select("doc_id", words("text").alias("w"))
             .select("doc_id",
-                    F.explode(shingles(F.col("w"), n)).alias("s"))
+                    F.explode(shingles(F.col("w"), SHINGLE_N)).alias("s"))
             .select("doc_id",
                     F.conv(F.substring(F.md5("s"), 1, 15), 16, 10)
                     .cast("long").alias("shingle"))
             .distinct())
 
 
-def _group_cap_postings(sh: DataFrame, df_cap: int) -> DataFrame:
-    """(doc_id, shingle) rows -> checkpointed (shingle, ids) posting
-    lists with the stop-shingle df_cap guard. The explicit-width
-    repartition BEFORE the checkpoint is load-bearing: AQE's size-based
-    coalescing (parallelismFirst=false, the session default) collapses
-    the byte-small posting-list aggregate to a couple of partitions,
-    the checkpoint FREEZES that partitioning, and the pair explode
-    downstream amplifies rows ~1000x out of those few partitions — two
-    cores doing all the work (2.4x the whole operator at x10, measured
-    in registry_crossover_r8c.txt; the spread_compute rationale applied
-    at a mid-plan stage). The explicit partition count keeps AQE from
-    re-coalescing the repartition."""
-    width = sh.sparkSession.sparkContext.defaultParallelism
-    return (sh.groupBy("shingle")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-            .where(F.size("ids") <= df_cap)
+def shingle_postings(per_doc: DataFrame) -> DataFrame:
+    """Checkpointed capped (shingle, ids) postings of (doc_id, shingle)
+    rows. The explicit-width repartition before the checkpoint is
+    load-bearing: AQE coalesces the byte-small posting aggregate to a
+    couple of partitions, the checkpoint freezes that, and the pair
+    explode downstream amplifies rows ~1000x out of them (2.4x the whole
+    operator at x10, registry_crossover_r8c.txt)."""
+    width = per_doc.sparkSession.sparkContext.defaultParallelism
+    return (postings(per_doc, "shingle")
             .repartition(width, "shingle")
             .localCheckpoint(eager=True))
 
 
-def _shingle_postings(docs: DataFrame, n: int, df_cap: int) -> DataFrame:
-    """The fresh (un-indexed) posting-list build over an ARBITRARY
-    (doc_id, text) frame — decomposition-shared with the persisted path
-    (shingle_doc_postings + _group_cap_postings), so index and direct
-    form cannot drift."""
-    return _group_cap_postings(shingle_doc_postings(docs, n), df_cap)
-
-
-def shingle_posting_index(spark: SparkSession, sf_dir: str, n: int = 3,
-                          df_cap: int = SHINGLE_DF_CAP) -> DataFrame:
-    """Session-scoped shared (shingle, ids) posting index over the
-    documents fixture — the jaccard family's analog of
-    minhash_signature_index's tier 1: nd_ngram_jaccard, nd_containment
-    and nd_weighted_jaccard all consume the SAME df-capped posting
-    lists (weighted derives its rarity weight FROM the list length the
-    row already carries), so the checkpointed build runs once per
-    (session, table-content, n, df_cap) instead of once per row per
-    call. A session view of the index store — same content fingerprint
-    (a fixture rewritten mid-session misses and rebuilds), same
-    clear_session_index lifecycle (a cold measurement re-pays the
-    build).
-
-    PERSISTED: the per-doc-pure (doc_id, shingle) rows are the store
-    artifact (kind
-    f"shpost{n}", the winnow_postings layout — uncapped, so delta
-    adoption is exact: an appended epoch hardlinks the parent's files
-    and tokenizes only the new shards; delta_key guards re-carried
-    doc_ids, whose union would duplicate posting rows). The GROUPED
-    df-capped (shingle, ids) lists every consumer actually probes are a
-    DERIVED view (grouping is a global function of the corpus — it can
-    never be the persisted payload), rebuilt once per session from the
-    artifact scan and cached at this session tier exactly as before:
-    warm calls skip the scan, a cold session pays artifact-read + group
-    instead of tokenize + hash + group. A warm view hit refreshes the
-    artifact's liveness marker."""
+def shingle_posting_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The jaccard family's capped (shingle, ids) postings: a session
+    view over the persisted uncapped rows (kind `shpost3`, delta-adopted;
+    delta_key guards re-carried doc_ids, whose union would duplicate
+    rows). A warm view hit refreshes the artifact's liveness marker."""
     return session_view(
-        spark, sf_dir, f"shpost:{n}:{df_cap}",
+        spark, sf_dir, "shpost",
         lambda: rowwise_index(
-            spark, sf_dir, f"shpost{n}",
+            spark, sf_dir, f"shpost{SHINGLE_N}",
             lambda docs: shingle_doc_postings(spread_compute(
-                spark, docs.select("doc_id", "text"), "doc_id"), n),
+                spark, docs.select("doc_id", "text"), "doc_id")),
             delta_key="doc_id"),
-        lambda per_doc: _group_cap_postings(per_doc, df_cap))
+        shingle_postings)
 
 
-def shingle_pair_index(spark: SparkSession, sf_dir: str, n: int = 3,
-                       df_cap: int = SHINGLE_DF_CAP,
+def shingle_pair_index(spark: SparkSession, sf_dir: str,
                        weighted: bool = False,
                        ) -> tuple[DataFrame, DataFrame]:
-    """Session-scoped shared pair-stats tier over shingle_posting_index
-    — tier 2 of the jaccard family, the phash candidate-tier
-    convention applied here: nd_ngram_jaccard and nd_containment
-    consume byte-identical (per-pair shared counts, per-doc sizes)
-    frames and nd_weighted_jaccard their rarity-weighted twin, yet
-    each call re-expanded the posting lists into pairs and re-reduced
-    them (~1.3 s of each row's ~2 s at sf0.1 with the posting tier
-    hot). The REDUCED pair-stats frames — never the posting lists,
-    never text — are checkpointed once per (session, table content,
-    n, df_cap, weighted) and every consumer's remaining per-call work
-    is the bounded joins + threshold + sort. Same session-view
-    lifecycle as the tier below it: content-fingerprint key (a
-    rewritten fixture rebuilds), clear_session_index makes cold
-    measurements re-pay the build. Derived strictly from
-    the shared posting index, so values are the fresh path's by
-    construction; the weighted variant's corpus count comes from the
-    documents table itself (docs absent from the postings — fewer
-    than n words — still count toward nd, exactly as the fresh
-    build's countDistinct does)."""
-    def make(postings: DataFrame) -> tuple[DataFrame, DataFrame]:
-        if weighted:
-            shared, sizes = _weighted_pair_stats(
-                table(spark, sf_dir, "documents").select("doc_id"),
-                n, df_cap, postings=postings)
-        else:
-            # docs is only consulted on the postings-fallback branch
-            shared, sizes = _shingle_pair_stats(
-                None, n, df_cap, postings=postings)
-        return (shared.localCheckpoint(eager=True),
-                sizes.localCheckpoint(eager=True))
+    """The jaccard family's checkpointed pair stats, a session view over
+    shingle_posting_index: shingle_pair_stats for ngram and containment,
+    weighted_pair_stats when `weighted`. The weighted corpus count comes
+    from the documents table: docs with fewer than SHINGLE_N words have
+    no postings but still count toward nd."""
+    def make(post: DataFrame) -> tuple[DataFrame, DataFrame]:
+        stats = (weighted_pair_stats(
+            post, table(spark, sf_dir, "documents").select("doc_id"))
+            if weighted else shingle_pair_stats(post))
+        return tuple(f.localCheckpoint(eager=True) for f in stats)
 
-    kind = "shpairw" if weighted else "shpair"
     return session_view(
-        spark, sf_dir, f"{kind}:{n}:{df_cap}",
-        lambda: shingle_posting_index(spark, sf_dir, n, df_cap), make)
+        spark, sf_dir, "shpairw" if weighted else "shpair",
+        lambda: shingle_posting_index(spark, sf_dir), make)
 
 
-def _shingle_pair_stats(docs: DataFrame, n: int, df_cap: int,
-                        postings: DataFrame | None = None,
-                        ) -> tuple[DataFrame, DataFrame]:
-    """The shared inverted-index core of ngram_jaccard_pairs and
-    containment_pairs: per-(a<b) pair shared-shingle counts plus per-doc
-    retained-set sizes, over 60-bit md5 shingle keys with the stop-
-    shingle df_cap guard. See ngram_jaccard_pairs for the full scale
-    rationale (posting-list bucket-and-expand, no index self-join).
-    `postings` (if given) is a pre-built posting frame for the SAME
-    (docs, n, df_cap) — the session-shared index the registered rows
-    pass (shingle_posting_index); the fresh build is the fallback for
-    arbitrary frames."""
-    if postings is None:
-        postings = _shingle_postings(docs, n, df_cap)
-    sizes = (postings.select(F.explode("ids").alias("doc_id"))
+def shingle_pair_stats(post: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(shared, sizes) over capped (shingle, ids) postings: per-(a<b)
+    pair shared-shingle counts and per-doc retained-set sizes."""
+    sizes = (post.select(F.explode("ids").alias("doc_id"))
              .groupBy("doc_id").agg(F.count("*").alias("n")))
     # Struct pair keys on purpose: packing (a,b) into one long (a<<32|b)
     # is ~13% faster at sf0.1 (A/B'd, identical output) but caps doc ids
     # at 2^32 — a corpus-scale pipeline keys documents by 64-bit hashes,
     # so the general form wins the design call.
-    pair_expr = F.expr(PAIR_EXPAND_SQL)
-    shared = (
-        postings.where(F.size("ids") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.a_id").alias("a_id"),
-                 F.col("p.b_id").alias("b_id"))
-        .agg(F.count("*").alias("shared"))
-    )
+    shared = (pairs(post).groupBy("a_id", "b_id")
+              .agg(F.count("*").alias("shared")))
     return shared, sizes
 
 
-def ngram_jaccard_pairs(docs: DataFrame | None, n: int = 3,
-                        threshold: float = JACCARD_THRESHOLD,
-                        df_cap: int = SHINGLE_DF_CAP,
-                        postings: DataFrame | None = None,
-                        pair_stats: tuple[DataFrame, DataFrame]
-                        | None = None) -> DataFrame:
-    """Word-n-gram Jaccard near-dup pairs over a (doc_id, text) frame.
-    Candidate generation is an inverted-index equi join — only docs sharing
-    at least one shingle are ever compared. The index keys on the shingle's
-    60-bit md5 prefix, not the string: the dedup shuffle and the self-join
-    move 8-byte longs instead of arbitrary-length text (both engines compute
-    identical hashes, so the oracle sees the same pairs; a 60-bit collision
-    across a corpus needs ~2^30 distinct shingles).
-
-    Shingles with document frequency > `df_cap` are dropped BEFORE the
-    self-join (stop-shingle guard against the O(f²) hot-shingle bucket);
-    sizes and Jaccard are computed over the filtered shingle universe, so
-    the score stays a true Jaccard of the retained sets. Given
-    `pair_stats` (shared, sizes) — shingle_pair_index's frames — the
-    pair core is not rebuilt and `docs` is unused (None); the same
-    holds for weighted_jaccard_pairs and containment_pairs."""
-    # The pair core's shape (a self-join form measured 9.1 s vs ~3 s at
-    # sf0.1, same oracle):
-    # 1. Token array projected BEFORE shingling (HOF re-evaluation trap —
-    #    an inlined words() would re-split per window index; see
-    #    _rolling_shingle_keys).
-    # 2. ONE shingle-keyed aggregation builds the posting lists; the
-    #    stop-shingle guard is a length check on the collected list (no
-    #    count-aggregate + broadcast anti join).
-    # 3. Bucket-and-expand replaces the index self-join (the
-    #    _band_candidates rewrite): surviving buckets — provably <= df_cap
-    #    members — emit their a<b pairs from a sorted member list in
-    #    codegen; no join-side row explosion, and the posting-list table
-    #    (~#distinct-shingles rows) is localCheckpoint'ed once for its two
-    #    consumers (pair stream + per-doc sizes). At corpus scale the
-    #    posting lists are the persisted inverted-index artifact.
-    shared, sizes = (pair_stats if pair_stats is not None
-                     else _shingle_pair_stats(docs, n, df_cap,
-                                              postings=postings))
+def ngram_jaccard_pairs(stats: tuple[DataFrame, DataFrame],
+                        threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+    """(a_id, b_id, jaccard) for pairs with Jaccard >= threshold over
+    shingle_pair_stats frames. Sizes count only the retained (capped)
+    shingles, so the score is a true Jaccard of the retained sets."""
+    shared, sizes = stats
     na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
     # Raw division (no ROUND): numerator/denominator are identical integers
@@ -1160,72 +874,34 @@ def ngram_jaccard_pairs(docs: DataFrame | None, n: int = 3,
 
 def nd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard near-dup pairs (similarity >= 0.5) over the
-    documents fixture — see ngram_jaccard_pairs. The REDUCED pair-stats
-    frames come from the session-shared shingle_pair_index (over the
-    df-capped postings ngram/weighted/containment share, built once per
-    session and table content), so the per-call work is the bounded
-    joins + threshold + sort."""
-    return ngram_jaccard_pairs(
-        None, pair_stats=shingle_pair_index(spark, sf_dir))
+    documents fixture — see ngram_jaccard_pairs."""
+    return ngram_jaccard_pairs(shingle_pair_index(spark, sf_dir))
 
 
-def _weighted_pair_stats(docs: DataFrame, n: int, df_cap: int,
-                         postings: DataFrame | None = None,
-                         ) -> tuple[DataFrame, DataFrame]:
-    """The rarity-weighted twin of _shingle_pair_stats: per-(a<b) pair
-    weighted shared sums plus per-doc total weights. The BASE posting
-    lists are the family-shared artifact (_shingle_postings /
-    shingle_posting_index — identical build to ngram/containment's);
-    the rarity weight is DERIVED from the list length each posting row
-    already carries plus the broadcast corpus size, a per-row
-    projection downstream of the checkpoint, so the weighted screen
-    shares the one index instead of building a wt-annotated twin
-    (r14 closing slice; weight values identical — nd div size(ids)
-    commutes with the repartition/checkpoint)."""
-    if postings is None:
-        postings = _shingle_postings(docs, n, df_cap)
+def weighted_pair_stats(post: DataFrame, docs: DataFrame,
+                        ) -> tuple[DataFrame, DataFrame]:
+    """(shared_w, tw) over capped (shingle, ids) postings: the
+    rarity-weighted twin of shingle_pair_stats, where a shingle weighs
+    nd DIV its df and nd is the distinct doc_id count of `docs`."""
     ndocs = docs.select(F.countDistinct("doc_id").alias("nd"))
-    postings = (postings.crossJoin(F.broadcast(ndocs))
-                .withColumn("wt", F.expr("nd div size(ids)")))
-    sizes = (postings.select(F.explode("ids").alias("doc_id"), "wt")
+    post = (post.crossJoin(F.broadcast(ndocs))
+            .withColumn("wt", F.expr("nd div size(ids)")))
+    sizes = (post.select(F.explode("ids").alias("doc_id"), "wt")
              .groupBy("doc_id").agg(F.sum("wt").alias("tw")))
-    pair_expr = F.expr(PAIR_EXPAND_SQL)
-    shared = (
-        postings.where(F.size("ids") >= 2)
-        .select(F.explode(pair_expr).alias("p"), "wt")
-        .groupBy(F.col("p.a_id").alias("a_id"),
-                 F.col("p.b_id").alias("b_id"))
-        .agg(F.sum("wt").cast("long").alias("shared_w"))
-    )
+    shared = (pairs(post, "wt").groupBy("a_id", "b_id")
+              .agg(F.sum("wt").cast("long").alias("shared_w")))
     return shared, sizes
 
 
-def weighted_jaccard_pairs(docs: DataFrame | None, n: int = 3,
+def weighted_jaccard_pairs(stats: tuple[DataFrame, DataFrame],
                            threshold: float = JACCARD_THRESHOLD,
-                           df_cap: int = SHINGLE_DF_CAP,
-                           postings: DataFrame | None = None,
-                           pair_stats: tuple[DataFrame, DataFrame]
-                           | None = None) -> DataFrame:
-    """Rarity-weighted (idf-style) Jaccard near-dup pairs: every retained
-    shingle carries the integer weight n_docs DIV df(shingle), so two
-    documents that share their RARE shingles (the actual content) score
-    high even when their common boilerplate differs, and boilerplate-only
-    overlap (weight ~1 per shingle) scores low — the standard fix for
-    plain Jaccard's blindness to shingle informativeness. Integer weights
-    keep the score an exact long/long division (shared_w / (wa + wb -
-    shared_w)), bit-identical cross-engine, where a float idf (log) sum
-    would not hash.
-
-    Scale shape: identical to ngram_jaccard_pairs — one shingle-keyed
-    aggregation builds the posting lists, the df_cap stop-shingle guard
-    bounds every bucket, pairs expand from sorted member lists in codegen
-    (never an index self-join), and the weight is derived IN the posting
-    row from the list length it already carries (no extra df pass; the
-    corpus size rides in as a broadcast 1-row aggregate). Text never
-    shuffles; only 8-byte shingle keys and long weights move."""
-    shared, sizes = (pair_stats if pair_stats is not None
-                     else _weighted_pair_stats(docs, n, df_cap,
-                                               postings=postings))
+                           ) -> DataFrame:
+    """(a_id, b_id, shared_w, wjaccard) for pairs with rarity-weighted
+    Jaccard >= threshold over weighted_pair_stats frames. Two documents
+    that share their RARE shingles score high even when their common
+    boilerplate differs. Integer weights keep the score an exact
+    long/long division, bit-identical cross-engine."""
+    shared, sizes = stats
     wa = sizes.select(F.col("doc_id").alias("a_id"), F.col("tw").alias("ta"))
     wb = sizes.select(F.col("doc_id").alias("b_id"), F.col("tw").alias("tb"))
     score = (F.col("shared_w").cast("double")
@@ -1241,10 +917,9 @@ def weighted_jaccard_pairs(docs: DataFrame | None, n: int = 3,
 
 def nd_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rarity-weighted word-3-gram Jaccard pairs (>= 0.5) over the
-    documents fixture — see weighted_jaccard_pairs; pair stats from the
-    weighted tier of shingle_pair_index."""
+    documents fixture — see weighted_jaccard_pairs."""
     return weighted_jaccard_pairs(
-        None, pair_stats=shingle_pair_index(spark, sf_dir, weighted=True))
+        shingle_pair_index(spark, sf_dir, weighted=True))
 
 
 _WEIGHTED_JACCARD_ORACLE = f"""
@@ -1254,7 +929,7 @@ sh0 AS (SELECT DISTINCT doc_id,
                CAST('0x' || substring(md5(array_to_string(ws[(i+1):(i+3)], ' ')), 1, 15)
                     AS BIGINT) AS shingle FROM e),
 sh AS (SELECT doc_id, shingle FROM sh0
-       QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {SHINGLE_DF_CAP}),
+       QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {BUCKET_CAP}),
 nd AS (SELECT COUNT(DISTINCT doc_id) AS nd FROM documents),
 df AS (SELECT shingle, nd // COUNT(*) AS wt FROM sh CROSS JOIN nd
        GROUP BY shingle, nd),
@@ -1279,47 +954,14 @@ ORDER BY a_id, b_id
 CONTAIN_THRESHOLD = 0.8
 
 
-def containment_pairs(docs: DataFrame | None, n: int = 3,
-                      threshold: float = CONTAIN_THRESHOLD,
-                      df_cap: int = SHINGLE_DF_CAP,
-                      postings: DataFrame | None = None,
-                      pair_stats: tuple[DataFrame, DataFrame]
-                      | None = None) -> DataFrame:
-    """Directed shingle-containment pairs: C(A in B) = |A∩B| / |A| —
-    the asymmetric complement of Jaccard dedup. A short document quoted
-    wholesale inside a much longer one scores near-zero Jaccard (the
-    union is dominated by the long doc) but containment ~1.0; this is
-    the screen that catches quote-embedding, boilerplate wrappers, and
-    subset-page duplication that symmetric near-dup passes miss
-    (the ExactSubstr/containment distinction in corpus-dedup practice;
-    [[nd_substr_dedup]] is the substring-granular sibling).
-
-    Emits BOTH directions of each candidate pair independently
-    (contained_id, container_id, containment >= threshold). Shares the
-    inverted-index pair core with ngram_jaccard_pairs
-    (_shingle_pair_stats): posting-list bucket-and-expand, stop-shingle
-    df_cap guard, 60-bit md5 shingle keys — so candidate generation
-    never self-joins the index and text never shuffles. The containment
-    ratio is an int/int division, bit-identical cross-engine.
-
-    Both directions come from ONE pass: a SCALAR OR-threshold first
-    (Catalyst inlines it into the sizes join, so candidate pairs that
-    clear neither direction die during the join), then a two-element
-    array explode over only the survivors — a union of two filtered
-    branches would re-plan the pair-expansion aggregation twice (Spark
-    never shares subplans across DataFrame branches), and exploding
-    before filtering allocates 2 struct rows per candidate pair only
-    to discard nearly all of them. The x10 chase that produced this
-    form (measured trail in experiments/registry_crossover_r8c.txt) is
-    instructive: neither of those was the 2.4x regression vs the
-    sibling ops — the dominant cost was _shingle_pair_stats' frozen
-    post-coalesce partitioning (see its comment; fixed there for the
-    whole family, 27 s -> 11 s at x10), plus the planner broadcasting
-    the multi-million-row PAIR aggregate instead of the doc-sizes
-    frames (fixed by the explicit broadcasts below)."""
-    shared, sizes = (pair_stats if pair_stats is not None
-                     else _shingle_pair_stats(docs, n, df_cap,
-                                              postings=postings))
+def containment_pairs(stats: tuple[DataFrame, DataFrame],
+                      threshold: float = CONTAIN_THRESHOLD) -> DataFrame:
+    """Directed shingle-containment pairs (contained_id, container_id,
+    containment >= threshold), C(A in B) = |A∩B| / |A|, over
+    shingle_pair_stats frames; both directions of a pair are judged
+    independently. A short document quoted wholesale inside a much
+    longer one scores near-zero Jaccard but containment ~1.0."""
+    shared, sizes = stats
     na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
     # explicit sizes broadcast — without it the planner broadcast the
@@ -1328,6 +970,9 @@ def containment_pairs(docs: DataFrame | None, n: int = 3,
                                                      "b_id")
     c_a = F.col("shared").cast("double") / F.col("na")
     c_b = F.col("shared").cast("double") / F.col("nb")
+    # a scalar OR-threshold first (it prunes inside the sizes join), then
+    # a two-element explode over the survivors only: a union of two
+    # filtered branches would plan the pair aggregation twice
     directed = F.explode(F.array(
         F.struct(F.col("a_id").alias("contained_id"),
                  F.col("b_id").alias("container_id"),
@@ -1343,10 +988,8 @@ def containment_pairs(docs: DataFrame | None, n: int = 3,
 
 def nd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram containment pairs (C >= 0.8) over the documents
-    fixture — see containment_pairs; pair stats from
-    shingle_pair_index (the ngram row's frames)."""
-    return containment_pairs(
-        None, pair_stats=shingle_pair_index(spark, sf_dir))
+    fixture — see containment_pairs."""
+    return containment_pairs(shingle_pair_index(spark, sf_dir))
 
 
 _MH_AB_VALUES = ", ".join(f"({s}, {a}::BIGINT, {b}::BIGINT)"
@@ -1359,7 +1002,7 @@ _MH_POLY = "wh[i+1]"
 for _k in range(2, MH_SHINGLE_N + 1):
     _MH_POLY = f"(({_MH_POLY}) * {MH_ROLL_C} + wh[i+{_k}]) % {MH_PRIME}"
 
-# Folded band-bucket key, mirroring _band_candidates.band_key: the band
+# Folded band-bucket key, mirroring _band_key_exprs: the band
 # index (seed // ROWS_PER_BAND) is the leading polynomial term, then the
 # band's ROWS_PER_BAND ordered minhashes fold in — ONE long key per band,
 # mod the 43-bit BKEY_PRIME, identical in both engines.
@@ -1376,7 +1019,7 @@ sig0 AS (SELECT doc_id,
                 AS bkey
          FROM mh GROUP BY doc_id, seed // {ROWS_PER_BAND}),
 sig AS (SELECT doc_id, bkey FROM sig0
-        QUALIFY COUNT(*) OVER (PARTITION BY bkey) <= {LSH_BUCKET_CAP})"""
+        QUALIFY COUNT(*) OVER (PARTITION BY bkey) <= {BUCKET_CAP})"""
 
 _MH_SH_CTES = f"""
 WITH w AS (SELECT doc_id, list_transform(string_split(lower(text), ' '),
@@ -1520,94 +1163,33 @@ def nd_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EDIT_MAX = 30
-# Past this many candidate pairs the exploded probe set (~3 longs/row,
-# 2 rows/pair) stops being broadcast-sized and nd_editdist_dedup falls
-# back to a shuffle join instead of failing on the broadcast limit:
-# 1M pairs ~ 48 MB serialized, comfortably under spark.sql.
-# autoBroadcastJoinThreshold's hard ceiling but large enough that a hot
-# near-dup corpus beyond it should degrade, not die (round-9 ADVICE).
-EDIT_BROADCAST_MAX_PAIRS = 1_000_000
-# Candidate-pair counts for the broadcast gates, per (source content,
-# candidate kind). Not part of the index tier: clear_session_index keeps
-# them (a cold measurement re-pays the index build, not the gate count).
-CAND_COUNTS = SessionCache()
-
-
-def _cand_pair_count(spark: SparkSession, sf_dir: str,
-                     cand: DataFrame, kind: str = "cand") -> int:
-    """Candidate-pair count for the broadcast-vs-shuffle gate, cached on
-    the SAME (realpath, content-fingerprint) pair as the index it counts
-    — a fixture rewritten mid-session misses and recounts instead of
-    serving a stale plan decision. `kind` keys the entry per candidate
-    family (band cand vs image phash cand share a fixture but not a
-    count)."""
-    key = (os.path.realpath(sf_dir), docs_fingerprint(sf_dir), kind)
-    return CAND_COUNTS.get_or_make(spark, key, cand.count)
 
 
 def nd_editdist_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance-VERIFIED near-dup pairs: LSH band candidates
-    confirmed by bounded Levenshtein over the raw text — the standard
-    two-phase fuzzy dedup (cheap probabilistic candidates, exact
-    character-level verification) that closes the pipeline the
-    signature family opens: minhash answers "probably similar",
-    this answers "at most EDIT_MAX character edits apart", which is
-    the deletion criterion a conservative dedup pass actually applies.
-
-    Scale shape: text moves ONLY for candidate pairs (one corpus scan
-    probes the broadcast pair-id set, never a text self-join); the
+    """Edit-distance-VERIFIED near-dup pairs (a_id, b_id, dist <=
+    EDIT_MAX): the persisted LSH band candidates confirmed by bounded
+    Levenshtein over the raw text. Text moves only for candidate pairs:
+    one corpus scan probes the pair sides, never a text self-join. The
     |len_a - len_b| <= EDIT_MAX prefilter is correctness-neutral (a
-    length gap of k forces distance > k) and skips mismatched pairs
-    before the DP; the thresholded levenshtein caps the comparison at
-    EDIT_MAX (returns -1 past it) — the oracle's plain levenshtein()
-    computes the full distance, <= k is the same predicate. Candidates
-    come from the shared persisted band index: cold cost is the one-time
-    index build, warm cost is verification alone. Round-9 forensics
-    (experiments/minhash_index_reuse_r9.txt): the round-8 form's 17.1 s
-    at x10 was NOT mostly signature rebuild as first read — it was a
-    reversed broadcast build (the corpus hashed, pairs streamed), the
-    DP re-evaluated ~3x per row by filter inlining, and the whole DP
-    stage serialized on an AQE-coalesced 1-partition exchange; fixed
-    (13.3 s -> 0.8 s warm at x10), see the body comments."""
+    length gap of k forces distance > k); the thresholded levenshtein
+    returns -1 past EDIT_MAX, the same predicate as the oracle's full
+    distance <= k."""
     cand = band_candidate_index(spark, sf_dir)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # ONE-scan gather, candidate side BROADCAST: each pair explodes into
-    # its two member ids, the corpus streams past that (tiny) probe set
-    # once, and the matched texts regroup per pair. Two things this
-    # fixes over the round-8 two-hop join: (a) Catalyst chose the
-    # reverse build there — TWO broadcast hash relations of the full
-    # text table probed by 2.5k pairs, 11.7 s warm at x10 and an OOM at
-    # any real scale (the checkpointed pair set carries no stats);
-    # (b) even with the build sides forced right, the two-hop form
-    # scans the corpus text twice — the single-scan gather halves the
-    # dominant cost (experiments/minhash_index_reuse_r9.txt). The
-    # regroup shuffles pair-bounded rows (2 texts per candidate pair),
-    # never the corpus.
-    sides = cand.select(
-        "a_id", "b_id",
-        F.explode(F.array("a_id", "b_id")).alias("doc_id"))
     # The DP is computed ONCE per pair, as an AGGREGATE result
     # expression: a plain project-then-filter form re-evaluates
     # levenshtein per predicate reference (Catalyst inlines computed
     # columns into pushed filters — profiled 3x = ~7 s of redundant DP
     # at x10), while a filter over an Aggregate output cannot be pushed
-    # below it. The explicit-width repartition is the round-8
-    # frozen-coalesce rule: AQE coalesces the kilobyte pair exchange to
-    # ~1 partition and would serialize the whole DP stage on one core.
+    # below it. The explicit-width repartition keeps AQE from coalescing
+    # the kilobyte pair exchange to ~1 partition, which would serialize
+    # the whole DP stage on one core.
     ta = F.max(F.when(F.col("doc_id") == F.col("a_id"), F.col("text")))
     tb = F.max(F.when(F.col("doc_id") == F.col("b_id"), F.col("text")))
     dist = F.when(
         F.abs(F.length(ta) - F.length(tb)) <= EDIT_MAX,
         F.levenshtein(ta, tb, EDIT_MAX)).otherwise(F.lit(-1))
-    # Broadcast GATED on candidate volume: the hint is only right while
-    # the pair set is probe-sized. The count is one cheap job over the
-    # already-checkpointed index, cached per session alongside it; past
-    # EDIT_BROADCAST_MAX_PAIRS the plan degrades to a shuffle join
-    # (slower, bounded) rather than failing the job on the broadcast
-    # ceiling (round-9 ADVICE).
-    n_pairs = _cand_pair_count(spark, sf_dir, cand)
-    probe = (F.broadcast(sides) if n_pairs <= EDIT_BROADCAST_MAX_PAIRS
-             else sides)
+    probe = pair_sides(cand, cand_count(spark, sf_dir, cand, "cand"))
     return (docs.join(probe, "doc_id")
             .repartition(spark.sparkContext.defaultParallelism,
                          "a_id", "b_id")
@@ -2007,7 +1589,7 @@ sh0 AS (SELECT DISTINCT doc_id,
                CAST('0x' || substring(md5(array_to_string(ws[(i+1):(i+3)], ' ')), 1, 15)
                     AS BIGINT) AS shingle FROM e),
 sh AS (SELECT doc_id, shingle FROM sh0
-       QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {SHINGLE_DF_CAP}),
+       QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {BUCKET_CAP}),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 shared AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS shared
            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
@@ -2028,7 +1610,7 @@ sh0 AS (SELECT DISTINCT doc_id,
                CAST('0x' || substring(md5(array_to_string(ws[(i+1):(i+3)], ' ')), 1, 15)
                     AS BIGINT) AS shingle FROM e),
 sh AS (SELECT doc_id, shingle FROM sh0
-       QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {SHINGLE_DF_CAP}),
+       QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {BUCKET_CAP}),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 shared AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS shared
            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
@@ -2085,78 +1667,55 @@ def _mh_sig_row_cols() -> list["F.Column"]:
 
 
 def _band_key_exprs() -> list["F.Column"]:
-    """THE folded single-long band-bucket keys over a wide signature row
-    (band index leads the polynomial, mod the 43-bit BKEY_PRIME) — the
-    one definition shared by _band_candidates' index build and the
-    incremental probe. lit(b).cast long: the fold must run in LONG
-    (acc*C nears 2^63); int-typed inputs would overflow (ANSI
-    ArithmeticException)."""
+    """THE folded single-long band-bucket keys b0..b3 over a wide
+    signature row (band index leads the polynomial, mod the 43-bit
+    BKEY_PRIME), shared by the index build and every probe. The fold
+    starts from CAST(b AS BIGINT): it must run in LONG (acc*C nears
+    2^63); int-typed inputs would overflow (ANSI ArithmeticException).
+    Each key is one parsed SQL expression: composing it operator by
+    operator costs a py4j call per node (~75 ms per call of this
+    function), paid on every query that bands."""
     cols = []
     for b in range(N_BANDS):
-        acc = F.lit(b).cast("long")
+        acc = f"CAST({b} AS BIGINT)"
         for r in range(ROWS_PER_BAND):
-            acc = (acc * MH_ROLL_C
-                   + F.col(f"mh{b * ROWS_PER_BAND + r}")) % BKEY_PRIME
-        cols.append(acc)
+            acc = (f"(({acc}) * {MH_ROLL_C} + mh{b * ROWS_PER_BAND + r})"
+                   f" % {BKEY_PRIME}")
+        cols.append(F.expr(acc).alias(f"b{b}"))
     return cols
 
 
 def nd_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dup ingest: a new batch screened against the
-    EXISTING corpus's LSH band index — the minhash counterpart of
-    nd_incremental_dedup's exact-hash anti join, and the production shape
-    for recurring crawls (exact fingerprints catch re-crawls byte-for-
-    byte; this catches re-crawls with small edits). Batch synthesis is
-    deterministic: genuinely-unseen docs (doc_id % 5 == 4, excluded from
-    the corpus) plus per-doc EDITED re-crawls of corpus docs
-    (doc_id % 10 == 1 with two words appended — most shingles survive,
-    so the re-crawl still shares bands with its original).
-
-    Emits each batch doc that hits the corpus index with how many of its
-    bands matched. Scale shape: the corpus side reduces to the DISTINCT
-    band-key set — the persisted LSH index at 100 TB, built once with
-    the same hot-bucket cap as _band_candidates and probed by every
-    increment — and the join keys on the single folded 8-byte key;
-    text never shuffles on either side. Deliberately the shuffle
-    semi-join form (a 100 TB corpus's band set does not broadcast).
-    Since the r14 closing slice both the corpus side AND the unseen
-    (re-keyed, text-unmodified) batch half read the shared minhash
-    signature index — signatures are per-doc pure, so a re-keyed copy
-    of unmodified text carries the original's signature row under the
-    new key — and only the EDITED re-crawl slice (different text,
-    different signature) runs the signature fold fresh: the corpus
-    signature pass this row used to re-pay per call is an index scan.
-
-    Reference intent: the recurring-ingest loop (new CID appears → job
-    runs on it) of pkg/requesternode — here the job is the near-dup
-    screen itself."""
+    existing corpus's LSH band index — the minhash counterpart of
+    nd_incremental_dedup's exact-hash anti join. The batch is the
+    genuinely-unseen docs (doc_id % 5 == 4, excluded from the corpus)
+    re-keyed by +1e6, plus EDITED re-crawls of corpus docs
+    (doc_id % 10 == 1, two words appended, re-keyed by +2e6). Emits each
+    batch doc that hits a corpus bucket within the cap with how many of
+    its bands matched. The corpus side and the unseen half read the
+    signature index (a re-keyed copy of unmodified text carries the
+    original's signature); only the edited slice is signed fresh. The
+    probe is a shuffle semi-join with no broadcast hint: a large
+    corpus's band set does not broadcast."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    band = F.explode(F.array(*_band_key_exprs())).alias("bkey")
     sig = minhash_signature_index(spark, sf_dir)
-    corpus_keys = sig.where(F.col("doc_id") % 5 != 4).select(band)
-    # hot-bucket cap mirrors the index build: buckets that _band_candidates
-    # would drop as degenerate are not probe targets either. groupBy-count
-    # (map-side partial agg), NOT a count-over-window: the capped LSH
-    # buckets are exactly the hot keys that would serialize a skewed-key
-    # window partition — the same de-skew convention as nd_word_rarity /
-    # nd_chunk_dedup.
-    corpus_idx = (corpus_keys.groupBy("bkey")
-                  .agg(F.count("*").alias("n"))
-                  .where(F.col("n") <= LSH_BUCKET_CAP)
-                  .select("bkey"))
+    corpus_idx = live_keys(
+        bands(_band_keys(sig.where(F.col("doc_id") % 5 != 4))), "bkey")
     edited = (docs.where(F.col("doc_id") % 10 == 1).select(
         (F.col("doc_id") + 2_000_000).alias("doc_id"),
         F.concat(F.col("text"),
                  F.lit(" nearvariant edit")).alias("text")))
     # spread_compute on the FRESH fold only: the signature build is the
     # CPU-dense stage and a single-row-group fixture would otherwise pin
-    # it to one task (the _minhash_signatures lesson — 1.69s -> 0.35s)
+    # it to one task
     batch_sig = (sig.where(F.col("doc_id") % 5 == 4)
                  .select((F.col("doc_id") + 1_000_000).alias("doc_id"),
                          *[f"mh{s}" for s in range(len(MH_AB))])
                  .unionByName(_mh_sig_frame(
                      spread_compute(spark, edited, "doc_id"))))
-    batch_keys = batch_sig.select("doc_id", band).distinct()
+    batch_keys = (bands(_band_keys(batch_sig)).select("doc_id", "bkey")
+                  .distinct())
     return (batch_keys.join(corpus_idx, "bkey")
             .groupBy("doc_id")
             .agg(F.count("*").cast("int").alias("bands_hit"))
@@ -2185,7 +1744,7 @@ def _mh_bkeys_sql(src_cte: str, out: str, capped: bool) -> str:
     if capped:
         chain += f""",
 {out} AS (SELECT doc_id, bkey FROM {out}0
-          QUALIFY COUNT(*) OVER (PARTITION BY bkey) <= {LSH_BUCKET_CAP})"""
+          QUALIFY COUNT(*) OVER (PARTITION BY bkey) <= {BUCKET_CAP})"""
     else:
         chain += f""",
 {out} AS (SELECT doc_id, bkey FROM {out}0)"""
@@ -2231,9 +1790,8 @@ def nd_neardup_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB train side is never shuffled at all: band keys probe the
     broadcast in codegen, and the only exchanges left are the per-doc
     distinct and the final per-language counters. Both sides read THE
-    shared minhash signature index (r14 closing slice — signatures are
-    per-doc pure, so filter-then-sign == sign-then-filter for the
-    doc_id slices, the nd_stream_band_screen equivalence): the bench
+    shared minhash signature index (signatures are per-doc pure, so
+    filter-then-sign == sign-then-filter for the doc_id slices): the bench
     and unmodified-train signatures come from the persisted index, and
     only the synthesized LEAK slice (edited text — a different
     signature by construction) runs the signature fold fresh, over 5%
@@ -2250,15 +1808,14 @@ def nd_neardup_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.concat("text", F.lit(" leaked benchmark copy"))
                     .alias("text")))
     train = docs.where(F.col("doc_id") % 10 != 0).unionByName(leak)
-    band = F.explode(F.array(*_band_key_exprs())).alias("bkey")
     sig = minhash_signature_index(spark, sf_dir)
-    bench_idx = (sig.where(F.col("doc_id") % 10 == 0)
-                 .select(band).distinct())
+    bench_idx = (bands(_band_keys(sig.where(F.col("doc_id") % 10 == 0)))
+                 .select("bkey").distinct())
     leak_sig = _mh_sig_frame(spread_compute(
         spark, leak.select("doc_id", "text"), "doc_id"))
-    train_keys = (sig.where(F.col("doc_id") % 10 != 0)
-                  .unionByName(leak_sig)
-                  .select("doc_id", band).distinct())
+    train_keys = (bands(_band_keys(sig.where(F.col("doc_id") % 10 != 0)
+                                   .unionByName(leak_sig)))
+                  .select("doc_id", "bkey").distinct())
     flagged = (train_keys.join(F.broadcast(bench_idx), "bkey")
                .select("doc_id").distinct().withColumn("hit", F.lit(1)))
     return (train.select("doc_id", "lang")
@@ -2333,7 +1890,7 @@ def boilerplate_strip_frame(docs: DataFrame) -> DataFrame:
     holds: the keep-first decision stays NARROW (doc_id, idx, 60-bit
     hash — a min-struct window over those 24-byte rows, single-lineage
     since r14; the hot chunk key is bounded by the window exec's spill
-    path, the _band_candidates rule) and chunk text only
+    path) and chunk text only
     ever shuffles on UNIFORM keys — once by (doc_id, idx) to meet the
     kept-id set, once by doc_id for the idx-sorted rebuild collect (the
     oracle's string_agg) — so the Zipf-hot chunk key moves 24-byte rows

@@ -24,6 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bacalhau_spark.catalog import spread_compute, table
+from bacalhau_spark.operators.buckets import (BUCKET_CAP, band_cols, bands,
+                                              cand_count, pair_sides, pairs,
+                                              postings)
 from bacalhau_spark.sources.indexstore import cached_index, rowwise_index
 
 FEATURE_SCHEMA = ("doc_id bigint, n_bytes int, width int, height int, "
@@ -365,35 +368,6 @@ def image_phash_real_frame(bin_df: DataFrame) -> DataFrame:
         batches, REAL_PHASH_SCHEMA)
 
 
-def image_near_dup_real(hashes: DataFrame,
-                        max_hamming: int | None = None,
-                        n_bands: int = 4) -> DataFrame:
-    """Banded near-dup pairs over a REAL-media hash frame
-    (image_phash_real_frame output, or any (doc_id, b0..) band frame —
-    `n_bands` 4 for the single-hash modalities, VPHASH_NBANDS for
-    video's time-aligned signature): the same capped bucket-and-expand
-    candidates + exact xor/bit_count Hamming verify the fake-decode
-    screens run — one statement of the downstream machinery for every
-    decode path."""
-    if max_hamming is None:  # constant defined further down the module
-        max_hamming = PHASH_MAX_HAMMING
-    lean = hashes.select("doc_id",
-                         *[f"b{i}" for i in range(n_bands)])
-    cand = phash_candidate_pairs(lean, n_bands=n_bands)
-    sides = cand.select(
-        "a_id", "b_id",
-        F.explode(F.array("a_id", "b_id")).alias("doc_id"))
-    ham = sum(
-        F.expr(f"bit_count(max(CASE WHEN doc_id = a_id THEN b{i} END) ^ "
-               f"max(CASE WHEN doc_id = b_id THEN b{i} END))")
-        for i in range(n_bands))
-    return (lean.join(sides, "doc_id")
-            .groupBy("a_id", "b_id")
-            .agg(ham.cast("long").alias("hamming"))
-            .where(F.col("hamming") <= max_hamming)
-            .orderBy("a_id", "b_id"))
-
-
 N_FRAMES = 3
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_hash string, n_bytes int"
 
@@ -553,7 +527,7 @@ FROM w GROUP BY doc_id ORDER BY doc_id
 
 
 # --- image near-dup: dHash + Hamming banding ----------------------------------
-# The missing image modality of the dedup plane (round-10 verdict): a
+# The image modality of the dedup plane: a
 # perceptual difference hash over decoded thumbnails, bucketed by Hamming
 # BANDS so candidate generation is never all-pairs — the simhash band
 # machinery applied to pixels. Reference capability citation: the image
@@ -576,14 +550,13 @@ FROM w GROUP BY doc_id ORDER BY doc_id
 #               integer-exact, cross-engine (md5 + conv convention).
 #   band join-> docs sharing ANY band value are candidates (a near-dup
 #               with <= a few flipped bits almost always leaves one band
-#               intact); buckets above PHASH_BUCKET_CAP are dropped before
-#               pair expansion (the LSH_BUCKET_CAP quadratic guard).
+#               intact); buckets above buckets.BUCKET_CAP are dropped
+#               before pair expansion.
 #   verify   -> exact Hamming distance over the 64 bits (xor + bit_count),
 #               keep <= PHASH_MAX_HAMMING. Fixture separation: same-base
-#               pairs measure hamming 0-5, cross-base >= 14 (the r11
-#               prototype), so the gate is wide.
+#               pairs measure hamming 0-5, cross-base >= 14, so the
+#               gate is wide.
 PHASH_FAMILY = 7
-PHASH_BUCKET_CAP = 50
 PHASH_MAX_HAMMING = 10
 _PHASH_GRID_W = 9  # 9 columns -> 8 horizontal gradients per row
 _PHASH_ROWS = 8
@@ -646,82 +619,42 @@ def phash_frame(docs: DataFrame) -> DataFrame:
         "doc_id", *[F.expr(e).alias(f"b{i}") for i, e in enumerate(bands)])
 
 
-def phash_candidate_pairs(hashes: DataFrame,
-                          bucket_cap: int = PHASH_BUCKET_CAP,
-                          n_bands: int = 4) -> DataFrame:
-    """Distinct (a_id < b_id) pairs sharing at least one band value —
-    the _band_candidates shape over Hamming bands: explode to
-    (doc_id, band_idx, value), window-count hot-bucket guard, then
-    bucket-and-expand in codegen (never a pair self-join). ``n_bands``
-    is 4 for the single-hash modalities (image/audio) and
-    frames x 4 for video, where the band index encodes the frame
-    position so only time-aligned band matches become candidates."""
-    from pyspark.sql.window import Window
-
-    from bacalhau_spark.operators.dedup import PAIR_EXPAND_SQL
-
-    e = hashes.select("doc_id", F.explode(F.array(*[
-        F.struct(F.lit(i).alias("bi"), F.col(f"b{i}").alias("v"))
-        for i in range(n_bands)])).alias("s")).select(
-        "doc_id", "s.bi", "s.v")
-    n = F.count("*").over(Window.partitionBy("bi", "v"))
-    e = e.withColumn("n", n).where(F.col("n") <= bucket_cap).drop("n")
-    buckets = (e.groupBy("bi", "v")
-               .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-               .where(F.size("ids") >= 2))
-    pairs = F.expr(PAIR_EXPAND_SQL)
-    return (buckets.select(F.explode(pairs).alias("p"))
-            .select("p.a_id", "p.b_id")
-            .where(F.col("a_id") < F.col("b_id"))
-            .distinct())
+def phash_candidate_pairs(hashes: DataFrame) -> DataFrame:
+    """Distinct (a_id < b_id) pairs sharing at least one band value over
+    a (doc_id, b0..bN) hash frame. The bucket key is (band index, value):
+    4 bands for the single-hash modalities, frames x 4 for video, where
+    the band index carries the frame position so only time-aligned band
+    matches become candidates."""
+    return pairs(postings(bands(hashes), "bi", "bkey")).distinct()
 
 
-def _phash_pairs_verify(spark: SparkSession, sf_dir: str,
-                        hashes: DataFrame, *, n_bands: int,
-                        bucket_cap: int, max_hamming: int,
-                        cand_kind: str) -> DataFrame:
-    """The banded near-dup PAIR pipeline, generic over the modality
-    (one statement of the gate/verify logic for image/audio/video —
-    the streaming side's _stream_phash_screen convention): capped
-    bucket-and-expand candidates (never all-pairs), verification
-    gathers the hash table in one scan with the pair probe COUNT-GATED
-    before broadcast (round-11 ADVICE: degrade to a shuffle join, not
-    die on the broadcast ceiling), exact xor+bit_count Hamming,
-    threshold filter."""
-    from bacalhau_spark.operators.dedup import (EDIT_BROADCAST_MAX_PAIRS,
-                                                _cand_pair_count)
-
-    # Candidate pairs are the SECOND persisted tier (r14), mirroring the
-    # minhash family's sig->cand layout: the band explode + window cap +
-    # bucket-and-expand ran on every warm probe (4 exchanges of
-    # regeneration per call) even though the pair set is a pure function
-    # of the published signature index. bench.py already describes the
-    # warm phash rows as the persisted-index probe; this makes the
-    # candidate half of that statement true as well. Cold
-    # (clear_session_index(persisted=True)) now includes this tier's
-    # publish — the honest one-shot ingest cost, noted in
-    # OPTIMIZATION_r14.md. Content-addressed on the documents fixture,
-    # so a changed corpus rebuilds; no delta form (the minhash cand
-    # delta's guards do not carry over to Hamming bands — rebuild).
-    cand = cached_index(
-        spark, sf_dir, cand_kind,
-        lambda: phash_candidate_pairs(hashes, bucket_cap=bucket_cap,
-                                      n_bands=n_bands))
-    sides = cand.select(
-        "a_id", "b_id",
-        F.explode(F.array("a_id", "b_id")).alias("doc_id"))
-    n_pairs = _cand_pair_count(spark, sf_dir, cand, kind=cand_kind)
-    probe = (F.broadcast(sides)
-             if n_pairs <= EDIT_BROADCAST_MAX_PAIRS else sides)
+def phash_verify(hashes: DataFrame, sides: DataFrame,
+                 max_hamming: int) -> DataFrame:
+    """(a_id, b_id, hamming) for the candidate pairs whose exact
+    xor+bit_count Hamming distance over the band columns of `hashes` is
+    <= max_hamming; `sides` is buckets.pair_sides of the candidates."""
     ham = sum(
-        F.expr(f"bit_count(max(CASE WHEN doc_id = a_id THEN b{i} END) ^ "
-               f"max(CASE WHEN doc_id = b_id THEN b{i} END))")
-        for i in range(n_bands))
-    return (hashes.join(probe, "doc_id")
+        F.expr(f"bit_count(max(CASE WHEN doc_id = a_id THEN {b} END) ^ "
+               f"max(CASE WHEN doc_id = b_id THEN {b} END))")
+        for b in band_cols(hashes))
+    return (hashes.join(sides, "doc_id")
             .groupBy("a_id", "b_id")
             .agg(ham.cast("long").alias("hamming"))
             .where(F.col("hamming") <= max_hamming)
             .orderBy("a_id", "b_id"))
+
+
+def _phash_pairs_verify(spark: SparkSession, sf_dir: str,
+                        hashes: DataFrame, *, max_hamming: int,
+                        cand_kind: str) -> DataFrame:
+    """The banded near-dup pair pipeline of every modality: the
+    candidate pairs are a persisted index kind (`cand_kind`, rebuilt
+    when the corpus changes: the minhash cand delta's guards do not
+    carry over to Hamming bands), verified by phash_verify."""
+    cand = cached_index(spark, sf_dir, cand_kind,
+                        lambda: phash_candidate_pairs(hashes))
+    sides = pair_sides(cand, cand_count(spark, sf_dir, cand, cand_kind))
+    return phash_verify(hashes, sides, max_hamming)
 
 
 def phash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,7 +778,6 @@ def nd_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     index above. Gate/verify shape: _phash_pairs_verify."""
     return _phash_pairs_verify(
         spark, sf_dir, phash_index(spark, sf_dir),
-        n_bands=4, bucket_cap=PHASH_BUCKET_CAP,
         max_hamming=PHASH_MAX_HAMMING, cand_kind="phash_cand")
 
 
@@ -888,7 +820,7 @@ ORDER BY p.a_id, p.b_id
 
 
 def _image_phash_oracle() -> str:
-    return _phash_pairs_oracle(_phash_h_cte(), 4, PHASH_BUCKET_CAP,
+    return _phash_pairs_oracle(_phash_h_cte(), 4, BUCKET_CAP,
                                PHASH_MAX_HAMMING)
 
 
@@ -916,7 +848,6 @@ APHASH_NWIN = 65     # 65 windows -> 64 gradient bits -> 4 x 16-bit bands
 APHASH_WIN = 32      # samples per window
 APHASH_PERT_MOD = 29
 APHASH_PERT_BUMP = 13
-APHASH_BUCKET_CAP = 50
 APHASH_MAX_HAMMING = 10
 
 
@@ -988,7 +919,6 @@ def nd_audio_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the stage that decodes it): _phash_pairs_verify."""
     return _phash_pairs_verify(
         spark, sf_dir, audio_phash_index(spark, sf_dir),
-        n_bands=4, bucket_cap=APHASH_BUCKET_CAP,
         max_hamming=APHASH_MAX_HAMMING, cand_kind="aphash_cand")
 
 
@@ -1026,7 +956,7 @@ h AS (SELECT doc_id, {packs} FROM abits GROUP BY doc_id)"""
 
 
 def _audio_phash_oracle() -> str:
-    return _phash_pairs_oracle(_aphash_h_cte(), 4, APHASH_BUCKET_CAP,
+    return _phash_pairs_oracle(_aphash_h_cte(), 4, BUCKET_CAP,
                                APHASH_MAX_HAMMING)
 
 
@@ -1064,7 +994,6 @@ VPHASH_NBANDS = VPHASH_NFRAMES * 4
 VPHASH_CELLS = VPHASH_NFRAMES * _PHASH_ROWS * _PHASH_GRID_W  # 288
 VPHASH_PERT_MOD = 37
 VPHASH_PERT_BUMP = 40
-VPHASH_BUCKET_CAP = 50
 VPHASH_MAX_HAMMING = 24
 
 
@@ -1138,7 +1067,6 @@ def nd_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage that hashes them): _phash_pairs_verify."""
     return _phash_pairs_verify(
         spark, sf_dir, video_phash_index(spark, sf_dir),
-        n_bands=VPHASH_NBANDS, bucket_cap=VPHASH_BUCKET_CAP,
         max_hamming=VPHASH_MAX_HAMMING, cand_kind="vphash_cand")
 
 
@@ -1175,7 +1103,7 @@ h AS (SELECT doc_id, {packs} FROM vbits GROUP BY doc_id)"""
 
 def _video_phash_oracle() -> str:
     return _phash_pairs_oracle(_vphash_h_cte(), VPHASH_NBANDS,
-                               VPHASH_BUCKET_CAP, VPHASH_MAX_HAMMING)
+                               BUCKET_CAP, VPHASH_MAX_HAMMING)
 
 
 _HEXPAIR = ("(strpos('0123456789abcdef', substring(md5(text), {a}, 1)) - 1) * 16"

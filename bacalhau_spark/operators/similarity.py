@@ -918,7 +918,7 @@ def nd_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SEMDEDUP_SUB_BITS sign bits (offset past the 8-bit key space); (3)
     buckets still above the cap after escalation are excluded from pair
     generation entirely (their members are kept — the same lenient-on-
-    pathology semantics as PHASH_BUCKET_CAP/LSH_BUCKET_CAP, and the
+    pathology semantics as buckets.BUCKET_CAP, and the
     oracle states the identical rule); (4) surviving buckets — provably
     ≤ cap members — collect (vec_id, embedding) lists and expand a<b
     pairs in codegen (bucket-and-expand, never a pair self-join), so

@@ -33,14 +33,22 @@ _MODULES = (scans, scalar, filters, joins, aggregates, windows, sort, setops,
 # certifies the code it graded. Blocks: changed code first, then the
 # blocks that come due, then the most recently graded blocks.
 _PRIORITY: tuple[str, ...] = (
-    # changed: the kept implementation of each answer (doubling CC,
-    # table-bitmap bloom, Gram-kernel covariance and the PCA fit over
-    # it, the fold-only semantic screen) and the jaccard rows without
-    # their unused documents scan
-    "nd_dedup_clusters", "nd_dedup_survivors", "nd_leakage_safe_split",
+    # changed: every banded near-dup family builds its candidates
+    # through operators.buckets (one cap, applied after the
+    # per-bucket collect), and the jaccard rows take one stats form
+    "nd_minhash_lsh", "nd_dedup_clusters", "nd_dedup_survivors",
+    "nd_minhash_estimate", "nd_editdist_dedup", "nd_leakage_safe_split",
+    "nd_curation_pipeline", "nd_incremental_minhash",
+    "nd_neardup_decontam", "nd_image_phash", "nd_audio_phash",
+    "nd_video_phash", "nd_winnowing", "nd_ngram_jaccard",
+    "nd_weighted_jaccard", "nd_containment", "nd_stream_image_phash",
+    "nd_stream_audio_phash", "nd_stream_video_phash",
+    "nd_stream_band_screen",
+    # changed: the kept implementation of each answer (table-bitmap
+    # bloom, Gram-kernel covariance and the PCA fit over it, the
+    # fold-only semantic screen)
     "nd_bloom_prefilter", "nd_embedding_covariance", "nd_pca_project",
     "nd_ann_pca", "nd_semantic_dedup",
-    "nd_ngram_jaccard", "nd_weighted_jaccard", "nd_containment",
     # changed: every memory-sink stream row runs through
     # streaming.events._run_to_memory
     "nd_stream_tumbling", "nd_stream_sessions", "nd_stream_stateful",
@@ -48,18 +56,13 @@ _PRIORITY: tuple[str, ...] = (
     "nd_stream_topk", "nd_stream_ewma", "nd_stream_hll_users",
     "nd_stream_heavy_hitters", "nd_stream_gopher", "nd_stream_url_screen",
     "nd_stream_html_extract", "nd_stream_quality_model",
-    "nd_stream_incremental_dedup", "nd_stream_band_screen",
-    "nd_stream_ann", "nd_stream_image_phash", "nd_stream_audio_phash",
-    "nd_stream_video_phash",
+    "nd_stream_incremental_dedup", "nd_stream_ann",
     # changed earlier: the PQ/IVF planes, the session-model cache keys
     # and every store-backed row
     "nd_pq_retrain", "nd_ann_pq", "nd_ann_lsh",
     "nd_pq_incremental", "nd_pq_quantize",
     "nd_ann_ivfpq", "nd_ann_ivf", "nd_ann_ivf_pruned",
-    "nd_winnowing",
-    "nd_minhash_lsh", "nd_minhash_estimate", "nd_editdist_dedup",
     "nd_versioned_timetravel", "nd_versioned_pruned_read",
-    "nd_image_phash", "nd_audio_phash", "nd_video_phash",
     "nd_image_phash_real",
     "nd_ann_lsh_candidates", "nd_ann_lsh_bucketstats",
     "nd_url_canonicalize", "nd_html_extract",
@@ -72,8 +75,7 @@ _PRIORITY: tuple[str, ...] = (
     "tpch_q15_top_supplier", "tpch_q20_part_promotion",
     "tpch_q21_waiting_supplier", "tpch_q5_local_volume",
     "nd_dataset_card",
-    "nd_substr_dedup", "nd_neardup_decontam",
-    "nd_heavy_hitters_cms",
+    "nd_substr_dedup", "nd_heavy_hitters_cms",
     "nd_bigram_surprisal", "nd_ks_drift",
     "nd_ngram_overlap",
     "nd_quality_model_labeled", "nd_quality_model",

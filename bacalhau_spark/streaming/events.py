@@ -506,48 +506,34 @@ FROM pages ORDER BY doc_id
 
 
 def _stream_phash_screen(spark: SparkSession, sf_dir: str, *,
-                         frame_fn, index_fn, n_bands: int,
-                         bucket_cap: int) -> DataFrame:
+                         frame_fn, index_fn) -> DataFrame:
     """Streaming near-dup ingest screen, generic over the perceptual-
-    hash modality (image/audio/video) — the nd_stream_band_screen shape
-    over the persisted signature index: streamed re-uploads (the %5==4
-    slice re-ingested under new ids, the shared synthesis convention)
-    get per-row bands STATELESSLY via the modality's own frame builder
-    (the SAME code the batch index is built with — one hash statement,
-    two planes), probe the static corpus index's cap-guarded band
-    buckets, and every candidate is verified with the exact
-    xor+bit_count Hamming — per streamed item: (doc_id, n_cands,
-    min_hamming). min/count are associative, so the complete-mode
-    aggregate is the only streaming state; the corpus side is ONE read
-    of the persisted index artifact (built by whichever session
-    published it — the cross-session lifecycle at ingest)."""
+    hash modality (image/audio/video): streamed re-uploads (the %5==4
+    slice re-ingested under new ids) get per-row bands statelessly via
+    the modality's own frame builder (the code the batch index is built
+    with), probe the buckets within the cap of the persisted corpus
+    index, and every candidate is verified with the exact xor+bit_count
+    Hamming — per streamed item: (doc_id, n_cands, min_hamming). min and
+    count are associative, so the complete-mode aggregate is the only
+    streaming state."""
+    from bacalhau_spark.operators.buckets import band_cols, bands, live_keys
+
     src = _doc_stream(spark, sf_dir).where(F.col("doc_id") % 5 == 4)
     # bands derive from the ORIGINAL doc_id (the re-upload carries the
     # same payload), then the stream relabels under the ingest id space
-    qcols = [f"q{i}" for i in range(n_bands)]
     qhash = (frame_fn(src.select("doc_id"))
-             .select(F.col("doc_id").alias("orig"),
-                     (F.col("doc_id") + 1_000_000).alias("doc_id"),
-                     *[F.col(f"b{i}").alias(f"q{i}")
-                       for i in range(n_bands)]))
+             .withColumn("orig", F.col("doc_id"))
+             .withColumn("doc_id", F.col("doc_id") + 1_000_000))
+    bcols = band_cols(qhash)
     corpus = index_fn(spark, sf_dir)
-    ce = corpus.select("doc_id", F.explode(F.array(*[
-        F.struct(F.lit(i).alias("bi"), F.col(f"b{i}").alias("v"))
-        for i in range(n_bands)])).alias("s")).select(
-        F.col("doc_id").alias("nn"), "s.bi", "s.v")
-    hot = (ce.groupBy("bi", "v").agg(F.count("*").alias("n"))
-           .where(F.col("n") <= bucket_cap).select("bi", "v"))
-    ce = ce.join(hot, ["bi", "v"])
-    qe = qhash.select(
-        "doc_id", "orig", *qcols,
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("bi"), F.col(f"q{i}").alias("v"))
-            for i in range(n_bands)])).alias("s")).select(
-        "doc_id", "orig", *qcols, "s.bi", "s.v")
-    cand = (qe.join(ce, ["bi", "v"])
+    ce = bands(corpus).withColumnRenamed("doc_id", "nn")
+    ce = ce.join(live_keys(ce, "bi", "bkey"), ["bi", "bkey"])
+    cand = (bands(qhash, "orig", *bcols).join(ce, ["bi", "bkey"])
             .where(F.col("nn") != F.col("orig"))
-            .select("doc_id", "orig", "nn", *qcols).distinct())
-    ham = sum(F.expr(f"bit_count(q{i} ^ b{i})") for i in range(n_bands))
+            .select("doc_id", "orig", "nn",
+                    *[F.col(b).alias(f"q{b}") for b in bcols])
+            .distinct())
+    ham = sum(F.expr(f"bit_count(q{b} ^ {b})") for b in bcols)
     verified = (cand.join(corpus.withColumnsRenamed(
         {"doc_id": "nn"}), "nn")
         .select("doc_id", ham.cast("long").alias("hamming")))
@@ -594,64 +580,54 @@ GROUP BY cand.doc_id ORDER BY cand.doc_id
 def nd_stream_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IMAGE near-dup ingest screen (see
     _stream_phash_screen). Shares a full value-hash oracle."""
-    from bacalhau_spark.operators.multimodal import (PHASH_BUCKET_CAP,
-                                                     phash_frame,
-                                                     phash_index)
+    from bacalhau_spark.operators.multimodal import phash_frame, phash_index
 
     return _stream_phash_screen(
-        spark, sf_dir, frame_fn=phash_frame, index_fn=phash_index,
-        n_bands=4, bucket_cap=PHASH_BUCKET_CAP)
+        spark, sf_dir, frame_fn=phash_frame, index_fn=phash_index)
 
 
 def _stream_image_phash_oracle() -> str:
-    from bacalhau_spark.operators.multimodal import (PHASH_BUCKET_CAP,
-                                                     _phash_h_cte)
-    return _stream_phash_screen_oracle(_phash_h_cte(), 4,
-                                       PHASH_BUCKET_CAP)
+    from bacalhau_spark.operators.buckets import BUCKET_CAP
+    from bacalhau_spark.operators.multimodal import _phash_h_cte
+    return _stream_phash_screen_oracle(_phash_h_cte(), 4, BUCKET_CAP)
 
 
 def nd_stream_audio_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming AUDIO near-dup ingest screen — the envelope dHash
     (nd_audio_phash) at ingest (see _stream_phash_screen). Shares a
     full value-hash oracle."""
-    from bacalhau_spark.operators.multimodal import (APHASH_BUCKET_CAP,
-                                                     audio_phash_frame,
+    from bacalhau_spark.operators.multimodal import (audio_phash_frame,
                                                      audio_phash_index)
 
     return _stream_phash_screen(
         spark, sf_dir, frame_fn=audio_phash_frame,
-        index_fn=audio_phash_index,
-        n_bands=4, bucket_cap=APHASH_BUCKET_CAP)
+        index_fn=audio_phash_index)
 
 
 def _stream_audio_phash_oracle() -> str:
-    from bacalhau_spark.operators.multimodal import (APHASH_BUCKET_CAP,
-                                                     _aphash_h_cte)
-    return _stream_phash_screen_oracle(_aphash_h_cte(), 4,
-                                       APHASH_BUCKET_CAP)
+    from bacalhau_spark.operators.buckets import BUCKET_CAP
+    from bacalhau_spark.operators.multimodal import _aphash_h_cte
+    return _stream_phash_screen_oracle(_aphash_h_cte(), 4, BUCKET_CAP)
 
 
 def nd_stream_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming VIDEO near-dup ingest screen — the frame-sampled,
     time-aligned 16-band signature (nd_video_phash) at ingest (see
     _stream_phash_screen). Shares a full value-hash oracle."""
-    from bacalhau_spark.operators.multimodal import (VPHASH_BUCKET_CAP,
-                                                     VPHASH_NBANDS,
-                                                     video_phash_frame,
+    from bacalhau_spark.operators.multimodal import (video_phash_frame,
                                                      video_phash_index)
 
     return _stream_phash_screen(
         spark, sf_dir, frame_fn=video_phash_frame,
-        index_fn=video_phash_index,
-        n_bands=VPHASH_NBANDS, bucket_cap=VPHASH_BUCKET_CAP)
+        index_fn=video_phash_index)
 
 
 def _stream_video_phash_oracle() -> str:
-    from bacalhau_spark.operators.multimodal import (VPHASH_BUCKET_CAP,
-                                                     VPHASH_NBANDS,
+    from bacalhau_spark.operators.buckets import BUCKET_CAP
+    from bacalhau_spark.operators.multimodal import (VPHASH_NBANDS,
                                                      _vphash_h_cte)
     return _stream_phash_screen_oracle(_vphash_h_cte(), VPHASH_NBANDS,
-                                       VPHASH_BUCKET_CAP)
+                                       BUCKET_CAP)
 
 
 def nd_stream_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,27 +689,21 @@ def nd_stream_incremental_dedup(spark: SparkSession,
 
 def nd_stream_band_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming NEAR-dup ingest screen — nd_incremental_minhash's batch
-    exactly as a continuous query, and the minhash counterpart of
-    nd_stream_incremental_dedup's exact-hash screen: streamed documents
-    (fresh %5==4 docs + edited %10==1 re-crawls, the shared synthesis)
-    get per-ROW minhash signatures (dedup._mh_sig_row_cols — the
-    stream-safe in-row array_min twin of the grouped fold; a grouped
-    min over an exploded stream would be stateful aggregation) and
-    their folded band keys (THE shared _band_key_exprs fold) probe the
-    STATIC corpus band index; bands_hit per doc aggregates in complete
-    mode. Shares the batch twin's FULL value-hash oracle, graded across
-    a real micro-batch boundary in tests/test_streaming.py.
-
-    Scale shape: the production recurring-crawl screen — the corpus
-    index is built once (distinct capped band keys, the persisted LSH
-    index) and every micro-batch probes it; the stream never carries
-    text past the per-row signature projection, and the only streaming
-    state is the per-doc hit counter."""
-    from bacalhau_spark.operators.dedup import (LSH_BUCKET_CAP,
+    as a continuous query: streamed documents (fresh %5==4 docs +
+    edited %10==1 re-crawls) get per-ROW minhash signatures
+    (dedup._mh_sig_row_cols, the stateless in-row twin of the grouped
+    fold) whose folded band keys probe the static corpus buckets within
+    the cap; bands_hit per doc aggregates in complete mode, the only
+    streaming state. Shares the batch twin's full value-hash oracle."""
+    from bacalhau_spark.functions import words
+    from bacalhau_spark.operators.buckets import bands, live_keys
+    from bacalhau_spark.operators.dedup import (MH_SHINGLE_N,
                                                 _band_key_exprs,
+                                                _band_keys,
                                                 _mh_sig_row_cols,
                                                 _rolling_shingle_keys,
-                                                _word_hashes)
+                                                _word_hashes,
+                                                minhash_signature_index)
 
     src = _doc_stream(spark, sf_dir)
     fresh = (src.where(F.col("doc_id") % 5 == 4)
@@ -752,8 +722,6 @@ def nd_stream_band_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _word_hashes re-inlined per window term — the documented 50x HOF
     # re-evaluation trap, arriving via the optimizer (19.4 s -> ~1 s for
     # the whole screen at sf0.1).
-    from bacalhau_spark.functions import words
-    from bacalhau_spark.operators.dedup import MH_SHINGLE_N
     batch = batch.where(F.size(words("text")) >= MH_SHINGLE_N)
     wh = batch.select("doc_id", _word_hashes(F.col("text")).alias("wh"))
     sk = wh.select("doc_id",
@@ -762,26 +730,14 @@ def nd_stream_band_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array_distinct in-row replaces the batch twin's (doc, bkey)
     # DISTINCT — cross-band key collisions only arise within one doc's
     # own bands, so the per-row dedup is exact and stateless
-    bands = sig.select(
+    keys = sig.select(
         "doc_id",
         F.explode(F.array_distinct(F.array(*_band_key_exprs())))
         .alias("bkey"))
-    # Static side reads the SHARED persisted signature index (the same
-    # artifact every batch LSH consumer probes) instead of re-deriving
-    # the corpus signature lineage per call — signatures are per-doc
-    # pure, so filtering the index by doc_id is exactly the old
-    # filter-then-sign corpus build (the phash stream screens read
-    # their index_fn for the static side the same way).
-    from bacalhau_spark.operators.dedup import minhash_signature_index
-    corpus_keys = (minhash_signature_index(spark, sf_dir)
-                   .where(F.col("doc_id") % 5 != 4)
-                   .select(F.explode(F.array(*_band_key_exprs()))
-                           .alias("bkey")))
-    corpus_idx = (corpus_keys.groupBy("bkey")
-                  .agg(F.count("*").alias("n"))
-                  .where(F.col("n") <= LSH_BUCKET_CAP)
-                  .select("bkey"))
-    hits = (bands.join(corpus_idx, "bkey")
+    corpus = live_keys(bands(_band_keys(
+        minhash_signature_index(spark, sf_dir)
+        .where(F.col("doc_id") % 5 != 4))), "bkey")
+    hits = (keys.join(corpus, "bkey")
             .groupBy("doc_id")
             .agg(F.count("*").cast("int").alias("bands_hit")))
     return (_run_to_memory(spark, hits, "complete", timeout=180)

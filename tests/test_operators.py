@@ -325,34 +325,54 @@ def test_trailing_window_microsecond_boundary(spark):
     assert got[1] == 10.0 and got[2] == 12.0
 
 
-def test_stop_shingle_df_cap_suppresses_quadratic_candidates(spark):
-    """A shingle shared by every document must NOT generate O(n^2) candidate
-    pairs: with the df cap the hot shingle is dropped before the self-join,
-    so docs pairing only through it never meet."""
-    from bacalhau_spark.operators.dedup import ngram_jaccard_pairs
+def _jaccard_stats(docs, weighted=False):
+    """The jaccard family's pair stats over a small (doc_id, text) frame,
+    through the builders the registered rows' session views use."""
+    from bacalhau_spark.operators import dedup as D
 
-    docs = spark.sql(
-        "SELECT id AS doc_id, "
-        "concat('common boiler plate u', id, ' v', id, ' w', id) AS text "
-        "FROM range(30)")
-    # cap off (huge): every pair shares 'common boiler plate' -> 435 pairs
-    uncapped = ngram_jaccard_pairs(docs, threshold=0.0, df_cap=10**9).count()
-    assert uncapped == 30 * 29 // 2
-    # cap on: the only shared shingle is hot (df=30 > 10) -> zero candidates
-    assert ngram_jaccard_pairs(docs, threshold=0.0, df_cap=10).count() == 0
+    post = D.shingle_postings(D.shingle_doc_postings(docs))
+    if weighted:
+        return D.weighted_pair_stats(post, docs.select("doc_id"))
+    return D.shingle_pair_stats(post)
 
 
-def test_lsh_bucket_cap_suppresses_hot_bucket(spark):
-    """An LSH bucket holding every doc (identical signatures) must be dropped
-    by the bucket-size guard instead of producing f(f-1)/2 pairs."""
-    from pyspark.sql import functions as F
-    from bacalhau_spark.operators.dedup import N_HASHES, _band_candidates
+def _hot_bucket_pairs(spark, family):
+    """Candidate pairs of 30 docs that all share one bucket key of
+    `family` (and pair through nothing else)."""
+    from bacalhau_spark.operators import dedup as D
+    from bacalhau_spark.operators.multimodal import phash_candidate_pairs
 
-    sig_wide = spark.range(30).select(
-        F.col("id").alias("doc_id"),
-        *[F.lit(7).alias(f"mh{s}") for s in range(N_HASHES)])
-    assert _band_candidates(sig_wide, bucket_cap=100).count() == 30 * 29 // 2
-    assert _band_candidates(sig_wide, bucket_cap=10).count() == 0
+    ids = spark.range(30).select(F.col("id").alias("doc_id"))
+    if family == "minhash":
+        return D._band_candidates(ids.select(
+            "doc_id", *[F.lit(7).alias(f"mh{s}") for s in range(D.N_HASHES)]))
+    if family == "phash":
+        return phash_candidate_pairs(ids.select(
+            "doc_id", *[F.lit(7).cast("long").alias(f"b{i}")
+                        for i in range(4)]))
+    if family == "winnow":
+        text = " ".join(f"common{i}" for i in range(30))
+        return D.winnowing_pairs(ids.select("doc_id",
+                                            F.lit(text).alias("text")))
+    docs = ids.select("doc_id", F.concat(
+        F.lit("common boiler plate u"), "doc_id", F.lit(" v"), "doc_id",
+        F.lit(" w"), "doc_id").alias("text"))
+    return D.ngram_jaccard_pairs(_jaccard_stats(docs), threshold=0.0)
+
+
+@pytest.mark.parametrize("family", ["minhash", "phash", "winnow", "shingle"])
+def test_bucket_cap_drops_hot_buckets(spark, family, monkeypatch):
+    """A bucket key shared by every doc (identical minhash bands, a
+    constant dHash, a boilerplate winnow fingerprint or shingle) yields
+    all f(f-1)/2 pairs while the bucket is within buckets.BUCKET_CAP,
+    and none once it is above it: the hot bucket is dropped before pair
+    expansion."""
+    from bacalhau_spark.operators import buckets
+
+    monkeypatch.setattr(buckets, "BUCKET_CAP", 100)
+    assert _hot_bucket_pairs(spark, family).count() == 30 * 29 // 2
+    monkeypatch.setattr(buckets, "BUCKET_CAP", 10)
+    assert _hot_bucket_pairs(spark, family).count() == 0
 
 
 def _make_bmp(w: int, h: int) -> bytes:
@@ -417,23 +437,15 @@ def test_image_phash_finds_variant_families(spark, sf_dir):
 
 def test_image_phash_scale_shape(spark, sf_dir):
     """Plan claims: candidate generation is bucket-and-expand (no
-    cartesian, no sort-merge self-join of the corpus), verification
-    gathers the hash table in ONE scan with the pair set broadcast,
-    and the hot-bucket guard drops oversized buckets before expansion
-    (a degenerate constant hash yields zero pairs, not a quadratic
-    bucket)."""
-    from bacalhau_spark.operators.multimodal import (nd_image_phash,
-                                                     phash_candidate_pairs)
+    cartesian, no sort-merge self-join of the corpus) and verification
+    gathers the hash table in ONE scan with the pair set broadcast.
+    (The hot-bucket cap is test_bucket_cap_drops_hot_buckets.)"""
+    from bacalhau_spark.operators.multimodal import nd_image_phash
 
     df = nd_image_phash(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
-
-    degenerate = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        *[F.lit(7).cast("long").alias(f"b{i}") for i in range(4)])
-    assert phash_candidate_pairs(degenerate).count() == 0
 
 
 def test_audio_phash_finds_variant_families(spark, sf_dir):
@@ -483,8 +495,7 @@ def test_phash_candidate_tier_is_persisted(spark, sf_dir):
     import os
 
     from bacalhau_spark.sources.indexstore import index_store_root
-    from bacalhau_spark.operators.multimodal import (PHASH_BUCKET_CAP,
-                                                     nd_image_phash,
+    from bacalhau_spark.operators.multimodal import (nd_image_phash,
                                                      phash_candidate_pairs,
                                                      phash_index)
 
@@ -494,8 +505,7 @@ def test_phash_candidate_tier_is_persisted(spark, sf_dir):
     assert os.path.basename(index_store_root()) in plan
     assert ") Window" not in plan and "row_number" not in plan
     assert "flatten(transform" not in plan
-    direct = phash_candidate_pairs(phash_index(spark, sf_dir),
-                                   bucket_cap=PHASH_BUCKET_CAP)
+    direct = phash_candidate_pairs(phash_index(spark, sf_dir))
     got = {(r.a_id, r.b_id) for r in df.collect()}
     regen = {(r.a_id, r.b_id) for r in direct.collect()}
     assert got <= regen  # verified pairs are a subset of candidates
@@ -505,13 +515,11 @@ def test_phash_candidate_tier_is_persisted(spark, sf_dir):
 
 def _phash_cand_frame(spark, sf_dir):
     from bacalhau_spark.sources.indexstore import cached_index
-    from bacalhau_spark.operators.multimodal import (PHASH_BUCKET_CAP,
-                                                     phash_candidate_pairs,
+    from bacalhau_spark.operators.multimodal import (phash_candidate_pairs,
                                                      phash_index)
     return cached_index(
         spark, sf_dir, "phash_cand",
-        lambda: phash_candidate_pairs(phash_index(spark, sf_dir),
-                                      bucket_cap=PHASH_BUCKET_CAP))
+        lambda: phash_candidate_pairs(phash_index(spark, sf_dir)))
 
 
 def test_video_phash_bit_layout_forms_agree():
@@ -588,19 +596,18 @@ def test_image_phash_broadcast_gate_degrades(spark, sf_dir, monkeypatch):
     count, the explicit broadcast hint is withheld (AQE then owns the
     join strategy, which is the degrade-not-die contract) and the
     result rows are IDENTICAL to the hinted plan's."""
-    from bacalhau_spark.operators import dedup
-    from bacalhau_spark.sources.indexstore import clear_session_index
+    from bacalhau_spark.operators import buckets
     from bacalhau_spark.operators.multimodal import nd_image_phash
 
     rows_bcast = sorted(map(tuple,
                             nd_image_phash(spark, sf_dir).collect()))
     # drop the cached count so the gate decision is re-made
-    dedup.CAND_COUNTS.clear()
-    monkeypatch.setattr(dedup, "EDIT_BROADCAST_MAX_PAIRS", 0)
+    buckets.CAND_COUNTS.clear()
+    monkeypatch.setattr(buckets, "BROADCAST_MAX_PAIRS", 0)
     df = nd_image_phash(spark, sf_dir)
     rows_shuffle = sorted(map(tuple, df.collect()))
     assert rows_shuffle == rows_bcast
-    dedup.CAND_COUNTS.clear()
+    buckets.CAND_COUNTS.clear()
 
 
 def test_leakage_safe_split_invariants(spark, sf_dir):
@@ -829,9 +836,10 @@ def test_containment_catches_asymmetric_quote_embedding(spark):
     docs = spark.createDataFrame(
         [(1, quote), (2, filler + " " + quote + " " + filler.upper())],
         ["doc_id", "text"])
-    jac = ngram_jaccard_pairs(docs).collect()
+    stats = _jaccard_stats(docs)
+    jac = ngram_jaccard_pairs(stats).collect()
     assert jac == []  # symmetric pass misses the embedding
-    got = containment_pairs(docs).collect()
+    got = containment_pairs(stats).collect()
     assert [(r.contained_id, r.container_id) for r in got] == [(1, 2)]
     assert got[0].containment == 1.0
 
@@ -857,9 +865,11 @@ def test_weighted_jaccard_emphasizes_rare_content(spark):
          (5, boiler + " t5a t5b"), (6, boiler + " t6a t6b")],
         ["doc_id", "text"])
     got = {(r.a_id, r.b_id): r.wjaccard
-           for r in weighted_jaccard_pairs(docs, threshold=0.0).collect()}
+           for r in weighted_jaccard_pairs(_jaccard_stats(docs, True),
+                                           threshold=0.0).collect()}
     plain = {(r.a_id, r.b_id): r.jaccard
-             for r in ngram_jaccard_pairs(docs, threshold=0.0).collect()}
+             for r in ngram_jaccard_pairs(_jaccard_stats(docs),
+                                          threshold=0.0).collect()}
     assert plain[(1, 2)] == plain[(3, 4)]
     assert got[(3, 4)] > got[(1, 2)]
     # exact expected values: shared_w(3,4)=8*3, sizes 8*3+2*6=36 ->
@@ -1019,7 +1029,7 @@ def test_semantic_dedup_hot_bucket_cap_and_escalation(spark, tmp_path):
 
     - 120 identical all-positive vectors: hot at 8 bits AND at the
       16-bit escalation -> excluded from pair generation entirely, all
-      kept (lenient-on-pathology, the PHASH_BUCKET_CAP semantics);
+      kept (lenient-on-pathology, the buckets.BUCKET_CAP semantics);
     - 60 vectors sharing the hot 8-bit orthant but splitting into six
       16-bit sub-buckets of 10 identical vectors -> escalation keeps
       screening: exactly the lowest id of each sub-bucket survives;
@@ -1115,8 +1125,11 @@ def test_real_pixel_phash_near_dup_via_binaryfile(spark, tmp_path):
     layout as phash_frame -> capped band candidates -> exact Hamming.
     A re-encode-noise near-dup pair lands within the gate; an inverted
     image is maximally far; true dimensions come out of real headers."""
-    from bacalhau_spark.operators.multimodal import (image_near_dup_real,
+    from bacalhau_spark.operators.buckets import pair_sides
+    from bacalhau_spark.operators.multimodal import (PHASH_MAX_HAMMING,
                                                      image_phash_real_frame,
+                                                     phash_candidate_pairs,
+                                                     phash_verify,
                                                      real_binary_table)
 
     w, h = 36, 16
@@ -1140,8 +1153,11 @@ def test_real_pixel_phash_near_dup_via_binaryfile(spark, tmp_path):
         "real BMP bytes must take a REAL decode path"
     assert all((r["width"], r["height"]) == (w, h) for r in rows.values())
 
+    lean = hashes.select("doc_id", "b0", "b1", "b2", "b3")
+    cand = phash_candidate_pairs(lean)
     pairs = {(r["a_id"], r["b_id"]): r["hamming"]
-             for r in image_near_dup_real(hashes).collect()}
+             for r in phash_verify(lean, pair_sides(cand, cand.count()),
+                                   PHASH_MAX_HAMMING).collect()}
     # doc_ids are row_number over sorted path: a=1, b=2, c=3
     assert (1, 2) in pairs, "re-encode-noise near-dup must survive"
     assert pairs[(1, 2)] <= 10
@@ -1267,12 +1283,13 @@ def test_shingle_posting_index_shared_and_equivalent(spark, sf_dir):
 
     docs = spread_compute(spark, table(spark, sf_dir, "documents")
                           .select("doc_id", "text"), "doc_id")
-    for fresh_fn, row_name in (
-            (D.ngram_jaccard_pairs, "nd_ngram_jaccard"),
-            (D.weighted_jaccard_pairs, "nd_weighted_jaccard"),
-            (D.containment_pairs, "nd_containment")):
+    for fresh_fn, weighted, row_name in (
+            (D.ngram_jaccard_pairs, False, "nd_ngram_jaccard"),
+            (D.weighted_jaccard_pairs, True, "nd_weighted_jaccard"),
+            (D.containment_pairs, False, "nd_containment")):
         from bacalhau_spark.registry import ALL_QUERIES
-        fresh = sorted(map(tuple, fresh_fn(docs).collect()))
+        fresh = sorted(map(tuple, fresh_fn(
+            _jaccard_stats(docs, weighted)).collect()))
         shared = sorted(map(tuple,
                             ALL_QUERIES[row_name][0](spark, sf_dir)
                             .collect()))

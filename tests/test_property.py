@@ -665,18 +665,26 @@ def test_weighted_jaccard_and_containment_match_reference(spark, texts):
     bit-exact int/int-division scores (threshold=0 so every sharing
     pair is compared), including docs too short to shingle and the
     df-cap interaction."""
+    from bacalhau_spark.operators.buckets import BUCKET_CAP
     from bacalhau_spark.operators.dedup import (containment_pairs,
-                                                weighted_jaccard_pairs)
+                                                shingle_doc_postings,
+                                                shingle_pair_stats,
+                                                shingle_postings,
+                                                weighted_jaccard_pairs,
+                                                weighted_pair_stats)
 
     docs = list(enumerate(texts, start=1))
-    ref_wj, ref_cont = _ref_shingle_pairs(docs, cap=50)
+    ref_wj, ref_cont = _ref_shingle_pairs(docs, cap=BUCKET_CAP)
     frame = spark.createDataFrame(docs, ["doc_id", "text"])
+    post = shingle_postings(shingle_doc_postings(frame))
     got_wj = {(r.a_id, r.b_id): (r.shared_w, r.wjaccard)
               for r in weighted_jaccard_pairs(
-                  frame, threshold=0.0).collect()}
+                  weighted_pair_stats(post, frame.select("doc_id")),
+                  threshold=0.0).collect()}
     assert got_wj == ref_wj
     got_cont = {}
-    for r in containment_pairs(frame, threshold=0.0).collect():
+    for r in containment_pairs(shingle_pair_stats(post),
+                               threshold=0.0).collect():
         a, b = sorted((r.contained_id, r.container_id))
         cur = got_cont.setdefault((a, b), [None, None])
         cur[0 if r.contained_id == a else 1] = r.containment
@@ -863,13 +871,13 @@ def _ref_winnowing(texts: list[str]):
     """Pure-Python winnowing model mirroring the Spark fold exactly:
     md5-prefix word hashes mod MH_PRIME, the MH_SHINGLE_N-word rolling
     polynomial, per-window minima (WINNOW_W), per-doc distinct
-    fingerprint sets, the SHINGLE_DF_CAP stop-fingerprint guard, and
+    fingerprint sets, the BUCKET_CAP stop-fingerprint guard, and
     shared-count pairs >= WINNOW_MIN_SHARED."""
     import hashlib
 
+    from bacalhau_spark.operators.buckets import BUCKET_CAP
     from bacalhau_spark.operators.dedup import (MH_PRIME, MH_ROLL_C,
                                                 MH_SHINGLE_N,
-                                                SHINGLE_DF_CAP,
                                                 WINNOW_MIN_SHARED,
                                                 WINNOW_W)
 
@@ -889,7 +897,7 @@ def _ref_winnowing(texts: list[str]):
     for v in sel.values():
         for fp in v:
             df[fp] = df.get(fp, 0) + 1
-    kept = {i: {fp for fp in v if df[fp] <= SHINGLE_DF_CAP}
+    kept = {i: {fp for fp in v if df[fp] <= BUCKET_CAP}
             for i, v in sel.items()}
     out = {}
     ids = sorted(kept)

@@ -178,14 +178,36 @@ def test_chunk_dedup_shuffles_hashes_not_text(spark, sf_dir):
         assert "text#" not in s, f"text column crosses a shuffle: {s}"
 
 
-def test_zipf_key_queries_have_no_skewed_window(spark, sf_dir):
+def _plans_run_by(spark, fn) -> list[str]:
+    """The physical plan of every SQL execution `fn()` runs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    seen = {e.executionId() for e in executions()}
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [e.physicalPlanDescription() for e in executions()
+            if e.executionId() not in seen]
+
+
+def test_zipf_key_queries_have_no_skewed_window(spark, sf_dir, tmp_path,
+                                                monkeypatch):
     """nd_word_rarity and nd_chunk_dedup both need a corpus-wide frequency
     per Zipf-distributed key (words / boilerplate chunks). A window count
     partitioned by the raw key would funnel every occurrence of each head
     key into one partition — a constant fraction of a 100 TB token stream.
     The de-skewed shape must show in the plan: NO Window exec anywhere,
     and a partial_count keyed aggregation (map-side combine collapses the
-    head keys before the shuffle)."""
+    head keys before the shuffle). The banded candidate builds cap their
+    buckets in the one collect-then-length-check form of
+    operators.buckets, not as a window count on the bucket key, in any
+    job a cold build runs. (That form sorts nothing; its trade, a far
+    over-cap bucket collected in full before it is dropped, is stated
+    in operators/buckets.py.)"""
     from bacalhau_spark.operators.dedup import nd_chunk_dedup
     from bacalhau_spark.operators.text import nd_word_rarity
 
@@ -211,6 +233,31 @@ def test_zipf_key_queries_have_no_skewed_window(spark, sf_dir):
         df.collect()
         final = _executed_plan(df)
         assert "ExistingRDD" in final and "parquet" not in final
+
+    from bacalhau_spark.operators import dedup
+    from bacalhau_spark.operators.multimodal import (phash_candidate_pairs,
+                                                     phash_index)
+    from bacalhau_spark.sources.indexstore import clear_session_index
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_STORE", str(tmp_path / "store"))
+    clear_session_index(spark)
+    builds = {
+        "band_candidate_index":
+            lambda: dedup.band_candidate_index(spark, sf_dir),
+        "phash_candidate_pairs": lambda: phash_candidate_pairs(
+            phash_index(spark, sf_dir)).collect(),
+        "nd_winnowing": lambda: dedup.nd_winnowing(spark, sf_dir).collect(),
+        "shingle_pair_index":
+            lambda: dedup.shingle_pair_index(spark, sf_dir),
+    }
+    try:
+        for name, build in builds.items():
+            plans = _plans_run_by(spark, build)
+            assert plans, f"{name} ran no job: not a cold build"
+            assert not any(") Window" in p for p in plans), (
+                f"{name} caps its buckets with a window count")
+    finally:
+        clear_session_index(spark)
 
 
 def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
@@ -420,8 +467,8 @@ def test_round6_operators_scale_shapes(spark, sf_dir):
     - nd_boilerplate_strip: keep-first is exactly ONE min-struct window
       over the 60-bit chunk hash (the r14 single-lineage form — the r6
       groupBy+join twin evaluated the tokenize+md5 chunk derivation
-      twice; Zipf-hot chunk keys are bounded by WindowExec's spill path,
-      the same rule `_band_candidates` relies on), never a ROW_NUMBER
+      twice; Zipf-hot chunk keys are bounded by WindowExec's spill
+      path), never a ROW_NUMBER
       rank, and chunk text never shuffles — only 60-bit hashes.
     - nd_epoch_shuffle: the operator body is pure per-row codegen — the
       only exchange below the final presentation orderBy is... none; the
@@ -872,17 +919,18 @@ def test_shingle_postings_checkpoint_keeps_parallelism(spark, sf_dir):
     partitions (measured 2.4x the whole operator at x10). The explicit
     pre-checkpoint repartition must hold the checkpointed frame at full
     width."""
-    from bacalhau_spark.operators.dedup import (_shingle_pair_stats,
-                                                _shingle_postings)
+    from bacalhau_spark.operators.dedup import (shingle_doc_postings,
+                                                shingle_pair_stats,
+                                                shingle_postings)
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     width = spark.sparkContext.defaultParallelism
-    postings = _shingle_postings(docs, 3, 50)
+    postings = shingle_postings(shingle_doc_postings(docs))
     assert postings.rdd.getNumPartitions() == width, (
         "the checkpointed posting lists froze at a coalesced width — "
         "the pair explode downstream will starve")
     # and the pair stream actually consumes the checkpoint (ExistingRDD)
-    shared, _sizes = _shingle_pair_stats(docs, 3, 50)
+    shared, _sizes = shingle_pair_stats(postings)
     assert "Scan ExistingRDD" in _executed_plan(shared)
 
 
@@ -1053,6 +1101,7 @@ def test_winnow_capped_frame_is_session_cached(spark, sf_dir):
     content, not once per read), clear_session_index evicts it with
     the index tier (bench cold-path comparability), and the cached
     read equals the direct guard-per-read path exactly."""
+    from bacalhau_spark.operators.buckets import postings
     from bacalhau_spark.operators.dedup import (winnow_capped_postings,
                                                 winnow_pairs_from_postings,
                                                 winnow_posting_index,
@@ -1063,8 +1112,8 @@ def test_winnow_capped_frame_is_session_cached(spark, sf_dir):
     assert capped1 is winnow_capped_postings(spark, sf_dir)
     assert capped1.storageLevel.useMemory or capped1.storageLevel.useDisk
     cached_rows = sorted(map(tuple, nd_winnowing(spark, sf_dir).collect()))
-    direct_rows = sorted(map(tuple, winnow_pairs_from_postings(
-        winnow_posting_index(spark, sf_dir)).collect()))
+    direct_rows = sorted(map(tuple, winnow_pairs_from_postings(postings(
+        winnow_posting_index(spark, sf_dir), "fp")).collect()))
     assert cached_rows == direct_rows
     clear_session_index(spark)
     capped2 = winnow_capped_postings(spark, sf_dir)
@@ -2019,7 +2068,10 @@ def test_shingle_posting_delta_adopts_and_caps_at_read(spark, sf_dir,
 
     from bacalhau_spark.catalog import spread_compute
     from bacalhau_spark.operators.dedup import (ngram_jaccard_pairs,
-                                                shingle_posting_index)
+                                                shingle_doc_postings,
+                                                shingle_pair_stats,
+                                                shingle_posting_index,
+                                                shingle_postings)
     from bacalhau_spark.sources.indexstore import (clear_session_index,
                                                    index_table_root)
     from bacalhau_spark.registry import ALL_QUERIES
@@ -2043,10 +2095,11 @@ def test_shingle_posting_delta_adopts_and_caps_at_read(spark, sf_dir,
     man = latest_manifest(index_table_root(epoch2, "shpost3",
                                            "documents"))
     assert man["props"]["delta_parent"] == os.path.basename(parent_root)
-    full = ngram_jaccard_pairs(spread_compute(
-        spark,
-        spark.read.parquet(os.path.join(epoch2, "documents.parquet"))
-        .select("doc_id", "text"), "doc_id"))
+    full = ngram_jaccard_pairs(shingle_pair_stats(shingle_postings(
+        shingle_doc_postings(spread_compute(
+            spark,
+            spark.read.parquet(os.path.join(epoch2, "documents.parquet"))
+            .select("doc_id", "text"), "doc_id")))))
     got_rows = sorted(map(tuple, got.collect()))
     assert got_rows == sorted(map(tuple, full.collect()))
     assert any(b >= 31_500_000 for _a, b, _j in got_rows), \
